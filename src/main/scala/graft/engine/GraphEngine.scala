@@ -157,10 +157,6 @@ final case class GraphState(vertices: DataFrame, edges: DataFrame) {
       .drop("__hit"))
   }
 
-  /** Per-row property removal for matched vertex ids. */
-  def removeVertexPropertyRows(matchIds: DataFrame, key: String)
-      : GraphState = removeVertexProperty(matchIds, key)
-
   /** Edge reversal (reference: models/src/edges.rs:74-83). */
   def reversedEdges: DataFrame = edges.select(
     col("id"), col("dst").as("src"), col("src").as("dst"),

@@ -1,7 +1,6 @@
 package graft.engine
 
 import org.apache.spark.graphx.{Edge => GxEdge, Graph, VertexId}
-import org.apache.spark.graphx.lib.ShortestPaths
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -24,28 +23,6 @@ object GraphXBridge {
         col("edge_type")).rdd
       .map(r => GxEdge(r.getLong(0), r.getLong(1), r.getString(2)))
     (Graph(vertices, edges), mapping.select("vid", "id"))
-  }
-
-  /** Unweighted shortest-path distances from every vertex TO each landmark
-    * along forward edges (GraphX Pregel under the hood). Returns
-    * (id, landmark_id, distance). */
-  def shortestPathLengths(g: GraphState, landmarks: Seq[String])
-      (implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    val (graph, mapping) = toGraphX(g)
-    // resolve landmark vids through the mapping (hash must match Spark's)
-    val vidByIdRows = mapping
-      .filter(col("id").isin(landmarks: _*)).collect()
-    val vidById = vidByIdRows.map(r => r.getString(1) -> r.getLong(0)).toMap
-    val result = ShortestPaths.run(graph, vidById.values.toSeq)
-    val idByVid = vidById.map(_.swap)
-    val rows = result.vertices.flatMap { case (vid, spmap) =>
-      spmap.map { case (lm, d) => (vid, lm, d) }
-    }.toDF("vid", "lm_vid", "distance")
-    rows.join(mapping, Seq("vid"))
-      .join(mapping.select(col("vid").as("lm_vid"),
-        col("id").as("landmark_id")), Seq("lm_vid"))
-      .select(col("id"), col("landmark_id"), col("distance"))
   }
 
   /** Connected components (GraphX), back as (id, component) with the
@@ -283,25 +260,6 @@ object GraphXBridge {
       .select(col("id"), col("cost"))
   }
 
-  /** Total triangle count of an UNDIRECTED simple graph given as
-    * canonical Long-id edges (src < dst, already distinct). GraphX's
-    * triangleCount charges each triangle to its three corners, so the
-    * graph total is Σ(vertex counts)/3. The edge-partitioned formulation
-    * is the standard billion-edge approach: each vertex ships its
-    * smaller adjacency set along edges — never a global join of full
-    * adjacency lists. */
-  def triangleTotal(edges: DataFrame)
-      (implicit spark: SparkSession): DataFrame = {
-    import org.apache.spark.graphx.PartitionStrategy
-    import spark.implicits._
-    val edgeRdd = edges.rdd.map(r => (r.getLong(0), r.getLong(1)))
-    val graph = Graph.fromEdgeTuples(edgeRdd, defaultValue = 0,
-      uniqueEdges = Some(PartitionStrategy.RandomVertexCut))
-    val perVertex = graph.triangleCount().vertices.map(_._2.toLong)
-    val total = perVertex.fold(0L)(_ + _) / 3
-    Seq(total).toDF("n_triangles")
-  }
-
   /** Degree-oriented DataFrame triangle count (Suri–Vassilvitskii):
     * orient every undirected edge from the endpoint with the smaller
     * (degree, id) to the larger, making an acyclic orientation where
@@ -310,8 +268,7 @@ object GraphXBridge {
     * self-join is bounded even around heavy-hitter vertices — the
     * property that survives a 100× scale-up. Stays entirely in
     * DataFrame joins (codegen + AQE), no per-vertex adjacency sets.
-    * Input contract matches [[triangleTotal]]: canonical Long-id edges
-    * (src < dst, distinct). */
+    * Input contract: canonical Long-id edges (src < dst, distinct). */
   def triangleTotalDF(edges: DataFrame)
       (implicit spark: SparkSession): DataFrame =
     // per-edge adjacency intersection: triangle a≺b≺c is found exactly

@@ -1,6 +1,7 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 
 /** Size-gated LOCAL kernels for the wedge/triangle operator family.
@@ -15,16 +16,16 @@ import org.apache.spark.sql.functions._
   * side (here, the whole adjacency) fits comfortably in memory, ship
   * it everywhere once and never shuffle the big derived stream at all.
   *
-  * The gate is a column-pruned `count()` probe (memoized per input
-  * plan, see [[countOnce]]) followed by a parallel `collect()` of the
-  * projection, checked against [[LocalGraphKernels.MaxEdgesKey]];
-  * above the threshold the caller falls back to the unchanged
-  * distributed (and, past the disk budget, bucketed) plan — the
-  * 100 TB path is untouched. The collected edge
-  * list is bounded by the same conf (default 4M edges ≈ 64 MB — the
-  * broadcast-relation size class, far below Spark's own 8 GB broadcast
-  * cap) and is rebuilt from the parquet-derived input on every run —
-  * nothing is memoized across runs.
+  * The gate is a column-pruned `count()` probe ([[countOnce]])
+  * followed by a parallel `collect()` of the projection, checked
+  * against [[LocalGraphKernels.MaxEdgesKey]]; above the threshold the
+  * caller falls back to the unchanged distributed (and, past the disk
+  * budget, bucketed) plan — the 100 TB path is untouched. The collected
+  * edge list is bounded by the same conf (default 4M edges ≈ 64 MB —
+  * the broadcast-relation size class, far below Spark's own 8 GB
+  * broadcast cap). Counts and collected arrays are kept for later
+  * queries of the same session by [[SessionCache]], keyed by the
+  * projection's canonicalized plan; its budget and LRU decide how long.
   *
   * Determinism: dense vertex indices are assigned in ascending id
   * order, so dense order == id order and every tie-break below
@@ -47,80 +48,21 @@ private[graft] object LocalGraphKernels {
     * plan. */
   val MaxEdgesKey = "spark.graft.graph.localKernelMaxEdges"
 
-  private def maxEdges(spark: SparkSession): Int =
+  private[engine] def maxEdges(spark: SparkSession): Int =
     spark.conf.get(MaxEdgesKey, "4000000").toInt
 
-  /** Session-lifetime memo of gate-probe COUNTS, keyed by the probed
-    * frame's canonicalized plan (r13 verdict item: the probe cost one
-    * extra full count per kernel invocation — including at scale,
-    * where the answer is always "too big"). Sound because every
-    * kernel input is immutable within a session: read-only parquet or
-    * a localCheckpointed/persisted projection — the same invariant
-    * the Traversals edge cache and coPurchaseMemo already rely on.
-    * Bounded LRU; entries die with the process. */
-  private val countCache = new java.util.LinkedHashMap[
-      (SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan),
-      java.lang.Long](16, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[
-        (SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan),
-        java.lang.Long]): Boolean = size > 64
-  }
+  /** Gate-probe count of `df`, cached per session on its plan: else
+    * every kernel call pays a full count, at scale to learn "too big".
+    * Sound because kernel inputs are immutable within a session. */
+  private[engine] def countOnce(df: DataFrame): Long =
+    SessionCache.ofPlan("kernel.count", df)(
+      java.lang.Long.valueOf(df.count())).longValue
 
-  private[engine] def countOnce(df: DataFrame): Long = {
-    val key = (df.sparkSession, df.queryExecution.analyzed.canonicalized)
-    val hit = countCache.synchronized(countCache.get(key))
-    if (hit != null) hit.longValue
-    else {
-      val n = df.count() // outside the lock: counting may take a while
-      countCache.synchronized(countCache.put(key, java.lang.Long.valueOf(n)))
-      n
-    }
-  }
-
-  /** Session-lifetime memo of the COLLECTED packed edge list, keyed
-    * like [[countOnce]] (r14 session 3): six kernel gates share the
-    * same localCheckpointed co-purchase projection and each paid the
-    * full 1.2M-row collect again. Sound for the same reason as the
-    * count memo (kernel inputs are immutable within a session), and
-    * the same within-run-sharing class as coPurchaseMemo — the array
-    * is rebuilt from the parquet-derived input on FIRST use every run,
-    * never persisted. Entries are ≤ the conf edge bound (≤64 MB);
-    * 2-entry LRU caps driver scratch at ~128 MB worst case.
-    * CONSUMERS MUST NOT MUTATE the returned array (buildCsr copies;
-    * kCore reads positionally — verified for every caller). */
-  private val edgeCache = new java.util.LinkedHashMap[
-      (SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan),
-      Array[Long]](4, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[
-        (SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan),
-        Array[Long]]): Boolean = size > 2
-  }
-
-  /** Same memo for the weightedSssp / connectedComponentsLong collect
-    * paths, which read raw UnsafeRows positionally instead of packing
-    * (3-col weighted edges / vertex-id lists). executeCollect returns
-    * self-contained row copies; every consumer is read-only. */
-  private val rowCache = new java.util.LinkedHashMap[
-      (SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan),
-      Array[org.apache.spark.sql.catalyst.InternalRow]](4, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[
-        (SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan),
-        Array[org.apache.spark.sql.catalyst.InternalRow]]): Boolean =
-      size > 2
-  }
-
-  private def collectRowsOnce(proj: DataFrame)
-      : Array[org.apache.spark.sql.catalyst.InternalRow] = {
-    val key = (proj.sparkSession,
-      proj.queryExecution.analyzed.canonicalized)
-    val hit = rowCache.synchronized(rowCache.get(key))
-    if (hit != null) hit
-    else {
-      val rows = proj.queryExecution.executedPlan.executeCollect()
-      rowCache.synchronized(rowCache.put(key, rows))
-      rows
-    }
-  }
+  /** Collected raw rows of `proj`, cached like [[countOnce]], for the
+    * positional readers (weightedSssp, connectedComponentsLong). */
+  private def collectRowsOnce(proj: DataFrame): Array[InternalRow] =
+    SessionCache.ofPlan("kernel.rows", proj)(
+      proj.queryExecution.executedPlan.executeCollect())
 
   /** Both id columns integral (the dense-index mapping needs a total
     * numeric order; string graphs keep the distributed plan). */
@@ -146,33 +88,33 @@ private[graft] object LocalGraphKernels {
     * task and a single-threaded driver decode — measured ~1 s for the
     * 1.2M-edge sf0.1 graph, dominating the kernels it fed; the count
     * is one pass of the input plan on FIRST probe and a [[countOnce]]
-    * memo hit after that, so an over-limit graph costs one cheap count
+    * cache hit after that, so an over-limit graph costs one cheap count
     * per session instead of a 4M-row truncated fetch per call). */
   private def collectIfSmall(edges: DataFrame, max: Int)
       : Option[Array[Long]] = {
     if (max <= 0 || !integralIds(edges)) return None
     val proj = edges
       .select(col("src").cast("long"), col("dst").cast("long"))
-    if (countOnce(proj) > max) return None // size gate BEFORE the memo:
+    if (countOnce(proj) > max) return None // size gate BEFORE the cache:
                                            // a forced lower bound still
                                            // rejects a cached array
-    val key = (proj.sparkSession,
-      proj.queryExecution.analyzed.canonicalized)
-    val cached = edgeCache.synchronized(edgeCache.get(key))
-    if (cached != null) return Some(cached)
-    // executeCollect returns the raw UnsafeRows — skips the per-row
-    // external-Row conversion (2 boxed Longs per edge on a millions-
-    // of-edges collect); the pack loop reads the longs in place
-    val rows = proj.queryExecution.executedPlan.executeCollect()
-    val packed = new Array[Long](rows.length * 2)
-    var i = 0
-    while (i < rows.length) {
-      packed(2 * i) = rows(i).getLong(0)
-      packed(2 * i + 1) = rows(i).getLong(1)
-      i += 1
-    }
-    edgeCache.synchronized(edgeCache.put(key, packed))
-    Some(packed)
+    // shared by every kernel gate over the same projection (six gates
+    // read the co-purchase graph); CONSUMERS MUST NOT MUTATE it
+    // (buildCsr copies; kCore reads positionally)
+    Some(SessionCache.ofPlan("kernel.edges", proj) {
+      // executeCollect returns the raw UnsafeRows — skips the per-row
+      // external-Row conversion (2 boxed Longs per edge on a millions-
+      // of-edges collect); the pack loop reads the longs in place
+      val rows = proj.queryExecution.executedPlan.executeCollect()
+      val packed = new Array[Long](rows.length * 2)
+      var i = 0
+      while (i < rows.length) {
+        packed(2 * i) = rows(i).getLong(0)
+        packed(2 * i + 1) = rows(i).getLong(1)
+        i += 1
+      }
+      packed
+    })
   }
 
   private def buildCsr(packed: Array[Long]): Csr = {

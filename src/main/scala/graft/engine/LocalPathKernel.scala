@@ -35,8 +35,9 @@ import org.apache.spark.sql.types.StringType
   *    (parallel edges stay distinct by edge id);
   *  - self pairs (source == target) emit (id, id, [id], [], 0) exactly
   *    like the engines' `__a === __b` branch; unreachable pairs emit
-  *    nothing; everything is rebuilt from the input on every call —
-  *    nothing is memoized across runs.
+  *    nothing. The decoded graph is rebuilt from the input on every
+  *    call; only the edge-count gate probe is cached, per session, by
+  *    [[SessionCache]] (see [[LocalGraphKernels.countOnce]]).
   */
 private[graft] object LocalPathKernel {
 
@@ -46,9 +47,6 @@ private[graft] object LocalPathKernel {
     * all-shortest-paths combinatorial fan-out.) */
   private val MaxWork = 64000000L
   private val MaxOutputRows = 1000000
-
-  private def maxEdges(spark: SparkSession): Int =
-    spark.conf.get(LocalGraphKernels.MaxEdgesKey, "4000000").toInt
 
   private def utf8(s: String): Array[Byte] =
     s.getBytes(StandardCharsets.UTF_8)
@@ -63,7 +61,7 @@ private[graft] object LocalPathKernel {
   }
 
   /** Count-gated collect of a projection; None when over the bound.
-    * Two jobs (count memoized per plan, [[LocalGraphKernels.countOnce]]),
+    * Two jobs (count cached per plan, [[LocalGraphKernels.countOnce]]),
     * but the count never funnels rows through one task — the right
     * probe for the (large) edge frame. */
   private def collectBounded(df: DataFrame, max: Int): Option[Array[Row]] =
@@ -328,7 +326,7 @@ private[graft] object LocalPathKernel {
   def fromTo(edges: => DataFrame, srcs: DataFrame, tgts: DataFrame,
       maxDepth: Int, all: Boolean): Option[DataFrame] = {
     val spark = srcs.sparkSession
-    val max = maxEdges(spark)
+    val max = LocalGraphKernels.maxEdges(spark)
     if (max <= 0) return None
     if (srcs.schema.head.dataType != StringType ||
         tgts.schema.head.dataType != StringType) return None
@@ -396,7 +394,7 @@ private[graft] object LocalPathKernel {
   def pairsPaths(edges: => DataFrame, pairs: DataFrame, maxDepth: Int,
       all: Boolean): Option[DataFrame] = {
     val spark = pairs.sparkSession
-    val max = maxEdges(spark)
+    val max = LocalGraphKernels.maxEdges(spark)
     if (max <= 0) return None
     if (pairs.schema.fields.take(2).exists(_.dataType != StringType))
       return None

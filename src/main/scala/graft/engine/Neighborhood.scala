@@ -37,27 +37,10 @@ object Neighborhood {
     * oracle hash loudly, not silently. */
   private val LgConfigK = 11
 
-  /** Conf: pin the per-round sketch state DISK_ONLY instead of the
-    * localCheckpoint default (MEMORY_AND_DISK). The sketch frame is
-    * read exactly once per hop, sequentially — the access pattern that
-    * made DISK_ONLY free for gx18's adjacency — while a memory-resident
-    * copy occupies the unified pool's storage half exactly when the
-    * hop's union aggregation needs execution memory. Off by default
-    * (the in-memory state is faster at gate/bench SF); the sf10
-    * rehearsal measures whether it lifts the family's observed
-    * 1 GB/slot heap floor (PLANS.md r12 ladder). */
-  val DiskStateKey = "spark.graft.hyperball.diskOnlyState"
-
-  private def ckpt(df: DataFrame): DataFrame =
-    if (df.sparkSession.conf.get(DiskStateKey, "false").toBoolean)
-      df.localCheckpoint(eager = true,
-        org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    else df.localCheckpoint()
-
   /** Hop-0 sketch state: one singleton HLL per vertex, pinned. */
   private def initSketches(g: GraphState): DataFrame =
-    ckpt(g.vertices.groupBy(col("id"))
-      .agg(hll_sketch_agg(col("id"), LgConfigK).as("sk")))
+    g.vertices.groupBy(col("id"))
+      .agg(hll_sketch_agg(col("id"), LgConfigK).as("sk")).localCheckpoint()
 
   /** ONE HyperBall round: union every vertex's sketch into its
     * neighbors', keep isolated vertices' sketches, cut lineage. The
@@ -66,10 +49,11 @@ object Neighborhood {
     val nbr = sk.join(e, sk("id") === e("src"))
       .groupBy(col("dst").as("id"))
       .agg(hll_union_agg(col("sk")).as("nsk"))
-    ckpt(sk.join(nbr, Seq("id"), "left")
+    sk.join(nbr, Seq("id"), "left")
       .select(col("id"),
         when(col("nsk").isNull, col("sk"))
-          .otherwise(hll_union(col("sk"), col("nsk"))).as("sk")))
+          .otherwise(hll_union(col("sk"), col("nsk"))).as("sk"))
+      .localCheckpoint()
   }
 
   /** Exact k-hop neighborhood sizes (self included), one row per vertex:
@@ -173,7 +157,8 @@ object Neighborhood {
       // EVERY round's sketch checkpoint alive until the terminal
       // action, which is the hyperBallHops share of the family's
       // 1 GB/slot heap floor (PLANS.md r12 ladder)
-      val newOut = if (out == null) est else ckpt(out.join(est, Seq("id")))
+      val newOut =
+        if (out == null) est else out.join(est, Seq("id")).localCheckpoint()
       org.apache.spark.sql.graft.shims.releaseLocalCheckpoint(sk)
       if (out != null)
         org.apache.spark.sql.graft.shims.releaseLocalCheckpoint(out)

@@ -2,7 +2,6 @@ package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Iterative graph traversals: bounded BFS, unweighted shortest paths, and
   * variable-length path enumeration (SURVEY.md §2.B D17/D18).
@@ -90,33 +89,10 @@ object Traversals {
     if (undirected) fwd.union(bwd) else if (reversed) bwd else fwd
   }
 
-  /** Most cached hop-edge tables kept alive at once; each is one graph ×
-    * edge-type-filter × direction combination (a session typically uses a
-    * handful). Evicted entries unpersist — bounds executor memory even if
-    * a long session traverses many distinct (e.g. per-test) graphs.
-    *
-    * The key includes the OWNING SESSION: the cache is process-global
-    * and canonicalized plans compare equal across sessions, so a plan
-    * key alone would serve session A's persisted table to session B
-    * after A (and its SparkContext) stopped — failing with "Cannot
-    * call methods on a stopped SparkContext". Eviction tolerates
-    * dead-context entries (unpersist on one throws). */
-  private val MaxCachedEdgeTables = 8
-  private val edgeCache = new java.util.LinkedHashMap[
-      (SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan),
-      DataFrame](16, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[
-        (SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan),
-        DataFrame]): Boolean =
-      if (size > MaxCachedEdgeTables) {
-        try e.getValue.unpersist(false)
-        catch { case _: Throwable => () } // stopped context: entry just drops
-        true
-      } else false
-  }
-
-  /** Hop-edge table pre-partitioned by `src` and cached, keyed by the
-    * canonicalized plan (same graph + filter + direction → same entry).
+  /** Hop-edge table pre-partitioned by `src` and persisted by
+    * [[SessionCache]], keyed by the canonicalized plan (same graph +
+    * filter + direction → same entry); the registry bounds how many
+    * tables stay persisted and unpersists the ones it evicts.
     *
     * Why: every per-hop `localCheckpoint` starts its OWN QueryExecution,
     * and exchange reuse never crosses QueryExecutions — so an N-hop
@@ -128,18 +104,10 @@ object Traversals {
     * hop joins need NO exchange on either side at any depth. */
   private def partitionedEdges(df: DataFrame): DataFrame = {
     val n = traversalPartitions(df.sparkSession)
-    val key = (df.sparkSession, df.queryExecution.analyzed.canonicalized)
-    edgeCache.synchronized {
-      val hit = edgeCache.get(key)
-      if (hit != null) hit
-      else {
-        // explicit partition count: AQE never coalesces a user-specified
-        // repartition, so the count is stable for co-partition matching
-        val part = df.repartition(n, col("src"))
-        part.persist(StorageLevel.MEMORY_AND_DISK)
-        edgeCache.put(key, part)
-        part
-      }
+    SessionCache.ofPlan("traversal.edges", df, persist = true) {
+      // explicit partition count: AQE never coalesces a user-specified
+      // repartition, so the count is stable for co-partition matching
+      df.repartition(n, col("src"))
     }
   }
 

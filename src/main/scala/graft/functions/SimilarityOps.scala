@@ -53,11 +53,6 @@ object SimilarityOps {
       .filter(col("rank") <= k)
   }
 
-  /** Random-hyperplane LSH signature (a bit per plane): band 0 of the
-    * native all-planes-in-one-pass expression. */
-  def hyperplaneSignature(vec: Column, dim: Int, planes: Int): Column =
-    hyperplaneBandValues(vec, dim, planes, 1).getItem(0)
-
   /** Banded hyperplane sketches: `bands`×`planesPerBand` deterministic
     * hyperplanes; element i packs band i's sign bits into a long. Two
     * vectors are near-dup candidates iff they agree on ALL bits of at

@@ -27,8 +27,6 @@ final case class QueryDef(
 object QueryDef {
   def sql(name: String, oracle: String)(run: (SparkSession, String) => DataFrame)
       : QueryDef = QueryDef(name, run, Some(oracle))
-  def rowsOnly(name: String)(run: (SparkSession, String) => DataFrame)
-      : QueryDef = QueryDef(name, run, None)
 }
 
 /** Once-per-JVM staging of deterministic gate fixtures, keyed by

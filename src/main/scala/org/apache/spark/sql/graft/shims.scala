@@ -165,7 +165,7 @@ case class MinHashSigExpr(child: Expression, k: Int)
   * and the permutation family are identical to the compositional path
   * (TextOps.normalize + DedupOps.shingles + MinHashSigExpr). */
 case class MinHashTextSigExpr(child: Expression, n: Int, k: Int)
-    extends UnaryExpression with ImplicitCastInputTypes
+    extends UnaryExpression with ImplicitCastInputTypes with TextNormalizing
     with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
   import org.apache.spark.sql.catalyst.expressions.XxHash64Function
   import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -189,10 +189,7 @@ case class MinHashTextSigExpr(child: Expression, n: Int, k: Int)
   override def prettyName: String = "minhash_text_sig"
 
   override protected def nullSafeEval(input: Any): Any = {
-    // normalize exactly like TextOps.normalize:
-    // lower(trim(regexp_replace(text, "\s+", " ")))
-    val norm = input.asInstanceOf[UTF8String].toString
-      .replaceAll("\\s+", " ").trim.toLowerCase
+    val norm = normalized(input)
     val words = norm.split(" ", -1)
     val mins = Array.fill(k)(Long.MaxValue)
     def update(shingle: String): Unit = {
@@ -345,7 +342,7 @@ case class BandsFirstMatchExpr(left: Expression, right: Expression)
   * signatures and exact Jaccard computed from these sets agree on the
   * same underlying set family. */
 case class ShingleSetExpr(child: Expression, n: Int)
-    extends UnaryExpression with ImplicitCastInputTypes
+    extends UnaryExpression with ImplicitCastInputTypes with TextNormalizing
     with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
   import org.apache.spark.sql.catalyst.util.GenericArrayData
   import org.apache.spark.sql.types.{ArrayType, StringType}
@@ -357,10 +354,7 @@ case class ShingleSetExpr(child: Expression, n: Int)
   override def prettyName: String = "shingle_set"
 
   override protected def nullSafeEval(input: Any): Any = {
-    // normalize exactly like TextOps.normalize (and MinHashTextSigExpr):
-    // lower(trim(regexp_replace(text, "\s+", " ")))
-    val norm = input.asInstanceOf[UTF8String].toString
-      .replaceAll("\\s+", " ").trim.toLowerCase
+    val norm = normalized(input)
     val words = norm.split(" ", -1)
     val seen = new java.util.LinkedHashSet[String]()
     if (words.length < n) seen.add(words.mkString(" "))
@@ -397,7 +391,7 @@ case class ShingleSetExpr(child: Expression, n: Int)
   * for n-gram counting pipelines (LM cross-entropy), where the corpus
   * explode dominates wall-time. */
 case class ShingleListExpr(child: Expression, n: Int)
-    extends UnaryExpression with ImplicitCastInputTypes
+    extends UnaryExpression with ImplicitCastInputTypes with TextNormalizing
     with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
   import org.apache.spark.sql.catalyst.util.GenericArrayData
   import org.apache.spark.sql.types.{ArrayType, StringType}
@@ -409,8 +403,7 @@ case class ShingleListExpr(child: Expression, n: Int)
   override def prettyName: String = "shingle_list"
 
   override protected def nullSafeEval(input: Any): Any = {
-    val norm = input.asInstanceOf[UTF8String].toString
-      .replaceAll("\\s+", " ").trim.toLowerCase
+    val norm = normalized(input)
     val words = norm.split(" ", -1)
     if (words.length < n)
       return new GenericArrayData(
@@ -685,18 +678,16 @@ case class HashingFeaturesExpr(child: Expression, dim: Int)
   * (DedupOps.simhash); this md5 family exists so the signature itself
   * is reproducible by an independent engine (gate d04). */
 case class SimHashMd5Expr(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes
+    extends UnaryExpression with ImplicitCastInputTypes with TextNormalizing
     with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
   import org.apache.spark.sql.types.StringType
-  import org.apache.spark.unsafe.types.UTF8String
 
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
   override def dataType: DataType = LongType
   override def prettyName: String = "simhash_md5"
 
   override protected def nullSafeEval(input: Any): Any = {
-    val norm = input.asInstanceOf[UTF8String].toString
-      .replaceAll("\\s+", " ").trim.toLowerCase
+    val norm = normalized(input)
     val words = norm.split(" ", -1)
     val md = java.security.MessageDigest.getInstance("MD5")
     val votes = new Array[Int](64)
@@ -809,7 +800,7 @@ case class MinHashMd5SigExpr(child: Expression, k: Int)
   * on the string arrays ([[SortedIntersectCountExpr]]). Same
   * normalization/shingling as [[ShingleSetExpr]]. */
 case class HashedShingleSetExpr(child: Expression, n: Int)
-    extends UnaryExpression with ImplicitCastInputTypes
+    extends UnaryExpression with ImplicitCastInputTypes with TextNormalizing
     with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
   import org.apache.spark.sql.catalyst.util.GenericArrayData
   import org.apache.spark.sql.types.{ArrayType, StringType}
@@ -826,8 +817,7 @@ case class HashedShingleSetExpr(child: Expression, n: Int)
   }
 
   override protected def nullSafeEval(input: Any): Any = {
-    val norm = input.asInstanceOf[UTF8String].toString
-      .replaceAll("\\s+", " ").trim.toLowerCase
+    val norm = normalized(input)
     val words = norm.split(" ", -1)
     val raw =
       if (words.length < n) Array(hash(words.mkString(" ")))
@@ -947,7 +937,7 @@ case class SortedIntersectCountIntExpr(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Shared core of the fused stopword expressions: the EXACT normalize
+/** Shared core of the fused text expressions: the EXACT normalize
   * pipeline `lower(trim(regexp_replace(text, "\s+", " ")))` replayed
   * operator by operator with Spark's own machinery — java.util.regex
   * over the decoded string (what RegExpReplace runs, pattern compiled
@@ -970,15 +960,20 @@ object StopwordScore {
     words.map(w => (" " + w + " ")
       .getBytes(java.nio.charset.StandardCharsets.UTF_8)).toArray
 
-  /** `' ' || lower(trim(regexp_replace(input, '\s+', ' '))) || ' '`
-    * as UTF-8 bytes. */
+  /** `lower(trim(regexp_replace(input, '\s+', ' ')))` — exactly
+    * TextOps.normalize. The one normalizer of every fused text
+    * expression in this file. */
+  def normalize(input: UTF8String, collationId: Int, useICU: Boolean)
+      : UTF8String = {
+    val replaced = Ws.matcher(input.toString).replaceAll(" ")
+    org.apache.spark.sql.catalyst.util.CollationSupport.Lower.exec(
+      UTF8String.fromString(replaced).trim(), collationId, useICU)
+  }
+
+  /** `' ' || normalize(input) || ' '` as UTF-8 bytes. */
   def paddedBytes(input: UTF8String, collationId: Int, useICU: Boolean)
       : Array[Byte] = {
-    val replaced = Ws.matcher(input.toString).replaceAll(" ")
-    val lowered = org.apache.spark.sql.catalyst.util.CollationSupport
-      .Lower.exec(UTF8String.fromString(replaced).trim(), collationId,
-        useICU)
-    val b = lowered.getBytes
+    val b = normalize(input, collationId, useICU).getBytes
     val out = new Array[Byte](b.length + 2)
     out(0) = ' '.toByte
     out(out.length - 1) = ' '.toByte
@@ -1026,6 +1021,19 @@ object StopwordScore {
       org.apache.spark.sql.internal.SQLConf.ICU_CASE_MAPPINGS_ENABLED)
 }
 
+/** A fused text expression over its child's string, normalized exactly
+  * like TextOps.normalize by [[StopwordScore.normalize]]. */
+trait TextNormalizing { self: UnaryExpression =>
+  // lazy: the child is unresolved at construction during analysis
+  // rewrites; resolved by the first dataType/eval/codegen access
+  protected lazy val collationId: Int = StopwordScore.collationIdOf(child)
+  protected lazy val icu: Boolean = StopwordScore.useICU
+
+  protected def normalized(input: Any): String = StopwordScore.normalize(
+    input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
+    collationId, icu).toString
+}
+
 /** Σ non-overlapping occurrences of ` word ` over space-padded
   * normalized text, for a whole stopword list in ONE per-row pass —
   * the fused form of TextOps.stopwordCount. The compositional Column
@@ -1038,15 +1046,12 @@ object StopwordScore {
   * sits inside the surrounding WholeStageCodegen span instead of
   * breaking it as a CodegenFallback island. */
 case class StopwordCountExpr(child: Expression, words: Seq[String])
-    extends UnaryExpression with ImplicitCastInputTypes {
+    extends UnaryExpression with ImplicitCastInputTypes
+    with TextNormalizing {
   import org.apache.spark.sql.types.StringType
   import org.apache.spark.unsafe.types.UTF8String
 
   private val needles = StopwordScore.needles(words)
-  // lazy: the child is unresolved at construction during analysis
-  // rewrites; resolved by the first dataType/eval/codegen access
-  private lazy val collationId = StopwordScore.collationIdOf(child)
-  private lazy val icu = StopwordScore.useICU
 
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
   override def dataType: DataType = LongType
@@ -1080,14 +1085,13 @@ case class StopwordCountExpr(child: Expression, words: Seq[String])
   * [[StopwordScore]] counts. */
 case class StopwordPreferExpr(child: Expression, a: Seq[String],
     b: Seq[String])
-    extends UnaryExpression with ImplicitCastInputTypes {
+    extends UnaryExpression with ImplicitCastInputTypes
+    with TextNormalizing {
   import org.apache.spark.sql.types.{BooleanType, StringType}
   import org.apache.spark.unsafe.types.UTF8String
 
   private val needlesA = StopwordScore.needles(a)
   private val needlesB = StopwordScore.needles(b)
-  private lazy val collationId = StopwordScore.collationIdOf(child)
-  private lazy val icu = StopwordScore.useICU
 
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
   override def dataType: DataType = BooleanType
