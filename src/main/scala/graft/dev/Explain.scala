@@ -21,9 +21,10 @@ object Explain {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // comma-separated k=v session confs — e.g. force the distributed
-    // plan (spark.graft.graph.localKernelMaxEdges=0) to capture the
-    // at-scale plan shape of a kernel-accelerated operator
+    // comma-separated k=v session confs — e.g. decline every driver
+    // kernel (spark.graft.graph.localKernelMaxEdges=0, the one kernel
+    // gate bound) to capture the at-scale plan shape of a
+    // kernel-accelerated operator
     sys.env.get("SPARK_GRAFT_EXPLAIN_CONF").foreach(_.split(',')
       .filter(_.contains('=')).foreach { kv =>
         val Array(k, v) = kv.split("=", 2)

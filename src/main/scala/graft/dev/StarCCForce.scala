@@ -4,10 +4,11 @@ import org.apache.spark.sql.SparkSession
 
 /** Conf-forced StarCC equivalence check (round-10 task #5): run the
   * d07 dedup-cluster gate twice at the given SF dir — once on the
-  * default hybrid (driver union-find under the measured 2^19-edge
-  * bound) and once with `spark.graft.starcc.driverCollectBound=0`,
-  * which forces the DISTRIBUTED star-contraction fixpoint even for an
-  * empty edge set — and require bit-identical results. This pins the
+  * default hybrid (driver union-find when the measured pair graph
+  * passes the shared kernel gate) and once with
+  * `spark.graft.graph.localKernelMaxEdges=0`, which forces the
+  * DISTRIBUTED star-contraction fixpoint even for an empty edge set —
+  * and require bit-identical results. This pins the
   * distributed leg at REAL data scale (sf1's 249k-edge pair graph),
   * not just TraversalSpec's random digraphs.
   *
@@ -26,11 +27,11 @@ object StarCCForce {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // surface the [starcc] leg line (spark.graft.debug-gated)
+    // surface the gate's leg line (spark.graft.debug-gated)
     spark.conf.set(graft.util.Dbg.ConfKey, "true")
     val q = graft.SparkEntry.allQueries.find(_.name == qName)
       .getOrElse(sys.error(s"no gate named $qName"))
-    val boundKey = "spark.graft.starcc.driverCollectBound"
+    val boundKey = graft.engine.KernelGate.MaxEdgesKey
 
     def timed(tag: String): (Double, org.apache.spark.sql.DataFrame) = {
       val t0 = System.nanoTime()
@@ -44,7 +45,7 @@ object StarCCForce {
     // warm-up run (page cache + codegen) so the A/B measures the paths
     q.run(spark, dir).count()
 
-    val (tHybrid, hybrid) = timed("hybrid (default bound 2^19)")
+    val (tHybrid, hybrid) = timed("hybrid (default kernel bound)")
     spark.conf.set(boundKey, "0")
     val (tDist, dist) = timed("distributed (bound=0 forced)")
     spark.conf.unset(boundKey)

@@ -32,7 +32,7 @@ object TimeQuery {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // rehearsal harness: surface the engine's gated diagnostics
-    // (StarCC leg choice, linkpred bucket decisions)
+    // (kernel gate legs, linkpred bucket decisions)
     spark.conf.set(graft.util.Dbg.ConfKey, "true")
     // conf A/Bs: --set:spark.graft.graph.localKernelMaxEdges=0 etc.
     args.filter(_.startsWith("--set:")).foreach { a =>

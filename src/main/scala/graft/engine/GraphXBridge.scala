@@ -36,16 +36,10 @@ object GraphXBridge {
     val hashedV = g.vertices.select(xxhash64(col("id")).as("vid"))
     val hashedE = g.edges.select(xxhash64(col("src")).as("s"),
       xxhash64(col("dst")).as("d"))
-    LocalGraphKernels.connectedComponentsLong(hashedV, hashedE) match {
-      case Some(cc) =>
-        val mapping = g.vertices
-          .select(xxhash64(col("id")).as("vid"), col("id"))
-        return cc.join(mapping, Seq("vid"))
-          .select(col("id"), col("component"))
-      case None =>
-    }
-    val (graph, mapping) = toGraphX(g)
-    val cc = graph.connectedComponents().vertices.toDF("vid", "component")
+    val cc = LocalGraphKernels.connectedComponentsLong(hashedV, hashedE)
+      .getOrElse(toGraphX(g)._1.connectedComponents().vertices
+        .toDF("vid", "component"))
+    val mapping = g.vertices.select(xxhash64(col("id")).as("vid"), col("id"))
     cc.join(mapping, Seq("vid")).select(col("id"), col("component"))
   }
 
@@ -210,26 +204,24 @@ object GraphXBridge {
       (implicit spark: SparkSession): DataFrame = {
     // small graphs (r13): driver-side (min, +) relaxation to the same
     // fixpoint as the Pregel run (IEEE + is monotone — order-free)
-    LocalGraphKernels.weightedSssp(edges, sources) match {
-      case Some(df) => return df
-      case None =>
+    LocalGraphKernels.weightedSssp(edges, sources).getOrElse {
+      import spark.implicits._
+      val srcSet = sources.toSet
+      val edgeRdd = edges.rdd
+        .map(r => GxEdge(r.getLong(0), r.getLong(1), r.getDouble(2)))
+      val graph = Graph.fromEdges(edgeRdd, 0.0)
+        .mapVertices((id, _) =>
+          if (srcSet.contains(id)) 0.0 else Double.PositiveInfinity)
+      val res = graph.pregel(Double.PositiveInfinity)(
+        (_, d, msg) => math.min(d, msg),
+        t =>
+          if (t.srcAttr + t.attr < t.dstAttr)
+            Iterator((t.dstId, t.srcAttr + t.attr))
+          else Iterator.empty,
+        (a, b) => math.min(a, b))
+      res.vertices.filter(_._2 < Double.PositiveInfinity)
+        .toDF("id", "distance")
     }
-    import spark.implicits._
-    val srcSet = sources.toSet
-    val edgeRdd = edges.rdd
-      .map(r => GxEdge(r.getLong(0), r.getLong(1), r.getDouble(2)))
-    val graph = Graph.fromEdges(edgeRdd, 0.0)
-      .mapVertices((id, _) =>
-        if (srcSet.contains(id)) 0.0 else Double.PositiveInfinity)
-    val res = graph.pregel(Double.PositiveInfinity)(
-      (_, d, msg) => math.min(d, msg),
-      t =>
-        if (t.srcAttr + t.attr < t.dstAttr)
-          Iterator((t.dstId, t.srcAttr + t.attr))
-        else Iterator.empty,
-      (a, b) => math.min(a, b))
-    res.vertices.filter(_._2 < Double.PositiveInfinity)
-      .toDF("id", "distance")
   }
 
   /** [[weightedSssp]] over the STRING-id property graph — the Cypher
@@ -341,27 +333,25 @@ object GraphXBridge {
       (implicit spark: SparkSession): DataFrame = {
     // small graphs (r13): driver-side synchronous peel to the same
     // fixpoint — the per-round count/semi-join/checkpoint jobs go away
-    LocalGraphKernels.kCore(edges, k) match {
-      case Some(df) => return df
-      case None =>
+    LocalGraphKernels.kCore(edges, k).getOrElse {
+      // symmetric doubled representation: degree(v) = row count at id=v
+      var cur = edges.select(col("src").as("id"), col("dst").as("other"))
+        .unionAll(edges.select(col("dst").as("id"), col("src").as("other")))
+        .localCheckpoint()
+      var prev = -1L
+      var n = cur.count()
+      while (n != prev && n > 0) {
+        prev = n
+        val keep = cur.groupBy(col("id")).agg(count(lit(1)).as("d"))
+          .filter(col("d") >= k).select(col("id"))
+        cur = cur.join(keep, Seq("id"))
+          .join(keep.select(col("id").as("other")), Seq("other"))
+          .select(col("id"), col("other")).localCheckpoint()
+        n = cur.count()
+      }
+      cur.groupBy(col("id"))
+        .agg(count(lit(1)).cast("long").as("core_degree"))
     }
-    // symmetric doubled representation: degree(v) = row count at id=v
-    var cur = edges.select(col("src").as("id"), col("dst").as("other"))
-      .unionAll(edges.select(col("dst").as("id"), col("src").as("other")))
-      .localCheckpoint()
-    var prev = -1L
-    var n = cur.count()
-    while (n != prev && n > 0) {
-      prev = n
-      val keep = cur.groupBy(col("id")).agg(count(lit(1)).as("d"))
-        .filter(col("d") >= k).select(col("id"))
-      cur = cur.join(keep, Seq("id"))
-        .join(keep.select(col("id").as("other")), Seq("other"))
-        .select(col("id"), col("other")).localCheckpoint()
-      n = cur.count()
-    }
-    cur.groupBy(col("id"))
-      .agg(count(lit(1)).cast("long").as("core_degree"))
   }
 
   /** Synchronous label propagation (community detection), fully
@@ -386,27 +376,25 @@ object GraphXBridge {
       (implicit spark: SparkSession): DataFrame = {
     // small graphs (r13): driver-side CSR kernel — rounds × (join +
     // 2 aggregates + checkpoint) become a few M array ops
-    LocalGraphKernels.labelPropagation(edges, rounds) match {
-      case Some(df) => return df
-      case None =>
+    LocalGraphKernels.labelPropagation(edges, rounds).getOrElse {
+      val sym = edges.select(col("src").as("id"), col("dst").as("nbr"))
+        .unionAll(edges.select(col("dst").as("id"), col("src").as("nbr")))
+        .localCheckpoint()
+      var labels = sym.select(col("id")).distinct()
+        .withColumn("label", col("id"))
+      for (_ <- 1 to rounds) {
+        labels = sym
+          .join(labels.withColumnRenamed("id", "nbr"), Seq("nbr"))
+          .groupBy(col("id"), col("label"))
+          .agg(count(lit(1)).as("c"))
+          .groupBy(col("id"))
+          .agg(min(struct((-col("c")).as("nc"), col("label").as("l")))
+            .as("m"))
+          .select(col("id"), col("m.l").as("label"))
+          .localCheckpoint(eager = false)
+      }
+      labels
     }
-    val sym = edges.select(col("src").as("id"), col("dst").as("nbr"))
-      .unionAll(edges.select(col("dst").as("id"), col("src").as("nbr")))
-      .localCheckpoint()
-    var labels = sym.select(col("id")).distinct()
-      .withColumn("label", col("id"))
-    for (_ <- 1 to rounds) {
-      labels = sym
-        .join(labels.withColumnRenamed("id", "nbr"), Seq("nbr"))
-        .groupBy(col("id"), col("label"))
-        .agg(count(lit(1)).as("c"))
-        .groupBy(col("id"))
-        .agg(min(struct((-col("c")).as("nc"), col("label").as("l")))
-          .as("m"))
-        .select(col("id"), col("m.l").as("label"))
-        .localCheckpoint(eager = false)
-    }
-    labels
   }
 
   /** Personalized PageRank in EXACT integer arithmetic: ranks are
@@ -430,33 +418,31 @@ object GraphXBridge {
       (implicit spark: SparkSession): DataFrame = {
     // small graphs (r13): driver-side kernel, same exact-integer
     // arithmetic (floor-div push, α = 1/2) — see LocalGraphKernels
-    LocalGraphKernels.pprInt(edges, seeds, iters, seedMass) match {
-      case Some(df) => return df
-      case None =>
+    LocalGraphKernels.pprInt(edges, seeds, iters, seedMass).getOrElse {
+      val sym = edges.select(col("src").as("id"), col("dst").as("nbr"))
+        .unionAll(edges.select(col("dst").as("id"), col("src").as("nbr")))
+        .localCheckpoint()
+      val deg = sym.groupBy(col("id")).agg(count(lit(1)).as("deg"))
+        .localCheckpoint()
+      val seedIds = deg.join(seeds, Seq("id"), "left_semi")
+        .select(col("id")).localCheckpoint()
+      var r = seedIds.withColumn("rank", lit(seedMass))
+      for (_ <- 1 to iters) {
+        val contrib = r.join(deg, Seq("id"))
+          .select(col("id"), expr("rank div deg").as("c"))
+          .join(sym, Seq("id"))
+          .groupBy(col("nbr").as("id"))
+          .agg(sum(col("c")).as("s"))
+        r = contrib
+          .join(seedIds.withColumn("is_seed", lit(1L)), Seq("id"), "outer")
+          .select(col("id"),
+            (expr("coalesce(s, 0L) div 2") +
+              when(col("is_seed") === 1L, lit(seedMass / 2))
+                .otherwise(lit(0L))).as("rank"))
+          .filter(col("rank") > 0).localCheckpoint()
+      }
+      r
     }
-    val sym = edges.select(col("src").as("id"), col("dst").as("nbr"))
-      .unionAll(edges.select(col("dst").as("id"), col("src").as("nbr")))
-      .localCheckpoint()
-    val deg = sym.groupBy(col("id")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint()
-    val seedIds = deg.join(seeds, Seq("id"), "left_semi")
-      .select(col("id")).localCheckpoint()
-    var r = seedIds.withColumn("rank", lit(seedMass))
-    for (_ <- 1 to iters) {
-      val contrib = r.join(deg, Seq("id"))
-        .select(col("id"), expr("rank div deg").as("c"))
-        .join(sym, Seq("id"))
-        .groupBy(col("nbr").as("id"))
-        .agg(sum(col("c")).as("s"))
-      r = contrib
-        .join(seedIds.withColumn("is_seed", lit(1L)), Seq("id"), "outer")
-        .select(col("id"),
-          (expr("coalesce(s, 0L) div 2") +
-            when(col("is_seed") === 1L, lit(seedMass / 2))
-              .otherwise(lit(0L))).as("rank"))
-        .filter(col("rank") > 0).localCheckpoint()
-    }
-    r
   }
 
   /** Per-edge TRIANGLE SUPPORT (the k-truss building block): for each
@@ -479,75 +465,75 @@ object GraphXBridge {
     // exchange, no credit shuffle (measured: gx14 sf0.1 260 MB shuffle
     // → ~0). ANY forced bucket conf (incl. 1 = forced single pass — the
     // ScaleSpec equivalence pins) exercises the distributed plan.
-    if (spark.conf.get(TriSupportBucketsKey, "0").toInt == 0) {
-      LocalGraphKernels.triangleSupport(edges) match {
-        case Some(sup) => return sup
-        case None =>
-      }
-    }
-    val b = triSupportBuckets(spark, edges)
-    if (b <= 1) {
-      // single pass — bit-identical to the pre-bucketing plan:
-      // one row per TRIANGLE (u≺v≺w in orientation order) …
-      val tri = withOrientedIntersections(edges)
-        .select(col("u"), col("v"),
-          explode(array_intersect(col("un"), col("vn"))).as("w"))
-      // … credits its three edges in canonical ID order, one pass
-      val sup = trianglesToCredits(tri).groupBy(col("src"), col("dst"))
-        .agg(count(lit(1)).as("support"))
-      edges.join(sup, Seq("src", "dst"), "left")
-        .select(col("src"), col("dst"),
-          coalesce(col("support"), lit(0L)).as("support"))
-    } else {
-      // Disk-bounded sequential passes over the DISCOVERY-edge key
-      // space (the gx18 recipe applied to gx14's intersection shuffle
-      // — r12 rehearsal: sf1 2.6 GB → sf10 54 GB single-pass, the
-      // spill-superlinearity signature that preceded gx18's sf10 disk
-      // death one SF later). Pass i keeps only oriented edges with
-      // pmod(xxhash64(u,v), B) = i — an EXACT partition of the
-      // discovery edges, and every triangle a≺b≺c is discovered
-      // exactly once (on its unique orientation-minimal edge a→b), so
-      // per-pass credit counts merge to the exact support by simple
-      // addition. Per-pass shuffle (the v-side array-carrying join +
-      // that pass's credit exchange) drops to ~volume/B; the oriented
-      // and adjacency frames are pinned DISK_ONLY so the B re-reads
-      // don't re-run the degree joins and don't occupy the unified
-      // pool's storage half exactly when the passes' aggregation
-      // needs execution memory (the gx18 sf10 lesson).
-      val dk = org.apache.spark.storage.StorageLevel.DISK_ONLY
-      val oriented = orientEdges(edges).localCheckpoint(eager = true, dk)
-      val adj = orientedAdjacency(oriented)
-        .localCheckpoint(eager = true, dk)
-      val partials = (0 until b).map { i =>
-        val oi = oriented.filter(
-          pmod(xxhash64(col("u"), col("v")), lit(b.toLong))
-            === lit(i.toLong))
-        val tri = joinOrientedAdj(oi, adj)
+    val kernel =
+      if (spark.conf.get(TriSupportBucketsKey, "0").toInt == 0)
+        LocalGraphKernels.triangleSupport(edges)
+      else None
+    kernel.getOrElse {
+      val b = triSupportBuckets(spark, edges)
+      if (b <= 1) {
+        // single pass — bit-identical to the pre-bucketing plan:
+        // one row per TRIANGLE (u≺v≺w in orientation order) …
+        val tri = withOrientedIntersections(edges)
           .select(col("u"), col("v"),
             explode(array_intersect(col("un"), col("vn"))).as("w"))
-        // EAGER per pass: pass i's shuffle files are unreferenced —
-        // and droppable — before pass i+1 writes
-        val part = trianglesToCredits(tri)
-          .groupBy(col("src"), col("dst"))
-          .agg(count(lit(1)).as("psup"))
+        // … credits its three edges in canonical ID order, one pass
+        val sup = trianglesToCredits(tri).groupBy(col("src"), col("dst"))
+          .agg(count(lit(1)).as("support"))
+        edges.join(sup, Seq("src", "dst"), "left")
+          .select(col("src"), col("dst"),
+            coalesce(col("support"), lit(0L)).as("support"))
+      } else {
+        // Disk-bounded sequential passes over the DISCOVERY-edge key
+        // space (the gx18 recipe applied to gx14's intersection shuffle
+        // — r12 rehearsal: sf1 2.6 GB → sf10 54 GB single-pass, the
+        // spill-superlinearity signature that preceded gx18's sf10 disk
+        // death one SF later). Pass i keeps only oriented edges with
+        // pmod(xxhash64(u,v), B) = i — an EXACT partition of the
+        // discovery edges, and every triangle a≺b≺c is discovered
+        // exactly once (on its unique orientation-minimal edge a→b), so
+        // per-pass credit counts merge to the exact support by simple
+        // addition. Per-pass shuffle (the v-side array-carrying join +
+        // that pass's credit exchange) drops to ~volume/B; the oriented
+        // and adjacency frames are pinned DISK_ONLY so the B re-reads
+        // don't re-run the degree joins and don't occupy the unified
+        // pool's storage half exactly when the passes' aggregation
+        // needs execution memory (the gx18 sf10 lesson).
+        val dk = org.apache.spark.storage.StorageLevel.DISK_ONLY
+        val oriented = orientEdges(edges).localCheckpoint(eager = true, dk)
+        val adj = orientedAdjacency(oriented)
           .localCheckpoint(eager = true, dk)
-        gcBetweenPasses(spark)
-        graft.util.Dbg(spark, s"[trisupport] bucket $i/$b done")
-        part
+        val partials = (0 until b).map { i =>
+          val oi = oriented.filter(
+            pmod(xxhash64(col("u"), col("v")), lit(b.toLong))
+              === lit(i.toLong))
+          val tri = joinOrientedAdj(oi, adj)
+            .select(col("u"), col("v"),
+              explode(array_intersect(col("un"), col("vn"))).as("w"))
+          // EAGER per pass: pass i's shuffle files are unreferenced —
+          // and droppable — before pass i+1 writes
+          val part = trianglesToCredits(tri)
+            .groupBy(col("src"), col("dst"))
+            .agg(count(lit(1)).as("psup"))
+            .localCheckpoint(eager = true, dk)
+          System.gc() // see topLinkPredictions' passes
+          graft.util.Dbg(spark, s"[trisupport] bucket $i/$b done")
+          part
+        }
+        // merge = per-edge sum of the per-pass counts (exact by the
+        // partition argument above); materialized eagerly so every
+        // pass-local pin can be released NOW instead of lingering until
+        // ContextCleaner catches up (ADVICE r12)
+        val sup = partials.reduce(_ unionAll _)
+          .groupBy(col("src"), col("dst"))
+          .agg(sum(col("psup")).as("support"))
+          .localCheckpoint(eager = true, dk)
+        (Seq(oriented, adj) ++ partials).foreach(
+          org.apache.spark.sql.graft.shims.releaseLocalCheckpoint)
+        edges.join(sup, Seq("src", "dst"), "left")
+          .select(col("src"), col("dst"),
+            coalesce(col("support"), lit(0L)).as("support"))
       }
-      // merge = per-edge sum of the per-pass counts (exact by the
-      // partition argument above); materialized eagerly so every
-      // pass-local pin can be released NOW instead of lingering until
-      // ContextCleaner catches up (ADVICE r12)
-      val sup = partials.reduce(_ unionAll _)
-        .groupBy(col("src"), col("dst"))
-        .agg(sum(col("psup")).as("support"))
-        .localCheckpoint(eager = true, dk)
-      (Seq(oriented, adj) ++ partials).foreach(
-        org.apache.spark.sql.graft.shims.releaseLocalCheckpoint)
-      edges.join(sup, Seq("src", "dst"), "left")
-        .select(col("src"), col("dst"),
-          coalesce(col("support"), lit(0L)).as("support"))
     }
   }
 
@@ -935,78 +921,80 @@ object GraphXBridge {
     // never run. Uncapped centers only (the cap changes which wedges
     // exist); a forced bucket conf always exercises the distributed
     // plan.
-    if (maxCenterDegree == Int.MaxValue &&
-        spark.conf.get(LinkPredBucketsKey, "0").toInt == 0) {
-      LocalGraphKernels.topCommonNeighbors(edges, k) match {
-        case Some((top, degDf)) =>
-          return scoreCandidates(top, degDf, small = true)
-            .orderBy(byRank: _*)
-        case None =>
+    val kernel =
+      if (maxCenterDegree == Int.MaxValue &&
+          spark.conf.get(LinkPredBucketsKey, "0").toInt == 0)
+        LocalGraphKernels.topCommonNeighbors(edges, k).map {
+          case (top, degDf) =>
+            scoreCandidates(top, degDf, small = true).orderBy(byRank: _*)
+        }
+      else None
+    kernel.getOrElse {
+      val p = prepareWedges(edges, maxCenterDegree)
+      val capped =
+        if (maxCenterDegree == Int.MaxValue) p.deg
+        else p.deg.filter(col("deg") <= maxCenterDegree)
+      // double, not long: the census is an estimate and Σ deg² on a
+      // 100 TB graph would overflow a long under ANSI
+      val wedges = {
+        val r = capped.agg(sum(col("deg").cast("double")
+          * (col("deg") - 1) / 2)).head()
+        if (r.isNullAt(0)) 0.0 else r.getDouble(0)
       }
-    }
-    val p = prepareWedges(edges, maxCenterDegree)
-    val capped =
-      if (maxCenterDegree == Int.MaxValue) p.deg
-      else p.deg.filter(col("deg") <= maxCenterDegree)
-    // double, not long: the census is an estimate and Σ deg² on a
-    // 100 TB graph would overflow a long under ANSI
-    val wedges = {
-      val r = capped.agg(sum(col("deg").cast("double")
-        * (col("deg") - 1) / 2)).head()
-      if (r.isNullAt(0)) 0.0 else r.getDouble(0)
-    }
-    val b = linkPredBuckets(spark, wedges)
-    // per-pass aggregation width from the same census (each pass sees
-    // ~wedges/B rows)
-    val parts = linkPredAggPartitions(spark, wedges / b)
-    graft.util.Dbg(spark,
-      f"[linkpred] wedges=$wedges%.3g buckets=$b aggParts=$parts")
-    if (b <= 1) {
-      val top = candFrom(p, p.adj, None, parts)
-        .orderBy(byRank: _*).limit(k)
-      scoreCandidates(broadcast(top), p.deg, small = true).orderBy(byRank: _*)
-    } else {
-      // B passes re-read the adjacency: pin it so the sym-groupBy
-      // shuffle behind it runs once, not B times — DISK_ONLY, because
-      // a multi-GB adjacency held MEMORY_AND_DISK occupies the
-      // unified pool's storage half exactly when the passes'
-      // aggregation needs execution memory (observed at sf10/8 g:
-      // pass 3 died UNABLE_TO_ACQUIRE_MEMORY with the adjacency
-      // cached; sequential disk reads are noise next to the explode)
-      val adj = p.adj.localCheckpoint(eager = true,
-        org.apache.spark.storage.StorageLevel.DISK_ONLY)
-      val tops = (0 until b).map { i =>
-        val t = candFrom(p, adj, Some((b, i)), parts)
+      val b = linkPredBuckets(spark, wedges)
+      // per-pass aggregation width from the same census (each pass sees
+      // ~wedges/B rows)
+      val parts = linkPredAggPartitions(spark, wedges / b)
+      graft.util.Dbg(spark,
+        f"[linkpred] wedges=$wedges%.3g buckets=$b aggParts=$parts")
+      if (b <= 1) {
+        val top = candFrom(p, p.adj, None, parts)
           .orderBy(byRank: _*).limit(k)
-          .localCheckpoint() // EAGER: pass i completes (k rows) here
-        // the pass's shuffle files are dropped by ContextCleaner once
-        // their dependencies are unreachable — nudge the collector
-        // before the next pass starts writing (conf-gated, ADVICE r12)
-        gcBetweenPasses(spark)
-        graft.util.Dbg(spark, s"[linkpred] bucket $i/$b done")
-        t
+        scoreCandidates(broadcast(top), p.deg, small = true).orderBy(byRank: _*)
+      } else {
+        // B passes re-read the adjacency: pin it so the sym-groupBy
+        // shuffle behind it runs once, not B times — DISK_ONLY, because
+        // a multi-GB adjacency held MEMORY_AND_DISK occupies the
+        // unified pool's storage half exactly when the passes'
+        // aggregation needs execution memory (observed at sf10/8 g:
+        // pass 3 died UNABLE_TO_ACQUIRE_MEMORY with the adjacency
+        // cached; sequential disk reads are noise next to the explode)
+        val adj = p.adj.localCheckpoint(eager = true,
+          org.apache.spark.storage.StorageLevel.DISK_ONLY)
+        val tops = (0 until b).map { i =>
+          val t = candFrom(p, adj, Some((b, i)), parts)
+            .orderBy(byRank: _*).limit(k)
+            .localCheckpoint() // EAGER: pass i completes (k rows) here
+          // the pass's shuffle files are dropped by ContextCleaner once
+          // their dependencies are unreachable — nudge the collector
+          // before the next pass starts writing, so peak scratch stays
+          // ~volume/B (r12 sf10 rehearsal: disk returns to baseline
+          // between passes); bucketed mode only
+          System.gc()
+          graft.util.Dbg(spark, s"[linkpred] bucket $i/$b done")
+          t
+        }
+        // materialize the k-row merged top eagerly so the multi-GB
+        // DISK_ONLY adjacency and every pass's pinned top can be
+        // released NOW — in a long-lived session the blocks otherwise
+        // linger until the driver GCs the frames (ADVICE r12)
+        val top = tops.reduce(_ unionAll _).orderBy(byRank: _*).limit(k)
+          .localCheckpoint()
+        (adj +: tops).foreach(
+          org.apache.spark.sql.graft.shims.releaseLocalCheckpoint)
+        scoreCandidates(broadcast(top), p.deg, small = true).orderBy(byRank: _*)
       }
-      // materialize the k-row merged top eagerly so the multi-GB
-      // DISK_ONLY adjacency and every pass's pinned top can be
-      // released NOW — in a long-lived session the blocks otherwise
-      // linger until the driver GCs the frames (ADVICE r12)
-      val top = tops.reduce(_ unionAll _).orderBy(byRank: _*).limit(k)
-        .localCheckpoint()
-      (adj +: tops).foreach(
-        org.apache.spark.sql.graft.shims.releaseLocalCheckpoint)
-      scoreCandidates(broadcast(top), p.deg, small = true).orderBy(byRank: _*)
     }
   }
 
-  /** Conf: target bytes per pair-aggregation partition for
+  /** Target bytes per pair-aggregation partition for
     * [[topLinkPredictions]] (packed 8 B/wedge rows buffered in
-    * PackedKeyCount's flat drain). Default 64 MB: small enough that a
-    * full complement of concurrently-running partitions fits any
-    * reasonable executor heap (32 × 64 MB = 2 GB of buffers at
-    * local[32]), large enough that sf0.1-sized runs (148M wedges →
-    * 18 partitions < the 32-partition session default) keep their
-    * existing plans. */
-  val LinkPredAggBytesKey = "spark.graft.linkpred.aggPartitionBytes"
+    * PackedKeyCount's flat drain): small enough that a full complement
+    * of concurrently-running partitions fits any reasonable executor
+    * heap (32 × 64 MB = 2 GB of buffers at local[32]), large enough that
+    * sf0.1-sized runs (148M wedges → 18 partitions < the 32-partition
+    * session default) keep their existing plans. */
+  private val LinkPredAggPartitionBytes = 64L << 20
 
   /** Census-derived width for the pair-count exchange: None (= keep
     * the session count) unless the projected volume wants MORE
@@ -1016,10 +1004,9 @@ object GraphXBridge {
     * answer is bucketed passes). */
   private def linkPredAggPartitions(spark: SparkSession,
       wedgesPerPass: Double): Option[Int] = {
-    val target = spark.conf.get(LinkPredAggBytesKey,
-      (64L << 20).toString).toLong
     val session = spark.sessionState.conf.numShufflePartitions
-    val n = math.ceil(wedgesPerPass * BytesPerWedge / target)
+    val n = math.ceil(wedgesPerPass * BytesPerWedge /
+      LinkPredAggPartitionBytes)
     if (n <= session || n.isNaN) None
     else Some(math.min(n, 16384.0).toInt)
   }
@@ -1033,19 +1020,6 @@ object GraphXBridge {
     * [[edgeTriangleSupport]]); unset/0 = 35% of usable space on the
     * first spark.local.dir. */
   val LinkPredBudgetKey = "spark.graft.linkpred.shuffleBudgetBytes"
-
-  /** Conf: between bucketed passes, nudge the JVM collector so the
-    * finished pass's shuffle files (ContextCleaner-tracked) drop before
-    * the next pass writes — the pass-local cleanup that keeps peak
-    * scratch at ~volume/B (r12 sf10 rehearsal: disk returns to baseline
-    * between passes). Default on; a long-lived shared driver that
-    * cannot tolerate a stop-the-world can turn it off and size the
-    * budget for 2 passes' worth of scratch instead (ADVICE r12: the
-    * raw System.gc() is now opt-out and bucketed-mode-only). */
-  val GcBetweenPassesKey = "spark.graft.bucketed.gcBetweenPasses"
-
-  private def gcBetweenPasses(spark: SparkSession): Unit =
-    if (spark.conf.get(GcBetweenPassesKey, "true").toBoolean) System.gc()
 
   /** Measured at sf1 (PLANS.md round 7): ~1.3B packed-long wedges →
     * 10.3 GB lz4-compressed shuffle ≈ 8 B/wedge. */

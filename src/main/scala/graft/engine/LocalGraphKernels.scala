@@ -1,78 +1,32 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 
-/** Size-gated LOCAL kernels for the wedge/triangle operator family.
+/** Driver-side kernels for small long-id graphs: the wedge/triangle
+  * family (link prediction, triangle support) and the iterative
+  * operators (label propagation, integer PPR, k-core, weighted SSSP,
+  * connected components) of [[GraphXBridge]].
   *
-  * Rationale (optimization guide §8: move decisions to small data —
-  * measured in OPTIMIZATION_r13.md): at sf0.1 the co-purchase graph is
-  * 20k vertices / 1.2M canonical edges ≈ 10 MB as a CSR array, yet the
+  * Why (OPTIMIZATION_r13.md): at sf0.1 the co-purchase graph is 20k
+  * vertices / 1.2M canonical edges ≈ 10 MB as a CSR array, yet the
   * distributed wedge formulation shuffles the FULL Σ C(deg,2) wedge
   * stream (148M packed longs ≈ 1.0 GB measured) just to count pair
-  * multiplicities that a broadcast adjacency can count in-place. This
-  * is the same strategy decision as a broadcast-hash join: when one
-  * side (here, the whole adjacency) fits comfortably in memory, ship
-  * it everywhere once and never shuffle the big derived stream at all.
-  *
-  * The gate is a column-pruned `count()` probe ([[countOnce]])
-  * followed by a parallel `collect()` of the projection, checked
-  * against [[LocalGraphKernels.MaxEdgesKey]]; above the threshold the
-  * caller falls back to the unchanged distributed (and, past the disk
-  * budget, bucketed) plan — the 100 TB path is untouched. The collected
-  * edge list is bounded by the same conf (default 4M edges ≈ 64 MB —
-  * the broadcast-relation size class, far below Spark's own 8 GB
-  * broadcast cap). Counts and collected arrays are kept for later
-  * queries of the same session by [[SessionCache]], keyed by the
-  * projection's canonicalized plan; its budget and LRU decide how long.
+  * multiplicities that a broadcast adjacency counts in place; the
+  * iterative operators spend their time in per-round job latency, not
+  * data. Every kernel decides through [[KernelGate]], which sizes,
+  * checks and collects its inputs; a declined kernel returns None and
+  * the caller keeps the distributed (and, past the disk budget,
+  * bucketed) plan.
   *
   * Determinism: dense vertex indices are assigned in ascending id
   * order, so dense order == id order and every tie-break below
   * reproduces the distributed plan's (common DESC, id1, id2) /
   * canonical-edge ordering exactly; counts are exact integers.
-  * Equivalence is pinned in ScaleSpec (kernel vs distributed on the
-  * same graphs, long ids; string-id inputs always take the distributed
-  * path).
+  * Equivalence is pinned in ScaleSpec and KernelGatePropertySpec
+  * (kernel vs distributed on the same graphs).
   */
 private[graft] object LocalGraphKernels {
-
-  /** Conf: max canonical edge count for the local kernels (shared by
-    * the link-prediction and triangle-support fast paths); 0 disables
-    * them. Default 4M edges ≈ 64 MB collected / ~40 MB as broadcast
-    * CSR — small-broadcast class on any driver. Production note
-    * (OPTIMIZATION_r13.md): this is a per-GRAPH bound, not a per-SF
-    * bound — a 100 TB run whose extracted subgraph is still ≤ 4M edges
-    * (e.g. a per-tenant slice) legitimately takes this path; the full
-    * co-purchase graph at sf1+ exceeds it and keeps the distributed
-    * plan. */
-  val MaxEdgesKey = "spark.graft.graph.localKernelMaxEdges"
-
-  private[engine] def maxEdges(spark: SparkSession): Int =
-    spark.conf.get(MaxEdgesKey, "4000000").toInt
-
-  /** Gate-probe count of `df`, cached per session on its plan: else
-    * every kernel call pays a full count, at scale to learn "too big".
-    * Sound because kernel inputs are immutable within a session. */
-  private[engine] def countOnce(df: DataFrame): Long =
-    SessionCache.ofPlan("kernel.count", df)(
-      java.lang.Long.valueOf(df.count())).longValue
-
-  /** Collected raw rows of `proj`, cached like [[countOnce]], for the
-    * positional readers (weightedSssp, connectedComponentsLong). */
-  private def collectRowsOnce(proj: DataFrame): Array[InternalRow] =
-    SessionCache.ofPlan("kernel.rows", proj)(
-      proj.queryExecution.executedPlan.executeCollect())
-
-  /** Both id columns integral (the dense-index mapping needs a total
-    * numeric order; string graphs keep the distributed plan). */
-  private def integralIds(edges: DataFrame): Boolean =
-    Seq("src", "dst").forall(c => edges.schema(c).dataType match {
-      case org.apache.spark.sql.types.LongType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.ShortType => true
-      case _ => false
-    })
 
   /** Symmetric CSR adjacency in dense index space: `ids` sorted
     * ascending (dense idx → original id), `off`/`nbr` the usual
@@ -82,62 +36,61 @@ private[graft] object LocalGraphKernels {
     def n: Int = ids.length
   }
 
-  /** Bounded probe: a column-pruned count() decides engagement, then
-    * the edge list is collected with the normal PARALLEL collect path
-    * (a limit(max+1)-guarded collect funnels every row through one
-    * task and a single-threaded driver decode — measured ~1 s for the
-    * 1.2M-edge sf0.1 graph, dominating the kernels it fed; the count
-    * is one pass of the input plan on FIRST probe and a [[countOnce]]
-    * cache hit after that, so an over-limit graph costs one cheap count
-    * per session instead of a 4M-row truncated fetch per call). */
-  private def collectIfSmall(edges: DataFrame, max: Int)
-      : Option[Array[Long]] = {
-    if (max <= 0 || !integralIds(edges)) return None
-    val proj = edges
-      .select(col("src").cast("long"), col("dst").cast("long"))
-    if (countOnce(proj) > max) return None // size gate BEFORE the cache:
-                                           // a forced lower bound still
-                                           // rejects a cached array
-    // shared by every kernel gate over the same projection (six gates
-    // read the co-purchase graph); CONSUMERS MUST NOT MUTATE it
-    // (buildCsr copies; kCore reads positionally)
-    Some(SessionCache.ofPlan("kernel.edges", proj) {
-      // executeCollect returns the raw UnsafeRows — skips the per-row
-      // external-Row conversion (2 boxed Longs per edge on a millions-
-      // of-edges collect); the pack loop reads the longs in place
-      val rows = proj.queryExecution.executedPlan.executeCollect()
-      val packed = new Array[Long](rows.length * 2)
-      var i = 0
-      while (i < rows.length) {
-        packed(2 * i) = rows(i).getLong(0)
-        packed(2 * i + 1) = rows(i).getLong(1)
-        i += 1
-      }
-      packed
-    })
+  /** The id columns of a canonical edge frame. */
+  private val SrcDst = Seq("src", "dst")
+
+  /** `a` sorted in place; its distinct values, ascending. */
+  private[engine] def sortedDistinct(a: Array[Long]): Array[Long] = {
+    java.util.Arrays.sort(a)
+    var n = 0
+    var i = 0
+    while (i < a.length) {
+      if (n == 0 || a(i) != a(n - 1)) { a(n) = a(i); n += 1 }
+      i += 1
+    }
+    java.util.Arrays.copyOf(a, n)
+  }
+
+  /** Component label (its minimum id) of every id in `ids` (sorted,
+    * distinct) under the packed pairs of `edges`, whose endpoints are
+    * all in `ids`. Union-find that always parents the larger root under
+    * the smaller, so a root is its component's minimum index, i.e. its
+    * minimum id. */
+  private[engine] def minLabels(ids: Array[Long], edges: Array[Long])
+      : Array[Long] = {
+    val parent = new Array[Int](ids.length)
+    var i = 0
+    while (i < parent.length) { parent(i) = i; i += 1 }
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var c = x
+      while (parent(c) != r) { val nx = parent(c); parent(c) = r; c = nx }
+      r
+    }
+    i = 0
+    while (i < edges.length) {
+      val ra = find(java.util.Arrays.binarySearch(ids, edges(i)))
+      val rb = find(java.util.Arrays.binarySearch(ids, edges(i + 1)))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      i += 2
+    }
+    val label = new Array[Long](ids.length)
+    i = 0
+    while (i < ids.length) { label(i) = ids(find(i)); i += 1 }
+    label
   }
 
   private def buildCsr(packed: Array[Long]): Csr = {
     val m = packed.length / 2
-    // dense ids: sorted distinct endpoints
-    val all = new Array[Long](2 * m)
-    System.arraycopy(packed, 0, all, 0, 2 * m)
-    java.util.Arrays.sort(all)
-    var nDistinct = 0
-    var i = 0
-    while (i < all.length) {
-      if (nDistinct == 0 || all(i) != all(nDistinct - 1)) {
-        all(nDistinct) = all(i); nDistinct += 1
-      }
-      i += 1
-    }
-    val ids = java.util.Arrays.copyOf(all, nDistinct)
+    val ids = sortedDistinct(packed.clone())
+    val nDistinct = ids.length
     def idx(id: Long): Int = {
       val p = java.util.Arrays.binarySearch(ids, id)
       p // inputs are endpoints by construction; always found
     }
     val off = new Array[Int](nDistinct + 1)
-    i = 0
+    var i = 0
     while (i < m) {
       off(idx(packed(2 * i)) + 1) += 1
       off(idx(packed(2 * i + 1)) + 1) += 1
@@ -185,19 +138,16 @@ private[graft] object LocalGraphKernels {
     * pipeline's non-adjacent (id1 < id2, common = #shared neighbors)
     * pairs, cut to the global top-k under (common DESC, id1, id2) — a
     * total order, so the per-chunk top-k union contains the global
-    * top-k (each pair is scored in exactly one chunk: its id1's).
-    * Returns None when the graph exceeds the conf bound or ids are
-    * non-integral. */
+    * top-k (each pair is scored in exactly one chunk: its id1's). */
   def topCommonNeighbors(edges: DataFrame, k: Int)
       : Option[(DataFrame, DataFrame)] = {
     val spark = edges.sparkSession
     // k < 1: the bounded heap below cannot represent it (ADVICE r13) —
     // the distributed plan handles it gracefully via limit(k)
-    if (k < 1) return None
-    collectIfSmall(edges, maxEdges(spark)).map { packed =>
+    KernelGate("linkpred", spark)(in =>
+      if (k < 1) in.decline("k < 1") else in.longs(edges, SrcDst)
+    ).map { packed =>
       val csr = buildCsr(packed)
-      graft.util.Dbg(spark,
-        s"[linkpred] local kernel: n=${csr.n} m=${packed.length / 2}")
       // the (id, deg) frame for scoring comes straight off the CSR —
       // the distributed path's sym-union groupBy + localCheckpoint
       // jobs are pure overhead once the adjacency is already on the
@@ -304,9 +254,8 @@ private[graft] object LocalGraphKernels {
   def labelPropagation(edges: DataFrame, rounds: Int)
       : Option[DataFrame] = {
     val spark = edges.sparkSession
-    collectIfSmall(edges, maxEdges(spark)).map { packed =>
+    KernelGate("labelprop", spark)(_.longs(edges, SrcDst)).map { packed =>
       val c = buildCsr(packed)
-      graft.util.Dbg(spark, s"[labelprop] local kernel: n=${c.n}")
       var labels: Array[Long] = c.ids.clone()
       var round = 0
       while (round < rounds) {
@@ -348,17 +297,15 @@ private[graft] object LocalGraphKernels {
   def pprInt(edges: DataFrame, seeds: DataFrame, iters: Int,
       seedMass: Long): Option[DataFrame] = {
     val spark = edges.sparkSession
-    val max = maxEdges(spark)
-    collectIfSmall(edges, max).flatMap { packed =>
-      val seedProj = seeds.select(col("id").cast("long"))
-      if (countOnce(seedProj) > max) None
-      else Some {
-        val seedRows = seedProj.collect()
+    KernelGate("ppr", spark) { in =>
+      for {
+        packed <- in.longs(edges, SrcDst)
+        seedIds <- in.longs(seeds, Seq("id"), cache = false)
+      } yield {
         val c = buildCsr(packed)
-        graft.util.Dbg(spark, s"[ppr] local kernel: n=${c.n}")
         val isSeed = new Array[Boolean](c.n)
-        seedRows.foreach { r =>
-          val p = java.util.Arrays.binarySearch(c.ids, r.getLong(0))
+        seedIds.foreach { s =>
+          val p = java.util.Arrays.binarySearch(c.ids, s)
           if (p >= 0) isSeed(p) = true // seeds outside the graph drop
         }
         var rank = new Array[Long](c.n)
@@ -403,9 +350,8 @@ private[graft] object LocalGraphKernels {
     * surviving edge. */
   def kCore(edges: DataFrame, k: Int): Option[DataFrame] = {
     val spark = edges.sparkSession
-    collectIfSmall(edges, maxEdges(spark)).map { packed =>
+    KernelGate("kcore", spark)(_.longs(edges, SrcDst)).map { packed =>
       val c = buildCsr(packed)
-      graft.util.Dbg(spark, s"[kcore] local kernel: n=${c.n}")
       val m = packed.length / 2
       val alive = new Array[Boolean](m)
       java.util.Arrays.fill(alive, true)
@@ -459,46 +405,27 @@ private[graft] object LocalGraphKernels {
   def weightedSssp(edges: DataFrame, sources: Seq[Long])
       : Option[DataFrame] = {
     val spark = edges.sparkSession
-    val max = maxEdges(spark)
-    if (max <= 0) return None
-    val cols = edges.columns
-    val ok = Seq(0, 1).forall(i => edges.schema(i).dataType match {
-      case org.apache.spark.sql.types.LongType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.ShortType => true
-      case _ => false
-    })
-    if (!ok) return None
-    val proj = edges.select(col(cols(0)).cast("long"),
-      col(cols(1)).cast("long"), col(cols(2)).cast("double"))
-    if (countOnce(proj) > max) return None
-    // raw UnsafeRows — same no-boxing collect as collectIfSmall
-    val rows = collectRowsOnce(proj)
-    Some {
-      val m = rows.length
+    val c = edges.columns
+    KernelGate("sssp", spark)(
+      _.longs(edges, c.take(2).toSeq, weights = Seq(c(2)))
+    ).map { rows => // (src, dst, weight bits) per edge
+      val m = rows.length / 3
       val ends = new Array[Long](2 * m)
       var i = 0
       while (i < m) {
-        ends(2 * i) = rows(i).getLong(0)
-        ends(2 * i + 1) = rows(i).getLong(1)
+        ends(2 * i) = rows(3 * i)
+        ends(2 * i + 1) = rows(3 * i + 1)
         i += 1
       }
-      java.util.Arrays.sort(ends)
-      var n = 0
-      i = 0
-      while (i < ends.length) {
-        if (n == 0 || ends(i) != ends(n - 1)) { ends(n) = ends(i); n += 1 }
-        i += 1
-      }
-      val ids = java.util.Arrays.copyOf(ends, n)
-      graft.util.Dbg(spark, s"[sssp] local kernel: n=$n m=$m")
+      val ids = sortedDistinct(ends)
+      val n = ids.length
       val es = new Array[Int](m); val ed = new Array[Int](m)
       val ew = new Array[Double](m)
       i = 0
       while (i < m) {
-        es(i) = java.util.Arrays.binarySearch(ids, rows(i).getLong(0))
-        ed(i) = java.util.Arrays.binarySearch(ids, rows(i).getLong(1))
-        ew(i) = rows(i).getDouble(2)
+        es(i) = java.util.Arrays.binarySearch(ids, rows(3 * i))
+        ed(i) = java.util.Arrays.binarySearch(ids, rows(3 * i + 1))
+        ew(i) = java.lang.Double.longBitsToDouble(rows(3 * i + 2))
         i += 1
       }
       val dist = new Array[Double](n)
@@ -528,70 +455,34 @@ private[graft] object LocalGraphKernels {
 
   /** Local connected components over ALREADY-HASHED long ids — the
     * GraphX contract: every vertex (isolated included) labeled by the
-    * minimum vertex id of its component. Union-find over the bounded
-    * edge list; both frames read positionally. */
+    * minimum vertex id of its component ([[minLabels]]); both frames
+    * read positionally. */
   def connectedComponentsLong(vertexIds: DataFrame, edges: DataFrame)
       : Option[DataFrame] = {
     val spark = vertexIds.sparkSession
-    val max = maxEdges(spark)
-    if (max <= 0) return None
-    val vc = vertexIds.columns
-    val vProj = vertexIds.select(col(vc(0)).cast("long"))
-    if (countOnce(vProj) > max) return None
-    val vRows = collectRowsOnce(vProj)
-    val ec = edges.columns
-    val eProj = edges.select(col(ec(0)).cast("long"),
-      col(ec(1)).cast("long"))
-    if (countOnce(eProj) > max) return None
-    // raw UnsafeRows — same no-boxing collect as collectIfSmall
-    val eRows = collectRowsOnce(eProj)
-    Some {
-      // GraphX adds edge endpoints missing from the vertex RDD as
-      // vertices — reproduce that
-      val ids = (vRows.map(_.getLong(0)) ++
-        eRows.flatMap(r => Seq(r.getLong(0), r.getLong(1))))
-        .distinct.sorted
-      graft.util.Dbg(spark,
-        s"[cc] local kernel: n=${ids.length} m=${eRows.length}")
-      val parent = Array.tabulate(ids.length)(identity)
-      def find(x: Int): Int = {
-        var r = x
-        while (parent(r) != r) r = parent(r)
-        var c = x
-        while (parent(c) != r) { val nx = parent(c); parent(c) = r; c = nx }
-        r
+    KernelGate("cc", spark) { in =>
+      for {
+        vs <- in.longs(vertexIds, vertexIds.columns.take(1).toSeq)
+        es <- in.longs(edges, edges.columns.take(2).toSeq)
+      } yield {
+        // GraphX adds edge endpoints missing from the vertex RDD as
+        // vertices — reproduce that
+        val ids = sortedDistinct(vs ++ es)
+        val label = minLabels(ids, es)
+        import spark.implicits._
+        ids.indices.map(v => (ids(v), label(v))).toDF("vid", "component")
       }
-      eRows.foreach { r =>
-        val a = java.util.Arrays.binarySearch(ids, r.getLong(0))
-        val b = java.util.Arrays.binarySearch(ids, r.getLong(1))
-        if (a >= 0 && b >= 0) {
-          val ra = find(a); val rb = find(b)
-          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-        }
-      }
-      val minId = new Array[Long](ids.length)
-      java.util.Arrays.fill(minId, Long.MaxValue)
-      for (v <- ids.indices) {
-        val r = find(v)
-        if (ids(v) < minId(r)) minId(r) = ids(v)
-      }
-      import spark.implicits._
-      ids.indices.map(v => (ids(v), minId(find(v))))
-        .toDF("vid", "component")
     }
   }
 
   /** Local per-edge triangle support: |N(src) ∩ N(dst)| for every
     * canonical (src < dst) input edge, zero-support edges included —
     * exactly [[GraphXBridge.edgeTriangleSupport]]'s contract. Each
-    * canonical edge is emitted from its src's chunk. Returns None
-    * above the conf bound / non-integral ids. */
+    * canonical edge is emitted from its src's chunk. */
   def triangleSupport(edges: DataFrame): Option[DataFrame] = {
     val spark = edges.sparkSession
-    collectIfSmall(edges, maxEdges(spark)).map { packed =>
+    KernelGate("trisupport", spark)(_.longs(edges, SrcDst)).map { packed =>
       val csr = buildCsr(packed)
-      graft.util.Dbg(spark,
-        s"[trisupport] local kernel: n=${csr.n} m=${packed.length / 2}")
       val bc = spark.sparkContext.broadcast(csr)
       import spark.implicits._
       val ranges = chunkRanges(csr.n, spark)

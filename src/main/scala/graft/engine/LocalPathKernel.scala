@@ -3,26 +3,25 @@ package graft.engine
 import java.nio.charset.StandardCharsets
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.StringType
 
-/** Size-gated LOCAL kernel for the unweighted shortest-path engines
+/** Driver-side kernel for the unweighted shortest-path engines
   * ([[Traversals.shortestPathsFromTo]] / [[Traversals.shortestPathsPairs]])
-  * — the round-13 broadcast/driver-kernel recipe (guide §8: decide on
-  * small data) applied to the string-id frontier-BFS family.
+  * — the round-13 driver-kernel recipe applied to the string-id
+  * frontier-BFS family.
   *
   * Why: the distributed engines are frontier loops whose cost at bench
   * SF is ~30+ stages of job/planning latency over a warm 10–60 MB
   * partitioned-edge cache (measured r13: cy32 2.2 s, sp01 1.4 s clean)
-  * — the data is tiny, the scheduling is not. Below the shared
-  * [[LocalGraphKernels.MaxEdgesKey]] bound the hop-edge list is
-  * collected once (from the same persisted cache the distributed path
-  * uses), BFS + path reconstruction run as driver array code, and the
-  * result returns as one local relation. Above the bound — or on any
-  * null id, non-string id column, or work/output blow-up — the caller
-  * keeps the unchanged distributed plan (the 100 TB path).
+  * — the data is tiny, the scheduling is not. When [[KernelGate]] admits
+  * the endpoint lists and the hop-edge list (collected from the same
+  * persisted cache the distributed path uses), BFS + path
+  * reconstruction run as driver array code and the result returns as
+  * one local relation. A declined gate or a work/output cap leaves the
+  * caller's distributed plan (the 100 TB path).
   *
   * Determinism contract (must match the distributed engines bit for
-  * bit; pinned kernel-vs-distributed in TraversalSpec):
+  * bit; pinned kernel-vs-distributed in TraversalSpec and
+  * KernelGatePropertySpec):
   *  - dense vertex indices are assigned in ascending UTF-8 BINARY
   *    order (Spark's UTF8String comparison), so integer index order
   *    reproduces Spark's string order;
@@ -36,8 +35,7 @@ import org.apache.spark.sql.types.StringType
   *  - self pairs (source == target) emit (id, id, [id], [], 0) exactly
   *    like the engines' `__a === __b` branch; unreachable pairs emit
   *    nothing. The decoded graph is rebuilt from the input on every
-  *    call; only the edge-count gate probe is cached, per session, by
-  *    [[SessionCache]] (see [[LocalGraphKernels.countOnce]]).
+  *    call; only the gate's edge count is cached.
   */
 private[graft] object LocalPathKernel {
 
@@ -60,44 +58,21 @@ private[graft] object LocalPathKernel {
     def n: Int = ids.length
   }
 
-  /** Count-gated collect of a projection; None when over the bound.
-    * Two jobs (count cached per plan, [[LocalGraphKernels.countOnce]]),
-    * but the count never funnels rows through one task — the right
-    * probe for the (large) edge frame. */
-  private def collectBounded(df: DataFrame, max: Int): Option[Array[Row]] =
-    if (LocalGraphKernels.countOnce(df) > max) None else Some(df.collect())
-
-  /** Single-job bounded probe for frames expected to be SMALL
-    * (endpoint/pair lists): limit(max+1) funnels rows through one task,
-    * which is fine at these sizes and saves a scheduled job vs
-    * count-then-collect. */
-  private def collectSmall(df: DataFrame, max: Int): Option[Array[Row]] = {
-    val rows = df.limit(max + 1).collect()
-    if (rows.length > max) None else Some(rows)
-  }
-
-  /** Decode the (eid, src, dst) hop-edge rows into a dense CSR —
-    * parallel over driver cores (the single-threaded form measured
-    * 1.7 s at 766k edges, dominating the kernel it fed). Returns None
-    * on any null id (contract violation — fall back). Duplicate
-    * (src, eid, dst) triples are dropped, matching the engines'
-    * per-group `collect_set` dedup. */
-  private def buildGraph(edgeRows: Array[Row]): Option[G] = {
+  /** Decode the (eid, src, dst) hop-edge rows (null-free: the gate
+    * declines a null id) into a dense CSR — parallel over driver cores
+    * (the single-threaded form measured 1.7 s at 766k edges, dominating
+    * the kernel it fed). Duplicate (src, eid, dst) triples are dropped,
+    * matching the engines' per-group `collect_set` dedup. */
+  private def buildGraph(edgeRows: Array[Row]): G = {
     val m0 = edgeRows.length
     val srcA = new Array[String](m0)
     val dstA = new Array[String](m0)
     val eidA = new Array[String](m0)
-    val sawNull = new java.util.concurrent.atomic.AtomicBoolean(false)
     java.util.stream.IntStream.range(0, m0).parallel().forEach { i =>
       val r = edgeRows(i)
-      if (r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2))
-        sawNull.set(true)
-      else {
-        eidA(i) = r.getString(0); srcA(i) = r.getString(1)
-        dstA(i) = r.getString(2)
-      }
+      eidA(i) = r.getString(0); srcA(i) = r.getString(1)
+      dstA(i) = r.getString(2)
     }
-    if (sawNull.get) return None
     // vertex dictionary: endpoints sorted by UTF-8 bytes (dense index
     // order == Spark string order); bytes precomputed once, indices
     // sorted in parallel, then uniqued
@@ -183,7 +158,7 @@ private[graft] object LocalPathKernel {
       }
       i += 1
     }
-    Some(new G(ids, off, adjV, eids, index))
+    new G(ids, off, adjV, eids, index)
   }
 
   private type OutRow = (String, String, Seq[String], Seq[String], Long)
@@ -326,66 +301,52 @@ private[graft] object LocalPathKernel {
   def fromTo(edges: => DataFrame, srcs: DataFrame, tgts: DataFrame,
       maxDepth: Int, all: Boolean): Option[DataFrame] = {
     val spark = srcs.sparkSession
-    val max = LocalGraphKernels.maxEdges(spark)
-    if (max <= 0) return None
-    if (srcs.schema.head.dataType != StringType ||
-        tgts.schema.head.dataType != StringType) return None
-    val e = edges
-    if (e.schema.fields.take(3).exists(_.dataType != StringType))
-      return None
-    val t0 = System.nanoTime()
-    for {
-      srcRows <- collectSmall(srcs, max)
-      tgtRows <- collectSmall(tgts, max)
-      edgeRows <- collectBounded(e, max)
-      t1 = System.nanoTime()
-      g <- buildGraph(edgeRows)
-      result <- {
-        graft.util.Dbg(spark, s"[pathkernel] fromTo: n=${g.n} " +
-          s"m=${g.adjV.length} srcs=${srcRows.length} tgts=${tgtRows.length}" +
-          f" collect=${(t1 - t0) / 1e9}%.2fs build=${(System.nanoTime() - t1) / 1e9}%.2fs")
-        val out = new scala.collection.mutable.ArrayBuffer[OutRow]()
-        // dedup + null-drop driver-side (the engines dropDuplicates and
-        // their joins drop nulls)
-        val srcSet = new java.util.LinkedHashSet[String]()
-        srcRows.foreach(r => if (!r.isNullAt(0)) srcSet.add(r.getString(0)))
-        val tgtSet = new java.util.HashSet[String]()
-        tgtRows.foreach(r => if (!r.isNullAt(0)) tgtSet.add(r.getString(0)))
-        // self rows: srcs ∩ tgts, graph membership irrelevant
-        val sIt = srcSet.iterator()
-        while (sIt.hasNext) {
-          val s = sIt.next()
-          if (tgtSet.contains(s)) out += ((s, s, Seq(s), Seq.empty, 0L))
+    KernelGate("paths.fromTo", spark) { in =>
+      for {
+        srcRows <- in.strings(srcs, small = true)
+        tgtRows <- in.strings(tgts, small = true)
+        edgeRows <- in.strings(edges)
+        result <- {
+          val g = buildGraph(edgeRows)
+          val out = new scala.collection.mutable.ArrayBuffer[OutRow]()
+          // dedup driver-side (the engines dropDuplicates)
+          val srcSet = new java.util.LinkedHashSet[String]()
+          srcRows.foreach(r => srcSet.add(r.getString(0)))
+          val tgtSet = new java.util.HashSet[String]()
+          tgtRows.foreach(r => tgtSet.add(r.getString(0)))
+          // self rows: srcs ∩ tgts, graph membership irrelevant
+          val sIt = srcSet.iterator()
+          while (sIt.hasNext) {
+            val s = sIt.next()
+            if (tgtSet.contains(s)) out += ((s, s, Seq(s), Seq.empty, 0L))
+          }
+          // targets resolved to dense indices once, shared per source
+          // (runBfs only reads the set); a source that is itself a target
+          // gets a copy with itself removed
+          val tgtIdx = new java.util.HashSet[Integer]()
+          val tIt = tgtSet.iterator()
+          while (tIt.hasNext) {
+            val x = g.index.get(tIt.next())
+            if (x != null) tgtIdx.add(x)
+          }
+          val sourceIdx = new scala.collection.mutable.ArrayBuffer[Int]()
+          val sIt2 = srcSet.iterator()
+          while (sIt2.hasNext) {
+            val x = g.index.get(sIt2.next())
+            if (x != null) sourceIdx += x.intValue
+          }
+          def targetsOf(s: Int): java.util.HashSet[Integer] =
+            if (tgtIdx.contains(s)) {
+              val set = new java.util.HashSet[Integer](tgtIdx)
+              set.remove(Integer.valueOf(s))
+              set
+            } else tgtIdx
+          if (runBfs(g, sourceIdx.toArray, targetsOf, maxDepth, all, out))
+            Some(toDf(spark, out))
+          else in.decline("work or output cap")
         }
-        // targets resolved to dense indices once, shared per source
-        // (runBfs only reads the set); a source that is itself a target
-        // gets a copy with itself removed
-        val tgtIdx = new java.util.HashSet[Integer]()
-        val tIt = tgtSet.iterator()
-        while (tIt.hasNext) {
-          val x = g.index.get(tIt.next())
-          if (x != null) tgtIdx.add(x)
-        }
-        val sourceIdx = new scala.collection.mutable.ArrayBuffer[Int]()
-        val sIt2 = srcSet.iterator()
-        while (sIt2.hasNext) {
-          val x = g.index.get(sIt2.next())
-          if (x != null) sourceIdx += x.intValue
-        }
-        def targetsOf(s: Int): java.util.HashSet[Integer] =
-          if (tgtIdx.contains(s)) {
-            val set = new java.util.HashSet[Integer](tgtIdx)
-            set.remove(Integer.valueOf(s))
-            set
-          } else tgtIdx
-        if (runBfs(g, sourceIdx.toArray, targetsOf, maxDepth, all, out))
-          Some(toDf(spark, out))
-        else {
-          graft.util.Dbg(spark, "[pathkernel] cap tripped, distributed")
-          None
-        }
-      }
-    } yield result
+      } yield result
+    }
   }
 
   /** Kernel for [[Traversals.shortestPathsPairs]]: explicit (source,
@@ -394,28 +355,19 @@ private[graft] object LocalPathKernel {
   def pairsPaths(edges: => DataFrame, pairs: DataFrame, maxDepth: Int,
       all: Boolean): Option[DataFrame] = {
     val spark = pairs.sparkSession
-    val max = LocalGraphKernels.maxEdges(spark)
-    if (max <= 0) return None
-    if (pairs.schema.fields.take(2).exists(_.dataType != StringType))
-      return None
-    val e = edges
-    if (e.schema.fields.take(3).exists(_.dataType != StringType))
-      return None
     val pairProj = pairs.select(pairs.columns(0), pairs.columns(1))
-    for {
-      pairRows <- collectSmall(pairProj, max)
-      edgeRows <- collectBounded(e, max)
-      g <- buildGraph(edgeRows)
-      result <- {
-        graft.util.Dbg(spark, s"[pathkernel] pairs: n=${g.n} " +
-          s"m=${g.adjV.length} pairs=${pairRows.length}")
-        val out = new scala.collection.mutable.ArrayBuffer[OutRow]()
-        val seenPair = new java.util.HashSet[(String, String)]()
-        // per-source wanted target sets, in first-seen source order
-        val perSource =
-          new java.util.LinkedHashMap[Integer, java.util.HashSet[Integer]]()
-        pairRows.foreach { r =>
-          if (!r.isNullAt(0) && !r.isNullAt(1)) {
+    KernelGate("paths.pairs", spark) { in =>
+      for {
+        pairRows <- in.strings(pairProj, small = true)
+        edgeRows <- in.strings(edges)
+        result <- {
+          val g = buildGraph(edgeRows)
+          val out = new scala.collection.mutable.ArrayBuffer[OutRow]()
+          val seenPair = new java.util.HashSet[(String, String)]()
+          // per-source wanted target sets, in first-seen source order
+          val perSource =
+            new java.util.LinkedHashMap[Integer, java.util.HashSet[Integer]]()
+          pairRows.foreach { r =>
             val a = r.getString(0); val b = r.getString(1)
             if (seenPair.add((a, b))) {
               if (a == b) out += ((a, a, Seq(a), Seq.empty, 0L))
@@ -432,19 +384,16 @@ private[graft] object LocalPathKernel {
               }
             }
           }
+          val sources = new Array[Int](perSource.size)
+          val it = perSource.keySet.iterator()
+          var i = 0
+          while (it.hasNext) { sources(i) = it.next().intValue; i += 1 }
+          if (runBfs(g, sources, s => perSource.get(Integer.valueOf(s)),
+              maxDepth, all, out))
+            Some(toDf(spark, out))
+          else in.decline("work or output cap")
         }
-        val sources = new Array[Int](perSource.size)
-        val it = perSource.keySet.iterator()
-        var i = 0
-        while (it.hasNext) { sources(i) = it.next().intValue; i += 1 }
-        if (runBfs(g, sources, s => perSource.get(Integer.valueOf(s)),
-            maxDepth, all, out))
-          Some(toDf(spark, out))
-        else {
-          graft.util.Dbg(spark, "[pathkernel] cap tripped, distributed")
-          None
-        }
-      }
-    } yield result
+      } yield result
+    }
   }
 }

@@ -2,6 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.shims
 
 /** Connected components as a pure DataFrame fixpoint — the alternating
   * large-star / small-star algorithm (Kiveris et al., "Connected
@@ -27,66 +28,48 @@ import org.apache.spark.sql.functions._
   * they appear in at least one edge; callers union in singletons.
   *
   * Hybrid execution: the distinct canonical edge count is measured
-  * first (one job, also the checkpoint materializer), and graphs at or
-  * under `spark.graft.starcc.driverCollectBound` edges (default 2^19 ≈
-  * 8 MB of id pairs) run a driver-side union-find instead of the
-  * distributed fixpoint. Rationale: each star round is ~8 scheduled
-  * stages, and the near-dup pair graphs the dedup gates feed here are
-  * KBs at any tested SF — the loop's cost was pure stage latency
-  * (measured: d07/d11/p23 ≈ 2.0–2.4 s wall on 0.1 MB of shuffle).
-  * The bound is checked against a MEASURED count, so the collect is
-  * provably bounded — a corpus-scale pair graph (near-dup pairs grow
-  * with corpus size; sf1 already produces 249k) takes the distributed
-  * path unchanged. Both paths produce identical labels, pinned against
-  * GraphX CC and against each other in TraversalSpec.
+  * first (one job, also the checkpoint materializer), and a graph that
+  * passes [[KernelGate]] on that count runs the driver union-find of
+  * [[LocalGraphKernels.minLabels]] instead of the distributed fixpoint.
+  * Rationale: each star round is ~8 scheduled stages, and the near-dup
+  * pair graphs the dedup gates feed here are KBs at any tested SF — the
+  * loop's cost was pure stage latency (measured: d07/d11/p23 ≈
+  * 2.0–2.4 s wall on 0.1 MB of shuffle). The gate checks a MEASURED
+  * count, so the collect is bounded; a corpus-scale pair graph (near-dup
+  * pairs grow with corpus size; sf10 produces 2.5M) over the bound
+  * takes the distributed path. Both legs produce identical labels,
+  * pinned against GraphX CC and against each other in TraversalSpec.
   */
 object StarCC {
-  /** Distinct-canonical-edge count at or under which the driver
-    * union-find path runs. 2^19 edges = 8 MB of long pairs. */
-  val DefaultDriverCollectBound: Long = 1L << 19
 
   /** (id, component) for every node incident to at least one edge. */
   def components(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
-    import org.apache.spark.sql.graft.shims
     // canonical undirected edge set, self-loops dropped
-    var e = edges
+    val e = edges
       .select(least(col("id1"), col("id2")).cast("long").as("a"),
         greatest(col("id1"), col("id2")).cast("long").as("b"))
       .filter(col("a") =!= col("b"))
       .distinct()
       .localCheckpoint(eager = false)
-    var eCount = e.count() // materializes the lazy checkpoint
-
-    val boundKey = "spark.graft.starcc.driverCollectBound"
-    val driverBound = spark.conf.getOption(boundKey)
-      .map(v => try v.toLong catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"$boundKey must be a long edge count (0 disables the driver " +
-            s"path), got: '$v'")
-      })
-      .getOrElse(DefaultDriverCollectBound)
-    // bound 0 (or negative) disables the driver path outright — even an
-    // EMPTY canonical edge set then runs the distributed fixpoint, so a
-    // test forcing the distributed leg really exercises it.
-    // the chosen leg is observable (stderr, spark.graft.debug-gated —
-    // engine code must not print unconditionally): the sf10
-    // rehearsal's "does a big pair graph route to the distributed leg
-    // NATURALLY" check reads this line rather than inferring from
-    // wall time
-    graft.util.Dbg(spark, s"[starcc] canonical_edges=$eCount " +
-      s"bound=$driverBound leg=" +
-      (if (driverBound > 0 && eCount <= driverBound) "driver"
-       else "distributed"))
-    if (driverBound > 0 && eCount <= driverBound) {
-      // bounded by the measured count: ≤ driverBound (a,b) long pairs
-      val out = driverUnionFind(e.collect().map(r =>
-        (r.getLong(0), r.getLong(1))))
+    val eCount = e.count() // materializes the lazy checkpoint
+    // the checkpoint is new on every call: no count job, nothing cached
+    KernelGate("starcc", spark)(_.longs(e, Seq("a", "b"), cache = false,
+      counted = Some(eCount))
+    ).map { pairs =>
       shims.releaseLocalCheckpoint(e)
+      val ids = LocalGraphKernels.sortedDistinct(pairs.clone())
+      val label = LocalGraphKernels.minLabels(ids, pairs)
       import spark.implicits._
-      return out.toSeq.toDF("id", "component")
-    }
+      ids.indices.map(i => (ids(i), label(i))).toDF("id", "component")
+    }.getOrElse(starContraction(e, eCount))
+  }
 
+  /** The distributed leg: star contraction of the canonical edge set
+    * `e0` (locally checkpointed, `n0` rows) to its fixpoint. */
+  private def starContraction(e0: DataFrame, n0: Long): DataFrame = {
+    var e = e0
+    var eCount = n0
     // large-star: every neighbor v > u links to m = min(N(u) ∪ {u});
     // small-star: every neighbor v ≤ u links to m = min of the smaller
     // neighborhood (plus u itself). Alternating the two contracts every
@@ -157,43 +140,5 @@ object StarCC {
     e.select(col("b").as("id"), col("a").as("component"))
       .unionAll(e.select(col("a").as("id"), col("a").as("component")))
       .groupBy(col("id")).agg(min(col("component")).as("component"))
-  }
-
-  /** Union-find with path compression over the collected canonical
-    * edge list; roots are kept at the component MINIMUM (union always
-    * parents the larger root under the smaller), so `find(x)` IS the
-    * min-id label the distributed loop produces. Deep trees from
-    * min-rooting are flattened by compression; at the 2^19-edge bound
-    * this is microseconds. Returns one (id, minLabel) per node. */
-  private[engine] def driverUnionFind(
-      edges: Array[(Long, Long)]): Array[(Long, Long)] = {
-    val parent = new java.util.HashMap[Long, Long](edges.length * 2)
-    def find(x0: Long): Long = {
-      var x = x0
-      var p = parent.getOrDefault(x, x)
-      while (p != x) {
-        val gp = parent.getOrDefault(p, p)
-        parent.put(x, gp)
-        x = gp
-        p = parent.getOrDefault(x, x)
-      }
-      x
-    }
-    val nodes = new java.util.LinkedHashSet[Long](edges.length * 2)
-    for ((a, b) <- edges) {
-      nodes.add(a); nodes.add(b)
-      val ra = find(a); val rb = find(b)
-      if (ra < rb) parent.put(rb, ra)
-      else if (rb < ra) parent.put(ra, rb)
-    }
-    val out = new Array[(Long, Long)](nodes.size)
-    val it = nodes.iterator()
-    var i = 0
-    while (it.hasNext) {
-      val n = it.next()
-      out(i) = (n, find(n))
-      i += 1
-    }
-    out
   }
 }

@@ -34,16 +34,12 @@ object Traversals {
     * empty exchanges) for all of that. Deeper traversals keep the loop:
     * early exit actually saves hops there, and a 15-deep unrolled plan
     * with no materialization barrier risks compile-time blowup.
-    * Conf-overridable (`spark.graft.traversal.lazyUnrollDepth`) for
-    * regime A/Bs — set 0 to force the eager early-exit loop at any
-    * depth. Round-10 cy32 A/B (idle box, min-of-2 × 2 sessions): lazy
+    * Round-10 cy32 A/B (idle box, min-of-2 × 2 sessions): lazy
     * 2.5–3.0 s / 32 stages vs eager-forced 3.4–3.9 s / 41 stages — the
     * per-hop loop-control jobs cost more than early exit saves even
     * when expansion dies at depth 2 of 4, so lazy stays the shallow
     * default. */
-  private def LazyUnrollDepth: Int =
-    org.apache.spark.sql.internal.SQLConf.get
-      .getConfString("spark.graft.traversal.lazyUnrollDepth", "8").toInt
+  private val LazyUnrollDepth = 8
 
   /** Partition count for every traversal exchange (edge cache + frontier
     * repartitions — must agree for co-partitioned hop joins). */
@@ -230,144 +226,148 @@ object Traversals {
     // unchanged 100 TB path
     LocalPathKernel.pairsPaths(
         partitionedEdges(hopEdges(g, edgeTypes, undirected)),
-        pairs, maxDepth, all) match {
-      case Some(df) => return df
-      case None =>
+        pairs, maxDepth, all).getOrElse {
+      if (maxDepth <= LazyUnrollDepth)
+        shortestPathsPairsLazy(g, pairs, maxDepth, edgeTypes, undirected, all)
+      else pairsEager(g, pairs, maxDepth, edgeTypes, undirected, all)
     }
-    if (maxDepth <= LazyUnrollDepth)
-      return shortestPathsPairsLazy(g, pairs, maxDepth, edgeTypes,
-        undirected, all)
+  }
+
+  /** Eager pairs engine (maxDepth > [[LazyUnrollDepth]]): the batched
+    * frontier loop of [[shortestPathsPairs]], one loop-control job per
+    * hop. */
+  private def pairsEager(g: GraphState, pairs: DataFrame, maxDepth: Int,
+      edgeTypes: Seq[String], undirected: Boolean, all: Boolean)
+      : DataFrame = {
     val n = traversalPartitions(pairs.sparkSession)
     val edges = partitionedEdges(hopEdges(g, edgeTypes, undirected))
-    locally {
-      // `p` stays lazy: `self` is only read in the final union and
-      // `targets0` is checkpointed right below — one materialization.
-      val p = pairs
-        .select(col(pairs.columns(0)).as("__a"),
-          col(pairs.columns(1)).as("__b"))
-        .dropDuplicates("__a", "__b")
-      val self = p.filter(col("__a") === col("__b"))
-        .select(col("__a"), col("__b"), array(col("__a")).as("path"),
-          array().cast("array<string>").as("epath"), lit(0L).as("length"))
-      val targets0 = p.filter(col("__a") =!= col("__b"))
+    // `p` stays lazy: `self` is only read in the final union and
+    // `targets0` is checkpointed right below — one materialization.
+    val p = pairs
+      .select(col(pairs.columns(0)).as("__a"),
+        col(pairs.columns(1)).as("__b"))
+      .dropDuplicates("__a", "__b")
+    val self = p.filter(col("__a") === col("__b"))
+      .select(col("__a"), col("__b"), array(col("__a")).as("path"),
+        array().cast("array<string>").as("epath"), lit(0L).as("length"))
+    val targets0 = p.filter(col("__a") =!= col("__b"))
+      .localCheckpoint(eager = false)
+    var remaining = targets0.count() // materializes targets0's checkpoint
+    // predecessor table: (source, id, depth, preds ARRAY<STRUCT<pred,
+    // prededge>>) — one entry in the single-path mode, every minimal
+    // predecessor in all-shortest-paths mode
+    val emptyPreds = array()
+      .cast("array<struct<pred:string,prededge:string>>")
+    var visited = targets0.select(col("__a").as("source"))
+      .dropDuplicates("source")
+      .select(col("source"), col("source").as("id"), lit(0).as("depth"),
+        emptyPreds.as("preds"))
+      .repartition(n, col("id")) // co-partition with the edge cache
+      .localCheckpoint(eager = false) // materializes inside hop 1's job
+    var frontier = visited.select("source", "id")
+    var foundParts = List.empty[DataFrame]
+    // targets still outstanding: a lazy anti-join accumulation over the
+    // (lazily checkpointed) hit batches — never more than maxDepth deep
+    var tl = targets0
+    var depth = 0
+    var maxLen = 0L // deepest hit depth, tracked driver-side
+    var frontierNonEmpty = remaining > 0
+    while (depth < maxDepth && remaining > 0 && frontierNonEmpty) {
+      depth += 1
+      // single mode: the deterministic predecessor (min vertex, then
+      // min edge). all mode: EVERY minimal predecessor entry, sorted
+      // for deterministic reconstruction order.
+      val predsAgg =
+        if (all) array_sort(collect_set(
+          struct(col("src").as("pred"), col("eid").as("prededge"))))
+        else array(min(
+          struct(col("src").as("pred"), col("eid").as("prededge"))))
+      // the explicit repartition on `dst` is the hop's one exchange: it
+      // satisfies the (source,dst) grouping (subset clustering) AND —
+      // renamed to `id` and preserved through the checkpoint — the next
+      // hop's join key against the src-partitioned edge cache
+      val nxt = frontier.hint("shuffle_hash")
+        .join(edges, frontier("id") === edges("src"))
+        .repartition(n, col("dst"))
+        .groupBy(col("source"), col("dst"))
+        .agg(predsAgg.as("preds"))
+        .select(col("source"), col("dst").as("id"), lit(depth).as("depth"),
+          col("preds"))
+        .join(visited.select("source", "id"), Seq("source", "id"),
+          "left_anti")
         .localCheckpoint(eager = false)
-      var remaining = targets0.count() // materializes targets0's checkpoint
-      // predecessor table: (source, id, depth, preds ARRAY<STRUCT<pred,
-      // prededge>>) — one entry in the single-path mode, every minimal
-      // predecessor in all-shortest-paths mode
-      val emptyPreds = array()
-        .cast("array<struct<pred:string,prededge:string>>")
-      var visited = targets0.select(col("__a").as("source"))
-        .dropDuplicates("source")
-        .select(col("source"), col("source").as("id"), lit(0).as("depth"),
-          emptyPreds.as("preds"))
-        .repartition(n, col("id")) // co-partition with the edge cache
-        .localCheckpoint(eager = false) // materializes inside hop 1's job
-      var frontier = visited.select("source", "id")
-      var foundParts = List.empty[DataFrame]
-      // targets still outstanding: a lazy anti-join accumulation over the
-      // (lazily checkpointed) hit batches — never more than maxDepth deep
-      var tl = targets0
-      var depth = 0
-      var maxLen = 0L // deepest hit depth, tracked driver-side
-      var frontierNonEmpty = remaining > 0
-      while (depth < maxDepth && remaining > 0 && frontierNonEmpty) {
-        depth += 1
-        // single mode: the deterministic predecessor (min vertex, then
-        // min edge). all mode: EVERY minimal predecessor entry, sorted
-        // for deterministic reconstruction order.
-        val predsAgg =
-          if (all) array_sort(collect_set(
-            struct(col("src").as("pred"), col("eid").as("prededge"))))
-          else array(min(
-            struct(col("src").as("pred"), col("eid").as("prededge"))))
-        // the explicit repartition on `dst` is the hop's one exchange: it
-        // satisfies the (source,dst) grouping (subset clustering) AND —
-        // renamed to `id` and preserved through the checkpoint — the next
-        // hop's join key against the src-partitioned edge cache
-        val nxt = frontier.hint("shuffle_hash")
-          .join(edges, frontier("id") === edges("src"))
-          .repartition(n, col("dst"))
-          .groupBy(col("source"), col("dst"))
-          .agg(predsAgg.as("preds"))
-          .select(col("source"), col("dst").as("id"), lit(depth).as("depth"),
-            col("preds"))
-          .join(visited.select("source", "id"), Seq("source", "id"),
-            "left_anti")
-          .localCheckpoint(eager = false)
-        // THE hop's one eager job: a single left-outer pass over nxt
-        // yields both the frontier size (loop control) and the hit count
-        // — and, as the first job computing nxt, materializes its local
-        // checkpoint. The former shape (eager checkpoint + hits
-        // checkpoint + count + isEmpty) scheduled 4 jobs per hop; on a
-        // frontier-bounded query the job overhead WAS the latency.
-        val tlMark = tl.select(col("__a"), col("__b"), lit(1).as("__hit"))
-        val stats = nxt.join(tlMark,
-            nxt("source") === tlMark("__a") && nxt("id") === tlMark("__b"),
-            "left_outer") // (source,id) and (__a,__b) both unique: 1:≤1
-          .agg(count(lit(1)).as("n"), count(col("__hit")).as("hits"))
-          .head()
-        val nTotal = stats.getLong(0)
-        val nHits = stats.getLong(1)
-        visited = visited.union(nxt)
-        // lazy cut: materializes inside the NEXT hop's job via the
-        // anti-join read — no standalone re-materialization job
-        if (depth % 3 == 0) visited = visited.localCheckpoint(eager = false)
-        if (nHits > 0) {
-          val hits = nxt
-            .join(tl, nxt("source") === tl("__a") && nxt("id") === tl("__b"))
-            .select(col("__a"), col("__b"), col("depth").cast("long")
-              .as("length"))
-            .localCheckpoint(eager = false) // computed in next hop's job
-          foundParts ::= hits
-          tl = tl.join(hits.select("__a", "__b"), Seq("__a", "__b"),
-            "left_anti")
-          remaining -= nHits
-          maxLen = depth.toLong
-          // sources with no outstanding targets stop expanding
-          frontier = nxt.select("source", "id").join(
-            tl.select(col("__a").as("source")), Seq("source"), "left_semi")
-        } else frontier = nxt.select("source", "id")
-        frontierNonEmpty = nTotal > 0
-      }
-      if (foundParts.isEmpty) return self
-      val found = foundParts.reduce(_.union(_))
-      // Walk predecessors backward, all pairs at once, in ONE dataflow: a
-      // finished row (cur == source) joins the depth-0 visited entry,
-      // whose preds array is EMPTY, so explode_outer passes it through
-      // unchanged — rows self-retire with no fin/working split. `working`
-      // therefore has a SINGLE consumer per round: the plan grows
-      // linearly, and only a periodic lineage cut is needed to bound
-      // compile depth for deep reconstructions (each cut is one more
-      // QueryExecution of sequential stage latency, so don't cut more
-      // often than plan depth demands). In all mode the explode fans one
-      // partial path out per predecessor — every minimal route
-      // reconstructs in the same bounded round count.
-      val preds = visited.select(col("source"), col("id"), col("preds"))
-      var working = found.select(col("__a"), col("__b"), col("length"),
-        array(col("__b")).as("path"),
-        array().cast("array<string>").as("epath"), col("__b").as("cur"))
-      var i = 0L
-      while (i < maxLen) {
-        i += 1
-        working = working
-          .join(preds, working("cur") === preds("id") &&
-            working("__a") === preds("source"))
-          .select(col("__a"), col("__b"), col("length"), col("path"),
-            col("epath"), col("cur"), explode_outer(col("preds")).as("p"))
-          .select(col("__a"), col("__b"), col("length"),
-            when(col("p").isNull, col("path"))
-              .otherwise(concat(array(col("p.pred")), col("path")))
-              .as("path"),
-            when(col("p").isNull, col("epath"))
-              .otherwise(concat(array(col("p.prededge")), col("epath")))
-              .as("epath"),
-            coalesce(col("p.pred"), col("cur")).as("cur"))
-        if (i % 4 == 0) working = working.localCheckpoint(eager = false)
-      }
-      self.union(working.select(col("__a"), col("__b"), col("path"),
-        col("epath"), col("length")))
+      // THE hop's one eager job: a single left-outer pass over nxt
+      // yields both the frontier size (loop control) and the hit count
+      // — and, as the first job computing nxt, materializes its local
+      // checkpoint. The former shape (eager checkpoint + hits
+      // checkpoint + count + isEmpty) scheduled 4 jobs per hop; on a
+      // frontier-bounded query the job overhead WAS the latency.
+      val tlMark = tl.select(col("__a"), col("__b"), lit(1).as("__hit"))
+      val stats = nxt.join(tlMark,
+          nxt("source") === tlMark("__a") && nxt("id") === tlMark("__b"),
+          "left_outer") // (source,id) and (__a,__b) both unique: 1:≤1
+        .agg(count(lit(1)).as("n"), count(col("__hit")).as("hits"))
+        .head()
+      val nTotal = stats.getLong(0)
+      val nHits = stats.getLong(1)
+      visited = visited.union(nxt)
+      // lazy cut: materializes inside the NEXT hop's job via the
+      // anti-join read — no standalone re-materialization job
+      if (depth % 3 == 0) visited = visited.localCheckpoint(eager = false)
+      if (nHits > 0) {
+        val hits = nxt
+          .join(tl, nxt("source") === tl("__a") && nxt("id") === tl("__b"))
+          .select(col("__a"), col("__b"), col("depth").cast("long")
+            .as("length"))
+          .localCheckpoint(eager = false) // computed in next hop's job
+        foundParts ::= hits
+        tl = tl.join(hits.select("__a", "__b"), Seq("__a", "__b"),
+          "left_anti")
+        remaining -= nHits
+        maxLen = depth.toLong
+        // sources with no outstanding targets stop expanding
+        frontier = nxt.select("source", "id").join(
+          tl.select(col("__a").as("source")), Seq("source"), "left_semi")
+      } else frontier = nxt.select("source", "id")
+      frontierNonEmpty = nTotal > 0
     }
+    if (foundParts.isEmpty) return self
+    val found = foundParts.reduce(_.union(_))
+    // Walk predecessors backward, all pairs at once, in ONE dataflow: a
+    // finished row (cur == source) joins the depth-0 visited entry,
+    // whose preds array is EMPTY, so explode_outer passes it through
+    // unchanged — rows self-retire with no fin/working split. `working`
+    // therefore has a SINGLE consumer per round: the plan grows
+    // linearly, and only a periodic lineage cut is needed to bound
+    // compile depth for deep reconstructions (each cut is one more
+    // QueryExecution of sequential stage latency, so don't cut more
+    // often than plan depth demands). In all mode the explode fans one
+    // partial path out per predecessor — every minimal route
+    // reconstructs in the same bounded round count.
+    val preds = visited.select(col("source"), col("id"), col("preds"))
+    var working = found.select(col("__a"), col("__b"), col("length"),
+      array(col("__b")).as("path"),
+      array().cast("array<string>").as("epath"), col("__b").as("cur"))
+    var i = 0L
+    while (i < maxLen) {
+      i += 1
+      working = working
+        .join(preds, working("cur") === preds("id") &&
+          working("__a") === preds("source"))
+        .select(col("__a"), col("__b"), col("length"), col("path"),
+          col("epath"), col("cur"), explode_outer(col("preds")).as("p"))
+        .select(col("__a"), col("__b"), col("length"),
+          when(col("p").isNull, col("path"))
+            .otherwise(concat(array(col("p.pred")), col("path")))
+            .as("path"),
+          when(col("p").isNull, col("epath"))
+            .otherwise(concat(array(col("p.prededge")), col("epath")))
+            .as("epath"),
+          coalesce(col("p.pred"), col("cur")).as("cur"))
+      if (i % 4 == 0) working = working.localCheckpoint(eager = false)
+    }
+    self.union(working.select(col("__a"), col("__b"), col("path"),
+      col("epath"), col("length")))
   }
 
   /** Lazily-unrolled shortest-path TREE from a set of sources: per-hop
@@ -521,22 +521,21 @@ object Traversals {
     // the probes materialize the endpoint checkpoints either way
     LocalPathKernel.fromTo(
         partitionedEdges(hopEdges(g, edgeTypes, undirected)),
-        srcs, tgts, maxDepth, all) match {
-      case Some(df) => return df
-      case None =>
+        srcs, tgts, maxDepth, all).getOrElse {
+      val self = srcs.join(tgts, col("__a") === col("__b"))
+        .select(col("__a"), col("__b"), array(col("__a")).as("path"),
+          array().cast("array<string>").as("epath"), lit(0L).as("length"))
+      if (maxDepth > LazyUnrollDepth)
+        fromToEager(g, srcs, tgts, self, maxDepth, edgeTypes, undirected, all)
+      else {
+        val visited = spTree(g, srcs, maxDepth, edgeTypes, undirected, all)
+        val found = visited.filter(col("depth") > 0)
+          .join(tgts, col("id") === col("__b"))
+          .select(col("source").as("__a"), col("__b"),
+            col("depth").cast("long").as("length"))
+        self.union(reconstruct(found, visited, maxDepth))
+      }
     }
-    val self = srcs.join(tgts, col("__a") === col("__b"))
-      .select(col("__a"), col("__b"), array(col("__a")).as("path"),
-        array().cast("array<string>").as("epath"), lit(0L).as("length"))
-    if (maxDepth > LazyUnrollDepth)
-      return fromToEager(g, srcs, tgts, self, maxDepth, edgeTypes,
-        undirected, all)
-    val visited = spTree(g, srcs, maxDepth, edgeTypes, undirected, all)
-    val found = visited.filter(col("depth") > 0)
-      .join(tgts, col("id") === col("__b"))
-      .select(col("source").as("__a"), col("__b"),
-        col("depth").cast("long").as("length"))
-    self.union(reconstruct(found, visited, maxDepth))
   }
 
   /** Eager from-to engine (maxDepth > [[LazyUnrollDepth]]): the spTree

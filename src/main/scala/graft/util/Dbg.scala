@@ -3,7 +3,7 @@ package graft.util
 import org.apache.spark.sql.SparkSession
 
 /** Opt-in diagnostic channel for library code: one conf flips on the
-  * stderr lines the scale rehearsals read (chosen StarCC leg, gx18
+  * stderr lines the scale rehearsals read (kernel gate legs, gx18
   * bucket decisions), while production-style callers stay silent —
   * engine code must not print unconditionally (round-11 ADVICE).
   * stderr (not log4j) so a `setLogLevel("ERROR")` rehearsal harness

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.GraphState
+import graft.engine.{GraphState, KernelGate}
 import graft.model.GraphSchemas
 
 /** Shared local SparkSession + tiny graph fixtures (FIXTURES.md F1-F3). */
@@ -50,5 +50,13 @@ object SparkSpec {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** `body` with the driver-kernel bound ([[KernelGate.MaxEdgesKey]])
+    * set to `bound`; "0" declines every kernel, so the distributed
+    * plans run. */
+  def withKernelBound[T](bound: String)(body: => T): T = {
+    session.conf.set(KernelGate.MaxEdgesKey, bound)
+    try body finally session.conf.unset(KernelGate.MaxEdgesKey)
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.SparkSpec
+import graft.SparkSpec.withKernelBound
 
 /** Scale-technique verification: salting equivalence, bucketed
   * co-located joins (no shuffle), broadcast hints — the techniques the
@@ -21,10 +22,8 @@ class ScaleSpec extends SparkSpec {
       .toDF("src", "dst")
     // this pin is about the AT-SCALE (distributed) plan shape — force
     // the r13 local small-graph kernel off for it
-    spark.conf.set(LocalGraphKernels.MaxEdgesKey, "0")
     val df =
-      try GraphXBridge.topLinkPredictions(edges, k = 2)
-      finally spark.conf.unset(LocalGraphKernels.MaxEdgesKey)
+      withKernelBound("0")(GraphXBridge.topLinkPredictions(edges, k = 2))
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("TakeOrderedAndProject"), plan)
     assert(plan.contains("ShuffledHashJoin") && plan.contains("LeftAnti"),
@@ -60,22 +59,19 @@ class ScaleSpec extends SparkSpec {
       .map(p => (math.min(p._1, p._2).toLong, math.max(p._1, p._2).toLong))
       .filter(p => p._1 != p._2).distinct
     val edges = base.toDF("src", "dst")
-    def distributed[T](body: => T): T = {
-      spark.conf.set(LocalGraphKernels.MaxEdgesKey, "0")
-      try body finally spark.conf.unset(LocalGraphKernels.MaxEdgesKey)
-    }
     // top-k link prediction: identical ordered rows (ties in `common`
     // exercise the (id1, id2) tie-break through the kernel heap)
     val topL = GraphXBridge.topLinkPredictions(edges, k = 25)
       .collect().map(_.toSeq).toSeq
-    val topD = distributed(GraphXBridge.topLinkPredictions(edges, k = 25)
-      .collect().map(_.toSeq).toSeq)
+    val topD = withKernelBound("0")(
+      GraphXBridge.topLinkPredictions(edges, k = 25)
+        .collect().map(_.toSeq).toSeq)
     assert(topL.size == 25 && topL == topD)
     // per-edge triangle support: identical (src, dst, support) set,
     // zero-support edges included
     val supL = GraphXBridge.edgeTriangleSupport(edges)
       .collect().map(_.toSeq).toSet
-    val supD = distributed(GraphXBridge.edgeTriangleSupport(edges)
+    val supD = withKernelBound("0")(GraphXBridge.edgeTriangleSupport(edges)
       .collect().map(_.toSeq).toSet)
     assert(supL.size == base.size && supL == supD)
     assert(supL.exists(r => r.last.asInstanceOf[Long] > 0L))
@@ -100,34 +96,30 @@ class ScaleSpec extends SparkSpec {
       .map(p => (math.min(p._1, p._2).toLong, math.max(p._1, p._2).toLong))
       .filter(p => p._1 != p._2).distinct
     val edges = base.toDF("src", "dst")
-    def distributed[T](body: => T): T = {
-      spark.conf.set(LocalGraphKernels.MaxEdgesKey, "0")
-      try body finally spark.conf.unset(LocalGraphKernels.MaxEdgesKey)
-    }
     def rows(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
       df.collect().map(_.toSeq).toSet
     // label propagation (2 rounds, tie-heavy graph)
     val lpL = rows(GraphXBridge.labelPropagation(edges, rounds = 2))
-    val lpD = distributed(
+    val lpD = withKernelBound("0")(
       rows(GraphXBridge.labelPropagation(edges, rounds = 2)))
     assert(lpL.nonEmpty && lpL == lpD)
     // exact-integer PPR: 3 iterations from a 5-seed set (one seed id
     // outside the graph pins the drop-unknown-seeds path)
     val seeds = Seq(0L, 7L, 13L, 21L, 999L).toDF("id")
     val prL = rows(GraphXBridge.personalizedPageRankInt(edges, seeds, 3))
-    val prD = distributed(
+    val prD = withKernelBound("0")(
       rows(GraphXBridge.personalizedPageRankInt(edges, seeds, 3)))
     assert(prL.nonEmpty && prL == prD)
     // k-core at a k that actually peels this graph
     val kcL = rows(GraphXBridge.kCore(edges, 5))
-    val kcD = distributed(rows(GraphXBridge.kCore(edges, 5)))
+    val kcD = withKernelBound("0")(rows(GraphXBridge.kCore(edges, 5)))
     assert(kcL.nonEmpty && kcL == kcD)
     // weighted SSSP over a directed weighted version (source 0; one
     // listed source outside the graph)
     val wEdges = base.map { case (a, b) =>
       (a, b, ((a * 31 + b * 17) % 7 + 1).toDouble) }.toDF("src", "dst", "w")
     val ssL = rows(GraphXBridge.weightedSssp(wEdges, Seq(0L, 777L)))
-    val ssD = distributed(
+    val ssD = withKernelBound("0")(
       rows(GraphXBridge.weightedSssp(wEdges, Seq(0L, 777L))))
     assert(ssL.nonEmpty && ssL == ssD)
     // connected components on a string-id GraphState with an isolated
@@ -138,8 +130,52 @@ class ScaleSpec extends SparkSpec {
       .toDF("src", "dst", "edge_type")
     val gs = GraphState(vs, es)
     val ccL = rows(GraphXBridge.connectedComponents(gs))
-    val ccD = distributed(rows(GraphXBridge.connectedComponents(gs)))
+    val ccD = withKernelBound("0")(rows(GraphXBridge.connectedComponents(gs)))
     assert(ccL.size == 21 && ccL == ccD)
+  }
+
+  test("driver kernels decline a null id: kernel on ≡ bound 0") {
+    import spark.implicits._
+    implicit val sp: SparkSession = spark
+    // a null id read from a raw row comes back as vertex 0, which (0, 5)
+    // makes visible
+    val edges = Seq((Option(1L), 2L), (Option(2L), 3L), (Option(1L), 3L),
+      (None, 3L), (None, 1L), (None, 2L), (Option(0L), 5L))
+      .toDF("src", "dst")
+    def outcome(df: => org.apache.spark.sql.DataFrame) =
+      try Right(df.collect().map(_.toSeq).toSet)
+      catch { case e: Exception => Left(e.getClass.getName) }
+    def same(name: String)(df: => org.apache.spark.sql.DataFrame): Unit = {
+      val on = outcome(df)
+      val off = withKernelBound("0")(outcome(df))
+      assert(on == off, s"$name: kernel $on, distributed $off")
+    }
+    same("kCore")(GraphXBridge.kCore(edges, 2))
+    same("edgeTriangleSupport")(GraphXBridge.edgeTriangleSupport(edges))
+    same("topLinkPredictions")(GraphXBridge.topLinkPredictions(edges, 5))
+    same("labelPropagation")(GraphXBridge.labelPropagation(edges, 2))
+    same("pprInt")(GraphXBridge.personalizedPageRankInt(edges,
+      Seq(1L).toDF("id"), 3))
+    same("pprInt null seed")(GraphXBridge.personalizedPageRankInt(
+      edges.filter(col("src").isNotNull), Seq(Option(1L), None).toDF("id"),
+      3))
+    same("weightedSssp")(GraphXBridge.weightedSssp(
+      edges.withColumn("w", lit(1.0)), Seq(1L)))
+    same("StarCC")(StarCC.components(edges.toDF("id1", "id2")))
+    // hashed ids are never null on the GraphState path: the kernel itself
+    // must decline
+    assert(LocalGraphKernels.connectedComponentsLong(
+      edges.select("dst"), edges).isEmpty)
+    val g = GraphState(
+      Seq("a", "b", "c").map((_, "n")).toDF("id", "label"),
+      Seq[(String, String, String, String)](("e1", "a", "b", "E"),
+        ("e2", "b", "c", "E"), ("e3", null, "c", "E"))
+        .toDF("id", "src", "dst", "edge_type"))
+    val ends = Seq(Option("a"), None).toDF("id")
+    same("shortestPathsPairs")(Traversals.shortestPathsPairs(g,
+      Seq(("a", "c"), ("a", null)).toDF("s", "t"), 4))
+    same("shortestPathsFromTo")(
+      Traversals.shortestPathsFromTo(g, ends, Seq("c").toDF("id"), 4))
   }
 
   test("topLinkPredictions bucketed passes (forced B=4) reproduce the " +
@@ -580,9 +616,7 @@ class ScaleSpec extends SparkSpec {
     // force the DISTRIBUTED engine: this pin is about the partitioned
     // edge cache the hop joins share, which the r14 local path kernel
     // (equivalence-pinned in TraversalSpec) would bypass
-    spark.conf.set(LocalGraphKernels.MaxEdgesKey, "0")
-    try {
-      import spark.implicits._
+    try withKernelBound("0") {
       def run(): Unit = {
         val pairs = g.vertices.filter(col("label") === "part")
           .select(lit("c:1").as("a"), col("id").as("b"))
@@ -597,9 +631,6 @@ class ScaleSpec extends SparkSpec {
       // for dedup/pairs/reconstruction bytes.
       assert(warm <= math.max(cold / 2, 64 * 1024),
         s"warm traversal re-shuffled edges: cold=$cold B, warm=$warm B")
-    } finally {
-      spark.conf.unset(LocalGraphKernels.MaxEdgesKey)
-      spark.sparkContext.removeSparkListener(listener)
-    }
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 }

@@ -3,6 +3,7 @@ package graft.engine
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.SparkSpec.withKernelBound
 
 /** Chain + cycle fixtures for BFS / shortest path / var-length paths
   * (D17/D18; fixes the reference's broken BFS semantics,
@@ -394,6 +395,27 @@ class TraversalSpec extends SparkSpec {
       ("a", "d", Seq("a", "c", "d"), 2L)))  // iso unreachable: no row
   }
 
+  test("kernel bound Int.MaxValue keeps the default shortest paths") {
+    import spark.implicits._
+    def paths() = {
+      val pairs = Traversals.shortestPathsPairs(chain,
+        Seq(("a", "d"), ("b", "a")).toDF("s", "t"), maxDepth = 4)
+      val fromTo = Traversals.shortestPathsFromTo(chain, srcDf("a"),
+        srcDf("c", "d", "iso"), maxDepth = 4)
+      (pairs.union(fromTo).collect().map(_.toString).toSet)
+    }
+    val default = paths()
+    assert(default.nonEmpty)
+    assert(withKernelBound(Int.MaxValue.toString)(paths()) == default)
+  }
+
+  test("a non-numeric kernel bound fails naming the key") {
+    val err = intercept[IllegalArgumentException](
+      withKernelBound("abc")(Traversals.shortestPathsFromTo(chain,
+        srcDf("a"), srcDf("d"), maxDepth = 4)))
+    assert(err.getMessage.contains(KernelGate.MaxEdgesKey), err.getMessage)
+  }
+
   test("bounded Tarjan matches distributed SCC on random digraphs") {
     implicit val sp: org.apache.spark.sql.SparkSession = spark
     // seeded random digraphs (12 vertices, p=0.18): dense enough for
@@ -593,21 +615,14 @@ class TraversalSpec extends SparkSpec {
         rnd.nextInt(60).toLong)).filter(p => p._1 != p._2))
     for (edges <- cases) {
       val df = edges.toDF("id1", "id2")
-      // explicit default bound: these graphs are under it → driver
-      // union-find path (pinned, not inherited, so a conf leak from
-      // another test can't collapse both legs onto one path)
-      spark.conf.set("spark.graft.starcc.driverCollectBound",
-        StarCC.DefaultDriverCollectBound.toString)
-      val uf = try {
-        StarCC.components(df).collect()
-          .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      } finally spark.conf.unset("spark.graft.starcc.driverCollectBound")
+      def labels() = StarCC.components(df).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      // explicit bound: these graphs are under it → driver union-find
+      // leg (pinned, not inherited, so a conf leak from another test
+      // can't collapse both legs onto one path)
+      val uf = withKernelBound("1000")(labels())
       // bound 0: force the distributed star-contraction fixpoint
-      spark.conf.set("spark.graft.starcc.driverCollectBound", "0")
-      val star = try {
-        StarCC.components(df).collect()
-          .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      } finally spark.conf.unset("spark.graft.starcc.driverCollectBound")
+      val star = withKernelBound("0")(labels())
       val g = Graph.fromEdges(
         spark.sparkContext.parallelize(
           edges.map(p => Edge(p._1, p._2, ()))), ())
@@ -675,11 +690,7 @@ class TraversalSpec extends SparkSpec {
         <- combos) {
       def both(body: => org.apache.spark.sql.DataFrame)
           : (Set[String], Set[String]) = {
-        val kernel = canon(body)
-        spark.conf.set(LocalGraphKernels.MaxEdgesKey, "0")
-        val dist = try canon(body)
-        finally spark.conf.unset(LocalGraphKernels.MaxEdgesKey)
-        (kernel, dist)
+        (canon(body), withKernelBound("0")(canon(body)))
       }
       val tag = s"all=$all undirected=$undirected types=$types depth=$depth"
       val (kp, dp) = both(Traversals.shortestPathsPairs(
