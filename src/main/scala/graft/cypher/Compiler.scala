@@ -2,9 +2,10 @@ package graft.cypher
 
 
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{MapType, StringType}
+import org.apache.spark.sql.types.{IntegerType, MapType, StringType,
+  StructField, StructType}
 
 import Ast._
 import graft.engine.{GraphState, Traversals}
@@ -54,8 +55,12 @@ final class Compiler(g: GraphState)(implicit spark: SparkSession) {
   private val aggFns = Set("count", "sum", "avg", "min", "max", "collect",
     "stdev", "stdevp", "percentilecont")
 
-  def emptyFrame: Frame =
-    Frame(spark.range(1).select(lit(1).as("__dummy")), Map.empty)
+  /** The one-row unit frame a statement starts from: a LocalRelation,
+    * so a CREATE without MATCH evaluates on the driver with no job. */
+  def emptyFrame: Frame = Frame(
+    spark.createDataFrame(java.util.List.of(Row(1)),
+      StructType(Seq(StructField("__dummy", IntegerType, nullable = false)))),
+    Map.empty)
 
   // ---------- node/edge pattern frames ----------
 

@@ -18,7 +18,9 @@ final case class CypherResult(df: Option[DataFrame], state: GraphState)
   * (CREATE / SET / REMOVE / DELETE) fold over the clause list threading a
   * GraphState, mirroring the reference's execute_cypher dispatch
   * (cypher_parser.rs:644-806) with set-oriented semantics instead of
-  * row-at-a-time storage calls.
+  * row-at-a-time storage calls. Each write clause evaluates its delta
+  * when it runs (GraphState.pin), so a write that fails at runtime
+  * throws here and leaves the caller's snapshot as it was.
   */
 object Cypher {
 
@@ -122,8 +124,8 @@ object Cypher {
         // identical tags; the stats job is the first action and
         // materializes every partition. Dropping the eager job saves
         // one scheduled job per MERGE clause. uuid() frames (applyCreate)
-        // stay EAGER: truly random per evaluation, a same-job race
-        // there would diverge.
+        // are pinned once at write time (GraphState.pin): truly random
+        // per evaluation, so a lazy frame there would diverge.
         val tagged = Compiler.Frame(
           frame.df.withColumn("__merge_row", monotonically_increasing_id())
             .localCheckpoint(eager = false),
@@ -165,8 +167,9 @@ object Cypher {
         val outCols = "__merge_row" +: outVars.toSeq.sortBy(_._1)
           .flatMap { case (v, k) => varColumns(v, k) }
         // ON MATCH SET / ON CREATE SET run against exactly the half of
-        // the rows that matched / were created (Cypher semantics); the
-        // frame's carried props predate the SET, matching plain SET's
+        // the rows that matched / were created (Cypher semantics) and,
+        // like every write, pin their delta when they run; the frame's
+        // carried props predate the SET, matching plain SET's
         // read-your-own-writes contract (re-query the state to observe).
         // emptiness of every half is already known from the one stats
         // job — no per-half isEmpty probes
@@ -379,17 +382,15 @@ object Cypher {
           val propCols: Seq[Column] = np.props.toSeq.flatMap { case (k, e) =>
             Seq(lit(k), compiler.compileExpr(e, frame).cast(StringType))
           }
-          // localCheckpoint pins the generated uuid(): without it every
-          // downstream action would re-evaluate and produce DIFFERENT ids
-          // for the vertex write vs the edge write.
-          val df2 = frame.df
+          // the pin fixes the generated uuid(): the vertex write, the
+          // edge write and later clauses all read the same ids
+          val df2 = GraphState.pin("create", frame.df
             .withColumn(s"${vName}__id", expr("uuid()"))
             .withColumn(s"${vName}__label", lit(np.labels.mkString(":")))
             .withColumn(s"${vName}__props",
               if (propCols.isEmpty)
                 map().cast("map<string,string>")
-              else map(propCols: _*))
-            .localCheckpoint()
+              else map(propCols: _*)))
           frame = Compiler.Frame(df2,
             frame.vars + (vName -> Compiler.NodeVar))
           val newVerts = df2.select(
@@ -413,13 +414,12 @@ object Cypher {
           else map(propCols: _*)
         rp.variable match {
           case Some(rv) =>
-            val df2 = frame.df
+            val df2 = GraphState.pin("create", frame.df
               .withColumn(s"${rv}__id", expr("uuid()"))
               .withColumn(s"${rv}__src", col(s"${srcV}__id"))
               .withColumn(s"${rv}__dst", col(s"${dstV}__id"))
               .withColumn(s"${rv}__type", lit(t))
-              .withColumn(s"${rv}__props", propsCol)
-              .localCheckpoint()
+              .withColumn(s"${rv}__props", propsCol))
             frame = Compiler.Frame(df2,
               frame.vars + (rv -> Compiler.RelVar))
             st = st.upsertEdges(df2.select(
@@ -429,7 +429,7 @@ object Cypher {
               col(s"${rv}__type").as("edge_type"),
               lit("").as("label"),
               col(s"${rv}__props").as("properties")))
-          case None =>
+          case None => // upsertEdges pins the uuid() ids
             st = st.upsertEdges(frame.df.select(
               expr("uuid()").as("id"),
               col(s"${srcV}__id").as("src"),
@@ -494,18 +494,6 @@ object Cypher {
     st
   }
 
-  /** Edges incident to any probe vertex (`__vid` column). Two
-    * equi-semi-joins (src, dst) unioned instead of one OR-condition join:
-    * the OR form can only plan as a BroadcastNestedLoopJoin —
-    * O(|edges|×|victims|) comparisons — while these hash-join, the same
-    * pattern as GraphState.detachDeleteVertices' two anti-joins. */
-  private[cypher] def incidentEdges(st: GraphState, probe: DataFrame)
-      : DataFrame =
-    st.edges.join(probe.withColumnRenamed("__vid", "src"), Seq("src"),
-        "left_semi")
-      .unionByName(st.edges.join(
-        probe.withColumnRenamed("__vid", "dst"), Seq("dst"), "left_semi"))
-
   private def applyDelete(state: GraphState, compiler: Compiler,
       frame: Compiler.Frame, d: DeleteClause): GraphState = {
     var st = state
@@ -519,17 +507,9 @@ object Cypher {
           val ids = frame.df.select(col(s"${v}__id"))
           st =
             if (d.detach) st.detachDeleteVertices(ids)
-            else {
-              // Cypher refuses to delete a vertex that still has
-              // relationships — dangling edges would corrupt the graph.
-              val probe = ids.withColumnRenamed(s"${v}__id", "__vid")
-              if (!incidentEdges(st, probe).isEmpty)
-                throw new ParseException(s"cannot DELETE $v: vertex still " +
-                  "has relationships (use DETACH DELETE)")
-              GraphState(st.vertices.join(
-                probe.withColumnRenamed("__vid", "id"), Seq("id"),
-                "left_anti"), st.edges)
-            }
+            else st.deleteVertices(ids).getOrElse(
+              throw new ParseException(s"cannot DELETE $v: vertex still " +
+                "has relationships (use DETACH DELETE)"))
         case other =>
           throw new ParseException(s"cannot DELETE $v ($other)")
       }

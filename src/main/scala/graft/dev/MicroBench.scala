@@ -35,8 +35,8 @@ import graft.sources.{Tables, TpchGraph}
   *
   * Point ops run against the sf-dir TpchGraph (a loaded store, like the
   * harness's pre-seeded datastore); inserts build on an in-memory snapshot
-  * and are forced with a count (GraphState is lazy — an unforced insert
-  * would time plan construction, not the operation).
+  * and are read back with a count (an insert pins its delta when it is
+  * called; the count times the read of the new snapshot with it).
   *
   *   sbt "runMain graft.dev.MicroBench /root/testdata/sf0.001 10"
   */

@@ -1,6 +1,10 @@
 package graft.engine
 
+import scala.util.DynamicVariable
+
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.graft.shims
 import org.apache.spark.sql.functions._
 
 import graft.ir._
@@ -11,25 +15,38 @@ import graft.ir._
   * Spark analogue of the reference's storage-engine CRUD
   * (reference: lib/src/storage_engine/storage_engine.rs:1248-1258).
   *
+  * A mutation is applied once, when it is called: its delta (the new
+  * rows, the victim ids or keys, or the per-id property map) is
+  * evaluated by [[GraphState.pin]], and the new snapshot is the parent
+  * plus one broadcast-sized anti-join or left join against that pinned
+  * delta. Each snapshot therefore references its parent exactly once,
+  * and a read after N writes runs the base scan once plus N small join
+  * layers instead of replaying the write history.
+  *
   * Scale notes: at 100 TB, `vertices` and `edges` are partitioned Parquet;
   * every operator below is a narrow filter or an equi-join on the
   * partitioning keys (`id`, `src`, `dst`), so Catalyst gets pushdown +
   * pruned scans and AQE picks broadcast vs shuffle joins by actual sizes.
   */
 final case class GraphState(vertices: DataFrame, edges: DataFrame) {
+  import GraphState.pin
 
   // ---------- mutations (snapshot-in / snapshot-out) ----------
 
   /** Append vertices; last-write-wins on id (reference create_vertex
     * returns false on duplicate — we keep newest, deterministic). */
-  def upsertVertices(vs: DataFrame): GraphState =
-    copy(vertices = vs.unionByName(
-      vertices.join(vs.select("id"), Seq("id"), "left_anti")))
+  def upsertVertices(vs: DataFrame): GraphState = {
+    val add = pin("upsertVertices", vs)
+    copy(vertices = add.unionByName(
+      vertices.join(add.select("id"), Seq("id"), "left_anti")))
+  }
 
-  def upsertEdges(es: DataFrame): GraphState =
-    copy(edges = es.unionByName(
-      edges.join(es.select("src", "edge_type", "dst"),
+  def upsertEdges(es: DataFrame): GraphState = {
+    val add = pin("upsertEdges", es)
+    copy(edges = add.unionByName(
+      edges.join(add.select("src", "edge_type", "dst"),
         Seq("src", "edge_type", "dst"), "left_anti")))
+  }
 
   /** Edge insert validated against both endpoint vertices
     * (reference: rdb/datastore.rs:272-281) — left-semi joins. */
@@ -44,7 +61,7 @@ final case class GraphState(vertices: DataFrame, edges: DataFrame) {
   /** DETACH DELETE: remove matched vertices and all incident edges
     * (reference cascading delete, rdb/managers.rs:119-160) — anti-joins. */
   def detachDeleteVertices(victimIds: DataFrame): GraphState = {
-    val v = victimIds.select(col(victimIds.columns.head).as("id"))
+    val v = pin("detachDeleteVertices", firstAsId(victimIds))
     GraphState(
       vertices.join(v, Seq("id"), "left_anti"),
       edges
@@ -52,10 +69,29 @@ final case class GraphState(vertices: DataFrame, edges: DataFrame) {
         .join(v.withColumnRenamed("id", "dst"), Seq("dst"), "left_anti"))
   }
 
-  def deleteEdges(victims: DataFrame): GraphState =
-    copy(edges = edges.join(
-      victims.select("src", "edge_type", "dst"),
-      Seq("src", "edge_type", "dst"), "left_anti"))
+  /** DELETE without DETACH: removes the matched vertices, or None when
+    * one of them still has an incident edge (Cypher refuses: dangling
+    * edges would corrupt the graph). */
+  def deleteVertices(victimIds: DataFrame): Option[GraphState] = {
+    val v = pin("deleteVertices", firstAsId(victimIds))
+    if (!incidentEdges(v).isEmpty) None
+    else Some(copy(vertices = vertices.join(v, Seq("id"), "left_anti")))
+  }
+
+  /** Edges incident to any vertex of `ids` (an `id` column). Two
+    * equi-semi-joins (src, dst) unioned instead of one OR-condition join:
+    * the OR form can only plan as a BroadcastNestedLoopJoin —
+    * O(|edges|×|victims|) comparisons — while these hash-join, the same
+    * pattern as detachDeleteVertices' two anti-joins. */
+  private[graft] def incidentEdges(ids: DataFrame): DataFrame =
+    edges.join(ids.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
+      .unionByName(edges.join(ids.withColumnRenamed("id", "dst"), Seq("dst"),
+        "left_semi"))
+
+  def deleteEdges(victims: DataFrame): GraphState = {
+    val v = pin("deleteEdges", victims.select("src", "edge_type", "dst"))
+    copy(edges = edges.join(v, Seq("src", "edge_type", "dst"), "left_anti"))
+  }
 
   /** SET properties on matched vertices: map_concat rewrite
     * (reference: rdb/datastore.rs:342-362). */
@@ -63,104 +99,133 @@ final case class GraphState(vertices: DataFrame, edges: DataFrame) {
       : GraphState = {
     val lit_map = map(kv.toSeq.flatMap { case (k, v) =>
       Seq(lit(k), lit(v)) }: _*)
-    val ids = matchIds.select(col(matchIds.columns.head).as("id"))
-    val updated = vertices.join(ids, Seq("id"), "left_semi")
-      .withColumn("properties", map_concat(
-        map_filter(col("properties"), (k, _) => !k.isin(kv.keys.toSeq.map(lit): _*)),
-        lit_map))
-    val untouched = vertices.join(ids, Seq("id"), "left_anti")
-    copy(vertices = untouched.unionByName(updated))
+    copy(vertices = rewrite(vertices, "setVertexProperties",
+      hits(matchIds), "properties")((props, _) => map_concat(
+        map_filter(props, (k, _) => !k.isin(kv.keys.toSeq.map(lit): _*)),
+        lit_map)))
   }
 
   /** REMOVE a property key (Cypher REMOVE, QE:140-143). */
-  def removeVertexProperty(matchIds: DataFrame, key: String): GraphState = {
-    val ids = matchIds.select(col(matchIds.columns.head).as("id"))
-    val updated = vertices.join(ids, Seq("id"), "left_semi")
-      .withColumn("properties",
-        map_filter(col("properties"), (k, _) => k =!= key))
-    copy(vertices = vertices.join(ids, Seq("id"), "left_anti")
-      .unionByName(updated))
-  }
+  def removeVertexProperty(matchIds: DataFrame, key: String): GraphState =
+    copy(vertices = rewrite(vertices, "removeVertexProperty",
+      hits(matchIds), "properties")((props, _) =>
+        map_filter(props, (k, _) => k =!= key)))
 
   /** Per-row property upsert: `updates` is (id, key, value) — one row per
     * assignment, values may differ per entity (Cypher `SET n.x = expr`).
     * Requires spark.sql.mapKeyDedupPolicy=LAST_WIN so map_concat
     * overwrites existing keys. */
-  def setVertexPropertiesRows(updates: DataFrame): GraphState = {
-    val merged = updates.groupBy(col("id")).agg(
-      map_from_entries(collect_list(struct(col("key"), col("value"))))
-        .as("__new"))
-    copy(vertices = vertices.join(merged, Seq("id"), "left")
-      .withColumn("properties",
-        when(col("__new").isNotNull,
-          map_concat(col("properties"), col("__new")))
-          .otherwise(col("properties")))
-      .drop("__new"))
-  }
+  def setVertexPropertiesRows(updates: DataFrame): GraphState =
+    copy(vertices = rewrite(vertices, "setVertexPropertiesRows",
+      merged(updates), "properties")(map_concat(_, _)))
 
   /** REPLACE the whole property map of matched vertices (Cypher
-    * `SET n = {map}`). `repl` rows: (id, __new MAP<STRING,STRING>) —
-    * one shuffle-free(able) left join; unmatched vertices keep theirs. */
+    * `SET n = {map}`). `repl` rows: (id, __new MAP<STRING,STRING>);
+    * unmatched vertices keep theirs. */
   def replaceVertexProperties(repl: DataFrame): GraphState =
-    copy(vertices = vertices
-      .join(repl.dropDuplicates("id"), Seq("id"), "left")
-      .withColumn("properties",
-        when(col("__new").isNotNull, col("__new"))
-          .otherwise(col("properties")))
-      .drop("__new"))
+    copy(vertices = rewrite(vertices, "replaceVertexProperties",
+      replacements(repl), "properties")((_, m) => m))
 
   /** REPLACE the whole property map of matched edges (`SET r = {map}`). */
   def replaceEdgeProperties(repl: DataFrame): GraphState =
-    copy(edges = edges
-      .join(repl.dropDuplicates("id"), Seq("id"), "left")
-      .withColumn("properties",
-        when(col("__new").isNotNull, col("__new"))
-          .otherwise(col("properties")))
-      .drop("__new"))
+    copy(edges = rewrite(edges, "replaceEdgeProperties",
+      replacements(repl), "properties")((_, m) => m))
 
   /** Per-row edge property upsert by edge id. */
-  def setEdgePropertiesRows(updates: DataFrame): GraphState = {
-    val merged = updates.groupBy(col("id")).agg(
-      map_from_entries(collect_list(struct(col("key"), col("value"))))
-        .as("__new"))
-    copy(edges = edges.join(merged, Seq("id"), "left")
-      .withColumn("properties",
-        when(col("__new").isNotNull,
-          map_concat(col("properties"), col("__new")))
-          .otherwise(col("properties")))
-      .drop("__new"))
-  }
+  def setEdgePropertiesRows(updates: DataFrame): GraphState =
+    copy(edges = rewrite(edges, "setEdgePropertiesRows",
+      merged(updates), "properties")(map_concat(_, _)))
 
   /** Add a label to matched vertices (Cypher `SET n:Label`, QE:135-138);
     * labels are ':'-joined in the label column (cypher_parser.rs:167-189).
     */
-  def addVertexLabel(matchIds: DataFrame, label: String): GraphState = {
-    val ids = matchIds.select(col(matchIds.columns.head).as("id"))
-      .withColumn("__hit", lit(true))
-    copy(vertices = vertices.join(ids, Seq("id"), "left")
-      .withColumn("label",
-        when(col("__hit").isNotNull &&
-            !array_contains(split(col("label"), ":"), label),
-          concat(col("label"), lit(":" + label)))
-          .otherwise(col("label")))
-      .drop("__hit"))
-  }
+  def addVertexLabel(matchIds: DataFrame, label: String): GraphState =
+    copy(vertices = rewrite(vertices, "addVertexLabel", hits(matchIds),
+      "label")((l, _) => when(!array_contains(split(l, ":"), label),
+        concat(l, lit(":" + label))).otherwise(l)))
 
-  def removeVertexLabel(matchIds: DataFrame, label: String): GraphState = {
-    val ids = matchIds.select(col(matchIds.columns.head).as("id"))
-      .withColumn("__hit", lit(true))
-    copy(vertices = vertices.join(ids, Seq("id"), "left")
-      .withColumn("label",
-        when(col("__hit").isNotNull,
-          array_join(array_remove(split(col("label"), ":"), label), ":"))
-          .otherwise(col("label")))
-      .drop("__hit"))
-  }
+  def removeVertexLabel(matchIds: DataFrame, label: String): GraphState =
+    copy(vertices = rewrite(vertices, "removeVertexLabel", hits(matchIds),
+      "label")((l, _) => array_join(array_remove(split(l, ":"), label), ":")))
+
+  // ---------- deltas ----------
+
+  private def firstAsId(ids: DataFrame): DataFrame =
+    ids.select(col(ids.columns.head).as("id"))
+
+  /** Distinct matched ids, each with a `__delta` marker: a left join
+    * against it must not multiply a vertex matched by several rows. */
+  private def hits(matchIds: DataFrame): DataFrame =
+    firstAsId(matchIds).distinct().withColumn("__delta", lit(true))
+
+  /** (id, key, value) assignments folded to one (id, __delta) map per id. */
+  private def merged(updates: DataFrame): DataFrame =
+    updates.groupBy(col("id")).agg(
+      map_from_entries(collect_list(struct(col("key"), col("value"))))
+        .as("__delta"))
+
+  private def replacements(repl: DataFrame): DataFrame =
+    repl.dropDuplicates("id").select(col("id"), col("__new").as("__delta"))
+
+  /** `frame` with `column` rewritten to `f(column, __delta)` on the rows
+    * whose id is in the pinned `delta` (id, __delta): one left join, the
+    * parent read once. A null `__delta` keeps the row as it was. */
+  private def rewrite(frame: DataFrame, mutation: String, delta: DataFrame,
+      column: String)(f: (Column, Column) => Column): DataFrame =
+    frame.join(pin(mutation, delta), Seq("id"), "left")
+      .withColumn(column, when(col("__delta").isNotNull,
+        f(col(column), col("__delta"))).otherwise(col(column)))
+      .drop("__delta")
 
   /** Edge reversal (reference: models/src/edges.rs:74-83). */
   def reversedEdges: DataFrame = edges.select(
     col("id"), col("dst").as("src"), col("src").as("dst"),
     col("edge_type"), col("label"), col("properties"))
+}
+
+object GraphState {
+
+  /** Rows up to which a delta is collected to the driver and planned as
+    * a LocalRelation; a larger delta is local-checkpointed instead. A
+    * constant, not a conf key: an interactive write's delta is a handful
+    * of rows, and 100,000 vertex or edge rows are tens of MB on the
+    * driver at most. */
+  private[engine] val PinMaxRows = 100000
+
+  /** The cap [[pin]] applies; tests bind 0 to force the checkpoint leg. */
+  private[engine] val pinCap = new DynamicVariable[Int](PinMaxRows)
+
+  /** Evaluates a mutation's `delta` once, at write time, and returns a
+    * frame that reads the result instead of the delta's lineage:
+    *  - up to [[PinMaxRows]] rows: collected (one `limit(cap + 1)`
+    *    probe) into a LocalRelation, which later plans join as a
+    *    broadcast with no exchange, or prune when it is empty;
+    *  - more rows: one `localCheckpoint`, which keeps bulk writes
+    *    distributed. The probe stops at cap + 1 rows; the checkpoint
+    *    evaluates the delta again, so a nondeterministic delta (uuid()
+    *    ids) is fixed by the checkpoint, not by the probe.
+    * A delta that fails at runtime therefore fails the write, not a
+    * later read. One `spark.graft.debug` line per call. */
+  private[graft] def pin(mutation: String, delta: DataFrame): DataFrame = {
+    val spark = delta.sparkSession
+    val cap = pinCap.value
+    // raw rows: no external-Row conversion
+    val head =
+      if (cap > 0)
+        shims.action(delta.limit(cap + 1), "pin")(_.executeCollect())
+      else Array.empty[InternalRow]
+    val (out, rows, leg) =
+      if (cap > 0 && head.length <= cap)
+        (shims.localRelation(delta, head.toSeq), head.length.toLong, "local")
+      else {
+        val cp = delta.localCheckpoint(eager = false)
+        (cp, shims.action(cp, "pin")(_.execute().count()), "checkpoint")
+      }
+    graft.util.Dbg(spark,
+      s"[delta] $mutation rows=$rows cap=$cap leg=$leg")
+    out
+  }
+
 }
 
 /** Compiles the indradb-mirror IR (graft.ir.GraphQuery) to DataFrame plans.

@@ -389,17 +389,16 @@ object EventStreams {
     * and upserts into the session's GraphState via foreachBatch — the
     * streaming write path for graph mutations (the reference's
     * ChangeTracker append analogue, but with set-oriented batch upserts
-    * instead of row-at-a-time calls). The projection is materialized
-    * with localCheckpoint BEFORE the upsert: the snapshot must not
-    * retain lineage into a micro-batch DataFrame that expires with its
-    * trigger. */
+    * instead of row-at-a-time calls). The upsert pins the projection
+    * when it runs (GraphState.pin), so the snapshot keeps no lineage
+    * into a micro-batch DataFrame that expires with its trigger. */
   def graphUpsertSink(spark: SparkSession, sourceDir: String,
       session: graft.api.GraftSession,
       toVertices: DataFrame => DataFrame): Unit = {
     val raw = graft.sources.EventTs.readStream(spark, sourceDir)
     val q = raw.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        session.bulkInsert(vertices = toVertices(batch).localCheckpoint())
+        session.bulkInsert(vertices = toVertices(batch))
       }
       .start()
     q.processAllAvailable()

@@ -1,9 +1,12 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{classic, Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.{SparkPlan, SQLExecution}
 import org.apache.spark.sql.types.{AbstractDataType, DataType, LongType}
 
 /** Bridge into Spark's `private[sql]` Column↔Expression converters and
@@ -14,6 +17,24 @@ import org.apache.spark.sql.types.{AbstractDataType, DataType, LongType}
 object shims {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** `body` over `df`'s physical plan as one SQL execution, as a
+    * Dataset action runs: its tasks see the session's conf (map-key
+    * dedup policy, ANSI) and its jobs report to the SQL listeners. */
+  def action[T](df: DataFrame, name: String)(body: SparkPlan => T): T = {
+    val qe = df.asInstanceOf[classic.Dataset[Row]].queryExecution
+    SQLExecution.withNewExecutionId(qe, Some(name))(body(qe.executedPlan))
+  }
+
+  /** `rows`, already on the driver in `like`'s schema, as a frame over
+    * a LocalRelation: raw rows (no external-Row round trip), exact
+    * statistics for the planner (broadcast joins, empty-relation
+    * pruning) and no job to read. */
+  def localRelation(like: DataFrame, rows: Seq[InternalRow]): DataFrame = {
+    val cdf = like.asInstanceOf[classic.Dataset[Row]]
+    classic.Dataset.ofRows(cdf.sparkSession, LocalRelation(
+      cdf.queryExecution.analyzed.output.map(_.newInstance()), rows))
+  }
 
   /** Release the block-manager storage behind a `localCheckpoint()`ed
     * DataFrame (the checkpointed RDD lives in the plan's LogicalRDD

@@ -1,6 +1,7 @@
 package graft.cypher
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{col, map_entries, sort_array}
 
 import graft.SparkSpec
 import graft.engine.GraphState
@@ -296,8 +297,8 @@ class CypherSpec extends SparkSpec {
 
   test("non-DETACH DELETE guard plans hash semi-joins, not nested-loop") {
     import org.apache.spark.sql.functions.col
-    val probe = people.vertices.select(col("id").as("__vid")).limit(2)
-    val plan = Cypher.incidentEdges(people, probe)
+    val probe = people.vertices.select(col("id")).limit(2)
+    val plan = people.incidentEdges(probe)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
   }
@@ -1140,5 +1141,93 @@ class CypherSpec extends SparkSpec {
     assert(Cypher.query(g4,
       "CALL db.labels() RETURN label ORDER BY label")
       .collect().map(_.getString(0)).toSeq == Seq("Person"))
+  }
+
+  // ---------- writes pin their delta (GraphState.pin) ----------
+
+  /** Occurrences, in `df`'s optimized plan, of the RDD-backed leaves of
+    * `base` (the fixture is local-checkpointed: its leaves are RDDs). */
+  private def baseLeaves(df: DataFrame, base: DataFrame): Int = {
+    import org.apache.spark.sql.execution.LogicalRDD
+    def rdds(d: DataFrame) = d.queryExecution.optimizedPlan.collect {
+      case l: LogicalRDD => l.rdd.id }
+    val ids = rdds(base).toSet
+    rdds(df).count(ids)
+  }
+
+  private val tagCount =
+    """MATCH (c:Person) WHERE id(c) = 'alice' OPTIONAL MATCH
+      |(c)-[:TAGGED]->(b:Tag) RETURN id(c) AS id, count(b.bk) AS n_tags"""
+      .stripMargin
+
+  test("after CREATE, SET, MERGE and DETACH DELETE the snapshot reads " +
+      "its base once") {
+    val session = graft.api.GraftSession(spark, people)
+    val alice = people.vertices.filter("properties['id'] = 'alice'")
+      .select("id").head.getString(0)
+    val read = tagCount.replace("'alice'", s"'$alice'")
+    Seq(
+      """CREATE (:Tag {bk: "b1", w: "3"})""",
+      s"""MATCH (c:Person), (b:Tag) WHERE id(c) = '$alice' AND
+         |b.bk = "b1" CREATE (c)-[:TAGGED]->(b)""".stripMargin,
+      """MATCH (c:Person {id: "bob"}) SET c.segment = "gold"""",
+      """MERGE (b:Tag {bk: "b1"}) ON CREATE SET b.w = "new"
+        |ON MATCH SET b.w = "seen"""".stripMargin,
+      """MATCH (b:Tag {bk: "b1"}) DETACH DELETE b""")
+      .foreach { cy =>
+        session.execute(cy)
+        if (cy.startsWith("MATCH (c:Person), (b:Tag)"))
+          assert(session.execute(read).collect().map(_.getLong(1))
+            .toSeq == Seq(1L))
+      }
+    val g = session.graph
+    assert(baseLeaves(g.vertices, people.vertices) == 1,
+      g.vertices.queryExecution.optimizedPlan)
+    assert(baseLeaves(g.edges, people.edges) == 1,
+      g.edges.queryExecution.optimizedPlan)
+    // the same read over a fresh session on the equivalent graph: the
+    // fixture with bob's segment set, the tag and its edge gone
+    val verts = people.vertices.collect().map { r =>
+      val props = r.getMap[String, String](2).toMap
+      Row(r.get(0), r.get(1),
+        if (props.get("id").contains("bob")) props + ("segment" -> "gold")
+        else props)
+    }
+    val fresh = graft.api.GraftSession(spark, GraphState(
+      df(GraphSchemas.vertexSchema, verts.toSeq: _*),
+      df(GraphSchemas.edgeSchema, people.edges.collect().toSeq: _*)))
+    def rows(d: DataFrame) = d.collect().map(_.toSeq.mkString("|")).sorted
+      .toSeq
+    assert(rows(session.execute(read)) == rows(fresh.execute(read)))
+    assert(rows(session.execute(read)) == Seq(s"$alice|0"))
+    def graph(st: GraphState) = (
+      rows(st.vertices.select(col("id"), col("label"),
+        sort_array(map_entries(col("properties"))))),
+      rows(st.edges.select("id", "src", "dst", "edge_type", "label")))
+    assert(graph(g) == graph(fresh.graph))
+  }
+
+  test("a write whose delta fails throws from execute and keeps the " +
+      "previous snapshot") {
+    val session = graft.api.GraftSession(spark, people)
+    val before = session.graph
+    // p.age / 0 raises DIVIDE_BY_ZERO under ANSI when the value is
+    // computed: now at the write, before a snapshot exists
+    val err = intercept[Exception] {
+      session.execute("""MATCH (p:Person {id: "alice"}) SET p.x = p.age / 0""")
+    }
+    assert(err.getMessage.contains("DIVIDE_BY_ZERO"), err.getMessage)
+    assert(session.graph eq before)
+    assert(session.execute("MATCH (p:Person) RETURN p.x AS x")
+      .collect().forall(_.isNullAt(0)))
+  }
+
+  test("a vertex matched by several rows is labelled once") {
+    // alice KNOWS bob and charlie: two frame rows bind the same `a`
+    val g = runScript(people,
+      """MATCH (a:Person {id: "alice"})-[:KNOWS]->(b) SET a:Friend""")
+    assert(Cypher.query(g, "MATCH (n) RETURN n").count() == 4)
+    assert(Cypher.query(g, "MATCH (n:Friend) RETURN n.name")
+      .collect().map(_.getString(0)).toSeq == Seq("Alice"))
   }
 }
