@@ -762,8 +762,9 @@ object GraphXBridge {
     * only ~wedges/b rows (the disk bound [[topLinkPredictions]]'
     * sequential passes rely on).
     *
-    * Aggregation discipline (measured, dev.TimeGx18, sf0.1 full
-    * graph: 148M wedges over 101M distinct pairs): pair multiplicity
+    * Aggregation discipline (measured, PLANS.md "Round 6 — gx18
+    * full-graph link prediction", sf0.1 full graph: 148M wedges over
+    * 101M distinct pairs): pair multiplicity
     * is ~1.5, so the default partial+final aggregate hashes every
     * wedge map-side to save almost nothing — repartitioning by the
     * key FIRST satisfies the aggregate's distribution and the planner

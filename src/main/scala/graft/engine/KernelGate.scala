@@ -3,6 +3,7 @@ package graft.engine
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graft.shims
 import org.apache.spark.sql.types.{IntegerType, LongType, ShortType, StringType}
 
 /** The one "collect to the driver or stay distributed" decision for
@@ -90,8 +91,10 @@ private[graft] object KernelGate {
         weights.map(col(_).cast("double")): _*)
       if (!fits(counted.getOrElse(countOnce(proj)))) return None
       // raw UnsafeRows: no external-Row conversion (two boxed longs per
-      // edge on a millions-of-edges collect)
-      def collect() = pack(proj.queryExecution.executedPlan.executeCollect(),
+      // edge on a millions-of-edges collect), collected as one SQL
+      // execution so the tasks see the session's conf
+      def collect() = pack(
+        shims.action(proj, "kernel.longs")(_.executeCollect()),
         ids.length, ids.length + weights.length)
       val packed =
         if (cache) SessionCache.ofPlan("kernel.longs", proj)(collect())

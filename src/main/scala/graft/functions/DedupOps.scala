@@ -672,12 +672,11 @@ object DedupOps {
       .filter(greatest(col("c1_bp"), col("c2_bp")) >= thresholdBp)
   }
 
-  /** Candidate-generation half of [[containmentPairs]] — exposed so
-    * dev probes can measure candidate volume separately from the
-    * verify join. Returns (docs, cand): the checkpointed per-doc
-    * dictionary-id table (id, gids sorted ARRAY<INT>, sz) and the
-    * distinct (id1 < id2) candidate pairs. */
-  private[graft] def containmentDocsAndCands(df: DataFrame,
+  /** Candidate-generation half of [[containmentPairs]]. Returns
+    * (docs, cand): the checkpointed per-doc dictionary-id table (id,
+    * gids sorted ARRAY<INT>, sz) and the distinct (id1 < id2)
+    * candidate pairs. */
+  private def containmentDocsAndCands(df: DataFrame,
       idCol: String, textCol: String, n: Int, thresholdBp: Int)
       : (DataFrame, DataFrame) = {
     import org.apache.spark.sql.expressions.Window

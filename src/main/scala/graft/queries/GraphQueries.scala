@@ -794,8 +794,9 @@ object GraphQueries {
     * 2000 parts — so correctness covers the whole graph; the slice only
     * bounds bench sf0.1). The bound is INTRINSIC to exact all-pairs
     * link prediction, not a plan defect: the full sf0.1 answer is
-    * ~100M candidate pairs (measured via graft.dev.TimeFullWedges —
-    * 1.196M edges → 99.9M pairs, 43 s warm), i.e. the output itself is
+    * ~100M candidate pairs (measured in PLANS.md "Round 5 —
+    * environment re-validation": 1.196M edges → 99.9M pairs, 43 s
+    * warm), i.e. the output itself is
     * wedge-sized. Same bounded-gate discipline as the s-family's
     * 10-query slices. gx14 is UN-pinned: the degree-oriented support
     * operator runs the full sf0.1 graph in ~0.4 s. */

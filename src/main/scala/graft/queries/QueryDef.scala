@@ -9,7 +9,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * `stage` is the optional deterministic fixture-staging step (persisted
   * index / catalog / store writes the query then READS): Bench and
-  * TimeQuery run it untimed before the timed reps, so the recorded
+  * dev.Probe run it untimed before the timed reps, so the recorded
   * seconds measure the query, not one-time fixture construction.
   * `run` must stay self-contained — it calls the same (memoized, see
   * [[Fixtures]]) staging itself, so Verify and direct driver calls need

@@ -43,8 +43,9 @@ import org.apache.spark.sql.types.LongType
   * an 8 GB heap gives 0.25 GB/core (production executors run
   * 2–8 GB/core), so sf1's ~46M-row partitions need ~256 shuffle
   * partitions there (5.8M rows × ~16 B transient × 32 slots ≈ 3 GB)
-  * — `SPARK_GRAFT_SHUFFLE` overrides the dev mains for exactly this
-  * (measured round 10: 32 partitions at 8 g OOMs, 256 completes). Drain
+  * — `Verify` reads `SPARK_GRAFT_SHUFFLE` and `graft.dev.Probe` takes
+  * `--set:spark.sql.shuffle.partitions=N` for exactly this (measured
+  * round 10: 32 partitions at 8 g OOMs, 256 completes). Drain
   * memory is bounded: up to [[PackedCountAgg.PersistentSwitchKey]]
   * rows (default 64M = 512 MB) the partition buffers flat — the lean
   * path for near-unique keys, whose worst-case transient is ~24 B ×

@@ -1,6 +1,6 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.{classic, Column, DataFrame, Row}
+import org.apache.spark.sql.{classic, Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, UnaryExpression}
@@ -25,6 +25,13 @@ object shims {
     val qe = df.asInstanceOf[classic.Dataset[Row]].queryExecution
     SQLExecution.withNewExecutionId(qe, Some(name))(body(qe.executedPlan))
   }
+
+  /** Block until every event already posted to the listener bus has
+    * reached its listeners, so a listener's totals are complete when
+    * read (events are delivered asynchronously). */
+  def drainListenerBus(spark: SparkSession, timeoutMs: Long = 30000L)
+      : Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty(timeoutMs)
 
   /** `rows`, already on the driver in `like`'s schema, as a frame over
     * a LocalRelation: raw rows (no external-Row round trip), exact

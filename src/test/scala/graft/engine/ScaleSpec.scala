@@ -178,6 +178,42 @@ class ScaleSpec extends SparkSpec {
       Traversals.shortestPathsFromTo(g, ends, Seq("c").toDF("id"), 4))
   }
 
+  test("long-id kernels collect under the session's conf: a duplicate " +
+    "map key resolves LAST_WIN, kernel on ≡ bound 0") {
+    import spark.implicits._
+    implicit val sp: SparkSession = spark
+    // dst = {k -> decoy, k -> real}(k) over an RDD scan: column-valued
+    // keys the optimizer cannot fold. Without whole-stage codegen the
+    // projection's map builder is made in the tasks, so only the conf the
+    // tasks see decides, and the default policy (EXCEPTION) fails them.
+    val confs = Seq("spark.sql.mapKeyDedupPolicy" -> "LAST_WIN",
+      "spark.sql.codegen.wholeStage" -> "false")
+    val prev = confs.map { case (k, v) =>
+      val p = spark.conf.getAll.get(k); spark.conf.set(k, v); k -> p }
+    try {
+      val raw = spark.sparkContext.parallelize(Seq(("a", "b", 1),
+        ("b", "c", 1), ("d", "e", 1), ("f", "f", 1)), 2)
+        .toDF("src", "real", "k")
+      val edges = raw.select(col("src"),
+        element_at(map_from_arrays(array(col("k"), col("k")),
+          array(lit("decoy"), col("real"))), col("k")).as("dst"))
+      val ids = edges.select("src").union(edges.select("dst")).distinct()
+      val g = GraphState(ids.toDF("id").withColumn("label", lit("n")),
+        edges.withColumn("id", concat(col("src"), col("dst")))
+          .withColumn("edge_type", lit("E")))
+      val hashed = g.edges.select(xxhash64(col("src")).as("s"),
+        xxhash64(col("dst")).as("d"))
+      assert(LocalGraphKernels.connectedComponentsLong(
+        g.vertices.select(xxhash64(col("id"))), hashed).isDefined)
+      val on = GraphXBridge.connectedComponents(g).collect().toSet
+      val off = withKernelBound("0")(
+        GraphXBridge.connectedComponents(g).collect().toSet)
+      assert(on == off)
+      assert(on.map(_.getString(0)) == Set("a", "b", "c", "d", "e", "f"))
+    } finally prev.foreach { case (k, p) =>
+      p.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
   test("topLinkPredictions bucketed passes (forced B=4) reproduce the " +
       "single-pass top-k exactly — packable and non-packable branches") {
     import spark.implicits._
@@ -604,12 +640,10 @@ class ScaleSpec extends SparkSpec {
     }
     def measure(body: => Unit): Long = {
       // drain in-flight listener events from earlier work before marking
-      org.apache.spark.graft.TestShims
-        .drainListenerBus(spark.sparkContext, 30000)
+      org.apache.spark.sql.graft.shims.drainListenerBus(spark)
       bytes.set(0L)
       body
-      org.apache.spark.graft.TestShims
-        .drainListenerBus(spark.sparkContext, 30000)
+      org.apache.spark.sql.graft.shims.drainListenerBus(spark)
       bytes.get()
     }
     spark.sparkContext.addSparkListener(listener)
