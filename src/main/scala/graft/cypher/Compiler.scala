@@ -714,7 +714,7 @@ final class Compiler(g: GraphState)(implicit spark: SparkSession) {
         // graph (directed; weight = the edge property cast to double,
         // missing/non-numeric → 1.0 so an unweighted edge costs one
         // hop). The openCypher surface for GraphXBridge.weightedSssp's
-        // Pregel relaxation — Neo4j exposes the same operation as a
+        // Bellman-Ford relaxation — Neo4j exposes the same operation as a
         // GDS procedure, which is why this is a CALL, not a pattern.
         val argv = p.args.map {
           case ELit(LStr(s)) => s

@@ -1,90 +1,73 @@
 package graft.engine
 
-import org.apache.spark.graphx.{Edge => GxEdge, Graph, VertexId}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** GraphX bridge for whole-graph analytics (the BASELINE.json design
-  * stance: "GraphX for analytics queries"). String vertex ids are mapped
-  * to stable Long ids via xxhash64 — deterministic across runs, collision
-  * probability ~n²/2⁶⁴ (negligible below ~10⁹ vertices; a zipWithUniqueId
-  * remap would be the guaranteed-unique fallback at extreme scale).
+/** Whole-graph analytics as DataFrame loops (joins and group-bys per
+  * round), each with one distributed engine, behind a [[KernelGate]]
+  * driver kernel where one exists. The name is historical — these ran
+  * on GraphX once — and stays because the gates, the Cypher procedures
+  * and the benchmark driver call the analytics through it.
+  *
+  * The string-id entry points map vertex ids to stable Long ids via
+  * xxhash64 — deterministic across runs, collision probability
+  * ~n²/2⁶⁴ (negligible below ~10⁹ vertices). An edge with a null
+  * endpoint joins nothing: it is dropped before hashing, because
+  * xxhash64(NULL) is 42 and would connect every such edge through one
+  * phantom vertex.
   */
 object GraphXBridge {
 
-  /** (graph, id-mapping DataFrame (vid LONG, id STRING)). */
-  def toGraphX(g: GraphState): (Graph[String, String], DataFrame) = {
-    val mapping = g.vertices
-      .select(xxhash64(col("id")).as("vid"), col("id"), col("label"))
-    val vertices = mapping.select("vid", "label").rdd
-      .map(r => (r.getLong(0): VertexId, r.getString(1)))
-    val edges = g.edges
-      .select(xxhash64(col("src")).as("s"), xxhash64(col("dst")).as("d"),
-        col("edge_type")).rdd
-      .map(r => GxEdge(r.getLong(0), r.getLong(1), r.getString(2)))
-    (Graph(vertices, edges), mapping.select("vid", "id"))
-  }
+  /** Edges whose endpoints are both non-null. */
+  private def linked(g: GraphState): DataFrame =
+    g.edges.filter(col("src").isNotNull && col("dst").isNotNull)
 
-  /** Connected components (GraphX), back as (id, component) with the
-    * component labeled by its minimum member hash. */
+  /** Connected components (undirected), back as (id, component) with the
+    * component labeled by its minimum member hash. The vertex set is
+    * the vertices plus the edge endpoints; only the rows of `g.vertices`
+    * come back. */
   def connectedComponents(g: GraphState)(implicit spark: SparkSession)
       : DataFrame = {
-    import spark.implicits._
-    // small graphs (r13): union-find over the bounded hashed edge list
-    // — GraphX's Pregel CC spends seconds of stage latency on a
-    // 30-vertex membership graph
     val hashedV = g.vertices.select(xxhash64(col("id")).as("vid"))
-    val hashedE = g.edges.select(xxhash64(col("src")).as("s"),
+    val hashedE = linked(g).select(xxhash64(col("src")).as("s"),
       xxhash64(col("dst")).as("d"))
+    // small graphs (r13): union-find over the bounded hashed edge list
     val cc = LocalGraphKernels.connectedComponentsLong(hashedV, hashedE)
-      .getOrElse(toGraphX(g)._1.connectedComponents().vertices
-        .toDF("vid", "component"))
+      .getOrElse {
+        val star = StarCC.components(hashedE.toDF("id1", "id2"))
+          .select(col("id").as("vid"), col("component"))
+        // StarCC labels edge endpoints only (self-loops dropped): every
+        // other vertex is a component of its own
+        star.unionAll(hashedV.distinct()
+          .join(star.select(col("vid")), Seq("vid"), "left_anti")
+          .select(col("vid"), col("vid").as("component")))
+      }
     val mapping = g.vertices.select(xxhash64(col("id")).as("vid"), col("id"))
     cc.join(mapping, Seq("vid")).select(col("id"), col("component"))
-  }
-
-  /** Strongly connected components (GraphX Pregel-based SCC on the
-    * DIRECTED edge orientation), back as (id, component_id) where the
-    * component label is its minimum member id — the same
-    * engine-independent relabeling as [[connectedComponents]], so an
-    * oracle computing SCCs any other way agrees on the labels.
-    * `numIter` bounds the color-propagation rounds; it must be ≥ the
-    * longest cycle-free path between SCCs (diameter-ish), after which
-    * the result is exact, not approximate. */
-  def stronglyConnected(g: GraphState, numIter: Int = 20)
-      (implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    val (graph, mapping) = toGraphX(g)
-    val scc = graph.stronglyConnectedComponents(numIter)
-      .vertices.toDF("vid", "comp")
-    val labeled = scc.join(mapping, Seq("vid"))
-      .select(col("comp"), col("id"))
-    val labels = labeled.groupBy(col("comp"))
-      .agg(min(col("id")).as("component_id"))
-    labeled.join(labels, Seq("comp"))
-      .select(col("id"), col("component_id"))
   }
 
   /** SCC of a BOUNDED graph — condensations whose vertex count is
     * capped by a vocabulary (event-type transition digraphs, label
     * co-occurrence graphs), never by corpus size — computed
-    * driver-side with Tarjan's algorithm under the same
-    * (id, component_id = minimum member id) contract as
-    * [[stronglyConnected]]. Rationale: GraphX's Pregel SCC spends ~77
-    * scheduled stages on a 10-vertex condensation (measured on gx07:
-    * 1.5–1.9 s steady of pure stage latency for 5 result rows); a
-    * condensation's edge list is at most vocabulary², so collecting it
-    * is the same bounded-driver discipline as the s10 greedy phase —
-    * and the `require` makes a corpus-scale graph fail loudly here
-    * rather than silently serializing through the driver. */
+    * driver-side with Tarjan's algorithm, back as (id, component_id)
+    * labeled by the component's minimum member id — an
+    * engine-independent labeling, so an oracle computing SCCs any other
+    * way agrees on the labels. There is no distributed SCC: GraphX's
+    * Pregel SCC, its former alternative, spent ~77 scheduled stages on
+    * a 10-vertex condensation (measured on gx07: 1.5–1.9 s steady of
+    * pure stage latency for 5 result rows), and every caller's graph is
+    * vocabulary-bounded. A condensation's edge list is at most
+    * vocabulary², so collecting it is the same bounded-driver
+    * discipline as the s10 greedy phase — and the `require` makes a
+    * corpus-scale graph fail loudly here rather than silently
+    * serializing through the driver. */
   def stronglyConnectedBounded(g: GraphState, maxVertices: Int = 4096)
       (implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
     val ids = g.vertices.select(col("id").cast("string"))
       .distinct().as[String].collect().sorted
     require(ids.length <= maxVertices, s"stronglyConnectedBounded: " +
-      s"${ids.length} vertices exceed the $maxVertices driver bound — " +
-      "use stronglyConnected (distributed) instead")
+      s"${ids.length} vertices exceed the $maxVertices driver bound")
     val idx = ids.zipWithIndex.toMap
     val adj = Array.fill(ids.length)(List.empty[Int])
     // semi-join BOTH endpoints against the (bounded) vertex set BEFORE
@@ -153,37 +136,73 @@ object GraphXBridge {
       .toDF("id", "component_id")
   }
 
-  /** Fixed-iteration PageRank (GraphX `staticPageRank`), back as
-    * (id, rank). Deterministic for a given graph and iteration count —
-    * unlike the tolerance-converged variant there is no run-to-run
-    * wobble, so the result is oracle-checkable: with the classic
-    * formulation rank = reset + (1−reset)·Σ(in), a source-only vertex
-    * settles at `reset` after one iteration and its downstream vertices
-    * settle one iteration later, giving closed forms for DAG layers. */
+  /** Fixed-iteration PageRank, back as (id, rank), with GraphX's
+    * `staticPageRank` semantics as a DataFrame loop on the string ids:
+    * the vertex set is the vertices plus the edge endpoints, ranks start
+    * at 1, each edge carries rank · (1/outDeg) with parallel edges and
+    * self-loops counted in outDeg, each iteration sets
+    * rank = reset + (1−reset)·Σ(in) — so a dangling vertex's mass is
+    * lost — and the final ranks are scaled by |V|/Σrank. One row per
+    * vertex of `g.vertices` comes back. Deterministic for a given graph
+    * and iteration count, so the result is oracle-checkable: a
+    * source-only vertex settles at `reset` after one iteration and its
+    * downstream vertices settle one iteration later, giving closed
+    * forms for DAG layers.
+    *
+    * The iterations form ONE statically planned lazy plan that
+    * carries Σ(in) forward, with one exchange per iteration: the
+    * partially aggregated per-dst sum. The weighted edges and the
+    * vertex set are hash-partitioned on their join keys with the same
+    * explicit count, so the edge ⟕ sum and vertex ⟕ sum joins need
+    * none, and without AQE no exchange is a job of its own: the Σrank
+    * job runs every iteration. (Under AQE, with a checkpoint per
+    * iteration, the gx02 graph took 13 jobs and 1.5 s.) The checkpoint
+    * at the end lets the Σrank job and the output share the
+    * iterations. */
   def staticPageRank(g: GraphState, numIter: Int, resetProb: Double = 0.15)
       (implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    val (graph, mapping) = toGraphX(g)
-    val pr = graph.staticPageRank(numIter, resetProb).vertices
-      .toDF("vid", "rank")
-    pr.join(mapping, Seq("vid")).select(col("id"), col("rank"))
-  }
-
-  /** PageRank (GraphX), back as (id, rank). */
-  def pageRank(g: GraphState, tol: Double = 0.001)
-      (implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    val (graph, mapping) = toGraphX(g)
-    val pr = graph.pageRank(tol).vertices.toDF("vid", "rank")
-    pr.join(mapping, Seq("vid")).select(col("id"), col("rank"))
+    def rank(in: Column): Column =
+      lit(resetProb) + lit(1.0 - resetProb) * coalesce(in, lit(0.0))
+    val pinned = Traversals.withStaticPlanning(spark) {
+      val n = spark.sessionState.conf.numShufflePartitions
+      val e = linked(g).select(col("src"), col("dst"))
+      // inV: the id is a row of g.vertices, not only an edge endpoint
+      val ids = g.vertices.filter(col("id").isNotNull)
+        .select(col("id"), lit(true).as("inV"))
+        .unionAll(e.select(col("src"), lit(false)))
+        .unionAll(e.select(col("dst"), lit(false)))
+        .repartition(n, col("id"))
+        .groupBy(col("id")).agg(max(col("inV")).as("inV"))
+      // w = 1/outDeg; a checkpoint keeps the src partitioning
+      val weighted = e.repartition(n, col("src"))
+        .withColumn("w", lit(1.0) / count(lit(1)).over(
+          org.apache.spark.sql.expressions.Window.partitionBy(col("src"))))
+        .localCheckpoint(eager = false)
+      // Σ(in) per vertex; the first iteration's messages carry rank 1
+      var in = weighted.groupBy(col("dst").as("id"))
+        .agg(sum(col("w")).as("in"))
+      for (_ <- 2 to numIter)
+        in = weighted
+          .join(in.hint("shuffle_hash"), col("src") === col("id"),
+            "left_outer")
+          .groupBy(col("dst").as("id"))
+          .agg(sum(rank(col("in")) * col("w")).as("in"))
+      (if (numIter == 0) ids.withColumn("rank", lit(1.0))
+       else ids.join(in.hint("shuffle_hash"), Seq("id"), "left_outer")
+         .select(col("id"), col("inV"), rank(col("in")).as("rank")))
+        .localCheckpoint(eager = false)
+    }
+    val total = pinned.agg(coalesce(sum(col("rank")), lit(0.0)),
+      count(lit(1))).head()
+    val scale = total.getLong(1).toDouble / total.getDouble(0)
+    pinned.filter(col("inV"))
+      .select(col("id"), (col("rank") * scale).as("rank"))
   }
 
   /** Degrees (in+out), back as DataFrame. Pure DataFrame aggregation
-    * (r13): GraphX's `graph.degrees` built the whole hashed graph (two
-    * RDD conversions + xxhash of every vertex and edge) for what is one
-    * union + one count aggregate; the semi-join keeps GraphX's contract
-    * of dropping edge endpoints absent from the vertex set, and the
-    * IntegerType degree matches the old schema exactly. */
+    * (r13): one union + one count aggregate; the semi-join drops edge
+    * endpoints absent from the vertex set, and the degree is an
+    * IntegerType. */
   def degrees(g: GraphState)(implicit spark: SparkSession): DataFrame =
     g.edges.select(col("src").as("id"))
       .unionAll(g.edges.select(col("dst").as("id")))
@@ -193,52 +212,71 @@ object GraphXBridge {
       .select(col("id"), col("degree"))
 
   /** Weighted single/multi-source shortest distances (directed) over
-    * Long-id edges (src, dst, weight DOUBLE ≥ 0): classic Pregel
-    * relaxation — vertices hold the best-known distance, a superstep
-    * sends `d(src)+w` along edges that would improve the destination,
-    * min-combines messages, and terminates when no relaxation fires
-    * (O(shortest-path hop depth) supersteps; each is a local
-    * triplet-join, never a global all-pairs structure). Returns only
-    * reached vertices as (id, distance). */
+    * Long-id edges (src, dst, weight DOUBLE ≥ 0), read positionally.
+    * The vertex set is the edge endpoints: a source outside it drops.
+    * Returns only reached vertices as (id, distance); an edge with a
+    * null endpoint or weight is inert.
+    *
+    * Distributed leg: frontier Bellman-Ford. Each round joins the
+    * vertices whose distance improved in the last round to their
+    * out-edges, takes min(d + w) per dst and keeps the strict
+    * improvements as the next frontier; the round's one count job is
+    * the stop test. O(shortest-path hop depth) rounds, each a local
+    * join and group-by — never a global all-pairs structure. */
   def weightedSssp(edges: DataFrame, sources: Seq[Long])
-      (implicit spark: SparkSession): DataFrame = {
+      (implicit spark: SparkSession): DataFrame =
     // small graphs (r13): driver-side (min, +) relaxation to the same
-    // fixpoint as the Pregel run (IEEE + is monotone — order-free)
+    // fixpoint (IEEE + is monotone — order-free)
     LocalGraphKernels.weightedSssp(edges, sources).getOrElse {
       import spark.implicits._
-      val srcSet = sources.toSet
-      val edgeRdd = edges.rdd
-        .map(r => GxEdge(r.getLong(0), r.getLong(1), r.getDouble(2)))
-      val graph = Graph.fromEdges(edgeRdd, 0.0)
-        .mapVertices((id, _) =>
-          if (srcSet.contains(id)) 0.0 else Double.PositiveInfinity)
-      val res = graph.pregel(Double.PositiveInfinity)(
-        (_, d, msg) => math.min(d, msg),
-        t =>
-          if (t.srcAttr + t.attr < t.dstAttr)
-            Iterator((t.dstId, t.srcAttr + t.attr))
-          else Iterator.empty,
-        (a, b) => math.min(a, b))
-      res.vertices.filter(_._2 < Double.PositiveInfinity)
-        .toDF("id", "distance")
+      val c = edges.columns
+      val e = edges.select(col(c(0)).cast("long").as("s"),
+          col(c(1)).cast("long").as("d"), col(c(2)).cast("double").as("w"))
+        .na.drop()
+        .localCheckpoint(eager = false)
+      val ends = e.select(col("s").as("id")).unionAll(e.select(col("d")))
+      var dist = sources.distinct.toDF("id")
+        .join(ends, Seq("id"), "left_semi")
+        .withColumn("distance", lit(0.0))
+        .localCheckpoint(eager = false)
+      var frontier = dist
+      var n = 1L
+      while (n > 0) {
+        val improved = frontier.join(e, col("id") === col("s"))
+          .groupBy(col("d").as("id"))
+          .agg(min(col("distance") + col("w")).as("distance"))
+          .join(dist.select(col("id"), col("distance").as("old")),
+            Seq("id"), "left_outer")
+          .filter(col("old").isNull || col("distance") < col("old"))
+          .select(col("id"), col("distance"))
+          .localCheckpoint(eager = false)
+        n = improved.count() // materializes this round's checkpoints
+        if (n > 0) {
+          dist = dist
+            .join(improved.select(col("id")), Seq("id"), "left_anti")
+            .unionAll(improved)
+            .localCheckpoint(eager = false)
+          frontier = improved
+        }
+      }
+      dist
     }
-  }
 
   /** [[weightedSssp]] over the STRING-id property graph — the Cypher
     * `CALL graft.sssp.weighted(...)` surface. Weight of an edge is its
     * `weightProp` property cast to double, defaulting to 1.0 when the
     * property is absent or non-numeric (an unweighted edge costs one
-    * hop); negative weights are rejected up front (the Pregel
-    * relaxation assumes Dijkstra preconditions). Returns
-    * (id STRING, cost DOUBLE) for every vertex reachable from
-    * `source` along forward edges. Eager: the weight guard and the
-    * Pregel run both execute before this returns. */
+    * hop); negative weights are rejected up front (the relaxation
+    * assumes Dijkstra preconditions). Returns (id STRING, cost DOUBLE)
+    * for every vertex reachable from `source` along forward edges.
+    * Eager: the weight guard and the relaxation both execute before
+    * this returns. */
   def weightedShortestFrom(g: GraphState, source: String,
       weightProp: String)(implicit spark: SparkSession): DataFrame = {
     val wcol = coalesce(
       element_at(col("properties"), weightProp).try_cast("double"),
       lit(1.0))
-    val edges = g.edges.select(xxhash64(col("src")).as("s"),
+    val edges = linked(g).select(xxhash64(col("src")).as("s"),
       xxhash64(col("dst")).as("d"), wcol.as("w"))
     val minW = edges.agg(min(col("w"))).head()
     require(minW.isNullAt(0) || minW.getDouble(0) >= 0.0,

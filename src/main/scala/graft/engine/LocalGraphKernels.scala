@@ -397,11 +397,11 @@ private[graft] object LocalGraphKernels {
   }
 
   /** Local weighted SSSP — the same (min, +) fixpoint as
-    * [[GraphXBridge.weightedSssp]]'s Pregel relaxation (IEEE + is
+    * [[GraphXBridge.weightedSssp]]'s Bellman-Ford relaxation (IEEE + is
     * monotone, so the fixpoint is the min over per-path left-to-right
     * costs whatever the relaxation order). DIRECTED edges read
-    * positionally (src, dst, weight) like the RDD path; vertices are
-    * all edge endpoints; unreached vertices are dropped. */
+    * positionally (src, dst, weight) like the distributed leg; vertices
+    * are all edge endpoints; unreached vertices are dropped. */
   def weightedSssp(edges: DataFrame, sources: Seq[Long])
       : Option[DataFrame] = {
     val spark = edges.sparkSession
@@ -453,10 +453,10 @@ private[graft] object LocalGraphKernels {
     }
   }
 
-  /** Local connected components over ALREADY-HASHED long ids — the
-    * GraphX contract: every vertex (isolated included) labeled by the
-    * minimum vertex id of its component ([[minLabels]]); both frames
-    * read positionally. */
+  /** Local connected components over ALREADY-HASHED long ids —
+    * [[GraphXBridge.connectedComponents]]' contract: every vertex
+    * (isolated included) labeled by the minimum vertex id of its
+    * component ([[minLabels]]); both frames read positionally. */
   def connectedComponentsLong(vertexIds: DataFrame, edges: DataFrame)
       : Option[DataFrame] = {
     val spark = vertexIds.sparkSession
@@ -465,8 +465,8 @@ private[graft] object LocalGraphKernels {
         vs <- in.longs(vertexIds, vertexIds.columns.take(1).toSeq)
         es <- in.longs(edges, edges.columns.take(2).toSeq)
       } yield {
-        // GraphX adds edge endpoints missing from the vertex RDD as
-        // vertices — reproduce that
+        // edge endpoints missing from the vertex frame are vertices
+        // too, as on the distributed leg
         val ids = sortedDistinct(vs ++ es)
         val label = minLabels(ids, es)
         import spark.implicits._

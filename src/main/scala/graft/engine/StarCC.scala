@@ -10,22 +10,21 @@ import org.apache.spark.sql.graft.shims
   * each round two grouped aggregations + joins over the edge list, no
   * RDD conversion and no Pregel machinery.
   *
-  * Why it exists alongside `GraphXBridge.connectedComponents`: the
-  * GraphX path pays a fixed per-superstep cost (RDD caching, Pregel
-  * scheduling) that dominates when components are shallow — the sf1
-  * rehearsal measured ~15 s for CC over a 249k-edge near-dup pair
-  * graph whose chains converge in a handful of rounds. The DataFrame
-  * form keeps the whole loop in Tungsten, converges in O(log n) rounds
-  * REGARDLESS of component diameter (star contraction, not frontier
-  * propagation), and inherits AQE sizing per round. GraphX remains the
-  * surface for the gx01 bridge operator; the dedup cluster family
-  * routes here.
+  * It is graft's one distributed CC: the dedup cluster family and
+  * `GraphXBridge.connectedComponents` (gx01) both run on it. Against a
+  * Pregel-style label propagation (GraphX's CC, measured ~15 s in the
+  * sf1 rehearsal over a 249k-edge near-dup pair graph whose chains
+  * converge in a handful of rounds) the DataFrame form keeps the whole
+  * loop in Tungsten, converges in O(log n) rounds REGARDLESS of
+  * component diameter (star contraction, not frontier propagation),
+  * and inherits AQE sizing per round.
   *
   * Semantics: given undirected edges (id1, id2) over LONG ids, returns
   * (id, component) where component = the MINIMUM id in the node's
   * component — identical labeling to GraphX CC, pinned by
   * TraversalSpec's equivalence test. Nodes appear in the output iff
-  * they appear in at least one edge; callers union in singletons.
+  * they appear in at least one non-loop edge; callers union in
+  * singletons.
   *
   * Hybrid execution: the distinct canonical edge count is measured
   * first (one job, also the checkpoint materializer), and a graph that

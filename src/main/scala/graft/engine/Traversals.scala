@@ -19,8 +19,8 @@ import org.apache.spark.sql.functions._
   *    stay compilable at depth (the classic iterative-Spark pitfall).
   *
   * Not expressible as a single Catalyst plan (SURVEY §4.2) — this IS the
-  * idiomatic Spark shape for iteration; GraphX Pregel (GraphXBridge) is
-  * the alternative for whole-graph analytics.
+  * idiomatic Spark shape for iteration, the same one [[GraphXBridge]]'s
+  * whole-graph analytics use.
   */
 object Traversals {
 
@@ -47,8 +47,9 @@ object Traversals {
     math.min(8, spark.sessionState.conf.numShufflePartitions)
 
   /** Build traversal plans with AQE OFF (restored on exit) — for the
-    * SIMPLE traversal shapes only ([[bfs]]/[[paths]]), whose every join
-    * is single-key and co-partitioned at [[traversalPartitions]]: there
+    * SIMPLE shapes only ([[bfs]]/[[paths]], and the iterations of
+    * [[GraphXBridge.staticPageRank]]), whose every join is single-key
+    * and co-partitioned by an explicit repartition: there
     * AQE has nothing to re-plan and each exchange costs a driver
     * materialization round, so static planning compiles each hop QE to
     * one job (g09 measured 0.66 → 0.48 s, 13 → 10 stages). Planning
@@ -66,7 +67,8 @@ object Traversals {
     * to broadcasts at runtime — cy32 regressed 1.57 → 3.66 s (task
     * time 3.7 → 40 s, widest stage 24 → 136 tasks). AQE's runtime
     * broadcast conversion is load-bearing there; keep it. */
-  private def withStaticPlanning[T](spark: SparkSession)(f: => T): T = {
+  private[engine] def withStaticPlanning[T](spark: SparkSession)(f: => T)
+      : T = {
     val key = "spark.sql.adaptive.enabled"
     val prev = spark.conf.get(key)
     spark.conf.set(key, "false")
@@ -151,32 +153,14 @@ object Traversals {
     visited
   }
 
-  /** Hops between lineage cuts in the lazy unrolls. A frontier frame has
-    * two consumers (next hop's join + the visited union read by every
-    * later anti-join), so without cuts the plan DUPLICATES per hop —
-    * but inside ONE QueryExecution the duplicated hop subtrees all end
-    * at the same explicit repartition, which Spark collapses via
-    * ReusedExchange: they are compiled twice yet EXECUTED once. A cut
-    * every 3rd hop bounds plan copies at 2³ while keeping the whole
-    * traversal a handful of QueryExecutions — each checkpoint is a
-    * whole extra QueryExecution whose sequential stage latency, not
-    * data, dominated these traversals at local[32].
-    *
-    * MEASURED at 1: the ReusedExchange dedup of duplicated hop subtrees
-    * did NOT engage under AQE for the shortest-path hop shape (cy32 at
-    * cut=3: 72 stages / 137 s task time vs 29 / 37 s at cut=1) — every
-    * un-cut hop re-executed its whole upstream chain. Keep per-hop cuts
-    * until exchange reuse across duplicated subtrees is demonstrated. */
-  private val HopsPerLineageCut = 1
-
   /** Fully-lazy BFS (maxDepth ≤ [[LazyUnrollDepth]]): the hop chain is
     * unrolled with NO driver actions — the caller's one action evaluates
     * every hop. The edge side is the shared [[partitionedEdges]] cache
     * and the hop's explicit repartition lands on `id`, so hop joins need
     * no edge-side exchange at any depth (formerly each hop re-shuffled
     * the full edge table: exchange reuse never crosses the
-    * per-checkpoint QueryExecution boundary). Lineage cuts only every
-    * [[HopsPerLineageCut]] hops; `visited` is a plain union of hop
+    * per-checkpoint QueryExecution boundary). Every hop is a lineage
+    * cut (see [[spHop]] for why); `visited` is a plain union of hop
     * frames — never checkpointed. */
   private def bfsLazy(g: GraphState, sources: DataFrame, maxDepth: Int,
       edgeTypes: Seq[String], undirected: Boolean): DataFrame = {
@@ -196,8 +180,7 @@ object Traversals {
         .repartition(n, col("id"))
         .dropDuplicates("id")
         .join(visited.select("id"), Seq("id"), "left_anti")
-      if (depth % HopsPerLineageCut == 0)
-        frontier = frontier.localCheckpoint(eager = false)
+        .localCheckpoint(eager = false)
       visited = visited.union(frontier)
     }
     visited
@@ -270,32 +253,11 @@ object Traversals {
     // (lazily checkpointed) hit batches — never more than maxDepth deep
     var tl = targets0
     var depth = 0
-    var maxLen = 0L // deepest hit depth, tracked driver-side
+    var maxLen = 0 // deepest hit depth, tracked driver-side
     var frontierNonEmpty = remaining > 0
     while (depth < maxDepth && remaining > 0 && frontierNonEmpty) {
       depth += 1
-      // single mode: the deterministic predecessor (min vertex, then
-      // min edge). all mode: EVERY minimal predecessor entry, sorted
-      // for deterministic reconstruction order.
-      val predsAgg =
-        if (all) array_sort(collect_set(
-          struct(col("src").as("pred"), col("eid").as("prededge"))))
-        else array(min(
-          struct(col("src").as("pred"), col("eid").as("prededge"))))
-      // the explicit repartition on `dst` is the hop's one exchange: it
-      // satisfies the (source,dst) grouping (subset clustering) AND —
-      // renamed to `id` and preserved through the checkpoint — the next
-      // hop's join key against the src-partitioned edge cache
-      val nxt = frontier.hint("shuffle_hash")
-        .join(edges, frontier("id") === edges("src"))
-        .repartition(n, col("dst"))
-        .groupBy(col("source"), col("dst"))
-        .agg(predsAgg.as("preds"))
-        .select(col("source"), col("dst").as("id"), lit(depth).as("depth"),
-          col("preds"))
-        .join(visited.select("source", "id"), Seq("source", "id"),
-          "left_anti")
-        .localCheckpoint(eager = false)
+      val nxt = spHop(frontier, edges, visited, depth, all)
       // THE hop's one eager job: a single left-outer pass over nxt
       // yields both the frontier size (loop control) and the hit count
       // — and, as the first job computing nxt, materializes its local
@@ -324,7 +286,7 @@ object Traversals {
         tl = tl.join(hits.select("__a", "__b"), Seq("__a", "__b"),
           "left_anti")
         remaining -= nHits
-        maxLen = depth.toLong
+        maxLen = depth
         // sources with no outstanding targets stop expanding
         frontier = nxt.select("source", "id").join(
           tl.select(col("__a").as("source")), Seq("source"), "left_semi")
@@ -332,42 +294,7 @@ object Traversals {
       frontierNonEmpty = nTotal > 0
     }
     if (foundParts.isEmpty) return self
-    val found = foundParts.reduce(_.union(_))
-    // Walk predecessors backward, all pairs at once, in ONE dataflow: a
-    // finished row (cur == source) joins the depth-0 visited entry,
-    // whose preds array is EMPTY, so explode_outer passes it through
-    // unchanged — rows self-retire with no fin/working split. `working`
-    // therefore has a SINGLE consumer per round: the plan grows
-    // linearly, and only a periodic lineage cut is needed to bound
-    // compile depth for deep reconstructions (each cut is one more
-    // QueryExecution of sequential stage latency, so don't cut more
-    // often than plan depth demands). In all mode the explode fans one
-    // partial path out per predecessor — every minimal route
-    // reconstructs in the same bounded round count.
-    val preds = visited.select(col("source"), col("id"), col("preds"))
-    var working = found.select(col("__a"), col("__b"), col("length"),
-      array(col("__b")).as("path"),
-      array().cast("array<string>").as("epath"), col("__b").as("cur"))
-    var i = 0L
-    while (i < maxLen) {
-      i += 1
-      working = working
-        .join(preds, working("cur") === preds("id") &&
-          working("__a") === preds("source"))
-        .select(col("__a"), col("__b"), col("length"), col("path"),
-          col("epath"), col("cur"), explode_outer(col("preds")).as("p"))
-        .select(col("__a"), col("__b"), col("length"),
-          when(col("p").isNull, col("path"))
-            .otherwise(concat(array(col("p.pred")), col("path")))
-            .as("path"),
-          when(col("p").isNull, col("epath"))
-            .otherwise(concat(array(col("p.prededge")), col("epath")))
-            .as("epath"),
-          coalesce(col("p.pred"), col("cur")).as("cur"))
-      if (i % 4 == 0) working = working.localCheckpoint(eager = false)
-    }
-    self.union(working.select(col("__a"), col("__b"), col("path"),
-      col("epath"), col("length")))
+    self.union(reconstruct(foundParts.reduce(_.union(_)), visited, maxLen))
   }
 
   /** Lazily-unrolled shortest-path TREE from a set of sources: per-hop
@@ -401,28 +328,49 @@ object Traversals {
     var depth = 0
     while (depth < maxDepth) {
       depth += 1
-      val predsAgg =
-        if (all) array_sort(collect_set(
-          struct(col("src").as("pred"), col("eid").as("prededge"))))
-        else array(min(
-          struct(col("src").as("pred"), col("eid").as("prededge"))))
-      // repartition on `dst` satisfies the (source,dst) grouping (subset
-      // clustering) and, renamed to `id`, the next hop's join key
-      var nxt = frontier.hint("shuffle_hash")
-        .join(edges, frontier("id") === edges("src"))
-        .repartition(n, col("dst"))
-        .groupBy(col("source"), col("dst"))
-        .agg(predsAgg.as("preds"))
-        .select(col("source"), col("dst").as("id"), lit(depth).as("depth"),
-          col("preds"))
-        .join(visited.select("source", "id"), Seq("source", "id"),
-          "left_anti")
-      if (depth % HopsPerLineageCut == 0)
-        nxt = nxt.localCheckpoint(eager = false)
+      val nxt = spHop(frontier, edges, visited, depth, all)
       visited = visited.union(nxt)
       frontier = nxt.select("source", "id")
     }
     visited
+  }
+
+  /** One hop of the pairs/tree engines: the `frontier` (source, id) rows
+    * ⋈ the src-partitioned `edges`, grouped per (source, dst) into their
+    * predecessor entries, minus the (source, id) pairs `visited` holds.
+    * Returns the new (source, id, depth, preds) rows under a lazy local
+    * checkpoint. Single mode keeps the deterministic predecessor (min
+    * vertex, then min edge); `all` mode keeps EVERY minimal one, sorted
+    * for a deterministic reconstruction order.
+    *
+    * The explicit repartition on `dst` is the hop's one exchange: it
+    * satisfies the (source, dst) grouping (subset clustering) AND —
+    * renamed to `id` and preserved through the checkpoint — the next
+    * hop's join key against the edge cache.
+    *
+    * Every hop is a lineage cut. A frontier frame has two consumers
+    * (the next hop's join and the visited union read by every later
+    * anti-join), so without cuts the plan duplicates per hop. MEASURED
+    * at 1 hop per cut: the ReusedExchange dedup of duplicated hop
+    * subtrees did NOT engage under AQE for this hop shape (cy32 at a cut
+    * every 3rd hop: 72 stages / 137 s task time vs 29 / 37 s at every
+    * hop) — every un-cut hop re-executed its whole upstream chain. Keep
+    * per-hop cuts until exchange reuse across duplicated subtrees is
+    * demonstrated. */
+  private def spHop(frontier: DataFrame, edges: DataFrame,
+      visited: DataFrame, depth: Int, all: Boolean): DataFrame = {
+    val pred = struct(col("src").as("pred"), col("eid").as("prededge"))
+    val predsAgg =
+      if (all) array_sort(collect_set(pred)) else array(min(pred))
+    frontier.hint("shuffle_hash")
+      .join(edges, frontier("id") === edges("src"))
+      .repartition(traversalPartitions(frontier.sparkSession), col("dst"))
+      .groupBy(col("source"), col("dst"))
+      .agg(predsAgg.as("preds"))
+      .select(col("source"), col("dst").as("id"), lit(depth).as("depth"),
+        col("preds"))
+      .join(visited.select("source", "id"), Seq("source", "id"), "left_anti")
+      .localCheckpoint(eager = false)
   }
 
   /** Backward path reconstruction over a [[spTree]] predecessor table,
@@ -571,21 +519,7 @@ object Traversals {
     val tMark = tgts.select(col("__b"), lit(1).as("__hit"))
     while (depth < maxDepth && remaining > 0 && frontierNonEmpty) {
       depth += 1
-      val predsAgg =
-        if (all) array_sort(collect_set(
-          struct(col("src").as("pred"), col("eid").as("prededge"))))
-        else array(min(
-          struct(col("src").as("pred"), col("eid").as("prededge"))))
-      val nxt = frontier.hint("shuffle_hash")
-        .join(edges, frontier("id") === edges("src"))
-        .repartition(n, col("dst"))
-        .groupBy(col("source"), col("dst"))
-        .agg(predsAgg.as("preds"))
-        .select(col("source"), col("dst").as("id"), lit(depth).as("depth"),
-          col("preds"))
-        .join(visited.select("source", "id"), Seq("source", "id"),
-          "left_anti")
-        .localCheckpoint(eager = false)
+      val nxt = spHop(frontier, edges, visited, depth, all)
       // the hop's ONE job: frontier size + new-pair count in one pass
       // (targets unique on __b, so the left-outer join is 1:≤1)
       val stats = nxt.join(tMark, nxt("id") === tMark("__b"), "left_outer")

@@ -684,25 +684,23 @@ object SimilarityOps {
     * MinHash/SimHash dedup cannot see. Pipeline: embedding-cosine
     * near-dup pairs (banded hyperplane LSH + exact re-score — the
     * cartesian-free d05 path with proven recall), closed into connected
-    * components (GraphX min-id propagation), keeper = each component's
-    * minimum id. Returns (id, cluster_id, keep 0/1) for every input row.
+    * components ([[graft.engine.StarCC]] min-id labels), keeper = each
+    * component's minimum id. Returns (id, cluster_id, keep 0/1) for
+    * every input row.
     *
     * Scale shape: pair generation never leaves LSH buckets (the paper
     * uses k-means cells for the same purpose — both bound the candidate
     * set; banding additionally guarantees recall at a chosen threshold),
-    * and the closure is one GraphX CC over |pairs| edges. */
+    * and the closure is one StarCC over |pairs| edges. */
   def semanticDedup(df: DataFrame, idCol: String, vecCol: String,
       dim: Int, threshold: Double,
       precomputedPairs: Option[DataFrame] = None): DataFrame = {
-    // GraphX materializes its edge RDD more than once while building and
-    // iterating the graph — pin the LSH+re-score pipeline's result so
-    // those passes replay a tiny pair table, not the whole pair search.
-    // A caller that already ran the pair search (the d05 gate and this
-    // operator share it) can pass the pinned (id1, id2) frame instead.
+    // StarCC reads the pairs once, into its own checkpoint. A caller
+    // that already ran the pair search (the d05 gate and this operator
+    // share it) can pass the (id1, id2) frame instead.
     val pairs = precomputedPairs.getOrElse(
       cosineNearDupPairs(df, idCol, vecCol, dim, threshold)
-        .select(col("id1"), col("id2"))
-        .localCheckpoint())
+        .select(col("id1"), col("id2")))
     DedupOps.dupClusters(pairs, df.select(col(idCol)), idCol)
       .withColumn("keep", (col(idCol) === col("cluster_id")).cast("long"))
   }

@@ -1127,7 +1127,7 @@ object CypherDriven {
   }
 
   /** WEIGHTED shortest paths through Cypher — the GDS-style procedure
-    * surface over GraphXBridge.weightedSssp (Pregel relaxation):
+    * surface over GraphXBridge.weightedSssp (Bellman-Ford relaxation):
     * single-source distances where CONTAINS edges cost their
     * `linenumber` property and PLACED edges (no property) cost 1.0.
     * Every part reachable from the customer is therefore pinned at
@@ -1304,10 +1304,11 @@ object CypherDriven {
     * click emits its (click_id, NULL) row ONLY when the watermark
     * passes its last possible match time and join state is evicted —
     * Append mode cannot know "no match" any earlier. The closed-form
-    * boundary (probed empirically, dev.ProbeOuterJoin): the final
-    * watermark is min over BOTH watermarked columns of the ms-FLOORED
-    * max event time minus the 1 h delay (Spark tracks event-time stats
-    * in milliseconds), and a click is evicted iff cts < wm strictly.
+    * boundary (probed empirically; StreamingAndTemporalSpec's
+    * 3-outcome fixture pins it): the final watermark is min over BOTH
+    * watermarked columns of the ms-FLOORED max event time minus the
+    * 1 h delay (Spark tracks event-time stats in milliseconds), and a
+    * click is evicted iff cts < wm strictly.
     * Clicks the final watermark never passes stay in state and are
     * NEVER emitted — the streaming-semantics difference a batch LEFT
     * JOIN hides, and exactly what bounds join state at 100 TB. The

@@ -162,7 +162,7 @@ object GraphQueries {
       .orderBy(col("src"), col("dst"))
   }
 
-  /** The nation/region membership subgraph, the GraphX-gate fixture:
+  /** The nation/region membership subgraph, the gx01/gx02 fixture:
     * small, fixed shape at every SF (TPC-H nations/regions are constant),
     * so whole-graph analytics have relationally-derivable ground truth. */
   private def membershipSubgraph(s: org.apache.spark.sql.SparkSession,
@@ -173,12 +173,13 @@ object GraphQueries {
       full.edges.filter(col("edge_type") === "IN_REGION"))
   }
 
-  /** GraphX connected components, oracle-anchored: on the nation→region
+  /** Connected components, oracle-anchored: on the nation→region
     * membership graph the weak components are exactly the per-region
-    * groups. GraphX labels a component by its minimum internal (hashed)
-    * vertex id — engine-specific — so components are RE-labeled with
-    * their minimum member id STRING (a pure relabeling, deterministic,
-    * engine-independent), which DuckDB derives relationally. */
+    * groups. The engine labels a component by its minimum internal
+    * (hashed) vertex id — engine-specific — so components are
+    * RE-labeled with their minimum member id STRING (a pure relabeling,
+    * deterministic, engine-independent), which DuckDB derives
+    * relationally. */
   val gx01 = QueryDef.sql("gx01_connected_components",
     """WITH m AS (SELECT n_regionkey AS rk,
       |            min('n:' || n_nationkey) AS component_id
@@ -199,10 +200,11 @@ object GraphQueries {
       .select(col("id"), col("component_id")).orderBy(col("id"))
   }
 
-  /** GraphX fixed-iteration PageRank, oracle-anchored: on the
-    * nation→region DAG the ranks reach a closed form after 2 iterations
-    * (sources settle at reset, sinks one step later), and Spark 4's
-    * staticPageRank normalizes so Σranks = |V| — both derivable in SQL.
+  /** Fixed-iteration PageRank (GraphX `staticPageRank` semantics),
+    * oracle-anchored: on the nation→region DAG the ranks reach a closed
+    * form after 2 iterations (sources settle at reset, sinks one step
+    * later), and the result is normalized so Σranks = |V| — both
+    * derivable in SQL.
     * floor4 absorbs the (≤1 ulp) difference between the iterative and
     * closed-form arithmetic paths. */
   val gx02 = QueryDef.sql("gx02_static_pagerank",
@@ -298,7 +300,7 @@ object GraphQueries {
       .orderBy(col("id"))
   }
 
-  /** Weighted SSSP (custom GraphX Pregel relaxation) over the purchase
+  /** Weighted SSSP (Bellman-Ford relaxation) over the purchase
     * DAG — customer→order edges weigh 1, order→part edges weigh the
     * line quantity; ids are disambiguated into disjoint mod-3 spaces.
     * The engine relaxes over the FULL graph from one source; the oracle
@@ -519,8 +521,8 @@ object GraphQueries {
   /** GraphXBridge.degrees in the gate (was spec-only): the customer
     * degree histogram over the full TPC-H graph — a customer's degree
     * is 1 (its nation edge) + its order count, so the histogram is
-    * relationally derivable; hash-matching it pins the GraphX degree
-    * computation and the vertex-id round-trip mapping. */
+    * relationally derivable; hash-matching it pins the degree
+    * aggregation and its semi-join against the vertex set. */
   val gx12 = QueryDef.sql("gx12_degree_histogram",
     """WITH d AS (
       |  SELECT c_custkey, 1 + count(o_orderkey) AS degree
@@ -631,11 +633,12 @@ object GraphQueries {
   /** Strongly connected components of the event-type TRANSITION digraph
     * (user-journey condensation): per-user event sequences (window lag,
     * scalable construction — the only wide op over the raw events) are
-    * reduced to distinct above-average transitions, and GraphX SCC
-    * labels each type with its component's minimum member. The oracle
-    * recomputes SCCs from first principles: a recursive-CTE reachability
-    * closure intersected with its transpose (mutual reachability),
-    * min-labeled — engine-independent by the min-member relabeling. */
+    * reduced to distinct above-average transitions, and a driver-side
+    * Tarjan SCC labels each type with its component's minimum member.
+    * The oracle recomputes SCCs from first principles: a recursive-CTE
+    * reachability closure intersected with its transpose (mutual
+    * reachability), min-labeled — engine-independent by the min-member
+    * relabeling. */
   val gx07 = QueryDef.sql("gx07_scc_transitions",
     """WITH RECURSIVE seq AS (
       |  SELECT event_type, lag(event_type) OVER (
@@ -678,8 +681,8 @@ object GraphQueries {
       .withColumn("label", lit("etype"))
     // the transition digraph is a CONDENSATION: its vertex count is the
     // event-type vocabulary (constant at every SF), so the bounded
-    // driver-side Tarjan replaces ~77 Pregel stages of pure scheduling
-    // (TraversalSpec pins it ≡ the distributed stronglyConnected)
+    // driver-side Tarjan runs it (TraversalSpec pins it ≡ GraphX's
+    // stronglyConnectedComponents, min-member relabeled)
     val scc = graft.engine.GraphXBridge.stronglyConnectedBounded(
       graft.engine.GraphState(vtx, e))
     scc.orderBy(col("id"))

@@ -240,7 +240,7 @@ object PipelineQueries {
   }
 
   /** Near-dup CLUSTERS: the LSH pair graph closed into connected
-    * components (GraphX min-id propagation), each doc labeled with its
+    * components (StarCC min-id labels), each doc labeled with its
     * cluster's minimum doc_id plus a keep flag — the "drop every
     * duplicate chain down to one representative" step of a training-data
     * pipeline. The oracle recomputes the EXACT all-pairs Jaccard graph

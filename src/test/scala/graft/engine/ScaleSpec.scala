@@ -667,4 +667,19 @@ class ScaleSpec extends SparkSpec {
         s"warm traversal re-shuffled edges: cold=$cold B, warm=$warm B")
     } finally spark.sparkContext.removeSparkListener(listener)
   }
+
+  test("no main source imports GraphX: one engine per analytic") {
+    // GraphX stays a test-only reference (TraversalSpec, PageRank
+    // property); every analytic runs as DataFrame loops
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, root.getAbsolutePath)
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(files) else Seq(f)
+    val users = files(root).filter { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      try src.mkString.contains("org.apache.spark.graphx")
+      finally src.close()
+    }
+    assert(users.isEmpty, users.mkString(", "))
+  }
 }

@@ -23,6 +23,27 @@ class TraversalSpec extends SparkSpec {
     ids.toDF("id")
   }
 
+  /** GraphX's Pregel SCC, an independent reference for
+    * [[GraphXBridge.stronglyConnectedBounded]]: every vertex of `vs`
+    * mapped to the minimum member id of its SCC over the directed `es`
+    * (`numIter` 20 ≥ any path length here, so the result is exact). */
+  private def graphxScc(vs: Seq[String], es: Seq[(String, String)])
+      : Map[String, String] = {
+    import org.apache.spark.graphx.{Edge, Graph}
+    val ids = vs.distinct.toIndexedSeq
+    val idx = ids.zipWithIndex.toMap
+    val sc = spark.sparkContext
+    val g = Graph(sc.parallelize(ids.indices.map(i => (i.toLong, ()))),
+      sc.parallelize(es.map { case (s, d) =>
+        Edge(idx(s).toLong, idx(d).toLong, ()) }))
+    g.stronglyConnectedComponents(20).vertices.collect()
+      .groupBy(_._2).values
+      .flatMap { m =>
+        val members = m.map(v => ids(v._1.toInt))
+        members.map(_ -> members.min)
+      }.toMap
+  }
+
   test("bfs returns minimum depth per vertex, bounded") {
     val out = Traversals.bfs(chain, srcDf("a"), maxDepth = 10)
       .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
@@ -132,7 +153,7 @@ class TraversalSpec extends SparkSpec {
 
   test("GraphX bridge: pageRank and degrees") {
     implicit val s = spark
-    val pr = GraphXBridge.pageRank(chain)
+    val pr = GraphXBridge.staticPageRank(chain, 20)
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     // every vertex in the a->b->c->d->a cycle outranks the isolated one
     assert(Seq("a", "b", "c", "d").forall(v => pr(v) > pr("iso")))
@@ -141,6 +162,32 @@ class TraversalSpec extends SparkSpec {
     val deg = GraphXBridge.degrees(chain)
       .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
     assert(deg("a") == 3 && deg("c") == 3 && deg.get("iso").isEmpty)
+  }
+
+  test("a null endpoint connects nothing: CC, weighted SSSP, PageRank") {
+    import spark.implicits._
+    implicit val sp: org.apache.spark.sql.SparkSession = spark
+    // xxhash64(NULL) is 42: hashed, the three null-endpoint edges would
+    // join a and b through one phantom vertex and relay a → 42 → b
+    val g = GraphState(vertexDf(("a", "n", Map.empty), ("b", "n", Map.empty),
+        ("c", "n", Map.empty)),
+      Seq[(String, String, String, String, Map[String, String])](
+        ("e1", null, "a", "E", Map.empty), ("e2", null, "b", "E", Map.empty),
+        ("e3", "a", null, "E", Map.empty))
+        .toDF("id", "src", "dst", "edge_type", "properties"))
+    for (bound <- Seq("1000", "0")) withKernelBound(bound) {
+      val cc = GraphXBridge.connectedComponents(g).collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(cc.size == 3 && cc.values.toSet.size == 3, s"bound $bound: $cc")
+      val reached = GraphXBridge.weightedShortestFrom(g, "a", "w")
+        .collect().map(_.getString(0)).toSet
+      assert(!reached.contains("b"), s"bound $bound: $reached")
+    }
+    // no edge counts: every vertex keeps the uniform rank
+    val pr = GraphXBridge.staticPageRank(g, 3).collect()
+      .map(r => r.getString(0) -> r.getDouble(1)).toMap
+    assert(pr.keySet == Set("a", "b", "c") &&
+      pr.values.forall(r => math.abs(r - 1.0) < 1e-12), pr)
   }
 
   test("weightedSssp relaxes through the cheaper multi-hop path") {
@@ -356,24 +403,20 @@ class TraversalSpec extends SparkSpec {
     implicit val sp: org.apache.spark.sql.SparkSession = spark
     // 1→2→3→1 is a cycle; 3→4 bridges to the 4⇄5 cycle: SCCs are
     // {1,2,3} (label "1") and {4,5} (label "4")
+    val vs = Seq("1", "2", "3", "4", "5")
+    val es = Seq(("1", "2"), ("2", "3"), ("3", "1"), ("3", "4"),
+      ("4", "5"), ("5", "4"))
     val g = GraphState(
-      vertexDf(("1", "n", Map[String, String]()),
-        ("2", "n", Map[String, String]()),
-        ("3", "n", Map[String, String]()),
-        ("4", "n", Map[String, String]()),
-        ("5", "n", Map[String, String]())),
-      edgeDf(("e1", "1", "2", "E"), ("e2", "2", "3", "E"),
-        ("e3", "3", "1", "E"), ("e4", "3", "4", "E"),
-        ("e5", "4", "5", "E"), ("e6", "5", "4", "E")))
-    val scc = GraphXBridge.stronglyConnected(g).collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(scc == Map("1" -> "1", "2" -> "1", "3" -> "1",
-      "4" -> "4", "5" -> "4"))
-    // the bounded driver-side Tarjan must agree with the distributed
-    // path on the same graph (gx07 relies on this equivalence)
+      vertexDf(vs.map((_, "n", Map[String, String]())): _*),
+      edgeDf(es.zipWithIndex.map { case ((s, d), i) =>
+        (s"e${i + 1}", s, d, "E") }: _*))
     val bounded = GraphXBridge.stronglyConnectedBounded(g).collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(bounded == scc)
+    assert(bounded == Map("1" -> "1", "2" -> "1", "3" -> "1",
+      "4" -> "4", "5" -> "4"))
+    // GraphX's Pregel SCC agrees on the same graph (gx07 relies on the
+    // driver-side Tarjan being exact)
+    assert(bounded == graphxScc(vs, es))
     // and fail loudly past its vertex bound
     val err = intercept[IllegalArgumentException] {
       GraphXBridge.stronglyConnectedBounded(g, maxVertices = 2)
@@ -432,8 +475,7 @@ class TraversalSpec extends SparkSpec {
         if i != j && rnd.nextDouble() < 0.18
       } yield (s"e$i-$j", f"v$i%02d", f"v$j%02d", "E")
       val g = GraphState(vertexDf(vs: _*), edgeDf(es: _*))
-      val dist = GraphXBridge.stronglyConnected(g).collect()
-        .map(r => r.getString(0) -> r.getString(1)).toMap
+      val dist = graphxScc(vs.map(_._1), es.map(e => (e._2, e._3)))
       val bounded = GraphXBridge.stronglyConnectedBounded(g).collect()
         .map(r => r.getString(0) -> r.getString(1)).toMap
       assert(bounded == dist, s"seed $seed: $bounded != $dist")

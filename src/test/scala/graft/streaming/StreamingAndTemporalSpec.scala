@@ -81,7 +81,7 @@ class StreamingAndTemporalSpec extends SparkSpec {
     //   click B unmatched, cts < wm   -> (B, NULL) emitted on eviction
     //   click C unmatched, cts > wm   -> retained in state, NEVER emitted
     // wm(final) = min(ms-floored max cts, ms-floored max vts) - 1 h
-    //           = min(22:30, 23:00) - 1 h = 21:30  (dev.ProbeOuterJoin)
+    //           = min(22:30, 23:00) - 1 h = 21:30
     def ts(hhmm: String) = java.sql.Timestamp.valueOf(s"2024-03-01 $hhmm:00")
     val schema = "event_id BIGINT, user_id BIGINT, ts TIMESTAMP, " +
       "event_type STRING"
