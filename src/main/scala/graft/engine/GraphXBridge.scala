@@ -1,5 +1,7 @@
 package graft.engine
 
+import scala.util.DynamicVariable
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -501,13 +503,8 @@ object GraphXBridge {
     // small graphs (r13): broadcast-CSR kernel — per-edge |N(u) ∩ N(v)|
     // computed in place, no orientation joins, no array-carrying
     // exchange, no credit shuffle (measured: gx14 sf0.1 260 MB shuffle
-    // → ~0). ANY forced bucket conf (incl. 1 = forced single pass — the
-    // ScaleSpec equivalence pins) exercises the distributed plan.
-    val kernel =
-      if (spark.conf.get(TriSupportBucketsKey, "0").toInt == 0)
-        LocalGraphKernels.triangleSupport(edges)
-      else None
-    kernel.getOrElse {
+    // → ~0)
+    LocalGraphKernels.triangleSupport(edges).getOrElse {
       val b = triSupportBuckets(spark, edges)
       if (b <= 1) {
         // single pass — bit-identical to the pre-bucketing plan:
@@ -587,10 +584,11 @@ object GraphXBridge {
         greatest(col("v"), col("w")).as("dst")))).as("t"))
     .select(col("t.src").as("src"), col("t.dst").as("dst"))
 
-  /** Conf: forced pass count for [[edgeTriangleSupport]]'s
-    * intersection shuffle (0 = auto from the adjacency-volume census
-    * vs the shared disk budget). [[kTruss]] inherits per round. */
-  val TriSupportBucketsKey = "spark.graft.trisupport.buckets"
+  /** Forced pass count for [[edgeTriangleSupport]]'s intersection
+    * shuffle (0 = auto from the adjacency-volume census vs the shared
+    * disk budget); tests bind it to pin the passes against one.
+    * [[kTruss]] inherits it per round. */
+  private[engine] val triSupportPasses = new DynamicVariable[Int](0)
 
   /** Measured at sf10 (PLANS.md round 13): the single-pass operator
     * wrote 54.0 GB of shuffle; the census below gives the adjacency
@@ -598,7 +596,7 @@ object GraphXBridge {
     * so the budget errs toward more (cheaper) passes. */
   private val BytesPerAdjEntry = 8.0
 
-  /** Pass count for [[edgeTriangleSupport]]: forced conf, else census
+  /** Pass count for [[edgeTriangleSupport]]: forced, else census
     * the v-side array-join volume — Σ over oriented edges (u,v) of
     * |adj⁺(u)| + |adj⁺(v)| = Σ_w od(w)·(od(w) + in(w)) — from two
     * O(m)→O(|V|) degree aggregates (no adjacency materialization),
@@ -606,7 +604,7 @@ object GraphXBridge {
     * (never a silent 64-pass cap — ADVICE r12). */
   private def triSupportBuckets(spark: SparkSession, edges: DataFrame)
       : Int = {
-    val forced = spark.conf.get(TriSupportBucketsKey, "0").toInt
+    val forced = triSupportPasses.value
     if (forced > 0) forced
     else diskBudgetBytes(spark) match {
       case None => 1
@@ -944,7 +942,7 @@ object GraphXBridge {
     * re-run per pass — CPU, not disk. Each pass materializes its
     * k-row top via localCheckpoint (eager), so pass i's shuffle files
     * are unreferenced — and ContextCleaner-collectable — before pass
-    * i+1 writes. B comes from [[LinkPredBucketsKey]] (forced) or the
+    * i+1 writes. B comes from [[linkPredPasses]] (forced) or the
     * census vs [[LinkPredBudgetKey]] (default: 35% of the usable space
     * on the first spark.local.dir — on a real cluster, set the budget
     * to aggregate executor scratch instead). */
@@ -958,11 +956,9 @@ object GraphXBridge {
     // task; the degree frame for scoring rides the same CSR, so the
     // prepareWedges jobs (sym shuffle, checkpoint, packability probe)
     // never run. Uncapped centers only (the cap changes which wedges
-    // exist); a forced bucket conf always exercises the distributed
-    // plan.
+    // exist).
     val kernel =
-      if (maxCenterDegree == Int.MaxValue &&
-          spark.conf.get(LinkPredBucketsKey, "0").toInt == 0)
+      if (maxCenterDegree == Int.MaxValue)
         LocalGraphKernels.topCommonNeighbors(edges, k).map {
           case (top, degDf) =>
             scoreCandidates(top, degDf, small = true).orderBy(byRank: _*)
@@ -1050,9 +1046,10 @@ object GraphXBridge {
     else Some(math.min(n, 16384.0).toInt)
   }
 
-  /** Conf: forced pass count for [[topLinkPredictions]]' wedge
-    * aggregation (0 = auto from the wedge census vs disk budget). */
-  val LinkPredBucketsKey = "spark.graft.linkpred.buckets"
+  /** Forced pass count for [[topLinkPredictions]]' wedge aggregation
+    * (0 = auto from the wedge census vs disk budget); tests bind it to
+    * pin the passes against one. */
+  private[engine] val linkPredPasses = new DynamicVariable[Int](0)
 
   /** Conf: shuffle-disk budget in bytes for the auto bucket choice —
     * shared by every disk-bounded bucketed operator ([[topLinkPredictions]],
@@ -1089,7 +1086,7 @@ object GraphXBridge {
     }
 
   private def linkPredBuckets(spark: SparkSession, wedges: Double): Int = {
-    val forced = spark.conf.get(LinkPredBucketsKey, "0").toInt
+    val forced = linkPredPasses.value
     if (forced > 0) forced
     else diskBudgetBytes(spark) match {
       case None => 1

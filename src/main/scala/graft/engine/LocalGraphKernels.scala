@@ -15,52 +15,35 @@ import org.apache.spark.sql.functions._
   * multiplicities that a broadcast adjacency counts in place; the
   * iterative operators spend their time in per-round job latency, not
   * data. Every kernel decides through [[KernelGate]], which sizes,
-  * checks and collects its inputs; a declined kernel returns None and
-  * the caller keeps the distributed (and, past the disk budget,
-  * bucketed) plan.
+  * checks and collects its inputs and hands over the edges as
+  * [[KernelGate.DenseEdges]]; a declined kernel returns None and the
+  * caller keeps the distributed (and, past the disk budget, bucketed)
+  * plan.
   *
-  * Determinism: dense vertex indices are assigned in ascending id
+  * Determinism: the gate's dense vertex indices are in ascending id
   * order, so dense order == id order and every tie-break below
   * reproduces the distributed plan's (common DESC, id1, id2) /
-  * canonical-edge ordering exactly; counts are exact integers.
+  * canonical-edge ordering exactly; counts are exact integers. No
+  * kernel here sorts or searches ids itself.
   * Equivalence is pinned in ScaleSpec and KernelGatePropertySpec
   * (kernel vs distributed on the same graphs).
   */
 private[graft] object LocalGraphKernels {
 
-  /** Symmetric CSR adjacency in dense index space: `ids` sorted
-    * ascending (dense idx → original id), `off`/`nbr` the usual
-    * offsets/targets arrays with each neighbor segment sorted. */
-  final case class Csr(ids: Array[Long], off: Array[Int],
-      nbr: Array[Int]) {
-    def n: Int = ids.length
+  /** Symmetric CSR adjacency over dense indices `0 until n`:
+    * `off`/`nbr` the usual offsets/targets arrays with each neighbor
+    * segment sorted. */
+  final case class Csr(off: Array[Int], nbr: Array[Int]) {
+    def n: Int = off.length - 1
   }
 
-  /** The id columns of a canonical edge frame. */
-  private val SrcDst = Seq("src", "dst")
-
-  /** `a` sorted in place; its distinct values, ascending. */
-  private[engine] def sortedDistinct(a: Array[Long]): Array[Long] = {
-    java.util.Arrays.sort(a)
-    var n = 0
-    var i = 0
-    while (i < a.length) {
-      if (n == 0 || a(i) != a(n - 1)) { a(n) = a(i); n += 1 }
-      i += 1
-    }
-    java.util.Arrays.copyOf(a, n)
-  }
-
-  /** Component label (its minimum id) of every id in `ids` (sorted,
-    * distinct) under the packed pairs of `edges`, whose endpoints are
-    * all in `ids`. Union-find that always parents the larger root under
-    * the smaller, so a root is its component's minimum index, i.e. its
-    * minimum id. */
-  private[engine] def minLabels(ids: Array[Long], edges: Array[Long])
-      : Array[Long] = {
-    val parent = new Array[Int](ids.length)
-    var i = 0
-    while (i < parent.length) { parent(i) = i; i += 1 }
+  /** Component label of every dense index `0 until n` under the edges
+    * `src(e)`–`dst(e)`: the minimum index in its component, hence the
+    * minimum id. Union-find that always parents the larger root under
+    * the smaller, so a root is its component's minimum. */
+  private[engine] def minLabels(n: Int, src: Array[Int], dst: Array[Int])
+      : Array[Int] = {
+    val parent = Array.range(0, n)
     def find(x: Int): Int = {
       var r = x
       while (parent(r) != r) r = parent(r)
@@ -68,51 +51,43 @@ private[graft] object LocalGraphKernels {
       while (parent(c) != r) { val nx = parent(c); parent(c) = r; c = nx }
       r
     }
-    i = 0
-    while (i < edges.length) {
-      val ra = find(java.util.Arrays.binarySearch(ids, edges(i)))
-      val rb = find(java.util.Arrays.binarySearch(ids, edges(i + 1)))
+    var i = 0
+    while (i < src.length) {
+      val ra = find(src(i)); val rb = find(dst(i))
       if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      i += 2
+      i += 1
     }
-    val label = new Array[Long](ids.length)
     i = 0
-    while (i < ids.length) { label(i) = ids(find(i)); i += 1 }
-    label
+    while (i < n) { parent(i) = find(i); i += 1 }
+    parent
   }
 
-  private def buildCsr(packed: Array[Long]): Csr = {
-    val m = packed.length / 2
-    val ids = sortedDistinct(packed.clone())
-    val nDistinct = ids.length
-    def idx(id: Long): Int = {
-      val p = java.util.Arrays.binarySearch(ids, id)
-      p // inputs are endpoints by construction; always found
-    }
-    val off = new Array[Int](nDistinct + 1)
+  private def buildCsr(n: Int, src: Array[Int], dst: Array[Int]): Csr = {
+    val m = src.length
+    val off = new Array[Int](n + 1)
     var i = 0
     while (i < m) {
-      off(idx(packed(2 * i)) + 1) += 1
-      off(idx(packed(2 * i + 1)) + 1) += 1
+      off(src(i) + 1) += 1
+      off(dst(i) + 1) += 1
       i += 1
     }
     var j = 0
-    while (j < nDistinct) { off(j + 1) += off(j); j += 1 }
-    val cursor = java.util.Arrays.copyOf(off, nDistinct)
+    while (j < n) { off(j + 1) += off(j); j += 1 }
+    val cursor = java.util.Arrays.copyOf(off, n)
     val nbr = new Array[Int](2 * m)
     i = 0
     while (i < m) {
-      val u = idx(packed(2 * i)); val v = idx(packed(2 * i + 1))
+      val u = src(i); val v = dst(i)
       nbr(cursor(u)) = v; cursor(u) += 1
       nbr(cursor(v)) = u; cursor(v) += 1
       i += 1
     }
     j = 0
-    while (j < nDistinct) {
+    while (j < n) {
       java.util.Arrays.sort(nbr, off(j), off(j + 1))
       j += 1
     }
-    Csr(ids, off, nbr)
+    Csr(off, nbr)
   }
 
   /** First index in nbr[lo, hi) with value > u (segment sorted). */
@@ -145,9 +120,9 @@ private[graft] object LocalGraphKernels {
     // k < 1: the bounded heap below cannot represent it (ADVICE r13) —
     // the distributed plan handles it gracefully via limit(k)
     KernelGate("linkpred", spark)(in =>
-      if (k < 1) in.decline("k < 1") else in.longs(edges, SrcDst)
-    ).map { packed =>
-      val csr = buildCsr(packed)
+      if (k < 1) in.decline("k < 1") else in.edges[Long](edges)
+    ).map { d =>
+      val csr = buildCsr(d.n, d.src, d.dst)
       // the (id, deg) frame for scoring comes straight off the CSR —
       // the distributed path's sym-union groupBy + localCheckpoint
       // jobs are pure overhead once the adjacency is already on the
@@ -155,15 +130,15 @@ private[graft] object LocalGraphKernels {
       val degDf = {
         import spark.implicits._
         (0 until csr.n).map(i =>
-            (csr.ids(i), (csr.off(i + 1) - csr.off(i)).toLong))
+            (d.ids(i), (csr.off(i + 1) - csr.off(i)).toLong))
           .toDF("id", "deg")
       }
-      val bc = spark.sparkContext.broadcast(csr)
+      val bc = spark.sparkContext.broadcast((d.ids, csr))
       import spark.implicits._
       val ranges = chunkRanges(csr.n, spark)
       val out = spark.createDataset(ranges).repartition(ranges.size)
         .mapPartitions { it =>
-          val c = bc.value
+          val (ids, c) = bc.value
           val n = c.n
           val counts = new Array[Int](n)
           val marks = new Array[Boolean](n)
@@ -209,7 +184,7 @@ private[graft] object LocalGraphKernels {
                 val v = touched(ti)
                 val cm = counts(v); counts(v) = 0
                 if (!marks(v)) {
-                  val idU = c.ids(u); val idV = c.ids(v); val cmL = cm.toLong
+                  val idU = ids(u); val idV = ids(v); val cmL = cm.toLong
                   if (heap.size < k) {
                     heap.add(Array(idU, idV, cmL))
                     val h = heap.peek; h0 = h(0); h1 = h(1); h2 = h(2)
@@ -254,9 +229,9 @@ private[graft] object LocalGraphKernels {
   def labelPropagation(edges: DataFrame, rounds: Int)
       : Option[DataFrame] = {
     val spark = edges.sparkSession
-    KernelGate("labelprop", spark)(_.longs(edges, SrcDst)).map { packed =>
-      val c = buildCsr(packed)
-      var labels: Array[Long] = c.ids.clone()
+    KernelGate("labelprop", spark)(_.edges[Long](edges)).map { d =>
+      val c = buildCsr(d.n, d.src, d.dst)
+      var labels: Array[Long] = d.ids.clone()
       var round = 0
       while (round < rounds) {
         val next = new Array[Long](c.n)
@@ -283,7 +258,7 @@ private[graft] object LocalGraphKernels {
         round += 1
       }
       import spark.implicits._
-      (0 until c.n).map(i => (c.ids(i), labels(i)))
+      (0 until c.n).map(i => (d.ids(i), labels(i)))
         .toDF("id", "label")
     }
   }
@@ -299,13 +274,13 @@ private[graft] object LocalGraphKernels {
     val spark = edges.sparkSession
     KernelGate("ppr", spark) { in =>
       for {
-        packed <- in.longs(edges, SrcDst)
-        seedIds <- in.longs(seeds, Seq("id"), cache = false)
+        d <- in.edges[Long](edges)
+        seedIds <- in.list[Long](seeds.select("id"))
       } yield {
-        val c = buildCsr(packed)
+        val c = buildCsr(d.n, d.src, d.dst)
         val isSeed = new Array[Boolean](c.n)
-        seedIds.foreach { s =>
-          val p = java.util.Arrays.binarySearch(c.ids, s)
+        seedIds.head.foreach { s =>
+          val p = d.indexOf(s)
           if (p >= 0) isSeed(p) = true // seeds outside the graph drop
         }
         var rank = new Array[Long](c.n)
@@ -338,7 +313,7 @@ private[graft] object LocalGraphKernels {
         }
         import spark.implicits._
         (0 until c.n).filter(rank(_) > 0)
-          .map(i => (c.ids(i), rank(i))).toDF("id", "rank")
+          .map(i => (d.ids(i), rank(i))).toDF("id", "rank")
       }
     }
   }
@@ -350,19 +325,13 @@ private[graft] object LocalGraphKernels {
     * surviving edge. */
   def kCore(edges: DataFrame, k: Int): Option[DataFrame] = {
     val spark = edges.sparkSession
-    KernelGate("kcore", spark)(_.longs(edges, SrcDst)).map { packed =>
-      val c = buildCsr(packed)
-      val m = packed.length / 2
+    KernelGate("kcore", spark)(_.edges[Long](edges)).map { d =>
+      val m = d.m
+      val su = d.src; val sv = d.dst
       val alive = new Array[Boolean](m)
       java.util.Arrays.fill(alive, true)
-      val su = new Array[Int](m); val sv = new Array[Int](m)
+      val deg = new Array[Int](d.n)
       var i = 0
-      while (i < m) {
-        su(i) = java.util.Arrays.binarySearch(c.ids, packed(2 * i))
-        sv(i) = java.util.Arrays.binarySearch(c.ids, packed(2 * i + 1))
-        i += 1
-      }
-      val deg = new Array[Int](c.n)
       var nAlive = m
       var changed = true
       while (changed && nAlive > 0) {
@@ -390,8 +359,8 @@ private[graft] object LocalGraphKernels {
         i += 1
       }
       import spark.implicits._
-      (0 until c.n).filter(deg(_) > 0)
-        .map(v => (c.ids(v), deg(v).toLong))
+      (0 until d.n).filter(deg(_) > 0)
+        .map(v => (d.ids(v), deg(v).toLong))
         .toDF("id", "core_degree")
     }
   }
@@ -407,33 +376,17 @@ private[graft] object LocalGraphKernels {
     val spark = edges.sparkSession
     val c = edges.columns
     KernelGate("sssp", spark)(
-      _.longs(edges, c.take(2).toSeq, weights = Seq(c(2)))
-    ).map { rows => // (src, dst, weight bits) per edge
-      val m = rows.length / 3
-      val ends = new Array[Long](2 * m)
-      var i = 0
-      while (i < m) {
-        ends(2 * i) = rows(3 * i)
-        ends(2 * i + 1) = rows(3 * i + 1)
-        i += 1
-      }
-      val ids = sortedDistinct(ends)
-      val n = ids.length
-      val es = new Array[Int](m); val ed = new Array[Int](m)
-      val ew = new Array[Double](m)
-      i = 0
-      while (i < m) {
-        es(i) = java.util.Arrays.binarySearch(ids, rows(3 * i))
-        ed(i) = java.util.Arrays.binarySearch(ids, rows(3 * i + 1))
-        ew(i) = java.lang.Double.longBitsToDouble(rows(3 * i + 2))
-        i += 1
-      }
-      val dist = new Array[Double](n)
+      _.edges[Long](edges, c(0), c(1), weight = Some(c(2)))
+    ).map { d =>
+      val m = d.m
+      val es = d.src; val ed = d.dst; val ew = d.weights
+      val dist = new Array[Double](d.n)
       java.util.Arrays.fill(dist, Double.PositiveInfinity)
       sources.foreach { s =>
-        val p = java.util.Arrays.binarySearch(ids, s)
+        val p = d.indexOf(s)
         if (p >= 0) dist(p) = 0.0 // sources outside the graph drop
       }
+      var i = 0
       var changed = true
       while (changed) {
         changed = false
@@ -448,30 +401,30 @@ private[graft] object LocalGraphKernels {
         }
       }
       import spark.implicits._
-      (0 until n).filter(dist(_) < Double.PositiveInfinity)
-        .map(v => (ids(v), dist(v))).toDF("id", "distance")
+      (0 until d.n).filter(dist(_) < Double.PositiveInfinity)
+        .map(v => (d.ids(v), dist(v))).toDF("id", "distance")
     }
   }
 
   /** Local connected components over ALREADY-HASHED long ids —
     * [[GraphXBridge.connectedComponents]]' contract: every vertex
     * (isolated included) labeled by the minimum vertex id of its
-    * component ([[minLabels]]); both frames read positionally. */
+    * component ([[minLabels]]); both frames read positionally. The
+    * gate sees one edge frame: each vertex as a self-loop, then the
+    * edges, whose endpoints missing from the vertex frame are vertices
+    * too, as on the distributed leg. */
   def connectedComponentsLong(vertexIds: DataFrame, edges: DataFrame)
       : Option[DataFrame] = {
     val spark = vertexIds.sparkSession
-    KernelGate("cc", spark) { in =>
-      for {
-        vs <- in.longs(vertexIds, vertexIds.columns.take(1).toSeq)
-        es <- in.longs(edges, edges.columns.take(2).toSeq)
-      } yield {
-        // edge endpoints missing from the vertex frame are vertices
-        // too, as on the distributed leg
-        val ids = sortedDistinct(vs ++ es)
-        val label = minLabels(ids, es)
-        import spark.implicits._
-        ids.indices.map(v => (ids(v), label(v))).toDF("vid", "component")
-      }
+    val v = col(vertexIds.columns.head)
+    val Array(s, t) = edges.columns.take(2).map(col)
+    val all = vertexIds.select(v.as("src"), v.as("dst"))
+      .unionAll(edges.select(s.as("src"), t.as("dst")))
+    KernelGate("cc", spark)(_.edges[Long](all)).map { d =>
+      val label = minLabels(d.n, d.src, d.dst)
+      import spark.implicits._
+      d.ids.indices.map(i => (d.ids(i), d.ids(label(i))))
+        .toDF("vid", "component")
     }
   }
 
@@ -481,14 +434,14 @@ private[graft] object LocalGraphKernels {
     * canonical edge is emitted from its src's chunk. */
   def triangleSupport(edges: DataFrame): Option[DataFrame] = {
     val spark = edges.sparkSession
-    KernelGate("trisupport", spark)(_.longs(edges, SrcDst)).map { packed =>
-      val csr = buildCsr(packed)
-      val bc = spark.sparkContext.broadcast(csr)
+    KernelGate("trisupport", spark)(_.edges[Long](edges)).map { d =>
+      val csr = buildCsr(d.n, d.src, d.dst)
+      val bc = spark.sparkContext.broadcast((d.ids, csr))
       import spark.implicits._
       val ranges = chunkRanges(csr.n, spark)
       spark.createDataset(ranges).repartition(ranges.size)
         .mapPartitions { it =>
-          val c = bc.value
+          val (ids, c) = bc.value
           val marks = new Array[Boolean](c.n)
           it.flatMap { case (lo, hi) =>
             (lo until hi).iterator.flatMap { u =>
@@ -507,7 +460,7 @@ private[graft] object LocalGraphKernels {
                   if (marks(c.nbr(t2))) cm += 1
                   t2 += 1
                 }
-                rows(r) = (c.ids(u), c.ids(v), cm.toLong)
+                rows(r) = (ids(u), ids(v), cm.toLong)
                 r += 1
                 tv += 1
               }

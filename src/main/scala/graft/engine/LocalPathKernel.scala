@@ -1,8 +1,7 @@
 package graft.engine
 
-import java.nio.charset.StandardCharsets
-
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Driver-side kernel for the unweighted shortest-path engines
   * ([[Traversals.shortestPathsFromTo]] / [[Traversals.shortestPathsPairs]])
@@ -22,20 +21,20 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   * Determinism contract (must match the distributed engines bit for
   * bit; pinned kernel-vs-distributed in TraversalSpec and
   * KernelGatePropertySpec):
-  *  - dense vertex indices are assigned in ascending UTF-8 BINARY
-  *    order (Spark's UTF8String comparison), so integer index order
-  *    reproduces Spark's string order;
+  *  - ids are `UTF8String`s and dense vertex indices come from the
+  *    gate's dictionary, in `UTF8String` binary (UTF-8 byte) order,
+  *    Spark's string order, so integer index order reproduces it;
   *  - single-path mode keeps, per (source, vertex), the minimum
   *    `struct(pred, prededge)` — replicated as (min pred index, then
-  *    min edge-id bytes);
+  *    the `UTF8String` binary order of the edge ids);
   *  - all-paths mode keeps every distinct minimal (pred, prededge) —
   *    adjacency triples are deduped exactly like the engine's
   *    `collect_set`, and the backward walk enumerates every route
   *    (parallel edges stay distinct by edge id);
   *  - self pairs (source == target) emit (id, id, [id], [], 0) exactly
   *    like the engines' `__a === __b` branch; unreachable pairs emit
-  *    nothing. The decoded graph is rebuilt from the input on every
-  *    call; only the gate's edge count is cached.
+  *    nothing. The gate's dense edges are built from the input on
+  *    every call; only its edge count is cached.
   */
 private[graft] object LocalPathKernel {
 
@@ -46,119 +45,51 @@ private[graft] object LocalPathKernel {
   private val MaxWork = 64000000L
   private val MaxOutputRows = 1000000
 
-  private def utf8(s: String): Array[Byte] =
-    s.getBytes(StandardCharsets.UTF_8)
-
-  /** The decoded hop-edge graph: `ids` sorted by UTF-8 bytes (dense
-    * idx order == Spark string order); CSR adjacency whose entry k is
-    * the edge (src=segment owner, dst=adjV(k), id=eids(k)). */
-  private final class G(val ids: Array[String], val off: Array[Int],
-      val adjV: Array[Int], val eids: Array[String],
-      val index: java.util.HashMap[String, Integer]) {
+  /** The hop-edge graph: `ids` in Spark's string order (dense idx
+    * order); CSR adjacency whose entry k is the edge (src=segment owner,
+    * dst=adjV(k), id=eids(k)). */
+  private final class G(val ids: Array[UTF8String], val off: Array[Int],
+      val adjV: Array[Int], val eids: Array[UTF8String]) {
     def n: Int = ids.length
   }
 
-  /** Decode the (eid, src, dst) hop-edge rows (null-free: the gate
-    * declines a null id) into a dense CSR — parallel over driver cores
-    * (the single-threaded form measured 1.7 s at 766k edges, dominating
-    * the kernel it fed). Duplicate (src, eid, dst) triples are dropped,
-    * matching the engines' per-group `collect_set` dedup. */
-  private def buildGraph(edgeRows: Array[Row]): G = {
-    val m0 = edgeRows.length
-    val srcA = new Array[String](m0)
-    val dstA = new Array[String](m0)
-    val eidA = new Array[String](m0)
-    java.util.stream.IntStream.range(0, m0).parallel().forEach { i =>
-      val r = edgeRows(i)
-      eidA(i) = r.getString(0); srcA(i) = r.getString(1)
-      dstA(i) = r.getString(2)
-    }
-    // vertex dictionary: endpoints sorted by UTF-8 bytes (dense index
-    // order == Spark string order); bytes precomputed once, indices
-    // sorted in parallel, then uniqued
-    val nAll = 2 * m0
-    val allS = new Array[String](nAll)
-    System.arraycopy(srcA, 0, allS, 0, m0)
-    System.arraycopy(dstA, 0, allS, m0, m0)
-    val allB = new Array[Array[Byte]](nAll)
-    java.util.stream.IntStream.range(0, nAll).parallel()
-      .forEach(i => allB(i) = utf8(allS(i)))
-    val order = new Array[Integer](nAll)
-    java.util.stream.IntStream.range(0, nAll).parallel()
-      .forEach(i => order(i) = Integer.valueOf(i))
-    java.util.Arrays.parallelSort(order,
-      new java.util.Comparator[Integer] {
-        def compare(a: Integer, b: Integer): Int =
-          java.util.Arrays.compareUnsigned(allB(a.intValue), allB(b.intValue))
-      })
-    var n = 0
-    var i = 0
-    while (i < nAll) {
-      val o = order(i).intValue
-      if (n == 0 || !java.util.Arrays.equals(allB(order(i - 1).intValue),
-          allB(o)))
-        { order(n) = order(i); n += 1 }
-      i += 1
-    }
-    val ids = new Array[String](n)
-    val index = new java.util.HashMap[String, Integer](n * 2)
-    i = 0
-    while (i < n) {
-      ids(i) = allS(order(i).intValue)
-      index.put(ids(i), i)
-      i += 1
-    }
-    // endpoint lookups in parallel (read-only HashMap)
-    val srcI = new Array[Int](m0)
-    val dstI = new Array[Int](m0)
-    java.util.stream.IntStream.range(0, m0).parallel().forEach { k =>
-      srcI(k) = index.get(srcA(k)).intValue
-      dstI(k) = index.get(dstA(k)).intValue
-    }
-    // triple dedup: sort edge indices by (src, dst, eid) and drop exact
-    // repeats — equality (not order) is all dedup needs, so plain
-    // String compareTo is a valid tie order here
-    val eOrder = new Array[Integer](m0)
+  /** The directed CSR of the gate's (src, dst, eid) hop edges, with
+    * duplicate triples dropped, matching the engines' per-group
+    * `collect_set` dedup: edges sorted by (src, dst, eid) in parallel
+    * are already grouped by src, so the CSR fill is one pass. */
+  private def buildGraph(d: KernelGate.DenseEdges[UTF8String]): G = {
+    val m0 = d.m
+    val src = d.src; val dst = d.dst; val eid = d.payload
+    val order = new Array[Integer](m0)
     java.util.stream.IntStream.range(0, m0).parallel()
-      .forEach(k => eOrder(k) = Integer.valueOf(k))
-    java.util.Arrays.parallelSort(eOrder,
+      .forEach(k => order(k) = Integer.valueOf(k))
+    java.util.Arrays.parallelSort(order,
       new java.util.Comparator[Integer] {
         def compare(x: Integer, y: Integer): Int = {
           val a = x.intValue; val b = y.intValue
-          if (srcI(a) != srcI(b)) Integer.compare(srcI(a), srcI(b))
-          else if (dstI(a) != dstI(b)) Integer.compare(dstI(a), dstI(b))
-          else eidA(a).compareTo(eidA(b))
+          if (src(a) != src(b)) Integer.compare(src(a), src(b))
+          else if (dst(a) != dst(b)) Integer.compare(dst(a), dst(b))
+          else eid(a).binaryCompare(eid(b))
         }
       })
-    val keep = new Array[Boolean](m0)
-    java.util.stream.IntStream.range(0, m0).parallel().forEach { k =>
-      val cur = eOrder(k).intValue
-      if (k == 0) keep(cur) = true
-      else {
-        val prev = eOrder(k - 1).intValue
-        keep(cur) = srcI(cur) != srcI(prev) || dstI(cur) != dstI(prev) ||
-          eidA(cur) != eidA(prev)
+    val off = new Array[Int](d.n + 1)
+    val adjV = new Array[Int](m0)
+    val eids = new Array[UTF8String](m0)
+    var m = 0
+    var k = 0
+    while (k < m0) {
+      val cur = order(k).intValue
+      val prev = if (k == 0) -1 else order(k - 1).intValue
+      if (prev < 0 || src(cur) != src(prev) || dst(cur) != dst(prev) ||
+          eid(cur) != eid(prev)) {
+        off(src(cur) + 1) += 1
+        adjV(m) = dst(cur); eids(m) = eid(cur); m += 1
       }
+      k += 1
     }
-    val off = new Array[Int](n + 1)
-    i = 0
-    while (i < m0) { if (keep(i)) off(srcI(i) + 1) += 1; i += 1 }
     var j = 0
-    while (j < n) { off(j + 1) += off(j); j += 1 }
-    val m = off(n)
-    val cursor = java.util.Arrays.copyOf(off, n)
-    val adjV = new Array[Int](m)
-    val eids = new Array[String](m)
-    i = 0
-    while (i < m0) {
-      if (keep(i)) {
-        val p = cursor(srcI(i)); cursor(srcI(i)) += 1
-        adjV(p) = dstI(i)
-        eids(p) = eidA(i)
-      }
-      i += 1
-    }
-    new G(ids, off, adjV, eids, index)
+    while (j < d.n) { off(j + 1) += off(j); j += 1 }
+    new G(d.ids, off, adjV, eids)
   }
 
   private type OutRow = (String, String, Seq[String], Seq[String], Long)
@@ -194,11 +125,11 @@ private[graft] object LocalPathKernel {
       if (buf.isEmpty || all) { buf += packed; return }
       // single mode: keep min struct(pred, prededge) — pred index order
       // IS Spark's string order; the rare same-pred tie (parallel
-      // edges) compares edge-id UTF-8 bytes on demand
+      // edges) compares the edge ids in the same order
       val cur = buf(0)
       val cu = (cur >>> 32).toInt
-      if (u < cu || (u == cu && java.util.Arrays.compareUnsigned(
-          utf8(g.eids(e)), utf8(g.eids((cur & 0xffffffffL).toInt))) < 0))
+      if (u < cu || (u == cu &&
+          g.eids(e).binaryCompare(g.eids((cur & 0xffffffffL).toInt)) < 0))
         buf(0) = packed
     }
 
@@ -212,10 +143,10 @@ private[graft] object LocalPathKernel {
         val pv = new Array[String](len + 1)
         val pe = new Array[String](len)
         var x = 0
-        while (x <= len) { pv(x) = g.ids(pathV(x)); x += 1 }
+        while (x <= len) { pv(x) = g.ids(pathV(x)).toString; x += 1 }
         x = 0
-        while (x < len) { pe(x) = g.eids(pathE(x)); x += 1 }
-        out += ((sId, g.ids(t),
+        while (x < len) { pe(x) = g.eids(pathE(x)).toString; x += 1 }
+        out += ((sId, g.ids(t).toString,
           scala.collection.immutable.ArraySeq.unsafeWrapArray(pv),
           scala.collection.immutable.ArraySeq.unsafeWrapArray(pe),
           len.toLong))
@@ -275,7 +206,7 @@ private[graft] object LocalPathKernel {
           val tmp = frontier; frontier = next; next = tmp
           fLen = nLen
         }
-        val sId = g.ids(s)
+        val sId = g.ids(s).toString
         var ti = 0
         while (ti < found.length) {
           val t = found(ti)
@@ -294,6 +225,16 @@ private[graft] object LocalPathKernel {
     rows.toSeq.toDF("__a", "__b", "path", "epath", "length")
   }
 
+  /** The (eid, src, dst) hop edges as dense ids, with the eid as
+    * payload; uncached, the frame is new on every call. */
+  private def hopEdges(in: KernelGate.Inputs, edges: DataFrame) =
+    in.edges[UTF8String](edges, payload = Some("eid"), cache = false)
+
+  private def selfRow(id: UTF8String): OutRow = {
+    val s = id.toString
+    (s, s, Seq(s), Seq.empty, 0L)
+  }
+
   /** Kernel for [[Traversals.shortestPathsFromTo]]: every (source,
     * target) pair, self rows included. `edges`: the hop-edge frame
     * (eid, src, dst) — pass the shared partitioned cache so the collect
@@ -303,45 +244,30 @@ private[graft] object LocalPathKernel {
     val spark = srcs.sparkSession
     KernelGate("paths.fromTo", spark) { in =>
       for {
-        srcRows <- in.strings(srcs, small = true)
-        tgtRows <- in.strings(tgts, small = true)
-        edgeRows <- in.strings(edges)
+        srcL <- in.list[UTF8String](srcs)
+        tgtL <- in.list[UTF8String](tgts)
+        d <- hopEdges(in, edges)
         result <- {
-          val g = buildGraph(edgeRows)
+          val g = buildGraph(d)
           val out = new scala.collection.mutable.ArrayBuffer[OutRow]()
           // dedup driver-side (the engines dropDuplicates)
-          val srcSet = new java.util.LinkedHashSet[String]()
-          srcRows.foreach(r => srcSet.add(r.getString(0)))
-          val tgtSet = new java.util.HashSet[String]()
-          tgtRows.foreach(r => tgtSet.add(r.getString(0)))
+          val srcIds = srcL.head.distinct
+          val tgtSet = tgtL.head.toSet
           // self rows: srcs ∩ tgts, graph membership irrelevant
-          val sIt = srcSet.iterator()
-          while (sIt.hasNext) {
-            val s = sIt.next()
-            if (tgtSet.contains(s)) out += ((s, s, Seq(s), Seq.empty, 0L))
-          }
+          srcIds.filter(tgtSet).foreach(out += selfRow(_))
           // targets resolved to dense indices once, shared per source
           // (runBfs only reads the set); a source that is itself a target
           // gets a copy with itself removed
           val tgtIdx = new java.util.HashSet[Integer]()
-          val tIt = tgtSet.iterator()
-          while (tIt.hasNext) {
-            val x = g.index.get(tIt.next())
-            if (x != null) tgtIdx.add(x)
-          }
-          val sourceIdx = new scala.collection.mutable.ArrayBuffer[Int]()
-          val sIt2 = srcSet.iterator()
-          while (sIt2.hasNext) {
-            val x = g.index.get(sIt2.next())
-            if (x != null) sourceIdx += x.intValue
-          }
+          tgtSet.map(d.indexOf).filter(_ >= 0).foreach(tgtIdx.add(_))
           def targetsOf(s: Int): java.util.HashSet[Integer] =
             if (tgtIdx.contains(s)) {
               val set = new java.util.HashSet[Integer](tgtIdx)
               set.remove(Integer.valueOf(s))
               set
             } else tgtIdx
-          if (runBfs(g, sourceIdx.toArray, targetsOf, maxDepth, all, out))
+          if (runBfs(g, srcIds.map(d.indexOf).filter(_ >= 0), targetsOf,
+              maxDepth, all, out))
             Some(toDf(spark, out))
           else in.decline("work or output cap")
         }
@@ -358,38 +284,28 @@ private[graft] object LocalPathKernel {
     val pairProj = pairs.select(pairs.columns(0), pairs.columns(1))
     KernelGate("paths.pairs", spark) { in =>
       for {
-        pairRows <- in.strings(pairProj, small = true)
-        edgeRows <- in.strings(edges)
+        pairL <- in.list[UTF8String](pairProj)
+        d <- hopEdges(in, edges)
         result <- {
-          val g = buildGraph(edgeRows)
+          val g = buildGraph(d)
           val out = new scala.collection.mutable.ArrayBuffer[OutRow]()
-          val seenPair = new java.util.HashSet[(String, String)]()
+          val seenPair = new java.util.HashSet[(UTF8String, UTF8String)]()
           // per-source wanted target sets, in first-seen source order
-          val perSource =
-            new java.util.LinkedHashMap[Integer, java.util.HashSet[Integer]]()
-          pairRows.foreach { r =>
-            val a = r.getString(0); val b = r.getString(1)
+          val perSource = scala.collection.mutable
+            .LinkedHashMap[Int, java.util.HashSet[Integer]]()
+          pairL(0).indices.foreach { r =>
+            val a = pairL(0)(r); val b = pairL(1)(r)
             if (seenPair.add((a, b))) {
-              if (a == b) out += ((a, a, Seq(a), Seq.empty, 0L))
+              if (a == b) out += selfRow(a)
               else {
-                val ai = g.index.get(a); val bi = g.index.get(b)
-                if (ai != null && bi != null) {
-                  var set = perSource.get(ai)
-                  if (set == null) {
-                    set = new java.util.HashSet[Integer]()
-                    perSource.put(ai, set)
-                  }
-                  set.add(bi)
-                }
+                val ai = d.indexOf(a); val bi = d.indexOf(b)
+                if (ai >= 0 && bi >= 0) perSource.getOrElseUpdate(ai,
+                  new java.util.HashSet[Integer]()).add(bi)
               }
             }
           }
-          val sources = new Array[Int](perSource.size)
-          val it = perSource.keySet.iterator()
-          var i = 0
-          while (it.hasNext) { sources(i) = it.next().intValue; i += 1 }
-          if (runBfs(g, sources, s => perSource.get(Integer.valueOf(s)),
-              maxDepth, all, out))
+          if (runBfs(g, perSource.keys.toArray, perSource, maxDepth, all,
+              out))
             Some(toDf(spark, out))
           else in.decline("work or output cap")
         }

@@ -1,8 +1,6 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.storage.StorageLevel
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
@@ -13,7 +11,7 @@ import scala.util.control.NonFatal
   * equal across sessions, so a plan key alone would hand a stopped
   * session's frame to the next session.
   *
-  * One LRU order, one byte [[Budget]]: driver arrays weigh their bytes;
+  * One LRU order, one byte [[Budget]]: kernel edges weigh their bytes;
   * an entry whose frames the registry persisted weighs 1/8 of the budget
   * (at most 8 persisted); every entry weighs at least 1/64 (at most 64
   * entries); an entry over the budget is returned uncached. Frames are
@@ -30,8 +28,9 @@ private[graft] object SessionCache {
   final case class Stats(entries: Int, bytes: Long, hits: Long,
       misses: Long, evictions: Long)
 
-  /** 1/16 of the driver's max heap, capped at two maximal local-kernel
-    * edge arrays (128 MB). */
+  /** 1/16 of the driver's max heap, capped at 128 MB: the dense form of
+    * a maximal local-kernel edge frame (4M edges, 8 B an edge plus 8 B a
+    * vertex) and more. */
   val Budget: Long = math.min(Runtime.getRuntime.maxMemory / 16, 128L << 20)
 
   private final class Slot {
@@ -133,11 +132,7 @@ private[graft] object SessionCache {
 
   /** Driver heap bytes a value pins besides plans. */
   private def weigh(v: Any): Long = v match {
-    case a: Array[Long] => 16L + 8L * a.length
-    case rows: Array[InternalRow] => rows.foldLeft(16L) {
-      case (b, u: UnsafeRow) => b + 56L + u.getSizeInBytes
-      case (b, _) => b + 72L
-    }
+    case d: KernelGate.DenseEdges[_] => d.bytes
     case (a, b) => weigh(a) + weigh(b)
     case _ => 0L
   }

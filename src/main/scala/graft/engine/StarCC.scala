@@ -53,14 +53,14 @@ object StarCC {
       .localCheckpoint(eager = false)
     val eCount = e.count() // materializes the lazy checkpoint
     // the checkpoint is new on every call: no count job, nothing cached
-    KernelGate("starcc", spark)(_.longs(e, Seq("a", "b"), cache = false,
+    KernelGate("starcc", spark)(_.edges[Long](e, "a", "b", cache = false,
       counted = Some(eCount))
-    ).map { pairs =>
+    ).map { d =>
       shims.releaseLocalCheckpoint(e)
-      val ids = LocalGraphKernels.sortedDistinct(pairs.clone())
-      val label = LocalGraphKernels.minLabels(ids, pairs)
+      val label = LocalGraphKernels.minLabels(d.n, d.src, d.dst)
       import spark.implicits._
-      ids.indices.map(i => (ids(i), label(i))).toDF("id", "component")
+      d.ids.indices.map(i => (d.ids(i), d.ids(label(i))))
+        .toDF("id", "component")
     }.getOrElse(starContraction(e, eCount))
   }
 

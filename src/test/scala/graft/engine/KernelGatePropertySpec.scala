@@ -2,6 +2,8 @@ package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.functions.col
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Gen, Properties, Test}
 import org.scalacheck.Prop.{forAll, propBoolean}
 
@@ -15,7 +17,9 @@ import graft.SparkSpec.withKernelBound
   * and Long.MaxValue, isolated vertices (where the operator takes a
   * vertex set) and, in about a third of the graphs, an edge with a null
   * id. Canonical-edge operators get the canonical distinct form of the
-  * edges (plus the null edge); the others get the edges as drawn. */
+  * edges (plus the null edge); the others get the edges as drawn.
+  * String ids and edge ids mix in characters on which Java's UTF-16
+  * `String` order and Spark's UTF-8 byte order disagree ([[name]]). */
 object KernelGatePropertySpec extends Properties("KernelGate") {
 
   // each case runs every operator on both legs: a few cases cover the
@@ -68,12 +72,24 @@ object KernelGatePropertySpec extends Properties("KernelGate") {
 
   private def longFrame(es: Edges): DataFrame = es.toDF("src", "dst")
 
-  /** The edges as a string-id property graph, plus isolated vertices. */
+  /** `v` as a string id: those ≡ 1 (mod 3) lead with a supplementary-
+    * plane character, those ≡ 2 with a high-BMP one. Java orders the
+    * first below the second (UTF-16 surrogates), Spark above (UTF-8
+    * bytes). */
+  private def name(v: Long): String = Math.floorMod(v, 3L) match {
+    case 0 => v.toString
+    case 1 => s"😀$v"
+    case _ => s"ｚ$v"
+  }
+
+  /** The edges as a string-id property graph, plus isolated vertices;
+    * edge i's id is [[name]](i)-marked, so parallel edges tie-break
+    * differently under the two string orders. */
   private def graph(es: Edges, isolated: Seq[Long]): GraphState = {
     val vs = (es.flatMap { case (a, b) => a.toSeq :+ b } ++ isolated)
-      .distinct.map(v => (v.toString, "n"))
+      .distinct.map(v => (name(v), "n"))
     val rows = es.zipWithIndex.map { case ((a, b), i) =>
-      (s"e$i", a.map(_.toString).orNull, b.toString, "E") }
+      (name(i) + "e", a.map(name).orNull, name(b), "E") }
     GraphState(vs.toDF("id", "label"),
       rows.toDF("id", "src", "dst", "edge_type"))
   }
@@ -101,19 +117,45 @@ object KernelGatePropertySpec extends Properties("KernelGate") {
     }
 
   property("path kernels: kernel on ≡ bound 0") =
-    forAll(anyEdges, Gen.oneOf(false, true)) { (es, all) =>
+    forAll(anyEdges, Gen.oneOf(false, true)) { (drawn, all) =>
+      // three more copies of a non-loop edge: parallel edges whose ids
+      // take all three marks; and a diamond 102 → {😀100, ｚ101} → 105,
+      // whose single shortest path runs through the pred that comes
+      // first in Spark's order, ｚ101
+      val diamond = Seq((102L, 100L), (102L, 101L), (100L, 105L),
+        (101L, 105L)).map { case (a, b) => (Option(a), b) }
+      val es = drawn ++ drawn.find { case (a, b) => a.exists(_ != b) }
+        .toSeq.flatMap(Seq.fill(3)(_)) ++ diamond
       val g = graph(es, Nil)
-      val ends = es.flatMap { case (a, b) => a.map(_.toString).toSeq :+
-        b.toString }.distinct.take(4)
+      val ends = Seq(name(102L), name(105L)) ++ drawn.flatMap {
+        case (a, b) => a.map(name).toSeq :+ name(b) }.distinct.take(4)
       val pairs = (for (a <- ends; b <- ends) yield (a, b)).toDF("s", "t")
       // the null id, when drawn, is also a source
       val srcs = (ends.map(Option(_)) ++
         es.find(_._1.isEmpty).map(_ => None)).toDF("id")
       val tgts = ends.reverse.toDF("id")
+      // one kernel in each mode per case
       same("shortestPathsPairs")(
           Traversals.shortestPathsPairs(g, pairs, 4, all = all)) &&
         same("shortestPathsFromTo")(Traversals.shortestPathsFromTo(
-          g, srcs, tgts, 4, undirected = true, all = all))
+          g, srcs, tgts, 4, undirected = true, all = !all))
+    }
+
+  property("dictionary ids: Spark's distinct ids in Spark's order") =
+    forAll(anyEdges) { drawn =>
+      val es = drawn.collect { case (Some(a), b) => (a, b) } :+
+        ((Long.MinValue, Long.MaxValue))
+      def inOrder[I](df: DataFrame)(implicit key: KernelGate.VertexKey[I]) = {
+        val ids = KernelGate("dictionary", spark)(
+          _.edges[I](df, "src", "dst", cache = false)).get.ids
+        val want = df.select(col("src").as("v"))
+          .union(df.select(col("dst").as("v")))
+          .distinct().orderBy("v").collect().map(_.get(0))
+        (ids.map(_.toString).toSeq == want.map(_.toString).toSeq) :|
+          s"dictionary ${ids.mkString(",")}, Spark ${want.mkString(",")}"
+      }
+      inOrder[Long](es.toDF("src", "dst")) && inOrder[UTF8String](
+        es.map { case (a, b) => (name(a), name(b)) }.toDF("src", "dst"))
     }
 
   property("bound = m engages a kernel, bound = m − 1 declines it") =

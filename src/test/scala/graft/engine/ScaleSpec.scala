@@ -230,11 +230,10 @@ class ScaleSpec extends SparkSpec {
     def collectTop(edges: org.apache.spark.sql.DataFrame) =
       GraphXBridge.topLinkPredictions(edges, k = 25).collect()
         .map(_.toSeq).toSeq
-    def bucketed(edges: org.apache.spark.sql.DataFrame) = {
-      spark.conf.set(GraphXBridge.LinkPredBucketsKey, "4")
-      try collectTop(edges)
-      finally spark.conf.unset(GraphXBridge.LinkPredBucketsKey)
-    }
+    // the distributed plan, forced to 4 passes
+    def bucketed(edges: org.apache.spark.sql.DataFrame) =
+      withKernelBound("0")(
+        GraphXBridge.linkPredPasses.withValue(4)(collectTop(edges)))
     val singleP = collectTop(packEdges)
     assert(singleP.size == 25 && bucketed(packEdges) == singleP)
     val singleS = collectTop(strEdges)
@@ -264,11 +263,9 @@ class ScaleSpec extends SparkSpec {
       GraphXBridge.edgeTriangleSupport(e).collect().map(_.toSeq).toSet
     def truss(e: org.apache.spark.sql.DataFrame) =
       GraphXBridge.kTruss(e, k = 3).collect().map(_.toSeq).toSet
-    def forced[T](body: => T): T = {
-      spark.conf.set(GraphXBridge.TriSupportBucketsKey, "3")
-      try body
-      finally spark.conf.unset(GraphXBridge.TriSupportBucketsKey)
-    }
+    // the distributed plan, forced to 3 passes
+    def forced[T](body: => T): T =
+      withKernelBound("0")(GraphXBridge.triSupportPasses.withValue(3)(body))
     val single = sup(longEdges)
     assert(single.exists(r => r.last.asInstanceOf[Long] > 0L) &&
       single.size == base.size)
@@ -277,6 +274,20 @@ class ScaleSpec extends SparkSpec {
     assert(forced(sup(strEdges)) == singleS)
     val trussSingle = truss(longEdges)
     assert(trussSingle.nonEmpty && forced(truss(longEdges)) == trussSingle)
+  }
+
+  test("a cached kernel input weighs its dense edges: at least 8 B an " +
+      "edge") {
+    // more edges than the 1/64-of-budget floor every entry weighs covers
+    // at 8 B an edge, so only the dense form's own bytes pass
+    val m = math.max(50000L, SessionCache.Budget / 64 / 8 + 1)
+    val edges = spark.range(m)
+      .select(col("id").as("src"), (col("id") + 1).as("dst"))
+    SessionCache.clear(spark)
+    val dense = KernelGate("weigh", spark)(_.edges[Long](edges, "src", "dst"))
+    assert(dense.map(d => (d.m, d.n)) == Some((m.toInt, m.toInt + 1)))
+    val bytes = SessionCache.stats(spark).bytes
+    assert(bytes >= 8 * m, s"$bytes B cached for $m edges")
   }
 
   test("PackedKeyCountExec matches the generic aggregate exactly " +
