@@ -13,6 +13,7 @@ import org.apache.spark.sql.graft.shims
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 import graft.SparkEntry
+import graft.engine.SessionCache
 import graft.queries.QueryDef
 
 /** The probe harness for gate queries: where one gate's time goes, rep by
@@ -23,8 +24,10 @@ import graft.queries.QueryDef
   * `sfDir` defaults to `SPARK_GRAFT_SF_DIR` (as for Bench), `reps` to 3.
   * Every rep prints one summary line: wall, rows, jobs, stages, task run
   * and task CPU time (executor CPU is immune to hypervisor steal, the A/B
-  * signal on a noisy box), shuffle write and read, widest stage. Flags,
-  * anywhere on the line:
+  * signal on a noisy box), shuffle write and read, widest stage, and the
+  * growth of the session cache in entries and bytes (a kernel that
+  * leaves a persisted table behind shows there). Flags, anywhere on the
+  * line:
   *
   *  - `--set:k=v` sets a session conf for the run (repeatable), e.g.
   *    `--set:spark.sql.shuffle.partitions=256`.
@@ -62,15 +65,20 @@ object Probe {
       phasesMs.toSeq.sorted.map { case (k, v) => s"$k=${v}ms" }.mkString(" ")
   }
 
+  /** `cacheEntries` and `cacheBytes`: the growth of the session's
+    * [[graft.engine.SessionCache]] over the rep, so a gate that leaves a
+    * table behind shows in its line. */
   final case class Rep(wallS: Double, rows: Long, jobs: Int,
-      stages: Seq[Stage], batches: Seq[Batch]) {
+      stages: Seq[Stage], batches: Seq[Batch], cacheEntries: Int,
+      cacheBytes: Long) {
     def line(label: String): String =
       f"[probe] $label: $wallS%.2f s, $rows rows, $jobs jobs, " +
         f"${stages.size} stages, task run ${stages.map(_.runS).sum}%.1f s, " +
         f"task cpu ${stages.map(_.cpuS).sum}%.1f s, " +
         f"shuffle write ${stages.map(_.shuffleWrite).sum / 1e6}%.1f MB, " +
         f"read ${stages.map(_.shuffleRead).sum / 1e6}%.1f MB, " +
-        s"widest stage ${(stages.map(_.tasks) :+ 0).max} tasks"
+        s"widest stage ${(stages.map(_.tasks) :+ 0).max} tasks, " +
+        f"cache $cacheEntries%+d entries ${cacheBytes / 1e6}%+.1f MB"
   }
 
   /** What the probe saw of one gate: its reps and, with `--ab`, the
@@ -166,11 +174,14 @@ object Probe {
     q.stage.foreach(_(spark, a.dir)) // fixture staging, untimed
     def reps(label: String): Seq[Rep] = (1 to a.reps).map { i =>
       meter.take()
+      val c0 = SessionCache.stats(spark)
       val t0 = System.nanoTime()
       val rows = q.run(spark, a.dir).count()
       val wallS = (System.nanoTime() - t0) / 1e9
       val (jobs, stages, batches) = meter.take()
-      val r = Rep(wallS, rows, jobs, stages, batches)
+      val c1 = SessionCache.stats(spark)
+      val r = Rep(wallS, rows, jobs, stages, batches,
+        c1.entries - c0.entries, c1.bytes - c0.bytes)
       if (a.stages) (stages ++ batches).foreach(println)
       println(r.line(s"${q.name} rep$i$label"))
       r

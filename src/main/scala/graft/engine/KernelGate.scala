@@ -32,17 +32,23 @@ import org.apache.spark.unsafe.types.UTF8String
   * Probes. An edge frame is counted first and then collected by Spark's
   * parallel collect: a `limit(bound + 1)` collect would funnel every
   * row through one task and one driver decode thread (measured ~1 s for
-  * the 1.2M-edge sf0.1 co-purchase graph). The count is kept per session
-  * on the frame's plan ([[SessionCache]]; kernel inputs are immutable
-  * within a session), so an over-bound graph costs one count per
-  * session. Small endpoint and pair lists take one `limit(bound + 1)`
-  * job instead, which saves a scheduled job at their size.
+  * the 1.2M-edge sf0.1 co-purchase graph). The count of a cached input
+  * is kept per session on the frame's plan ([[SessionCache]]; kernel
+  * inputs are immutable within a session), so an over-bound graph costs
+  * one count per session. Small endpoint and pair lists take one
+  * `limit(bound + 1)` job instead, which saves a scheduled job at their
+  * size.
   *
   * Caching. Every input is read as raw `UnsafeRow`s, with no external
-  * `Row` conversion. An edge frame's [[DenseEdges]] is kept per plan in
-  * [[SessionCache]] (the six gates over the co-purchase graph share one)
-  * unless the caller opts out, as the path kernels and StarCC do: their
-  * frames are new on every call.
+  * `Row` conversion. An edge frame's count and [[DenseEdges]] are kept
+  * per plan in [[SessionCache]] (the six gates over the co-purchase
+  * graph share one) unless the caller opts out, as the path kernels and
+  * StarCC do: their frames are new on every call, so nothing of them is
+  * kept. A kernel collects its input as it is, unshuffled: a persisted
+  * or repartitioned copy of an edge table is an input of distributed
+  * legs only (the path kernels read the plain forward hop edges and
+  * symmetrize them on the driver; [[Traversals]]' partitioned edge
+  * table feeds only its frontier loops).
   */
 private[graft] object KernelGate {
 
@@ -77,20 +83,21 @@ private[graft] object KernelGate {
     /** Column `ord` of every row. */
     private[KernelGate] def column(rows: Array[InternalRow], ord: Int)
         : Array[I]
-    /** The distinct values of `a` ∪ `b` in Spark's order. */
-    private[KernelGate] def dictionary(a: Array[I], b: Array[I]): Array[I]
-    /** Index of `id` in `ids` (as [[dictionary]] returns it), negative
+    /** The distinct values of `a` ∪ `b` in Spark's order, and the
+      * index in them of each value of `a` and of `b`. */
+    private[KernelGate] def dense(a: Array[I], b: Array[I])
+        : (Array[I], Array[Int], Array[Int])
+    /** Index of `id` in `ids` (as [[dense]] returns them), negative
       * when absent. */
     private[KernelGate] def search(ids: Array[I], id: I): Int
     private[KernelGate] def bytes(ids: Array[I]): Long
+  }
 
-    /** Indices of `a`'s values in `ids`, which holds them all. */
-    private[KernelGate] def indices(ids: Array[I], a: Array[I]): Array[Int] = {
-      val out = new Array[Int](a.length)
-      IntStream.range(0, a.length).parallel()
-        .forEach(i => out(i) = search(ids, a(i)))
-      out
-    }
+  /** `f` of every element of `a`, in parallel. */
+  private def parallelMap[I](a: Array[I])(f: I => Int): Array[Int] = {
+    val out = new Array[Int](a.length)
+    IntStream.range(0, a.length).parallel().forEach(i => out(i) = f(a(i)))
+    out
   }
 
   /** Integral columns cast to long, in numeric order. */
@@ -107,7 +114,7 @@ private[graft] object KernelGate {
       while (i < rows.length) { out(i) = rows(i).getLong(ord); i += 1 }
       out
     }
-    private[KernelGate] def dictionary(a: Array[Long], b: Array[Long]) = {
+    private[KernelGate] def dense(a: Array[Long], b: Array[Long]) = {
       val all = a ++ b
       java.util.Arrays.parallelSort(all)
       var n = 0
@@ -116,7 +123,8 @@ private[graft] object KernelGate {
         if (n == 0 || all(i) != all(n - 1)) { all(n) = all(i); n += 1 }
         i += 1
       }
-      java.util.Arrays.copyOf(all, n)
+      val ids = java.util.Arrays.copyOf(all, n)
+      (ids, parallelMap(a)(search(ids, _)), parallelMap(b)(search(ids, _)))
     }
     private[KernelGate] def search(ids: Array[Long], id: Long) =
       java.util.Arrays.binarySearch(ids, id)
@@ -133,17 +141,20 @@ private[graft] object KernelGate {
     private[KernelGate] def cast(c: Column) = c
     private[KernelGate] def column(rows: Array[InternalRow], ord: Int) =
       rows.map(_.getUTF8String(ord))
-    private[KernelGate] def dictionary(a: Array[UTF8String],
+    /** Hashes to the distinct ids, sorts only those, and maps every
+      * endpoint through the same hash map. */
+    private[KernelGate] def dense(a: Array[UTF8String],
         b: Array[UTF8String]) = {
-      val all = a ++ b
-      java.util.Arrays.parallelSort(all, order)
-      var n = 0
+      val index = new java.util.HashMap[UTF8String, Integer]()
+      val absent = Integer.valueOf(-1)
+      a.foreach(index.putIfAbsent(_, absent))
+      b.foreach(index.putIfAbsent(_, absent))
+      val ids = index.keySet.toArray(new Array[UTF8String](index.size))
+      java.util.Arrays.parallelSort(ids, order)
       var i = 0
-      while (i < all.length) {
-        if (n == 0 || all(i) != all(n - 1)) { all(n) = all(i); n += 1 }
-        i += 1
-      }
-      java.util.Arrays.copyOf(all, n)
+      while (i < ids.length) { index.put(ids(i), i); i += 1 }
+      (ids, parallelMap(a)(index.get(_).intValue),
+        parallelMap(b)(index.get(_).intValue))
     }
     private[KernelGate] def search(ids: Array[UTF8String], id: UTF8String) =
       java.util.Arrays.binarySearch(ids, id, order)
@@ -199,15 +210,16 @@ private[graft] object KernelGate {
       val proj = df.select(Seq(key.cast(col(src)), key.cast(col(dst))) ++
         weight.map(col(_).cast("double")) ++
         payload.map(col(_).cast("string")): _*)
-      if (!fits(counted.getOrElse(countOnce(proj)))) return None
+      val count =
+        counted.getOrElse(if (cache) countOnce(proj) else proj.count())
+      if (!fits(count)) return None
       def build(): DenseEdges[I] = {
         // one SQL execution, so the tasks see the session's conf
         val rs = shims.action(proj, "kernel.edges")(_.executeCollect())
         // a null read back as 0 or "" would invent a vertex
         if (rs.exists(_.anyNull)) return null
-        val s = key.column(rs, 0); val d = key.column(rs, 1)
-        val ids = key.dictionary(s, d)
-        new DenseEdges(ids, key.indices(ids, s), key.indices(ids, d),
+        val (ids, s, d) = key.dense(key.column(rs, 0), key.column(rs, 1))
+        new DenseEdges(ids, s, d,
           if (weight.isEmpty) null else rs.map(_.getDouble(2)),
           if (payload.isEmpty) null
           else StringIds.column(rs, 2 + weight.size), key)

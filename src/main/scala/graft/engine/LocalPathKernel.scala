@@ -12,11 +12,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * SF is ~30+ stages of job/planning latency over a warm 10–60 MB
   * partitioned-edge cache (measured r13: cy32 2.2 s, sp01 1.4 s clean)
   * — the data is tiny, the scheduling is not. When [[KernelGate]] admits
-  * the endpoint lists and the hop-edge list (collected from the same
-  * persisted cache the distributed path uses), BFS + path
-  * reconstruction run as driver array code and the result returns as
-  * one local relation. A declined gate or a work/output cap leaves the
-  * caller's distributed plan (the 100 TB path).
+  * the endpoint lists and the forward hop-edge list (collected as it
+  * is: no shuffle, no persisted copy; an undirected query's reverse
+  * edges are added on the driver), BFS + path reconstruction run as
+  * driver array code and the result returns as one local relation. A
+  * declined gate or a work/output cap leaves the caller's distributed
+  * plan (the 100 TB path), which builds its own partitioned table.
   *
   * Determinism contract (must match the distributed engines bit for
   * bit; pinned kernel-vs-distributed in TraversalSpec and
@@ -33,8 +34,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *    (parallel edges stay distinct by edge id);
   *  - self pairs (source == target) emit (id, id, [id], [], 0) exactly
   *    like the engines' `__a === __b` branch; unreachable pairs emit
-  *    nothing. The gate's dense edges are built from the input on
-  *    every call; only its edge count is cached.
+  *    nothing. The gate's dense edges and the CSR are built from the
+  *    input on every call; nothing of it is cached.
   */
 private[graft] object LocalPathKernel {
 
@@ -45,51 +46,78 @@ private[graft] object LocalPathKernel {
   private val MaxWork = 64000000L
   private val MaxOutputRows = 1000000
 
-  /** The hop-edge graph: `ids` in Spark's string order (dense idx
-    * order); CSR adjacency whose entry k is the edge (src=segment owner,
-    * dst=adjV(k), id=eids(k)). */
-  private final class G(val ids: Array[UTF8String], val off: Array[Int],
-      val adjV: Array[Int], val eids: Array[UTF8String]) {
-    def n: Int = ids.length
+  /** The hop-edge graph over the gate's dense ids `d` (dense index order
+    * is Spark's string order); CSR adjacency whose entry k is the edge
+    * (src=segment owner, dst=adjV(k), id=eids(k)). */
+  private final class G(d: KernelGate.DenseEdges[UTF8String],
+      val off: Array[Int], val adjV: Array[Int], val eids: Array[UTF8String]) {
+    def ids: Array[UTF8String] = d.ids
+    def n: Int = d.n
+    def indexOf(id: UTF8String): Int = d.indexOf(id)
   }
 
-  /** The directed CSR of the gate's (src, dst, eid) hop edges, with
-    * duplicate triples dropped, matching the engines' per-group
-    * `collect_set` dedup: edges sorted by (src, dst, eid) in parallel
-    * are already grouped by src, so the CSR fill is one pass. */
-  private def buildGraph(d: KernelGate.DenseEdges[UTF8String]): G = {
+  /** The directed CSR of the gate's (src, dst, eid) hop edges, each
+    * also as (dst, src, eid) when `undirected`, with duplicate triples
+    * dropped, matching the engines' per-group `collect_set` dedup (a
+    * self-loop's two directions are one triple). A counting sort on src
+    * places the entries; each adjacency segment is then sorted by
+    * (dst, eid) in place, so duplicates sit side by side. */
+  private def buildGraph(d: KernelGate.DenseEdges[UTF8String],
+      undirected: Boolean): G = {
     val m0 = d.m
-    val src = d.src; val dst = d.dst; val eid = d.payload
-    val order = new Array[Integer](m0)
-    java.util.stream.IntStream.range(0, m0).parallel()
-      .forEach(k => order(k) = Integer.valueOf(k))
-    java.util.Arrays.parallelSort(order,
-      new java.util.Comparator[Integer] {
-        def compare(x: Integer, y: Integer): Int = {
-          val a = x.intValue; val b = y.intValue
-          if (src(a) != src(b)) Integer.compare(src(a), src(b))
-          else if (dst(a) != dst(b)) Integer.compare(dst(a), dst(b))
-          else eid(a).binaryCompare(eid(b))
-        }
-      })
+    val m = if (undirected) 2 * m0 else m0
+    // entry k < m0 is edge k forward, entry m0 + k edge k backward
+    def from(k: Int) = if (k < m0) d.src(k) else d.dst(k - m0)
+    def to(k: Int) = if (k < m0) d.dst(k) else d.src(k - m0)
+    def eid(k: Int) = d.payload(if (k < m0) k else k - m0)
     val off = new Array[Int](d.n + 1)
-    val adjV = new Array[Int](m0)
-    val eids = new Array[UTF8String](m0)
-    var m = 0
     var k = 0
-    while (k < m0) {
-      val cur = order(k).intValue
-      val prev = if (k == 0) -1 else order(k - 1).intValue
-      if (prev < 0 || src(cur) != src(prev) || dst(cur) != dst(prev) ||
-          eid(cur) != eid(prev)) {
-        off(src(cur) + 1) += 1
-        adjV(m) = dst(cur); eids(m) = eid(cur); m += 1
-      }
-      k += 1
-    }
+    while (k < m) { off(from(k) + 1) += 1; k += 1 }
     var j = 0
     while (j < d.n) { off(j + 1) += off(j); j += 1 }
-    new G(d.ids, off, adjV, eids)
+    // (dst << 32 | entry) in src segments; sorting a segment orders it
+    // by dst, leaving only parallel edges (runs of one dst) to order
+    val packed = new Array[Long](m)
+    val fill = java.util.Arrays.copyOf(off, d.n)
+    k = 0
+    while (k < m) {
+      val u = from(k)
+      packed(fill(u)) = (to(k).toLong << 32) | k
+      fill(u) += 1
+      k += 1
+    }
+    val byEid: java.util.Comparator[java.lang.Long] =
+      (x, y) => eid(x.intValue).binaryCompare(eid(y.intValue))
+    val adjV = new Array[Int](m)
+    val eids = new Array[UTF8String](m)
+    var w = 0 // entries kept; segments compact left in place
+    j = 0
+    while (j < d.n) {
+      val lo = off(j); val hi = off(j + 1)
+      off(j) = w
+      java.util.Arrays.sort(packed, lo, hi)
+      var a = lo
+      while (a < hi) {
+        val v = (packed(a) >>> 32).toInt
+        var b = a + 1
+        while (b < hi && (packed(b) >>> 32).toInt == v) b += 1
+        if (b - a > 1) {
+          val run = packed.slice(a, b).map(java.lang.Long.valueOf)
+          java.util.Arrays.sort(run, byEid)
+          run.indices.foreach(r => packed(a + r) = run(r))
+        }
+        var r = a
+        while (r < b) {
+          val e = eid(packed(r).toInt)
+          if (r == a || e != eids(w - 1)) { adjV(w) = v; eids(w) = e; w += 1 }
+          r += 1
+        }
+        a = b
+      }
+      j += 1
+    }
+    off(d.n) = w
+    new G(d, off, adjV, eids)
   }
 
   private type OutRow = (String, String, Seq[String], Seq[String], Long)
@@ -225,10 +253,16 @@ private[graft] object LocalPathKernel {
     rows.toSeq.toDF("__a", "__b", "path", "epath", "length")
   }
 
-  /** The (eid, src, dst) hop edges as dense ids, with the eid as
-    * payload; uncached, the frame is new on every call. */
-  private def hopEdges(in: KernelGate.Inputs, edges: DataFrame) =
+  /** The (eid, src, dst) hop edges as a CSR over dense ids, with the
+    * eid as payload; uncached, the frame is new on every call. */
+  private def hopGraph(in: KernelGate.Inputs, edges: DataFrame,
+      undirected: Boolean): Option[G] =
     in.edges[UTF8String](edges, payload = Some("eid"), cache = false)
+      .flatMap { d =>
+        if (undirected && d.m > Int.MaxValue / 2)
+          in.decline("too many edges to symmetrize")
+        else Some(buildGraph(d, undirected))
+      }
 
   private def selfRow(id: UTF8String): OutRow = {
     val s = id.toString
@@ -236,19 +270,18 @@ private[graft] object LocalPathKernel {
   }
 
   /** Kernel for [[Traversals.shortestPathsFromTo]]: every (source,
-    * target) pair, self rows included. `edges`: the hop-edge frame
-    * (eid, src, dst) — pass the shared partitioned cache so the collect
-    * and any distributed fallback read the same persisted table. */
-  def fromTo(edges: => DataFrame, srcs: DataFrame, tgts: DataFrame,
-      maxDepth: Int, all: Boolean): Option[DataFrame] = {
+    * target) pair, self rows included. `edges`: the forward hop-edge
+    * frame (eid, src, dst), read once as it is; with `undirected` the
+    * kernel adds each edge's reverse itself. */
+  def fromTo(edges: DataFrame, undirected: Boolean, srcs: DataFrame,
+      tgts: DataFrame, maxDepth: Int, all: Boolean): Option[DataFrame] = {
     val spark = srcs.sparkSession
     KernelGate("paths.fromTo", spark) { in =>
       for {
         srcL <- in.list[UTF8String](srcs)
         tgtL <- in.list[UTF8String](tgts)
-        d <- hopEdges(in, edges)
+        g <- hopGraph(in, edges, undirected)
         result <- {
-          val g = buildGraph(d)
           val out = new scala.collection.mutable.ArrayBuffer[OutRow]()
           // dedup driver-side (the engines dropDuplicates)
           val srcIds = srcL.head.distinct
@@ -259,14 +292,14 @@ private[graft] object LocalPathKernel {
           // (runBfs only reads the set); a source that is itself a target
           // gets a copy with itself removed
           val tgtIdx = new java.util.HashSet[Integer]()
-          tgtSet.map(d.indexOf).filter(_ >= 0).foreach(tgtIdx.add(_))
+          tgtSet.map(g.indexOf).filter(_ >= 0).foreach(tgtIdx.add(_))
           def targetsOf(s: Int): java.util.HashSet[Integer] =
             if (tgtIdx.contains(s)) {
               val set = new java.util.HashSet[Integer](tgtIdx)
               set.remove(Integer.valueOf(s))
               set
             } else tgtIdx
-          if (runBfs(g, srcIds.map(d.indexOf).filter(_ >= 0), targetsOf,
+          if (runBfs(g, srcIds.map(g.indexOf).filter(_ >= 0), targetsOf,
               maxDepth, all, out))
             Some(toDf(spark, out))
           else in.decline("work or output cap")
@@ -277,17 +310,16 @@ private[graft] object LocalPathKernel {
 
   /** Kernel for [[Traversals.shortestPathsPairs]]: explicit (source,
     * target) pair list, deduped driver-side exactly like the engine's
-    * dropDuplicates. */
-  def pairsPaths(edges: => DataFrame, pairs: DataFrame, maxDepth: Int,
-      all: Boolean): Option[DataFrame] = {
+    * dropDuplicates; `edges` and `undirected` as for [[fromTo]]. */
+  def pairsPaths(edges: DataFrame, undirected: Boolean, pairs: DataFrame,
+      maxDepth: Int, all: Boolean): Option[DataFrame] = {
     val spark = pairs.sparkSession
     val pairProj = pairs.select(pairs.columns(0), pairs.columns(1))
     KernelGate("paths.pairs", spark) { in =>
       for {
         pairL <- in.list[UTF8String](pairProj)
-        d <- hopEdges(in, edges)
+        g <- hopGraph(in, edges, undirected)
         result <- {
-          val g = buildGraph(d)
           val out = new scala.collection.mutable.ArrayBuffer[OutRow]()
           val seenPair = new java.util.HashSet[(UTF8String, UTF8String)]()
           // per-source wanted target sets, in first-seen source order
@@ -298,7 +330,7 @@ private[graft] object LocalPathKernel {
             if (seenPair.add((a, b))) {
               if (a == b) out += selfRow(a)
               else {
-                val ai = d.indexOf(a); val bi = d.indexOf(b)
+                val ai = g.indexOf(a); val bi = g.indexOf(b)
                 if (ai >= 0 && bi >= 0) perSource.getOrElseUpdate(ai,
                   new java.util.HashSet[Integer]()).add(bi)
               }

@@ -90,16 +90,22 @@ object Traversals {
   /** Hop-edge table pre-partitioned by `src` and persisted by
     * [[SessionCache]], keyed by the canonicalized plan (same graph +
     * filter + direction → same entry); the registry bounds how many
-    * tables stay persisted and unpersists the ones it evicts.
+    * tables stay persisted and unpersists the ones it evicts. An input
+    * of the distributed legs only: the driver path kernels collect the
+    * unshuffled hop edges instead.
     *
     * Why: every per-hop `localCheckpoint` starts its OWN QueryExecution,
     * and exchange reuse never crosses QueryExecutions — so an N-hop
     * traversal used to re-shuffle the full edge table N times (measured:
     * 3 × 17.9 MB exchanges in one 4-hop allShortestPaths at sf0.1). With
-    * the edge side cached already hash-partitioned by the join key, and
-    * each frontier checkpoint explicitly co-partitioned on `id` (the
-    * LogicalRDD a checkpoint produces preserves its child's partitioning),
-    * hop joins need NO exchange on either side at any depth. */
+    * the edge side cached already hash-partitioned by the join key, a
+    * hop join needs no edge-side exchange once the table is
+    * materialized (a hop planned before that shuffles it once more).
+    * The frontier side keeps its explicit partitioning on `id` only
+    * under static planning ([[bfs]], [[paths]]): under AQE, as the
+    * pairs/tree engines plan, a lazy local checkpoint's LogicalRDD
+    * reports UnknownPartitioning, so each of their hops re-shuffles its
+    * frontier onto `id` (checked by printing each hop's plan). */
   private def partitionedEdges(df: DataFrame): DataFrame = {
     val n = traversalPartitions(df.sparkSession)
     SessionCache.ofPlan("traversal.edges", df, persist = true) {
@@ -203,13 +209,13 @@ object Traversals {
   def shortestPathsPairs(g: GraphState, pairs: DataFrame, maxDepth: Int,
       edgeTypes: Seq[String] = Nil, undirected: Boolean = false,
       all: Boolean = false): DataFrame = {
-    // small graphs (r14): driver BFS kernel — the frontier loop's cost
-    // at bench SF is job/planning latency, not data (guide §8); above
-    // the shared size bound the distributed engines below are the
-    // unchanged 100 TB path
-    LocalPathKernel.pairsPaths(
-        partitionedEdges(hopEdges(g, edgeTypes, undirected)),
-        pairs, maxDepth, all).getOrElse {
+    // small graphs (r14): driver BFS kernel over the plain forward hop
+    // edges — the frontier loop's cost at bench SF is job/planning
+    // latency, not data (guide §8); above the shared size bound the
+    // distributed engines below, each with its partitioned edge table,
+    // are the unchanged 100 TB path
+    LocalPathKernel.pairsPaths(hopEdges(g, edgeTypes, undirected = false),
+        undirected, pairs, maxDepth, all).getOrElse {
       if (maxDepth <= LazyUnrollDepth)
         shortestPathsPairsLazy(g, pairs, maxDepth, edgeTypes, undirected, all)
       else pairsEager(g, pairs, maxDepth, edgeTypes, undirected, all)
@@ -245,7 +251,9 @@ object Traversals {
       .dropDuplicates("source")
       .select(col("source"), col("source").as("id"), lit(0).as("depth"),
         emptyPreds.as("preds"))
-      .repartition(n, col("id")) // co-partition with the edge cache
+      // the AQE-planned checkpoint drops this partitioning: hop 1's join
+      // shuffles the frontier onto `id` again (see spHop)
+      .repartition(n, col("id"))
       .localCheckpoint(eager = false) // materializes inside hop 1's job
     var frontier = visited.select("source", "id")
     var foundParts = List.empty[DataFrame]
@@ -303,9 +311,10 @@ object Traversals {
     * (source, id, depth, preds ARRAY<STRUCT<pred,prededge>>) with one row
     * per (source, reached vertex) at its MINIMAL depth (sources at 0,
     * empty preds). The edge side is the shared [[partitionedEdges]]
-    * cache and each hop checkpoint is explicitly partitioned on its join
-    * key, so a hop's QueryExecution has exactly one (tiny) exchange —
-    * the full edge table is never re-shuffled. No per-hop hit
+    * cache, so once it is materialized a hop re-shuffles only frontier-
+    * sized data (its `dst` repartition and, because the AQE-planned
+    * checkpoint loses that partitioning, its join on `id`; see
+    * [[spHop]]), never the full edge table. No per-hop hit
     * extraction / target retirement: the lazy unroll runs all maxDepth
     * hops regardless, so retirement bookkeeping (formerly 3 joins + 2
     * checkpoints per hop) bought nothing — callers join targets against
@@ -343,10 +352,13 @@ object Traversals {
     * vertex, then min edge); `all` mode keeps EVERY minimal one, sorted
     * for a deterministic reconstruction order.
     *
-    * The explicit repartition on `dst` is the hop's one exchange: it
-    * satisfies the (source, dst) grouping (subset clustering) AND —
-    * renamed to `id` and preserved through the checkpoint — the next
-    * hop's join key against the edge cache.
+    * The explicit repartition on `dst` satisfies the (source, dst)
+    * grouping (subset clustering). It does not reach the next hop:
+    * planned under AQE, the lazy checkpoint's LogicalRDD reports
+    * UnknownPartitioning, so the next hop's join inserts a second,
+    * frontier-sized exchange on `id` (checked by printing each hop's
+    * plan at bound 0). The edge cache is not re-shuffled once
+    * materialized.
     *
     * Every hop is a lineage cut. A frontier frame has two consumers
     * (the next hop's join and the visited union read by every later
@@ -467,9 +479,8 @@ object Traversals {
       .localCheckpoint(eager = false)
     // small graphs (r14): driver BFS kernel (see shortestPathsPairs);
     // the probes materialize the endpoint checkpoints either way
-    LocalPathKernel.fromTo(
-        partitionedEdges(hopEdges(g, edgeTypes, undirected)),
-        srcs, tgts, maxDepth, all).getOrElse {
+    LocalPathKernel.fromTo(hopEdges(g, edgeTypes, undirected = false),
+        undirected, srcs, tgts, maxDepth, all).getOrElse {
       val self = srcs.join(tgts, col("__a") === col("__b"))
         .select(col("__a"), col("__b"), array(col("__a")).as("path"),
           array().cast("array<string>").as("epath"), lit(0L).as("length"))
@@ -510,7 +521,9 @@ object Traversals {
     var visited = srcs.select(col("__a").as("source"))
       .select(col("source"), col("source").as("id"), lit(0).as("depth"),
         emptyPreds.as("preds"))
-      .repartition(n, col("id")) // co-partition with the edge cache
+      // the AQE-planned checkpoint drops this partitioning: hop 1's join
+      // shuffles the frontier onto `id` again (see spHop)
+      .repartition(n, col("id"))
       .localCheckpoint(eager = false) // materializes inside hop 1's job
     var frontier = visited.select("source", "id")
     var depth = 0

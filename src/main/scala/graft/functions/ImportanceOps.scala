@@ -44,9 +44,11 @@ object ImportanceOps {
     * as SQL sum, and the score join reads the histogram back as a
     * broadcast local relation — so the only cluster work is the matrix
     * aggregation and the per-doc score sum (two jobs, vs the former
-    * three corpus passes). At 100 TB the per-term products approach
-    * 2⁶³ — widen the sum to DECIMAL(38,0) there; at gate scale BIGINT
-    * is exact (the c[d,b] factor tightens the bound vs the
+    * three corpus passes). At 100 TB the totals and per-term products
+    * approach 2⁶³. Past it the query fails loudly instead of wrapping:
+    * the SQL sums under ANSI mode, the driver fold of the totals through
+    * [[exactSum]]. DECIMAL(38,0) sums would lift that limit; at gate
+    * scale BIGINT is exact (the c[d,b] factor tightens the bound vs the
     * per-instance form by the same factor it saves).
     *
     * Returns (doc_id, score). */
@@ -69,9 +71,9 @@ object ImportanceOps {
       .collect() // bounded: ≤ buckets rows
     // driver fold == SQL sum over the histogram: nulls skipped (t_cnt
     // is null only for a bucket whose every doc has a null target flag)
-    val rTot = stat.map(_.getLong(1)).sum
-    val tTot = stat.flatMap(r => if (r.isNullAt(2)) None
-      else Some(r.getLong(2))).sum
+    val rTot = exactSum(stat.map(_.getLong(1)))
+    val tTot = exactSum(stat.flatMap(r => if (r.isNullAt(2)) None
+      else Some(r.getLong(2))))
     import org.apache.spark.sql.types._
     val statsDf = spark.createDataFrame(
       new java.util.ArrayList(java.util.Arrays.asList(stat: _*)),
@@ -84,6 +86,11 @@ object ImportanceOps {
           (col("t_cnt") * lit(rTot) - col("r_cnt") * lit(tTot)))
         .as("score"))
   }
+
+  /** The sum of `xs`, throwing `ArithmeticException` past the BIGINT
+    * range as ANSI SQL's `sum` does, instead of wrapping. */
+  private[functions] def exactSum(xs: Iterable[Long]): Long =
+    xs.foldLeft(0L)(Math.addExact)
 
   /** The repo's portable integer-from-hash: first 8 hex chars of md5,
     * as a BIGINT (DuckDB: `('0x' || substr(md5(x),1,8))::BIGINT`). */

@@ -16,6 +16,17 @@ class ProbeSpec extends SparkSpec {
     assert(r.reps.head.rows == r.abReps.head.rows && r.reps.head.rows > 0)
   }
 
+  test("each rep line prints the session cache's growth") {
+    val out = new java.io.ByteArrayOutputStream()
+    val Seq(r) = Console.withOut(out)(probe("sp01_shortest_paths"))
+    val rep = r.reps.head
+    val line = out.toString("UTF-8").linesIterator
+      .find(_.startsWith("[probe] sp01_shortest_paths rep1"))
+    assert(line.exists(_.endsWith(
+      f", cache ${rep.cacheEntries}%+d entries " +
+        f"${rep.cacheBytes / 1e6}%+.1f MB")), line)
+  }
+
   test("--stages records each micro-batch's phases for a streaming gate") {
     val Seq(r) = probe("st05_stream_stream_join", "--stages")
     val rep = r.reps.head

@@ -119,26 +119,33 @@ object KernelGatePropertySpec extends Properties("KernelGate") {
   property("path kernels: kernel on ≡ bound 0") =
     forAll(anyEdges, Gen.oneOf(false, true)) { (drawn, all) =>
       // three more copies of a non-loop edge: parallel edges whose ids
-      // take all three marks; and a diamond 102 → {😀100, ｚ101} → 105,
+      // take all three marks; a diamond 102 → {😀100, ｚ101} → 105,
       // whose single shortest path runs through the pred that comes
-      // first in Spark's order, ｚ101
+      // first in Spark's order, ｚ101; and 105 ⇄ 103 drawn both ways
+      // under two eids, which undirected hops see as parallel edges
       val diamond = Seq((102L, 100L), (102L, 101L), (100L, 105L),
-        (101L, 105L)).map { case (a, b) => (Option(a), b) }
+        (101L, 105L), (105L, 103L), (103L, 105L))
+        .map { case (a, b) => (Option(a), b) }
       val es = drawn ++ drawn.find { case (a, b) => a.exists(_ != b) }
         .toSeq.flatMap(Seq.fill(3)(_)) ++ diamond
       val g = graph(es, Nil)
-      val ends = Seq(name(102L), name(105L)) ++ drawn.flatMap {
+      val ends = Seq(name(102L), name(105L), name(103L)) ++ drawn.flatMap {
         case (a, b) => a.map(name).toSeq :+ name(b) }.distinct.take(4)
       val pairs = (for (a <- ends; b <- ends) yield (a, b)).toDF("s", "t")
       // the null id, when drawn, is also a source
       val srcs = (ends.map(Option(_)) ++
         es.find(_._1.isEmpty).map(_ => None)).toDF("id")
       val tgts = ends.reverse.toDF("id")
-      // one kernel in each mode per case
-      same("shortestPathsPairs")(
-          Traversals.shortestPathsPairs(g, pairs, 4, all = all)) &&
-        same("shortestPathsFromTo")(Traversals.shortestPathsFromTo(
-          g, srcs, tgts, 4, undirected = true, all = !all))
+      // both kernels in both directions, the drawn mode for pairs and
+      // the other for from-to
+      Seq(false, true).map { undirected =>
+        same(s"shortestPathsPairs undirected=$undirected")(
+            Traversals.shortestPathsPairs(g, pairs, 4,
+              undirected = undirected, all = all)) &&
+          same(s"shortestPathsFromTo undirected=$undirected")(
+            Traversals.shortestPathsFromTo(g, srcs, tgts, 4,
+              undirected = undirected, all = !all))
+      }.reduce(_ && _)
     }
 
   property("dictionary ids: Spark's distinct ids in Spark's order") =

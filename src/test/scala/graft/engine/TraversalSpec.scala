@@ -1,6 +1,7 @@
 package graft.engine
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.testShims
 
 import graft.SparkSpec
 import graft.SparkSpec.withKernelBound
@@ -450,6 +451,31 @@ class TraversalSpec extends SparkSpec {
     val default = paths()
     assert(default.nonEmpty)
     assert(withKernelBound(Int.MaxValue.toString)(paths()) == default)
+  }
+
+  test("the path kernels leave nothing cached; their distributed legs " +
+      "build the partitioned edge table") {
+    import spark.implicits._
+    val g = GraphState(
+      vertexDf(("k1", "t", Map.empty), ("k2", "t", Map.empty),
+        ("k3", "t", Map.empty)),
+      edgeDf(("f1", "k1", "k2", "r"), ("f2", "k3", "k2", "r")))
+    def run(): Unit = {
+      Traversals.shortestPathsPairs(g, Seq(("k1", "k3")).toDF("s", "t"), 4,
+        undirected = true).collect()
+      Traversals.shortestPathsFromTo(g, srcDf("k1"), srcDf("k3"), 4,
+        undirected = true).collect()
+    }
+    // no entry of the session, so no eviction can hide a new one
+    SessionCache.clear(spark)
+    def state() = (SessionCache.stats(spark), testShims.cachedFrames(spark))
+    val before = state()
+    run()
+    assert(state() == before)
+    withKernelBound("0")(run())
+    val (stats, frames) = state()
+    assert(stats.entries == before._1.entries + 1)
+    assert(frames == before._2 + 1)
   }
 
   test("a non-numeric kernel bound fails naming the key") {

@@ -363,6 +363,19 @@ class DedupSpec extends SparkSpec {
     assert(matrixForm.keySet == Set(1L, 2L, 3L, 4L, 5L, 6L))
   }
 
+  test("hashedNgramImportance's driver fold fails loudly past 2⁶³") {
+    assert(ImportanceOps.exactSum(Seq(Long.MaxValue - 1, 1L)) == Long.MaxValue)
+    assert(ImportanceOps.exactSum(Seq(Long.MaxValue, -1L, 1L)) ==
+      Long.MaxValue)
+    assert(ImportanceOps.exactSum(Nil) == 0L)
+    intercept[ArithmeticException](
+      ImportanceOps.exactSum(Seq(Long.MaxValue, 1L)))
+    intercept[ArithmeticException](
+      ImportanceOps.exactSum(Seq(Long.MaxValue, Long.MaxValue, -1L)))
+    intercept[ArithmeticException](
+      ImportanceOps.exactSum(Seq(Long.MinValue, -1L)))
+  }
+
   test("containmentPairs flags asymmetric subset pairs Jaccard misses") {
     import spark.implicits._
     // doc 1 (4 trigram shingles) is quoted VERBATIM inside doc 2 (12
