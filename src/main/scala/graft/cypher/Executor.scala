@@ -390,7 +390,7 @@ object Cypher {
             .withColumn(s"${vName}__props",
               if (propCols.isEmpty)
                 map().cast("map<string,string>")
-              else map(propCols: _*)))
+              else map(propCols: _*))).frame
           frame = Compiler.Frame(df2,
             frame.vars + (vName -> Compiler.NodeVar))
           val newVerts = df2.select(
@@ -419,7 +419,7 @@ object Cypher {
               .withColumn(s"${rv}__src", col(s"${srcV}__id"))
               .withColumn(s"${rv}__dst", col(s"${dstV}__id"))
               .withColumn(s"${rv}__type", lit(t))
-              .withColumn(s"${rv}__props", propsCol))
+              .withColumn(s"${rv}__props", propsCol)).frame
             frame = Compiler.Frame(df2,
               frame.vars + (rv -> Compiler.RelVar))
             st = st.upsertEdges(df2.select(

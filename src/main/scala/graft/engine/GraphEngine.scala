@@ -4,7 +4,7 @@ import scala.util.DynamicVariable
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.graft.shims
+import org.apache.spark.sql.graft.{shims, KeyLookup, KeyTable}
 import org.apache.spark.sql.functions._
 
 import graft.ir._
@@ -18,10 +18,14 @@ import graft.ir._
   * A mutation is applied once, when it is called: its delta (the new
   * rows, the victim ids or keys, or the per-id property map) is
   * evaluated by [[GraphState.pin]], and the new snapshot is the parent
-  * plus one broadcast-sized anti-join or left join against that pinned
-  * delta. Each snapshot therefore references its parent exactly once,
-  * and a read after N writes runs the base scan once plus N small join
-  * layers instead of replaying the write history.
+  * plus one layer over that pinned delta. A delta small enough to sit
+  * on the driver makes the layer an expression over the parent: a
+  * key-set filter for inserts and deletes, a literal `id → __delta`
+  * lookup for rewrites, nothing at all when the delta is empty. A
+  * larger delta is joined (anti-join or left join). Each snapshot
+  * therefore references its parent exactly once, and a read after N
+  * writes runs the base scan once plus N small layers instead of
+  * replaying the write history.
   *
   * Scale notes: at 100 TB, `vertices` and `edges` are partitioned Parquet;
   * every operator below is a narrow filter or an equi-join on the
@@ -29,68 +33,61 @@ import graft.ir._
   * pruned scans and AQE picks broadcast vs shuffle joins by actual sizes.
   */
 final case class GraphState(vertices: DataFrame, edges: DataFrame) {
-  import GraphState.pin
+  import GraphState.{Pinned, pin}
+
+  private val edgeKey = Seq("src", "edge_type", "dst")
 
   // ---------- mutations (snapshot-in / snapshot-out) ----------
 
   /** Append vertices; last-write-wins on id (reference create_vertex
     * returns false on duplicate — we keep newest, deterministic). */
-  def upsertVertices(vs: DataFrame): GraphState = {
-    val add = pin("upsertVertices", vs)
-    copy(vertices = add.unionByName(
-      vertices.join(add.select("id"), Seq("id"), "left_anti")))
-  }
+  def upsertVertices(vs: DataFrame): GraphState =
+    copy(vertices = pin("upsertVertices", vs, Seq("id")).upsert(vertices))
 
-  def upsertEdges(es: DataFrame): GraphState = {
-    val add = pin("upsertEdges", es)
-    copy(edges = add.unionByName(
-      edges.join(add.select("src", "edge_type", "dst"),
-        Seq("src", "edge_type", "dst"), "left_anti")))
-  }
+  def upsertEdges(es: DataFrame): GraphState =
+    copy(edges = pin("upsertEdges", es, edgeKey).upsert(edges))
 
   /** Edge insert validated against both endpoint vertices
-    * (reference: rdb/datastore.rs:272-281) — left-semi joins. */
+    * (reference: rdb/datastore.rs:272-281) — left-semi joins, which put
+    * their key first, so `es`'s column order is restored. */
   def insertEdgesChecked(es: DataFrame): GraphState = {
     val ids = vertices.select(col("id"))
     val valid = es
       .join(ids.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
       .join(ids.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
-    upsertEdges(valid)
+    upsertEdges(valid.select(es.columns.map(col): _*))
   }
 
   /** DETACH DELETE: remove matched vertices and all incident edges
-    * (reference cascading delete, rdb/managers.rs:119-160) — anti-joins. */
+    * (reference cascading delete, rdb/managers.rs:119-160). */
   def detachDeleteVertices(victimIds: DataFrame): GraphState = {
-    val v = pin("detachDeleteVertices", firstAsId(victimIds))
-    GraphState(
-      vertices.join(v, Seq("id"), "left_anti"),
-      edges
-        .join(v.withColumnRenamed("id", "src"), Seq("src"), "left_anti")
-        .join(v.withColumnRenamed("id", "dst"), Seq("dst"), "left_anti"))
+    val v = pin("detachDeleteVertices", firstAsId(victimIds), Seq("id"))
+    GraphState(v.anti(vertices, Seq("id")),
+      v.anti(v.anti(edges, Seq("src")), Seq("dst")))
   }
 
   /** DELETE without DETACH: removes the matched vertices, or None when
     * one of them still has an incident edge (Cypher refuses: dangling
     * edges would corrupt the graph). */
   def deleteVertices(victimIds: DataFrame): Option[GraphState] = {
-    val v = pin("deleteVertices", firstAsId(victimIds))
-    if (!incidentEdges(v).isEmpty) None
-    else Some(copy(vertices = vertices.join(v, Seq("id"), "left_anti")))
+    val v = pin("deleteVertices", firstAsId(victimIds), Seq("id"))
+    if (!v.noKeys && !incidentEdges(v).isEmpty) None
+    else Some(copy(vertices = v.anti(vertices, Seq("id"))))
   }
 
-  /** Edges incident to any vertex of `ids` (an `id` column). Two
-    * equi-semi-joins (src, dst) unioned instead of one OR-condition join:
-    * the OR form can only plan as a BroadcastNestedLoopJoin —
-    * O(|edges|×|victims|) comparisons — while these hash-join, the same
-    * pattern as detachDeleteVertices' two anti-joins. */
-  private[graft] def incidentEdges(ids: DataFrame): DataFrame =
-    edges.join(ids.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
-      .unionByName(edges.join(ids.withColumnRenamed("id", "dst"), Seq("dst"),
-        "left_semi"))
+  /** Edges incident to any vertex of the pinned ids `v`: one key-set
+    * filter on the local leg; on the checkpoint leg two equi-semi-joins
+    * (src, dst) unioned instead of one OR-condition join, which could
+    * only plan as a BroadcastNestedLoopJoin — O(|edges|×|victims|). */
+  private[graft] def incidentEdges(v: Pinned): DataFrame =
+    if (v.table.isDefined)
+      edges.filter(v.lookup(Seq("src")).isNotNull ||
+        v.lookup(Seq("dst")).isNotNull)
+    else v.semi(edges, Seq("src")).unionByName(v.semi(edges, Seq("dst")))
 
   def deleteEdges(victims: DataFrame): GraphState = {
-    val v = pin("deleteEdges", victims.select("src", "edge_type", "dst"))
-    copy(edges = edges.join(v, Seq("src", "edge_type", "dst"), "left_anti"))
+    val v = pin("deleteEdges", victims.select(edgeKey.map(col): _*), edgeKey)
+    copy(edges = v.anti(edges, edgeKey))
   }
 
   /** SET properties on matched vertices: map_concat rewrite
@@ -168,14 +165,19 @@ final case class GraphState(vertices: DataFrame, edges: DataFrame) {
     repl.dropDuplicates("id").select(col("id"), col("__new").as("__delta"))
 
   /** `frame` with `column` rewritten to `f(column, __delta)` on the rows
-    * whose id is in the pinned `delta` (id, __delta): one left join, the
-    * parent read once. A null `__delta` keeps the row as it was. */
+    * whose id is in the pinned `delta` (id, __delta): a literal lookup
+    * on the local leg, one left join on the checkpoint leg, the parent
+    * read once either way. A null `__delta` keeps the row as it was. */
   private def rewrite(frame: DataFrame, mutation: String, delta: DataFrame,
-      column: String)(f: (Column, Column) => Column): DataFrame =
-    frame.join(pin(mutation, delta), Seq("id"), "left")
-      .withColumn(column, when(col("__delta").isNotNull,
-        f(col(column), col("__delta"))).otherwise(col(column)))
+      column: String)(f: (Column, Column) => Column): DataFrame = {
+    val d = pin(mutation, delta, Seq("id"), Some("__delta"))
+    def rewritten(base: DataFrame, value: Column) = base.withColumn(column,
+      when(value.isNotNull, f(col(column), value)).otherwise(col(column)))
+    if (d.noKeys) frame
+    else if (d.table.isDefined) rewritten(frame, d.lookup(Seq("id")))
+    else rewritten(frame.join(d.frame, Seq("id"), "left"), col("__delta"))
       .drop("__delta")
+  }
 
   /** Edge reversal (reference: models/src/edges.rs:74-83). */
   def reversedEdges: DataFrame = edges.select(
@@ -186,27 +188,81 @@ final case class GraphState(vertices: DataFrame, edges: DataFrame) {
 object GraphState {
 
   /** Rows up to which a delta is collected to the driver and planned as
-    * a LocalRelation; a larger delta is local-checkpointed instead. A
-    * constant, not a conf key: an interactive write's delta is a handful
-    * of rows, and 100,000 vertex or edge rows are tens of MB on the
-    * driver at most. */
-  private[engine] val PinMaxRows = 100000
+    * a LocalRelation plus a key table; a larger delta is
+    * local-checkpointed instead. A constant, not a conf key: an
+    * interactive write's delta is a handful of rows. The key table
+    * rides in every task binary of every later read, so the cap bounds
+    * it: at 10,000 keys a layer reads as fast as the checkpoint leg's
+    * join, at 100,000 the task binary grew to 2.3 MiB (key set) and
+    * 10 MiB (property map) and reads ran slower than the join. */
+  private[engine] val PinMaxRows = 10000
 
   /** The cap [[pin]] applies; tests bind 0 to force the checkpoint leg. */
-  private[engine] val pinCap = new DynamicVariable[Int](PinMaxRows)
+  private[graft] val pinCap = new DynamicVariable[Int](PinMaxRows)
 
-  /** Evaluates a mutation's `delta` once, at write time, and returns a
-    * frame that reads the result instead of the delta's lineage:
+  /** A delta pinned by [[pin]]: `frame` reads its rows, `keys` are its
+    * key columns, and `table` holds its key tuples on the local leg
+    * (None on the checkpoint leg, or when it was pinned without keys).
+    * The layers below equal their join forms exactly: a null key never
+    * matches, and a composite key matches only when every part does. */
+  private[graft] final case class Pinned(frame: DataFrame, rows: Long,
+      keys: Seq[String], table: Option[KeyTable]) {
+
+    /** Pinned on the local leg with no non-null key: matches nothing. */
+    def noKeys: Boolean = table.exists(_.isEmpty)
+
+    /** The local table's entry for the key tuple `cols` of a row. */
+    def lookup(cols: Seq[String]): Column =
+      shims.column(KeyLookup(cols.map(c => shims.expression(col(c))),
+        table.get))
+
+    /** `parent` without its rows whose `cols` equal a key of this delta:
+      * a key-set filter, `parent` itself when there is no key, a left
+      * anti join on the checkpoint leg. */
+    def anti(parent: DataFrame, cols: Seq[String]): DataFrame =
+      if (noKeys) parent
+      else if (table.isDefined) parent.filter(lookup(cols).isNull)
+      else joined(parent, cols, "left_anti")
+
+    /** `parent`'s rows whose `cols` equal a key of this checkpointed
+      * delta: a left semi join. */
+    def semi(parent: DataFrame, cols: Seq[String]): DataFrame =
+      joined(parent, cols, "left_semi")
+
+    /** An existence join, in `parent`'s column order (a join on `cols`
+      * puts them first). */
+    private def joined(parent: DataFrame, cols: Seq[String], how: String) =
+      parent.join(frame.select(keys.zip(cols).map { case (k, c) =>
+        col(k).as(c) }: _*), cols, how).select(parent.columns.map(col): _*)
+
+    /** This delta's rows over `parent` without their keys, in
+      * `parent`'s column order; `parent` itself when the local delta
+      * has no row. */
+    def upsert(parent: DataFrame): DataFrame =
+      if (table.isDefined && rows == 0) parent
+      else frame.select(parent.columns.map(col): _*)
+        .unionByName(anti(parent, keys))
+  }
+
+  /** Evaluates a mutation's `delta` once, at write time, and returns it
+    * pinned, reading the result instead of the delta's lineage:
     *  - up to [[PinMaxRows]] rows: collected (one `limit(cap + 1)`
-    *    probe) into a LocalRelation, which later plans join as a
-    *    broadcast with no exchange, or prune when it is empty;
+    *    probe) into a LocalRelation, and its `keys` tuples (→ the
+    *    `value` column, if given) into a driver-side table, so the
+    *    layer over the parent is a filter or a literal lookup, never a
+    *    join (no broadcast to build on every read);
     *  - more rows: one `localCheckpoint`, which keeps bulk writes
-    *    distributed. The probe stops at cap + 1 rows; the checkpoint
-    *    evaluates the delta again, so a nondeterministic delta (uuid()
-    *    ids) is fixed by the checkpoint, not by the probe.
+    *    distributed, joined by the layer. The probe stops at cap + 1
+    *    rows; the checkpoint evaluates the delta again, so a
+    *    nondeterministic delta (uuid() ids) is fixed by the checkpoint,
+    *    not by the probe.
     * A delta that fails at runtime therefore fails the write, not a
-    * later read. One `spark.graft.debug` line per call. */
-  private[graft] def pin(mutation: String, delta: DataFrame): DataFrame = {
+    * later read. One `spark.graft.debug` line per call, naming the leg
+    * and the layer's form: `filter` or `lookup` with its key count on
+    * the local leg, `join` on the checkpoint leg, `rows` for a delta
+    * pinned without keys. */
+  private[graft] def pin(mutation: String, delta: DataFrame,
+      keys: Seq[String] = Nil, value: Option[String] = None): Pinned = {
     val spark = delta.sparkSession
     val cap = pinCap.value
     // raw rows: no external-Row conversion
@@ -214,15 +270,21 @@ object GraphState {
       if (cap > 0)
         shims.action(delta.limit(cap + 1), "pin")(_.executeCollect())
       else Array.empty[InternalRow]
-    val (out, rows, leg) =
-      if (cap > 0 && head.length <= cap)
-        (shims.localRelation(delta, head.toSeq), head.length.toLong, "local")
+    val local = cap > 0 && head.length <= cap
+    val out =
+      if (local)
+        Pinned(shims.localRelation(delta, head.toSeq), head.length, keys,
+          if (keys.isEmpty) None
+          else Some(KeyTable(delta.schema, head.toSeq, keys, value)))
       else {
         val cp = delta.localCheckpoint(eager = false)
-        (cp, shims.action(cp, "pin")(_.execute().count()), "checkpoint")
+        Pinned(cp, shims.action(cp, "pin")(_.execute().count()), keys, None)
       }
+    val form = out.table.fold(if (keys.isEmpty) "rows" else "join")(t =>
+      s"${if (value.isEmpty) "filter" else "lookup"} keys=${t.size}")
     graft.util.Dbg(spark,
-      s"[delta] $mutation rows=$rows cap=$cap leg=$leg")
+      s"[delta] $mutation rows=${out.rows} cap=$cap " +
+        s"leg=${if (local) "local" else "checkpoint"} form=$form")
     out
   }
 

@@ -80,6 +80,115 @@ object shims {
       }
 }
 
+/** The key tuples of a pinned write delta, held on the driver, each
+  * mapped to a value (the delta's `__delta` column, or `true` for a key
+  * set). A tuple with a null key is left out: a null key never matches,
+  * as in an equi-join. Keys compare by value (`UTF8String` bytes, boxed
+  * integers), so key columns are strings or integral types. Equality
+  * is identity: plans compare and hash their expressions often, and
+  * the table can hold [[graft.engine.GraphState]]'s whole pin cap. */
+final class KeyTable private (table: java.util.HashMap[AnyRef, AnyRef],
+    val keyTypes: Seq[DataType], val dataType: DataType)
+    extends Serializable {
+  def size: Int = table.size
+  def isEmpty: Boolean = table.isEmpty
+  /** The value of `key` (a [[KeyTable.key]]); null when absent. */
+  def get(key: AnyRef): AnyRef = if (key == null) null else table.get(key)
+  override def toString: String = s"$size keys"
+}
+
+object KeyTable {
+  /** The lookup key of one tuple: null when any value is null, the
+    * value itself for one column, a `java.util.List` for several. */
+  def key(values: Array[AnyRef]): AnyRef =
+    if (values.contains(null)) null
+    else if (values.length == 1) values(0)
+    else java.util.Arrays.asList(values: _*)
+
+  /** The table of `rows` (in `schema`): `keys` → `value`'s column, or
+    * → true when `value` is None. */
+  def apply(schema: org.apache.spark.sql.types.StructType,
+      rows: Seq[InternalRow], keys: Seq[String], value: Option[String])
+      : KeyTable = {
+    import org.apache.spark.sql.types.BooleanType
+    def reader(name: String): InternalRow => AnyRef = {
+      val i = schema.fieldIndex(name)
+      val get = InternalRow.getAccessor(schema(i).dataType)
+      r => InternalRow.copyValue(get(r, i)).asInstanceOf[AnyRef]
+    }
+    val keyOf = keys.map(reader).toArray
+    val valueOf = value.map(reader)
+      .getOrElse((_: InternalRow) => java.lang.Boolean.TRUE)
+    val table = new java.util.HashMap[AnyRef, AnyRef]()
+    rows.foreach { r =>
+      val k = key(keyOf.map(_(r)))
+      if (k != null) table.put(k, valueOf(r))
+    }
+    new KeyTable(table, keys.map(schema(_).dataType),
+      value.fold[DataType](BooleanType)(schema(_).dataType))
+  }
+}
+
+/** `table`'s value for the key tuple `children`: null when the tuple
+  * is absent or any key is null. A pinned delta's key set or
+  * `id → __delta` map as one hash probe per row, in place of a join
+  * against the delta: `isNull` is the anti-join, `isNotNull` the
+  * semi-join, the value the left join's `__delta`. Never foldable, so
+  * the optimizer cannot evaluate it over a null literal key. */
+case class KeyLookup(children: Seq[Expression], table: KeyTable)
+    extends Expression {
+  import org.apache.spark.sql.catalyst.expressions.codegen.{Block, CodeGenerator}
+  import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+
+  override def nullable: Boolean = true
+  override def dataType: DataType = table.dataType
+  override def prettyName: String = "key_lookup"
+
+  /** Keys of another type would compare unequal to every entry. */
+  override def checkInputDataTypes()
+      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
+    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult._
+    if (children.map(_.dataType) == table.keyTypes) TypeCheckSuccess
+    else TypeCheckFailure(s"key types ${children.map(_.dataType)} differ " +
+      s"from the table's ${table.keyTypes}")
+  }
+
+  override def eval(input: InternalRow): Any =
+    table.get(KeyTable.key(children.map(_.eval(input).asInstanceOf[AnyRef])
+      .toArray))
+
+  override protected def doGenCode(ctx: CodegenContext,
+      ev: ExprCode): ExprCode = {
+    val t = ctx.addReferenceObj("keyTable", table, classOf[KeyTable].getName)
+    val kids = children.map(_.genCode(ctx))
+    val boxed = kids.zip(children).map { case (k, c) =>
+      if (CodeGenerator.isPrimitiveType(c.dataType))
+        s"${CodeGenerator.boxedType(c.dataType)}.valueOf(${k.value})"
+      else s"(Object) ${k.value}"
+    }
+    val key =
+      if (boxed.length == 1) boxed.head
+      else s"java.util.Arrays.asList(new Object[] {${boxed.mkString(", ")}})"
+    val anyNull = kids.map(_.isNull.toString).mkString(" || ")
+    val res = ctx.freshName("res")
+    val javaType = CodeGenerator.javaType(dataType)
+    val unboxed =
+      if (CodeGenerator.isPrimitiveType(dataType))
+        s"((${CodeGenerator.boxedType(dataType)}) $res).${javaType}Value()"
+      else s"($javaType) $res"
+    ev.copy(code = Block.blocksToBlock(kids.map(_.code)) + code"""
+      Object $res = ($anyNull) ? null : $t.get($key);
+      boolean ${ev.isNull} = $res == null;
+      $javaType ${ev.value} = ${CodeGenerator.defaultValue(dataType)};
+      if (!${ev.isNull}) ${ev.value} = $unboxed;
+      """)
+  }
+
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): KeyLookup =
+    copy(children = newChildren)
+}
+
 /** Native codegen'd dot product over two ARRAY<DOUBLE> columns — the hot
   * inner loop of every cosine-similarity operator
   * (graft.functions.SimilarityOps). The higher-order-function equivalent

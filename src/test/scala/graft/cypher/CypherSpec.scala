@@ -298,9 +298,15 @@ class CypherSpec extends SparkSpec {
   test("non-DETACH DELETE guard plans hash semi-joins, not nested-loop") {
     import org.apache.spark.sql.functions.col
     val probe = people.vertices.select(col("id")).limit(2)
-    val plan = people.incidentEdges(probe)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
+    def plan() = people.incidentEdges(GraphState.pin("deleteVertices",
+      probe, Seq("id"))).queryExecution.executedPlan.toString
+    // checkpoint leg: two hash semi-joins
+    val joined = GraphState.pinCap.withValue(0)(plan())
+    assert(!joined.contains("BroadcastNestedLoopJoin"), joined)
+    assert(joined.contains("LeftSemi"), joined)
+    // local leg: one key-set filter, no join at all
+    val filtered = plan()
+    assert(!filtered.contains("Join"), filtered)
   }
 
   test("non-DETACH DELETE refuses vertices that still have relationships") {
@@ -1160,26 +1166,33 @@ class CypherSpec extends SparkSpec {
       |(c)-[:TAGGED]->(b:Tag) RETURN id(c) AS id, count(b.bk) AS n_tags"""
       .stripMargin
 
+  private lazy val alice = people.vertices
+    .filter("properties['id'] = 'alice'").select("id").head.getString(0)
+
+  /** Reads alice's tags. */
+  private lazy val tagRead = tagCount.replace("'alice'", s"'$alice'")
+
+  /** CREATE vertex, CREATE edge, SET, MERGE … ON MATCH SET and DETACH
+    * DELETE: one write of every layer kind. */
+  private lazy val writeScript = Seq(
+    """CREATE (:Tag {bk: "b1", w: "3"})""",
+    s"""MATCH (c:Person), (b:Tag) WHERE id(c) = '$alice' AND
+       |b.bk = "b1" CREATE (c)-[:TAGGED]->(b)""".stripMargin,
+    """MATCH (c:Person {id: "bob"}) SET c.segment = "gold"""",
+    """MERGE (b:Tag {bk: "b1"}) ON CREATE SET b.w = "new"
+      |ON MATCH SET b.w = "seen"""".stripMargin,
+    """MATCH (b:Tag {bk: "b1"}) DETACH DELETE b""")
+
   test("after CREATE, SET, MERGE and DETACH DELETE the snapshot reads " +
       "its base once") {
     val session = graft.api.GraftSession(spark, people)
-    val alice = people.vertices.filter("properties['id'] = 'alice'")
-      .select("id").head.getString(0)
-    val read = tagCount.replace("'alice'", s"'$alice'")
-    Seq(
-      """CREATE (:Tag {bk: "b1", w: "3"})""",
-      s"""MATCH (c:Person), (b:Tag) WHERE id(c) = '$alice' AND
-         |b.bk = "b1" CREATE (c)-[:TAGGED]->(b)""".stripMargin,
-      """MATCH (c:Person {id: "bob"}) SET c.segment = "gold"""",
-      """MERGE (b:Tag {bk: "b1"}) ON CREATE SET b.w = "new"
-        |ON MATCH SET b.w = "seen"""".stripMargin,
-      """MATCH (b:Tag {bk: "b1"}) DETACH DELETE b""")
-      .foreach { cy =>
-        session.execute(cy)
-        if (cy.startsWith("MATCH (c:Person), (b:Tag)"))
-          assert(session.execute(read).collect().map(_.getLong(1))
-            .toSeq == Seq(1L))
-      }
+    val read = tagRead
+    writeScript.foreach { cy =>
+      session.execute(cy)
+      if (cy.startsWith("MATCH (c:Person), (b:Tag)"))
+        assert(session.execute(read).collect().map(_.getLong(1))
+          .toSeq == Seq(1L))
+    }
     val g = session.graph
     assert(baseLeaves(g.vertices, people.vertices) == 1,
       g.vertices.queryExecution.optimizedPlan)
@@ -1205,6 +1218,49 @@ class CypherSpec extends SparkSpec {
         sort_array(map_entries(col("properties"))))),
       rows(st.edges.select("id", "src", "dst", "edge_type", "label")))
     assert(graph(g) == graph(fresh.graph))
+  }
+
+  test("a write layer plans no join: a local pin is a filter or a lookup") {
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    import org.apache.spark.sql.catalyst.optimizer.BuildRight
+    import org.apache.spark.sql.execution.{LocalTableScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+      AdaptiveSparkPlanHelper}
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    object plans extends AdaptiveSparkPlanHelper
+    def written() = {
+      val session = graft.api.GraftSession(spark, people)
+      writeScript.foreach(session.execute(_))
+      session
+    }
+    def joins(d: DataFrame) =
+      d.queryExecution.optimizedPlan.collect { case j: Join => j }.size
+    val session = written()
+    val g = session.graph
+    assert(joins(g.vertices) == 0, g.vertices.queryExecution.optimizedPlan)
+    assert(joins(g.edges) == 0, g.edges.queryExecution.optimizedPlan)
+    // no broadcast whose every leaf is a local relation (a pinned delta)
+    val read = session.execute(tagRead)
+    assert(read.collect().map(_.getLong(1)).toSeq == Seq(0L))
+    // AQE may prune a branch at run time: check the plan it started
+    // from too, where exchanges are not inserted yet
+    val physical = read.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => Seq(a.inputPlan, a.executedPlan)
+      case p => Seq(p)
+    }
+    def local(p: SparkPlan) =
+      p.collectLeaves().forall(_.isInstanceOf[LocalTableScanExec])
+    val pinBroadcasts = physical.flatMap(plans.collect(_) {
+      case b: BroadcastExchangeExec if local(b.child) => b
+      case j: BroadcastHashJoinExec
+          if local(if (j.buildSide == BuildRight) j.right else j.left) => j
+    })
+    assert(pinBroadcasts.isEmpty, read.queryExecution.executedPlan)
+    // the checkpoint leg still joins
+    val viaCheckpoint = GraphState.pinCap.withValue(0)(written()).graph
+    assert(joins(viaCheckpoint.vertices) > 0)
+    assert(joins(viaCheckpoint.edges) > 0)
   }
 
   test("a write whose delta fails throws from execute and keeps the " +

@@ -1,6 +1,7 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.Join
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Properties, Test}
@@ -9,12 +10,14 @@ import org.scalacheck.Prop.{forAll, propBoolean}
 import graft.SparkSpec
 
 /** Every [[GraphState]] mutation gives the same vertices and edges with
-  * its delta pinned on the local leg (the default cap), pinned on the
-  * checkpoint leg (cap 0) and unpinned, as the lazy rewrite each
-  * mutation used to build ([[Unpinned]]), on random graphs: null
-  * property values, duplicate and absent ids in every delta, and empty
-  * deltas. Label deltas reach [[Unpinned]] deduplicated: the lazy form
-  * duplicated a vertex matched by several rows. */
+  * its delta pinned on the local leg (the default cap: a key-set filter
+  * or lookup, no join), pinned on the checkpoint leg (cap 0: a join) and
+  * unpinned, as the lazy rewrite each mutation used to build
+  * ([[Unpinned]]), on random graphs: null ids, endpoints, edge types and
+  * property values in the graph and in every delta, duplicate and
+  * absent ids in every delta, empty deltas, and a DELETE of vertices
+  * that still have edges. Label deltas reach [[Unpinned]] deduplicated:
+  * the lazy form duplicated a vertex matched by several rows. */
 object GraphStatePinPropertySpec extends Properties("GraphState.pin") {
 
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
@@ -31,7 +34,10 @@ object GraphStatePinPropertySpec extends Properties("GraphState.pin") {
   private type Props = Map[String, String]
 
   private val vid: Gen[String] = Gen.frequency(
-    5 -> Gen.choose(0, 5).map(i => s"v$i"), 1 -> Gen.const("absent"))
+    5 -> Gen.choose(0, 5).map(i => s"v$i"), 1 -> Gen.const("absent"),
+    1 -> Gen.const(null: String))
+  private val edgeType: Gen[String] = Gen.frequency(
+    4 -> Gen.oneOf("R", "S"), 1 -> Gen.const(null: String))
   private val key: Gen[String] = Gen.oneOf("a", "b", "c")
   private val value: Gen[String] = Gen.frequency(
     4 -> Gen.oneOf("1", "2", "x"), 1 -> Gen.const(null: String))
@@ -55,16 +61,17 @@ object GraphStatePinPropertySpec extends Properties("GraphState.pin") {
   }
 
   private val graph: Gen[Graph] = for {
-    ids <- Gen.someOf((0 to 5).map(i => s"v$i"))
+    ids <- Gen.someOf((0 to 5).map(i => s"v$i") :+ (null: String))
     labels <- Gen.listOfN(ids.size, label)
     ps <- Gen.listOfN(ids.size, props)
-    es <- Gen.listOf(Gen.zip(vid, vid, Gen.oneOf("R", "S"), props))
+    es <- Gen.listOf(Gen.zip(vid, vid, edgeType, props))
   } yield Graph(ids.lazyZip(labels).lazyZip(ps).toList,
     es.zipWithIndex.map { case ((s, d, t, p), i) =>
       (s"e$i", s, d, t, "", p) })
 
   private val eid: Gen[String] = Gen.frequency(
-    5 -> Gen.choose(0, 8).map(i => s"e$i"), 1 -> Gen.const("absent"))
+    5 -> Gen.choose(0, 8).map(i => s"e$i"), 1 -> Gen.const("absent"),
+    1 -> Gen.const(null: String))
 
   /** Deltas for every mutation, drawn together per case. */
   private final case class Deltas(
@@ -82,10 +89,10 @@ object GraphStatePinPropertySpec extends Properties("GraphState.pin") {
 
   private val deltas: Gen[Deltas] = for {
     newVs <- rows(Gen.zip(vid, label, props)).flatMap(withDups)
-    newEs <- rows(Gen.zip(eid, vid, vid, Gen.oneOf("R", "S"), props))
+    newEs <- rows(Gen.zip(eid, vid, vid, edgeType, props))
       .flatMap(withDups)
     ids <- rows(vid).flatMap(withDups)
-    keys <- rows(Gen.zip(vid, Gen.oneOf("R", "S"), vid)).flatMap(withDups)
+    keys <- rows(Gen.zip(vid, edgeType, vid)).flatMap(withDups)
     // one value per (id, key): a repeated (id, key) would let the
     // collect_list order pick the value; exact repeats are kept
     vUpdates <- rows(Gen.zip(vid, key, value)).flatMap(withDups)
@@ -129,7 +136,8 @@ object GraphStatePinPropertySpec extends Properties("GraphState.pin") {
       val ids = g.vertices.select(col("id"))
       upsertEdges(g, es
         .join(ids.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
-        .join(ids.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi"))
+        .join(ids.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
+        .select(es.columns.map(col): _*))
     }
 
     def detachDeleteVertices(g: GraphState, v: DataFrame): GraphState =
@@ -139,7 +147,10 @@ object GraphStatePinPropertySpec extends Properties("GraphState.pin") {
           .join(v.withColumnRenamed("id", "dst"), Seq("dst"), "left_anti"))
 
     def deleteVertices(g: GraphState, v: DataFrame): Option[GraphState] =
-      if (!g.incidentEdges(v).isEmpty) None
+      if (!g.edges.join(v.withColumnRenamed("id", "src"), Seq("src"),
+            "left_semi")
+          .unionByName(g.edges.join(v.withColumnRenamed("id", "dst"),
+            Seq("dst"), "left_semi")).isEmpty) None
       else Some(GraphState(g.vertices.join(v, Seq("id"), "left_anti"),
         g.edges))
 
@@ -218,13 +229,15 @@ object GraphStatePinPropertySpec extends Properties("GraphState.pin") {
   }
 
   /** Every mutation, as (name, pinned form, unpinned form). */
-  private def mutations(d: Deltas)
+  private def mutations(gr: Graph, d: Deltas)
       : Seq[(String, GraphState => Option[GraphState],
         GraphState => Option[GraphState])] = {
     val newVs = d.newVs.toDF("id", "label", "properties")
     val newEs = d.newEs.toDF("id", "src", "dst", "edge_type", "label",
       "properties")
     val ids = d.ids.toDF("id")
+    // endpoints of the graph's edges: DELETE without DETACH refuses
+    val linked = gr.es.map(_._3).toDF("id")
     val uniqueIds = ids.distinct()
     val keys = d.keys.toDF("src", "edge_type", "dst")
     val vUpd = d.vUpdates.toDF("id", "key", "value")
@@ -246,6 +259,8 @@ object GraphStatePinPropertySpec extends Properties("GraphState.pin") {
         Unpinned.detachDeleteVertices(_, ids)),
       ("deleteVertices", _.deleteVertices(ids),
         Unpinned.deleteVertices(_, ids)),
+      ("deleteVertices of linked ids", _.deleteVertices(linked),
+        Unpinned.deleteVertices(_, linked)),
       both("deleteEdges")(_.deleteEdges(keys))(
         Unpinned.deleteEdges(_, keys)),
       both("setVertexProperties")(_.setVertexProperties(ids, d.kv))(
@@ -266,9 +281,13 @@ object GraphStatePinPropertySpec extends Properties("GraphState.pin") {
         Unpinned.removeVertexLabel(_, uniqueIds, "A")))
   }
 
-  /** Sorted rows with each property map as sorted (key, value) pairs. */
+  /** Sorted rows, columns by name, with each property map as sorted
+    * (key, value) pairs. A join puts its keys first, so the unpinned
+    * forms reorder columns; the pinned legs keep the parent's order
+    * (see `schemas`). */
   private def rowsOf(df: DataFrame): Seq[String] =
     df.withColumn("properties", sort_array(map_entries(col("properties"))))
+      .select(df.columns.sorted.map(col): _*)
       .collect().map(_.toSeq.mkString("|")).toSeq.sorted
 
   private def attempt[A](a: => A): Either[String, A] =
@@ -285,19 +304,29 @@ object GraphStatePinPropertySpec extends Properties("GraphState.pin") {
       _.queryExecution.analyzed.collectFirst { case l: LogicalRDD => l }
         .isDefined))
 
+  /** Whether `st`'s snapshot plans any join. */
+  private def joined(st: Option[GraphState]): Boolean =
+    st.exists(g => Seq(g.vertices, g.edges).exists(
+      _.queryExecution.analyzed.collectFirst { case j: Join => j }
+        .isDefined))
+
   property("local leg ≡ checkpoint leg ≡ unpinned, every mutation") =
     forAll(graph, deltas) { (gr, d) =>
       val g = gr.state
-      mutations(d).map { case (name, pinned, unpinned) =>
+      mutations(gr, d).map { case (name, pinned, unpinned) =>
         val local = attempt(pinned(g))
         val viaCheckpoint =
           attempt(GraphState.pinCap.withValue(0)(pinned(g)))
-        val legs = local.forall(!checkpointed(_)) &&
+        val legs = local.forall(st => !checkpointed(st) && !joined(st)) &&
           viaCheckpoint.forall(st => st.isEmpty || checkpointed(st))
+        val schemas = Seq(local, viaCheckpoint).forall(_.forall(_.forall(
+          st => st.vertices.columns.toSeq == g.vertices.columns.toSeq &&
+            st.edges.columns.toSeq == g.edges.columns.toSeq)))
         val (l, c, u) = (contents(local), contents(viaCheckpoint),
           contents(attempt(unpinned(g))))
-        (l == u && c == u && legs) :|
-          s"$name: local $l, checkpoint $c, unpinned $u, legs $legs"
+        (l == u && c == u && legs && schemas) :|
+          s"$name: local $l, checkpoint $c, unpinned $u, legs $legs, " +
+            s"schemas $schemas"
       }.reduce(_ && _)
     }
 }
