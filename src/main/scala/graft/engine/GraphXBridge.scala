@@ -843,11 +843,10 @@ object GraphXBridge {
       // (open-addressed long→long table — see PackedCountAgg's
       // scaladoc for the measured HashAggregateExec gap); its
       // required distribution plants the same single by-key exchange
-      // the explicit repartition used to. Conf-off fallback keeps
-      // the generic plan.
+      // the explicit repartition used to. The generic plan is the
+      // reference tests compare it with.
       val aggPk =
-        if (org.apache.spark.sql.graft.PackedCountAgg
-            .enabled(p.edges.sparkSession))
+        if (packedCount.value)
           org.apache.spark.sql.graft.PackedCountAgg
             .countByKey(rawPk, "common")
         else (if (aggParts.isDefined) rawPk
@@ -1050,6 +1049,11 @@ object GraphXBridge {
     * (0 = auto from the wedge census vs disk budget); tests bind it to
     * pin the passes against one. */
   private[engine] val linkPredPasses = new DynamicVariable[Int](0)
+
+  /** Whether the link-prediction wedge count (`candFrom`) runs through
+    * `PackedCountAgg` (default) or the generic aggregate; tests bind
+    * it to false to compare the two. */
+  private[engine] val packedCount = new DynamicVariable[Boolean](true)
 
   /** Conf: shuffle-disk budget in bytes for the auto bucket choice —
     * shared by every disk-bounded bucketed operator ([[topLinkPredictions]],

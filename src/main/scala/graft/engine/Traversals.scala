@@ -15,8 +15,13 @@ import org.apache.spark.sql.functions._
   *    small frontiers),
   *  - `dropDuplicates` + anti-join against the visited set bounds work on
   *    cyclic graphs,
-  *  - `localCheckpoint` every few hops cuts the growing lineage so plans
+  *  - a lazy `localCheckpoint` per hop cuts the growing lineage so plans
   *    stay compilable at depth (the classic iterative-Spark pitfall).
+  *
+  * Each traversal has ONE distributed engine. Shortest paths put a driver
+  * kernel ([[LocalPathKernel]], through [[KernelGate]]) in front of it for
+  * graphs within the kernel bound, so their distributed loop serves large
+  * graphs only; BFS and path enumeration have no kernel.
   *
   * Not expressible as a single Catalyst plan (SURVEY §4.2) — this IS the
   * idiomatic Spark shape for iteration, the same one [[GraphXBridge]]'s
@@ -24,21 +29,15 @@ import org.apache.spark.sql.functions._
   */
 object Traversals {
 
-  /** Depth at or below which traversals build ONE fully-lazy unrolled
-    * plan (zero driver-side actions — the caller's action runs the whole
-    * traversal as a single Spark job) instead of the per-hop
-    * action-driven loop. At local[32] a scheduled job costs ~0.2–0.4 s of
-    * pure latency, so a maxDepth-4 shortest-path query pays more in job
-    * scheduling than in data movement; unrolling trades at most
-    * `threshold` empty-frontier shuffle stages (cheap: AQE coalesces
-    * empty exchanges) for all of that. Deeper traversals keep the loop:
-    * early exit actually saves hops there, and a 15-deep unrolled plan
-    * with no materialization barrier risks compile-time blowup.
-    * Round-10 cy32 A/B (idle box, min-of-2 × 2 sessions): lazy
-    * 2.5–3.0 s / 32 stages vs eager-forced 3.4–3.9 s / 41 stages — the
-    * per-hop loop-control jobs cost more than early exit saves even
-    * when expansion dies at depth 2 of 4, so lazy stays the shallow
-    * default. */
+  /** [[bfs]] depth at or below which the hop loop runs NO driver-side
+    * action: the caller's one action evaluates every hop (each hop is
+    * still a lineage cut), instead of one loop-control `count()` per hop.
+    * BFS has no driver kernel, so at bench SF a shallow BFS (g09,
+    * depth 2) pays more in job scheduling than in data; unrolling trades
+    * at most `LazyUnrollDepth` empty-frontier stages (cheap: empty
+    * exchanges coalesce) for all of that. Deeper BFS keeps the per-hop
+    * count: early exit saves hops there, and the periodic `visited` cut
+    * keeps a 15-deep plan compilable. */
   private val LazyUnrollDepth = 8
 
   /** Partition count for every traversal exchange (edge cache + frontier
@@ -59,8 +58,8 @@ object Traversals {
     * setting. Config writes are session-global, matching the
     * driver-sequential way traversals are issued.
     *
-    * MEASURED AND REJECTED for the pairs/tree engines
-    * ([[shortestPathsPairs]]/[[spTree]]): their compound-key
+    * MEASURED AND REJECTED for the shortest-path engine
+    * ([[shortestPathsPairs]]/[[shortestPathsFromTo]]): its compound-key
     * (source,id) anti-joins and reconstruct joins sit on UNION inputs
     * whose partitioning Spark cannot prove statically, so static plans
     * fall back to 32-partition sort-merge exchanges where AQE converts
@@ -91,8 +90,8 @@ object Traversals {
     * [[SessionCache]], keyed by the canonicalized plan (same graph +
     * filter + direction → same entry); the registry bounds how many
     * tables stay persisted and unpersists the ones it evicts. An input
-    * of the distributed legs only: the driver path kernels collect the
-    * unshuffled hop edges instead.
+    * of the distributed engines only: the driver path kernels collect
+    * the unshuffled hop edges instead.
     *
     * Why: every per-hop `localCheckpoint` starts its OWN QueryExecution,
     * and exchange reuse never crosses QueryExecutions — so an N-hop
@@ -103,8 +102,8 @@ object Traversals {
     * materialized (a hop planned before that shuffles it once more).
     * The frontier side keeps its explicit partitioning on `id` only
     * under static planning ([[bfs]], [[paths]]): under AQE, as the
-    * pairs/tree engines plan, a lazy local checkpoint's LogicalRDD
-    * reports UnknownPartitioning, so each of their hops re-shuffles its
+    * shortest-path engine plans, a lazy local checkpoint's LogicalRDD
+    * reports UnknownPartitioning, so each of its hops shuffles its
     * frontier onto `id` (checked by printing each hop's plan). */
   private def partitionedEdges(df: DataFrame): DataFrame = {
     val n = traversalPartitions(df.sparkSession)
@@ -119,28 +118,31 @@ object Traversals {
     * (id, depth) with the MINIMUM depth per reached vertex (sources at 0).
     * Equivalently: unweighted shortest-path distance ≤ maxDepth.
     *
-    * ONE eager Spark job per hop: the frontier is marked for a LAZY
-    * local checkpoint and the loop-control `count()` is the action that
-    * materializes it (LocalRDDCheckpointData persists every partition at
-    * the end of the first job that computes the RDD). The former
-    * eager-checkpoint + isEmpty pair cost two scheduled jobs per hop —
-    * at local[32] job scheduling, not data, dominates these traversals. */
+    * Past [[LazyUnrollDepth]], ONE eager Spark job per hop: the frontier
+    * is marked for a LAZY local checkpoint and the loop-control `count()`
+    * is the action that materializes it (LocalRDDCheckpointData persists
+    * every partition at the end of the first job that computes the RDD),
+    * ending the loop on an empty frontier. At or below it the same hops
+    * run with no action at all. The edge side is the shared
+    * [[partitionedEdges]] cache and the hop's explicit repartition lands
+    * on `id`, so hop joins need no edge-side exchange at any depth. */
   def bfs(g: GraphState, sources: DataFrame, maxDepth: Int,
       edgeType: Option[String] = None, undirected: Boolean = false)
       : DataFrame = withStaticPlanning(sources.sparkSession) {
-    if (maxDepth <= LazyUnrollDepth)
-      return bfsLazy(g, sources, maxDepth, edgeType.toSeq, undirected)
+    val eager = maxDepth > LazyUnrollDepth
     val n = traversalPartitions(sources.sparkSession)
     val edges = partitionedEdges(hopEdges(g, edgeType.toSeq, undirected))
     var visited = sources
       .select(col(sources.columns.head).as("id"), lit(0).as("depth"))
       .dropDuplicates("id")
       .repartition(n, col("id")) // co-partition with the cached edge table
-      .localCheckpoint(eager = false)
+    if (eager) visited = visited.localCheckpoint(eager = false)
     var frontier = visited
-    var cnt = frontier.count() // materializes the lazy checkpoint
+    // the eager hop's single job: loop control + checkpoint in one pass
+    def live(): Boolean = !eager || frontier.count() > 0
+    var more = live()
     var depth = 0
-    while (depth < maxDepth && cnt > 0) {
+    while (depth < maxDepth && more) {
       depth += 1
       frontier = frontier.hint("shuffle_hash") // build side: co-partitioned frontier, |frontier|/P per task
         .join(edges, frontier("id") === edges("src"))
@@ -149,45 +151,13 @@ object Traversals {
         .dropDuplicates("id")      // dedup AND the next hop's join key
         .join(visited.select("id"), Seq("id"), "left_anti")
         .localCheckpoint(eager = false) // cut lineage; frontier is small
-      cnt = frontier.count() // the hop's single job
+      more = live()
       visited = visited.union(frontier)
       // visited's lineage grows one cheap union per hop — only cut it
       // periodically; the lazy cut materializes inside the NEXT hop's
       // job (the anti-join reads visited), costing no extra job
-      if (depth % 3 == 0) visited = visited.localCheckpoint(eager = false)
-    }
-    visited
-  }
-
-  /** Fully-lazy BFS (maxDepth ≤ [[LazyUnrollDepth]]): the hop chain is
-    * unrolled with NO driver actions — the caller's one action evaluates
-    * every hop. The edge side is the shared [[partitionedEdges]] cache
-    * and the hop's explicit repartition lands on `id`, so hop joins need
-    * no edge-side exchange at any depth (formerly each hop re-shuffled
-    * the full edge table: exchange reuse never crosses the
-    * per-checkpoint QueryExecution boundary). Every hop is a lineage
-    * cut (see [[spHop]] for why); `visited` is a plain union of hop
-    * frames — never checkpointed. */
-  private def bfsLazy(g: GraphState, sources: DataFrame, maxDepth: Int,
-      edgeTypes: Seq[String], undirected: Boolean): DataFrame = {
-    val n = traversalPartitions(sources.sparkSession)
-    val edges = partitionedEdges(hopEdges(g, edgeTypes, undirected))
-    var visited = sources
-      .select(col(sources.columns.head).as("id"), lit(0).as("depth"))
-      .dropDuplicates("id")
-      .repartition(n, col("id"))
-    var frontier = visited
-    var depth = 0
-    while (depth < maxDepth) {
-      depth += 1
-      frontier = frontier.hint("shuffle_hash") // build side: co-partitioned frontier, |frontier|/P per task
-        .join(edges, frontier("id") === edges("src"))
-        .select(col("dst").as("id"), lit(depth).as("depth"))
-        .repartition(n, col("id"))
-        .dropDuplicates("id")
-        .join(visited.select("id"), Seq("id"), "left_anti")
-        .localCheckpoint(eager = false)
-      visited = visited.union(frontier)
+      if (eager && depth % 3 == 0)
+        visited = visited.localCheckpoint(eager = false)
     }
     visited
   }
@@ -202,155 +172,107 @@ object Traversals {
     * (source, vertex): a MATCH producing thousands of endpoint pairs runs
     * the same bounded number of distributed hops as a single pair — no
     * per-pair driver loop, no per-hop collect. Predecessors resolve by
-    * `min` per (source, vertex), making paths deterministic. Sources whose
-    * every target is found drop out of the frontier; the loop exits early
-    * when no targets remain. Reconstruction walks the predecessor table
-    * backward with one join per path hop (≤ the found maximum depth). */
+    * `min` per (source, vertex), making paths deterministic. See
+    * [[frontierPaths]] for the loop and its exits. */
   def shortestPathsPairs(g: GraphState, pairs: DataFrame, maxDepth: Int,
       edgeTypes: Seq[String] = Nil, undirected: Boolean = false,
       all: Boolean = false): DataFrame = {
     // small graphs (r14): driver BFS kernel over the plain forward hop
     // edges — the frontier loop's cost at bench SF is job/planning
     // latency, not data (guide §8); above the shared size bound the
-    // distributed engines below, each with its partitioned edge table,
-    // are the unchanged 100 TB path
+    // distributed loop below, with its partitioned edge table, is the
+    // 100 TB path
     LocalPathKernel.pairsPaths(hopEdges(g, edgeTypes, undirected = false),
         undirected, pairs, maxDepth, all).getOrElse {
-      if (maxDepth <= LazyUnrollDepth)
-        shortestPathsPairsLazy(g, pairs, maxDepth, edgeTypes, undirected, all)
-      else pairsEager(g, pairs, maxDepth, edgeTypes, undirected, all)
+      val p = pairs
+        .select(col(pairs.columns(0)).as("__a"),
+          col(pairs.columns(1)).as("__b"))
+        .dropDuplicates("__a", "__b")
+      val self = p.filter(col("__a") === col("__b"))
+        .select(col("__a"), col("__b"), array(col("__a")).as("path"),
+          array().cast("array<string>").as("epath"), lit(0L).as("length"))
+      // `p` stays lazy: `self` is only read in the final union
+      val targets = p.filter(col("__a") =!= col("__b"))
+        .select(col("__a").as("source"), col("__b").as("id"))
+        .localCheckpoint(eager = false)
+      val remaining = targets.count() // materializes the checkpoint
+      self.union(frontierPaths(g, targets.select(col("source").as("__a"))
+        .dropDuplicates("__a"), targets, remaining, maxDepth, edgeTypes,
+        undirected, all))
     }
   }
 
-  /** Eager pairs engine (maxDepth > [[LazyUnrollDepth]]): the batched
-    * frontier loop of [[shortestPathsPairs]], one loop-control job per
-    * hop. */
-  private def pairsEager(g: GraphState, pairs: DataFrame, maxDepth: Int,
+  /** The distributed shortest-path engine of [[shortestPathsPairs]] and
+    * [[shortestPathsFromTo]]: an eager frontier loop from the distinct
+    * `srcs` (__a), then ONE end join of the reached set against
+    * `targets`, then the fused [[reconstruct]] walk. `targets` holds
+    * (source, id) pairs or bare (id) targets of every source; its
+    * columns are the join key. `remaining` is how many distinct
+    * non-self (source, target) pairs are sought. Returns
+    * (__a, __b, path, epath, length) for the pairs found.
+    *
+    * Each hop is [[spHop]] plus ONE job: a left-outer pass of the new
+    * frontier against `targets` yields the frontier size and the new
+    * hits together, and, as the first job computing the frontier,
+    * materializes its local checkpoint. The tree admits each
+    * (source, vertex) once, at its minimal depth, so a found pair never
+    * re-counts and the end join equals per-hop hit extraction. The loop
+    * exits on an empty frontier, when every pair is found, or at
+    * maxDepth; reconstruction walks only to the deepest length found.
+    * Sources whose pairs are all found keep expanding until that global
+    * exit — no per-source retirement (3 joins + 2 checkpoints per hop
+    * it would cost). */
+  private def frontierPaths(g: GraphState, srcs: DataFrame,
+      targets: DataFrame, remaining: Long, maxDepth: Int,
       edgeTypes: Seq[String], undirected: Boolean, all: Boolean)
       : DataFrame = {
-    val n = traversalPartitions(pairs.sparkSession)
     val edges = partitionedEdges(hopEdges(g, edgeTypes, undirected))
-    // `p` stays lazy: `self` is only read in the final union and
-    // `targets0` is checkpointed right below — one materialization.
-    val p = pairs
-      .select(col(pairs.columns(0)).as("__a"),
-        col(pairs.columns(1)).as("__b"))
-      .dropDuplicates("__a", "__b")
-    val self = p.filter(col("__a") === col("__b"))
-      .select(col("__a"), col("__b"), array(col("__a")).as("path"),
-        array().cast("array<string>").as("epath"), lit(0L).as("length"))
-    val targets0 = p.filter(col("__a") =!= col("__b"))
-      .localCheckpoint(eager = false)
-    var remaining = targets0.count() // materializes targets0's checkpoint
+    val keys = targets.columns.toSeq
+    val hitMark = targets.withColumn("__hit", lit(1))
     // predecessor table: (source, id, depth, preds ARRAY<STRUCT<pred,
     // prededge>>) — one entry in the single-path mode, every minimal
     // predecessor in all-shortest-paths mode
     val emptyPreds = array()
       .cast("array<struct<pred:string,prededge:string>>")
-    var visited = targets0.select(col("__a").as("source"))
-      .dropDuplicates("source")
-      .select(col("source"), col("source").as("id"), lit(0).as("depth"),
-        emptyPreds.as("preds"))
-      // the AQE-planned checkpoint drops this partitioning: hop 1's join
-      // shuffles the frontier onto `id` again (see spHop)
-      .repartition(n, col("id"))
+    var visited = srcs
+      .select(col("__a").as("source"), col("__a").as("id"),
+        lit(0).as("depth"), emptyPreds.as("preds"))
       .localCheckpoint(eager = false) // materializes inside hop 1's job
     var frontier = visited.select("source", "id")
-    var foundParts = List.empty[DataFrame]
-    // targets still outstanding: a lazy anti-join accumulation over the
-    // (lazily checkpointed) hit batches — never more than maxDepth deep
-    var tl = targets0
+    var left = remaining
+    var frontierNonEmpty = true
     var depth = 0
     var maxLen = 0 // deepest hit depth, tracked driver-side
-    var frontierNonEmpty = remaining > 0
-    while (depth < maxDepth && remaining > 0 && frontierNonEmpty) {
+    while (depth < maxDepth && left > 0 && frontierNonEmpty) {
       depth += 1
       val nxt = spHop(frontier, edges, visited, depth, all)
-      // THE hop's one eager job: a single left-outer pass over nxt
-      // yields both the frontier size (loop control) and the hit count
-      // — and, as the first job computing nxt, materializes its local
-      // checkpoint. The former shape (eager checkpoint + hits
-      // checkpoint + count + isEmpty) scheduled 4 jobs per hop; on a
-      // frontier-bounded query the job overhead WAS the latency.
-      val tlMark = tl.select(col("__a"), col("__b"), lit(1).as("__hit"))
-      val stats = nxt.join(tlMark,
-          nxt("source") === tlMark("__a") && nxt("id") === tlMark("__b"),
-          "left_outer") // (source,id) and (__a,__b) both unique: 1:≤1
+      // `targets` is unique on its key, so the left-outer join is 1:≤1
+      val stats = nxt.join(hitMark, keys, "left_outer")
         .agg(count(lit(1)).as("n"), count(col("__hit")).as("hits"))
         .head()
-      val nTotal = stats.getLong(0)
       val nHits = stats.getLong(1)
+      frontierNonEmpty = stats.getLong(0) > 0
+      if (nHits > 0) { left -= nHits; maxLen = depth }
       visited = visited.union(nxt)
       // lazy cut: materializes inside the NEXT hop's job via the
       // anti-join read — no standalone re-materialization job
       if (depth % 3 == 0) visited = visited.localCheckpoint(eager = false)
-      if (nHits > 0) {
-        val hits = nxt
-          .join(tl, nxt("source") === tl("__a") && nxt("id") === tl("__b"))
-          .select(col("__a"), col("__b"), col("depth").cast("long")
-            .as("length"))
-          .localCheckpoint(eager = false) // computed in next hop's job
-        foundParts ::= hits
-        tl = tl.join(hits.select("__a", "__b"), Seq("__a", "__b"),
-          "left_anti")
-        remaining -= nHits
-        maxLen = depth
-        // sources with no outstanding targets stop expanding
-        frontier = nxt.select("source", "id").join(
-          tl.select(col("__a").as("source")), Seq("source"), "left_semi")
-      } else frontier = nxt.select("source", "id")
-      frontierNonEmpty = nTotal > 0
-    }
-    if (foundParts.isEmpty) return self
-    self.union(reconstruct(foundParts.reduce(_.union(_)), visited, maxLen))
-  }
-
-  /** Lazily-unrolled shortest-path TREE from a set of sources: per-hop
-    * frontier expansion with min-depth dedup, ZERO driver-side actions.
-    * `sources` must have a single column; returns the predecessor table
-    * (source, id, depth, preds ARRAY<STRUCT<pred,prededge>>) with one row
-    * per (source, reached vertex) at its MINIMAL depth (sources at 0,
-    * empty preds). The edge side is the shared [[partitionedEdges]]
-    * cache, so once it is materialized a hop re-shuffles only frontier-
-    * sized data (its `dst` repartition and, because the AQE-planned
-    * checkpoint loses that partitioning, its join on `id`; see
-    * [[spHop]]), never the full edge table. No per-hop hit
-    * extraction / target retirement: the lazy unroll runs all maxDepth
-    * hops regardless, so retirement bookkeeping (formerly 3 joins + 2
-    * checkpoints per hop) bought nothing — callers join targets against
-    * the returned tree once. In `all` mode every minimal predecessor at
-    * the SAME depth is kept. */
-  private def spTree(g: GraphState, sources: DataFrame, maxDepth: Int,
-      edgeTypes: Seq[String], undirected: Boolean, all: Boolean)
-      : DataFrame = {
-    val n = traversalPartitions(sources.sparkSession)
-    val edges = partitionedEdges(hopEdges(g, edgeTypes, undirected))
-    val emptyPreds = array()
-      .cast("array<struct<pred:string,prededge:string>>")
-    var visited = sources
-      .select(col(sources.columns.head).as("source"))
-      .dropDuplicates("source")
-      .select(col("source"), col("source").as("id"), lit(0).as("depth"),
-        emptyPreds.as("preds"))
-      .repartition(n, col("id"))
-    var frontier = visited.select("source", "id")
-    var depth = 0
-    while (depth < maxDepth) {
-      depth += 1
-      val nxt = spHop(frontier, edges, visited, depth, all)
-      visited = visited.union(nxt)
       frontier = nxt.select("source", "id")
     }
-    visited
+    val found = visited.filter(col("depth") > 0)
+      .join(targets, keys)
+      .select(col("source").as("__a"), col("id").as("__b"),
+        col("depth").cast("long").as("length"))
+    reconstruct(found, visited, maxLen)
   }
 
-  /** One hop of the pairs/tree engines: the `frontier` (source, id) rows
-    * ⋈ the src-partitioned `edges`, grouped per (source, dst) into their
-    * predecessor entries, minus the (source, id) pairs `visited` holds.
-    * Returns the new (source, id, depth, preds) rows under a lazy local
-    * checkpoint. Single mode keeps the deterministic predecessor (min
-    * vertex, then min edge); `all` mode keeps EVERY minimal one, sorted
-    * for a deterministic reconstruction order.
+  /** One hop of the shortest-path engine: the `frontier` (source, id)
+    * rows ⋈ the src-partitioned `edges`, grouped per (source, dst) into
+    * their predecessor entries, minus the (source, id) pairs `visited`
+    * holds. Returns the new (source, id, depth, preds) rows under a lazy
+    * local checkpoint. Single mode keeps the deterministic predecessor
+    * (min vertex, then min edge); `all` mode keeps EVERY minimal one,
+    * sorted for a deterministic reconstruction order.
     *
     * The explicit repartition on `dst` satisfies the (source, dst)
     * grouping (subset clustering). It does not reach the next hop:
@@ -385,9 +307,9 @@ object Traversals {
       .localCheckpoint(eager = false)
   }
 
-  /** Backward path reconstruction over a [[spTree]] predecessor table,
-    * fused: a finished row (cur == source) joins the depth-0 visited
-    * entry whose preds array is EMPTY, so explode_outer passes it
+  /** Backward path reconstruction over the [[frontierPaths]] predecessor
+    * table, fused: a finished row (cur == source) joins the depth-0
+    * visited entry whose preds array is EMPTY, so explode_outer passes it
     * through unchanged — no fin/working split, one consumer per round,
     * ZERO checkpoints: the whole walk is one QueryExecution in which the
     * per-round `preds` exchanges are identical subplans Spark collapses
@@ -419,56 +341,19 @@ object Traversals {
       col("length"))
   }
 
-  /** Fully-lazy batched shortest paths over an explicit pair list
-    * (maxDepth ≤ [[LazyUnrollDepth]]): [[spTree]] from the distinct
-    * sources, then ONE end-join of the reached set against the pair set
-    * (equivalent to per-hop hit extraction: the tree admits each
-    * (source, vertex) exactly once, at minimal depth), then the fused
-    * [[reconstruct]] walk.
-    *
-    * MEASURED AND REJECTED: bounding the reconstruct rounds by the
-    * actual deepest found length (one driver `max(length)` action on a
-    * checkpointed `found`) — the extra QueryExecution costs more than
-    * the pass-through rounds it saves (cy32 1.99 → 2.55 s, sp01
-    * 1.24 → 1.58 s; a self-retired row's round is a broadcast-join
-    * no-op, the action is ~3 stages of scheduling latency). */
-  private def shortestPathsPairsLazy(g: GraphState, pairs: DataFrame,
-      maxDepth: Int, edgeTypes: Seq[String], undirected: Boolean,
-      all: Boolean): DataFrame = {
-    val p = pairs
-      .select(col(pairs.columns(0)).as("__a"),
-        col(pairs.columns(1)).as("__b"))
-      .dropDuplicates("__a", "__b")
-      .localCheckpoint(eager = false)
-    val self = p.filter(col("__a") === col("__b"))
-      .select(col("__a"), col("__b"), array(col("__a")).as("path"),
-        array().cast("array<string>").as("epath"), lit(0L).as("length"))
-    val targets = p.filter(col("__a") =!= col("__b"))
-    val visited = spTree(g, targets.select(col("__a")), maxDepth,
-      edgeTypes, undirected, all)
-    val found = visited.filter(col("depth") > 0)
-      .join(targets, col("source") === col("__a") && col("id") === col("__b"))
-      .select(col("__a"), col("__b"), col("depth").cast("long").as("length"))
-    self.union(reconstruct(found, visited, maxDepth))
-  }
-
   /** Batched shortest paths from EVERY source to EVERY target (cartesian
     * pair semantics) WITHOUT materializing the source×target product —
     * the product of two MATCHed endpoint sets plans as an unbroadcast
     * CartesianProductExec whose partition count is the PRODUCT of its
     * sides (measured: 42×42 = 1764 tasks and 47 s of task time at sf1
     * just to enumerate (customer c:1 × part) pairs the traversal then
-    * dedups back down). Here sources drive one tree expansion and
-    * targets join once against the reached set; only FOUND pairs ever
-    * exist as rows — in BOTH regimes: the lazy unroll up to
-    * [[LazyUnrollDepth]], and an eager per-hop loop past it (early exit
-    * on empty frontier or all pairs found; no per-source retirement —
-    * a source whose targets are all found keeps expanding until the
-    * GLOBAL exit, the price of never building the pair table). */
+    * dedups back down). Here sources drive one frontier expansion and
+    * targets join once against the reached set ([[frontierPaths]]); only
+    * FOUND pairs ever exist as rows. */
   def shortestPathsFromTo(g: GraphState, sources: DataFrame,
       targets: DataFrame, maxDepth: Int, edgeTypes: Seq[String] = Nil,
       undirected: Boolean = false, all: Boolean = false): DataFrame = {
-    // both endpoint sets are multiply consumed (self + tree / found
+    // both endpoint sets are multiply consumed (self + frontier / found
     // join) and may sit on expensive scans — one lazy checkpoint each
     // keeps those scans single-execution
     val srcs = sources.select(col(sources.columns.head).as("__a"))
@@ -484,73 +369,13 @@ object Traversals {
       val self = srcs.join(tgts, col("__a") === col("__b"))
         .select(col("__a"), col("__b"), array(col("__a")).as("path"),
           array().cast("array<string>").as("epath"), lit(0L).as("length"))
-      if (maxDepth > LazyUnrollDepth)
-        fromToEager(g, srcs, tgts, self, maxDepth, edgeTypes, undirected, all)
-      else {
-        val visited = spTree(g, srcs, maxDepth, edgeTypes, undirected, all)
-        val found = visited.filter(col("depth") > 0)
-          .join(tgts, col("id") === col("__b"))
-          .select(col("source").as("__a"), col("__b"),
-            col("depth").cast("long").as("length"))
-        self.union(reconstruct(found, visited, maxDepth))
-      }
+      val nSrc = srcs.count() // materializes both endpoint checkpoints
+      val nTgt = tgts.count()
+      if (nSrc == 0 || nTgt == 0) self
+      else self.union(frontierPaths(g, srcs, tgts.select(col("__b")
+        .as("id")), nSrc * nTgt - self.count(), maxDepth, edgeTypes,
+        undirected, all))
     }
-  }
-
-  /** Eager from-to engine (maxDepth > [[LazyUnrollDepth]]): the spTree
-    * hop shape driven by a per-hop loop-control job, exiting early when
-    * the frontier empties or every (source, target) pair is accounted
-    * for. The hop's one action is a single left-outer pass of the new
-    * frontier against the target set, yielding frontier size AND newly
-    * found pair count together (the tree admits each (source, vertex)
-    * once, at minimal depth, so found pairs never re-count).
-    * Reconstruction walks only to the deepest FOUND length — tracked
-    * driver-side for free by the loop. */
-  private def fromToEager(g: GraphState, srcs: DataFrame, tgts: DataFrame,
-      self: DataFrame, maxDepth: Int, edgeTypes: Seq[String],
-      undirected: Boolean, all: Boolean): DataFrame = {
-    val spark = srcs.sparkSession
-    val n = traversalPartitions(spark)
-    val edges = partitionedEdges(hopEdges(g, edgeTypes, undirected))
-    val nSrc = srcs.count() // materializes both endpoint checkpoints
-    val nTgt = tgts.count()
-    if (nSrc == 0 || nTgt == 0) return self
-    var remaining = nSrc * nTgt - self.count()
-    val emptyPreds = array()
-      .cast("array<struct<pred:string,prededge:string>>")
-    var visited = srcs.select(col("__a").as("source"))
-      .select(col("source"), col("source").as("id"), lit(0).as("depth"),
-        emptyPreds.as("preds"))
-      // the AQE-planned checkpoint drops this partitioning: hop 1's join
-      // shuffles the frontier onto `id` again (see spHop)
-      .repartition(n, col("id"))
-      .localCheckpoint(eager = false) // materializes inside hop 1's job
-    var frontier = visited.select("source", "id")
-    var depth = 0
-    var maxLen = 0
-    var frontierNonEmpty = remaining > 0
-    val tMark = tgts.select(col("__b"), lit(1).as("__hit"))
-    while (depth < maxDepth && remaining > 0 && frontierNonEmpty) {
-      depth += 1
-      val nxt = spHop(frontier, edges, visited, depth, all)
-      // the hop's ONE job: frontier size + new-pair count in one pass
-      // (targets unique on __b, so the left-outer join is 1:≤1)
-      val stats = nxt.join(tMark, nxt("id") === tMark("__b"), "left_outer")
-        .agg(count(lit(1)).as("n"), count(col("__hit")).as("hits"))
-        .head()
-      val nTotal = stats.getLong(0)
-      val nHits = stats.getLong(1)
-      visited = visited.union(nxt)
-      if (depth % 3 == 0) visited = visited.localCheckpoint(eager = false)
-      if (nHits > 0) { remaining -= nHits; maxLen = depth }
-      frontier = nxt.select("source", "id")
-      frontierNonEmpty = nTotal > 0
-    }
-    val found = visited.filter(col("depth") > 0)
-      .join(tgts, col("id") === col("__b"))
-      .select(col("source").as("__a"), col("__b"),
-        col("depth").cast("long").as("length"))
-    self.union(reconstruct(found, visited, maxLen))
   }
 
   /** Single-pair convenience over the batched engine (kept for API

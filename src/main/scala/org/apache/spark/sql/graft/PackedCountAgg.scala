@@ -1,5 +1,7 @@
 package org.apache.spark.sql.graft
 
+import scala.util.DynamicVariable
+
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -24,7 +26,7 @@ import org.apache.spark.sql.types.LongType
   * core that HashAggregateExec does in ~12 s); this operator is the
   * Spark-side equivalent: open-addressed long→long table, linear
   * probing, multiplicative hashing, 16 bytes per entry, zero per-row
-  * allocation — and, past [[PackedCountAgg.RadixThresholdKey]] rows per
+  * allocation — and, past [[PackedCountAgg.radixThreshold]] rows per
   * partition (where a flat table outgrows L3 and every probe becomes a
   * DRAM miss), a DuckDB-style in-task radix pass: keys scatter into 256
   * hash-top-byte shards with two sequential passes, then each shard
@@ -46,7 +48,7 @@ import org.apache.spark.sql.types.LongType
   * — `Verify` reads `SPARK_GRAFT_SHUFFLE` and `graft.dev.Probe` takes
   * `--set:spark.sql.shuffle.partitions=N` for exactly this (measured
   * round 10: 32 partitions at 8 g OOMs, 256 completes). Drain
-  * memory is bounded: up to [[PackedCountAgg.PersistentSwitchKey]]
+  * memory is bounded: up to [[PackedCountAgg.persistentSwitch]]
   * rows (default 64M = 512 MB) the partition buffers flat — the lean
   * path for near-unique keys, whose worst-case transient is ~24 B ×
   * rows (power-of-two buffer slack plus the one-shot radix's
@@ -57,14 +59,17 @@ import org.apache.spark.sql.types.LongType
   * never 8 B × rows unbounded.
   *
   * Used by `GraphXBridge.linkCandidates` when the pair key packs into
-  * one long (conf `spark.graft.packedCountAgg`, default on);
+  * one long (a test hook, `GraphXBridge.packedCount`, forces the
+  * generic aggregate);
   * registered for deployment via [[graft.api.GraftExtensions]] and
   * imperatively (idempotent `experimental.extraStrategies` append) by
   * [[PackedCountAgg.countByKey]] so any session can plan it.
   */
 case class PackedKeyCountNode(
     child: LogicalPlan,
-    countAttr: AttributeReference)
+    countAttr: AttributeReference,
+    radixThreshold: Long,
+    persistentSwitch: Long)
     extends UnaryNode {
   override def output: Seq[Attribute] = child.output :+ countAttr
   override def producedAttributes: AttributeSet = AttributeSet(countAttr)
@@ -72,8 +77,12 @@ case class PackedKeyCountNode(
       newChild: LogicalPlan): PackedKeyCountNode = copy(child = newChild)
 }
 
+/** `radixThreshold` and `persistentSwitch`: the values of the
+  * [[PackedCountAgg]] hooks when the node was built (see there). */
 case class PackedKeyCountExec(
     countAttr: AttributeReference,
+    radixThreshold: Long,
+    persistentSwitch: Long,
     child: SparkPlan)
     extends UnaryExecNode {
 
@@ -98,28 +107,9 @@ case class PackedKeyCountExec(
 
   override protected def doExecute(): RDD[InternalRow] = {
     val numOutputRows = longMetric("numOutputRows")
-    // Above this many rows per partition the flat table outgrows cache
-    // (≥4M rows ⇒ ≥64 MB of table at near-unique multiplicity) and every
-    // probe is a DRAM miss; the radix path then pays one extra
-    // sequential pass to make the probes cache-resident. 0 disables.
-    val radixThreshold = org.apache.spark.sql.internal.SQLConf.get
-      .getConfString(PackedCountAgg.RadixThresholdKey, (1 << 22).toString)
-      .toLong
-    // Past this many BUFFERED rows per partition the drain stops being
-    // one flat buffer and switches to bounded chunks feeding PERSISTENT
-    // per-shard count tables — the backstop that keeps a skewed
-    // low-cardinality giant partition at O(distinct + chunk) memory
-    // instead of 8 B × rows (the former unconditional drain also
-    // overflowed its bare `n << 1` growth at 2^30 rows). The default
-    // (64M rows = 512 MB of buffer) sits above every measured workload
-    // (gx18 sf1: ~46M rows/partition), because below the switch the
-    // one-shot path is ~2× leaner for the near-unique-key case this
-    // operator exists for: 8–16 B × rows of flat longs vs ~26 B ×
-    // distinct of persistent hash slots, with only ONE lazily-built
-    // shard table resident at a time.
-    val persistentSwitch = org.apache.spark.sql.internal.SQLConf.get
-      .getConfString(PackedCountAgg.PersistentSwitchKey,
-        (1L << 26).toString).toLong
+    // plain locals: the task closure must not capture the plan node
+    val radixThreshold = this.radixThreshold
+    val persistentSwitch = this.persistentSwitch
     child.execute().mapPartitionsInternal { iter =>
       val S = 256
       var buf = new Array[Long](1 << 14)
@@ -256,8 +246,8 @@ case class PackedKeyCountExec(
                 val grown = math.min(
                   buf.length.toLong << 1, (Int.MaxValue - 8).toLong).toInt
                 require(grown > buf.length, "PackedKeyCountExec: " +
-                  "partition exceeds 2^31 buffered rows — lower " +
-                  PackedCountAgg.PersistentSwitchKey)
+                  "partition exceeds 2^31 buffered rows — the persistent " +
+                  s"switch ($persistentSwitch rows) must stay below that")
                 buf = java.util.Arrays.copyOf(buf, grown)
               }
             }
@@ -397,20 +387,19 @@ case class PackedKeyCountExec(
 
 object PackedCountAgg {
 
-  /** Session conf gate (default ON): set to false to fall back to the
-    * generic `groupBy(pk).count()` plan. */
-  val ConfKey = "spark.graft.packedCountAgg"
-
   /** Rows-per-partition above which the task radix-shards its keys by
     * the hash's top byte and aggregates shard-by-shard with
     * cache-resident tables instead of one DRAM-sized flat table
-    * (default 4M rows ≈ the table size where probes start missing L3).
-    * Set to 0 to force the direct single-table path — BELOW the
-    * [[PersistentSwitchKey]] bound only: a partition that crosses the
-    * persistent switch always takes the bounded chunked path (the
-    * memory backstop outranks the debugging knob); raise the switch
-    * too if a truly flat run of a giant partition is intended. */
-  val RadixThresholdKey = "spark.graft.packedCountAgg.radixThreshold"
+    * (default 4M rows ≈ the table size where probes start missing L3:
+    * ≥64 MB of table at near-unique multiplicity, every probe a DRAM
+    * miss; the radix path pays one extra sequential pass to make the
+    * probes cache-resident). 0 forces the direct single-table path —
+    * BELOW [[persistentSwitch]] only: a partition that crosses the
+    * persistent switch always takes the bounded chunked path. A test
+    * hook: [[countByKey]] reads it on the caller's thread (an AQE or
+    * broadcast thread that plans or runs the node would not inherit a
+    * binding) and the node carries the value. */
+  private[graft] val radixThreshold = new DynamicVariable[Long](1L << 22)
 
   /** Chunk granularity (rows) shared by the persistent-mode drain
     * buffer and the scatter scratch: 4M rows = 32 MB each. */
@@ -419,17 +408,21 @@ object PackedCountAgg {
   /** Buffered rows per partition above which the drain abandons the
     * flat one-shot buffer for bounded chunks feeding persistent
     * per-shard count tables — the memory backstop for skewed
-    * low-cardinality giant partitions (default 64M rows = 512 MB;
-    * memory past the switch is O(distinct keys + one chunk)). */
-  val PersistentSwitchKey = "spark.graft.packedCountAgg.persistentSwitch"
-
-  def enabled(spark: org.apache.spark.sql.SparkSession): Boolean =
-    spark.conf.get(ConfKey, "true").toBoolean
+    * low-cardinality giant partitions (memory past the switch is
+    * O(distinct keys + one chunk); the former unconditional drain also
+    * overflowed its bare `n << 1` growth at 2^30 rows). The default,
+    * 64M rows = 512 MB of buffer, sits above every measured workload
+    * (gx18 sf1: ~46M rows/partition), because below the switch the
+    * one-shot path is ~2× leaner for near-unique keys: 8–16 B × rows of
+    * flat longs vs ~26 B × distinct of persistent hash slots, with only
+    * ONE lazily-built shard table resident at a time. A test hook, read
+    * like [[radixThreshold]]. */
+  private[graft] val persistentSwitch = new DynamicVariable[Long](1L << 26)
 
   object Strategy extends SparkStrategy {
     override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-      case PackedKeyCountNode(child, countAttr) =>
-        PackedKeyCountExec(countAttr, planLater(child)) :: Nil
+      case PackedKeyCountNode(child, countAttr, radix, switch) =>
+        PackedKeyCountExec(countAttr, radix, switch, planLater(child)) :: Nil
       case _ => Nil
     }
   }
@@ -451,6 +444,7 @@ object PackedCountAgg {
     val countAttr = AttributeReference(countName, LongType,
       nullable = false)()
     classic.Dataset.ofRows(session,
-      PackedKeyCountNode(cdf.queryExecution.analyzed, countAttr))
+      PackedKeyCountNode(cdf.queryExecution.analyzed, countAttr,
+        radixThreshold.value, persistentSwitch.value))
   }
 }

@@ -921,125 +921,17 @@ case class MinHashMd5SigExpr(child: Expression, k: Int)
       : MinHashMd5SigExpr = copy(child = newChild)
 }
 
-/** Sorted-ascending DISTINCT xxhash64 values of the word n-gram
-  * shingles of the normalized text — the candidate-generation key
-  * domain for set-similarity joins. Hash keys keep the inverted-index
-  * shuffles/joins/windows on fixed-width longs instead of ~25-byte
-  * shingle strings (the sf1 rehearsal measured the string form
-  * GC-bound: 110 s+ of GC per stage). Exactness contract: equal strings
-  * always hash equal, so candidate joins on hashes yield a SUPERSET of
-  * string-equal matches per shared shingle — but in-doc collisions
-  * SHRINK the hash set (hsz ≤ sz), and a prefix length derived from hsz
-  * would be too short by ≈ (1−t)·(sz−hsz) under the PPJoin theorem.
-  * Consumers must derive prefix lengths from the STRING-set size
-  * (p = sz − ⌈t·sz⌉ + 1, as DedupOps.containmentPairs does), which is
-  * sound unconditionally; the exact intersection is always recomputed
-  * on the string arrays ([[SortedIntersectCountExpr]]). Same
-  * normalization/shingling as [[ShingleSetExpr]]. */
-case class HashedShingleSetExpr(child: Expression, n: Int)
-    extends UnaryExpression with ImplicitCastInputTypes with TextNormalizing
-    with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-  import org.apache.spark.sql.catalyst.util.GenericArrayData
-  import org.apache.spark.sql.types.{ArrayType, StringType}
-  import org.apache.spark.unsafe.types.UTF8String
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "hashed_shingle_set"
-
-  private def hash(s: String): Long = {
-    val u = UTF8String.fromString(s)
-    org.apache.spark.sql.catalyst.expressions.XXH64
-      .hashUnsafeBytes(u.getBaseObject, u.getBaseOffset, u.numBytes, 42L)
-  }
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val norm = normalized(input)
-    val words = norm.split(" ", -1)
-    val raw =
-      if (words.length < n) Array(hash(words.mkString(" ")))
-      else {
-        val out = new Array[Long](words.length - n + 1)
-        var j = 0
-        val sb = new java.lang.StringBuilder
-        while (j + n <= words.length) {
-          sb.setLength(0)
-          var w = 0
-          while (w < n) {
-            if (w > 0) sb.append(' ')
-            sb.append(words(j + w))
-            w += 1
-          }
-          out(j) = hash(sb.toString)
-          j += 1
-        }
-        out
-      }
-    java.util.Arrays.sort(raw)
-    // in-place dedup of the sorted hashes (set semantics, like
-    // ShingleSetExpr's LinkedHashSet — collisions also dedup, which the
-    // prefix-length soundness argument requires)
-    var w = 0
-    var r = 0
-    while (r < raw.length) {
-      if (r == 0 || raw(r) != raw(r - 1)) { raw(w) = raw(r); w += 1 }
-      r += 1
-    }
-    new GenericArrayData(java.util.Arrays.copyOf(raw, w))
-  }
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : HashedShingleSetExpr = copy(child = newChild)
-}
-
-/** |A ∩ B| for two SORTED-ascending ARRAY<STRING> columns via a single
-  * zero-allocation linear merge over the UTF8String binary order (the
-  * order `array_sort` produces). The built-in `array_intersect` builds
-  * a boxed hash set plus a result array per row — on a 250k-pair ×
-  * 200-element containment join that allocation churn was the dominant
-  * GC source at sf1. Both inputs MUST be sorted ascending and
-  * duplicate-free (sets) — on duplicate runs the merge counts
-  * min(run lengths), not distinct matches. */
-case class SortedIntersectCountExpr(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes
-    with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-  import org.apache.spark.sql.catalyst.util.ArrayData
-  import org.apache.spark.sql.types.{ArrayType, StringType}
-
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(StringType), ArrayType(StringType))
-  override def dataType: DataType = LongType
-  override def prettyName: String = "sorted_intersect_count"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val nx = x.numElements()
-    val ny = y.numElements()
-    var i = 0
-    var j = 0
-    var c = 0L
-    while (i < nx && j < ny) {
-      val cmp = x.getUTF8String(i).compareTo(y.getUTF8String(j))
-      if (cmp == 0) { c += 1; i += 1; j += 1 }
-      else if (cmp < 0) i += 1
-      else j += 1
-    }
-    c
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SortedIntersectCountExpr =
-    copy(left = newLeft, right = newRight)
-}
-
-/** |A ∩ B| for two SORTED-ascending ARRAY<INT> columns — the
-  * dictionary-encoded sibling of [[SortedIntersectCountExpr]]: when set
-  * elements have been mapped through an injective dictionary (string
-  * shingle → dense int id), intersection counts are IDENTICAL to the
-  * string-set counts, and the merge compares 4-byte ints instead of
-  * variable-length UTF8 — the verify join of the containment-dedup
-  * operator shuffles ~6× fewer bytes per candidate pair this way. */
+/** |A ∩ B| for two SORTED-ascending, duplicate-free ARRAY<INT> columns
+  * via a single zero-allocation linear merge (on duplicate runs it
+  * counts min(run lengths), not distinct matches). The built-in
+  * `array_intersect` builds a boxed hash set plus a result array per
+  * row — on a 250k-pair × 200-element containment join that allocation
+  * churn was the dominant GC source at sf1. When set elements have been
+  * mapped through an injective dictionary (string shingle → dense int
+  * id), intersection counts are IDENTICAL to the string-set counts, and
+  * the merge compares 4-byte ints instead of variable-length UTF8 — the
+  * verify join of the containment-dedup operator shuffles ~6× fewer
+  * bytes per candidate pair this way. */
 case class SortedIntersectCountIntExpr(left: Expression, right: Expression)
     extends BinaryExpression with ImplicitCastInputTypes
     with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, map_entries, sort_array}
 
 import graft.SparkSpec
+import graft.SparkSpec.withKernelBound
 import graft.engine.GraphState
 import graft.model.GraphSchemas
 
@@ -200,13 +201,16 @@ class CypherSpec extends SparkSpec {
   }
 
   test("deep-bound shortestPath with unbound endpoint: eager engine") {
-    // [*..12] exceeds the lazy unroll depth: the unbound-endpoint path
-    // must run the eager from-to loop, never a source×target product
-    val rows = q(
+    // the unbound-endpoint path runs the from-to engine, never a
+    // source×target product: the driver kernel at the default bound,
+    // the distributed frontier loop at bound 0 — same rows
+    def run() = q(
       """MATCH (a:Person {id: "alice"})
         |MATCH p = shortestPath((a)-[*..12]-(b:Person {id: "diana"}))
-        |RETURN size(nodes(p)) AS n""".stripMargin).collect()
+        |RETURN size(nodes(p)) AS n""".stripMargin).collect().toSeq
+    val rows = run()
     assert(rows.length == 1 && rows.head.getInt(0) == 3)
+    assert(withKernelBound("0")(run()) == rows)
   }
 
   test("shortestPath far endpoint with a CORRELATED property map") {

@@ -2,6 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.testShims
 import org.apache.spark.sql.types._
 
 import graft.SparkSpec
@@ -303,22 +304,14 @@ class ScaleSpec extends SparkSpec {
       .orderBy($"id1", $"id2")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4))).toSeq
-    spark.conf.set(org.apache.spark.sql.graft.PackedCountAgg.ConfKey,
-      "false")
-    val generic = try run()
-    finally spark.conf.set(
-      org.apache.spark.sql.graft.PackedCountAgg.ConfKey, "true")
+    val generic = GraphXBridge.packedCount.withValue(false)(run())
     val packed = run()
     assert(packed.nonEmpty && packed == generic,
       s"packed=${packed.take(5)} generic=${generic.take(5)}")
     // force the in-task radix shape (threshold 1 row) — every shard
     // boundary, the lazy shard-by-shard emit, and the zero/null
     // out-of-band counters must reproduce the generic result exactly
-    spark.conf.set(
-      org.apache.spark.sql.graft.PackedCountAgg.RadixThresholdKey, "1")
-    val radix = try run()
-    finally spark.conf.unset(
-      org.apache.spark.sql.graft.PackedCountAgg.RadixThresholdKey)
+    val radix = testShims.packedRadixThreshold.withValue(1L)(run())
     assert(radix == generic, s"radix=${radix.take(5)}")
   }
 
@@ -345,19 +338,16 @@ class ScaleSpec extends SparkSpec {
     val generic = df.groupBy($"k").count()
       .collect().map(r => (if (r.isNullAt(0)) null else r.getLong(0),
         r.getLong(1))).toMap
-    def packedWith(key: String): Map[Any, Long] = {
-      spark.conf.set(key, "100")
-      try org.apache.spark.sql.graft.PackedCountAgg.countByKey(df, "n")
+    def packedWith(hook: scala.util.DynamicVariable[Long])
+        : Map[Any, Long] = hook.withValue(100L) {
+      org.apache.spark.sql.graft.PackedCountAgg.countByKey(df, "n")
         .collect().map(r => ((if (r.isNullAt(0)) null else r.getLong(0))
           : Any, r.getLong(1))).toMap
-      finally spark.conf.unset(key)
     }
-    val oneShot = packedWith(
-      org.apache.spark.sql.graft.PackedCountAgg.RadixThresholdKey)
+    val oneShot = packedWith(testShims.packedRadixThreshold)
     assert(oneShot == generic,
       s"one-shot radix: ${oneShot.size} vs ${generic.size}")
-    val persisted = packedWith(
-      org.apache.spark.sql.graft.PackedCountAgg.PersistentSwitchKey)
+    val persisted = packedWith(testShims.packedPersistentSwitch)
     assert(persisted == generic,
       s"persistent chunks: ${persisted.size} vs ${generic.size}")
   }

@@ -2,6 +2,8 @@ package graft.engine
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.testShims
+import org.scalacheck.{Gen, Prop, Test}
+import org.scalacheck.Prop.propBoolean
 
 import graft.SparkSpec
 import graft.SparkSpec.withKernelBound
@@ -65,6 +67,58 @@ class TraversalSpec extends SparkSpec {
     val out = Traversals.bfs(chain, srcDf("d"), maxDepth = 10)
       .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
     assert(out == Map("d" -> 0, "a" -> 1, "b" -> 2, "c" -> 2))
+  }
+
+  test("bfs == a plain Scala BFS on random digraphs, both regimes") {
+    // v0..v7 with random typed edges and a self-loop, plus the cycle
+    // v0 → v1 → v2 → v0 and an isolated vertex `iso` (a source when
+    // drawn); depths 2 and 10 sit on either side of the lazy unroll
+    // depth (8)
+    val vs = (0 until 8).map(i => s"v$i") :+ "iso"
+    val edge =
+      Gen.zip(Gen.choose(0, 7), Gen.choose(0, 7), Gen.oneOf("x", "y"))
+    val cases = for {
+      drawn <- Gen.choose(0, 14).flatMap(Gen.listOfN(_, edge))
+      loop <- Gen.choose(0, 7)
+      srcs <- Gen.atLeastOne(vs)
+      edgeType <- Gen.oneOf(None, Some("x"))
+    } yield ((drawn :+ ((loop, loop, "x"))).map { case (a, b, t) =>
+      (s"v$a", s"v$b", t) } ++ Seq(("v0", "v1", "x"), ("v1", "v2", "y"),
+      ("v2", "v0", "x")), srcs.toSeq, edgeType)
+    /** Minimum hop count ≤ depth per reached vertex, sources at 0. */
+    def reference(es: Seq[(String, String, String)], srcs: Seq[String],
+        depth: Int, edgeType: Option[String], undirected: Boolean)
+        : Map[String, Int] = {
+      val hops = es.filter(e => edgeType.forall(_ == e._3)).flatMap {
+        case (a, b, _) =>
+          if (undirected) Seq(a -> b, b -> a) else Seq(a -> b)
+      }.groupMap(_._1)(_._2)
+      var dist = srcs.map(_ -> 0).toMap
+      var frontier = srcs.distinct
+      for (d <- 1 to depth) {
+        frontier = frontier.flatMap(hops.getOrElse(_, Nil)).distinct
+          .filterNot(dist.contains)
+        dist ++= frontier.map(_ -> d)
+      }
+      dist
+    }
+    val prop = Prop.forAll(cases) { case (es, srcs, edgeType) =>
+      val g = GraphState(
+        vertexDf(vs.map((_, "t", Map.empty[String, String])): _*),
+        edgeDf(es.zipWithIndex.map { case ((a, b, t), i) =>
+          (s"e$i", a, b, t) }: _*))
+      (for (undirected <- Seq(false, true); depth <- Seq(2, 10)) yield {
+        val out = Traversals.bfs(g, srcDf(srcs: _*), depth, edgeType,
+            undirected)
+          .collect().map(r => r.getString(0) -> r.getInt(1)).toSeq.sorted
+        val want = reference(es, srcs, depth, edgeType, undirected)
+        (out == want.toSeq.sorted) :|
+          s"undirected=$undirected depth=$depth: $out vs $want"
+      }).reduce(_ && _)
+    }
+    val result = Test.check(
+      Test.Parameters.default.withMinSuccessfulTests(3), prop)
+    assert(result.passed, result.status.toString)
   }
 
   test("shortestPathBetween reconstructs a minimal path") {
@@ -425,18 +479,21 @@ class TraversalSpec extends SparkSpec {
     assert(err.getMessage.contains("driver bound"))
   }
 
-  test("shortestPathsFromTo past the unroll depth: eager loop, no product") {
-    // maxDepth 12 > LazyUnrollDepth forces the eager from-to engine —
-    // same found-pairs-only semantics, early exit, no source×target
-    // cartesian (the former deep fallback crossJoined the endpoints)
-    val out = Traversals.shortestPathsFromTo(chain, srcDf("a"),
+  test("shortestPathsFromTo at depth 12: kernel == loop, no product") {
+    // found-pairs-only semantics on both legs — the driver kernel at
+    // the default bound, the distributed frontier loop at bound 0 (early
+    // exit, no source×target cartesian: the former deep fallback
+    // crossJoined the endpoints)
+    def run() = Traversals.shortestPathsFromTo(chain, srcDf("a"),
         srcDf("c", "d", "iso"), maxDepth = 12)
       .collect()
       .map(r => (r.getString(0), r.getString(1),
         r.getSeq[String](2), r.getLong(4))).toSet
+    val out = run()
     assert(out == Set(
       ("a", "c", Seq("a", "c"), 1L),        // the skip edge wins
       ("a", "d", Seq("a", "c", "d"), 2L)))  // iso unreachable: no row
+    assert(withKernelBound("0")(run()) == out)
   }
 
   test("kernel bound Int.MaxValue keeps the default shortest paths") {
@@ -743,7 +800,7 @@ class TraversalSpec extends SparkSpec {
     val diaSrcs = Seq("x").toDF("id")
     val diaTgts = Seq("z", "y2").toDF("id")
     // combos cover: both modes, both directions, a type filter, and
-    // BOTH distributed regimes (lazy unroll depth 4, eager depth 10)
+    // two depths (4 and 10) of the one distributed frontier loop
     val combos = Seq(
       (rand, randPairs, randSrcs, randTgts, false, false, Nil, 4),
       (rand, randPairs, randSrcs, randTgts, true, false, Nil, 4),

@@ -404,36 +404,22 @@ class DedupSpec extends SparkSpec {
     assert(inter.toDouble / (4 + 12 - inter) < 0.4)
   }
 
-  test("HashedShingleSetExpr ≡ sorted-distinct xxhash64 of the string " +
-      "shingle set (the builtin hash, seed 42, over identical bytes)") {
-    import org.apache.spark.sql.graft.{shims, HashedShingleSetExpr}
+  test("SortedIntersectCountIntExpr == size(array_intersect)") {
+    // on sorted distinct int arrays, the form containmentPairs feeds it
+    import org.apache.spark.sql.graft.{shims, SortedIntersectCountIntExpr}
     import spark.implicits._
-    val docs = Seq("the quick brown fox jumps over the lazy dog",
-      "  Mixed   CASE   and   runs of  spaces  ",
-      "short", "", "a b", "répété répété répété accenté unicode ïö")
-      .toDF("text")
-    val both = docs.select(
-      shims.column(HashedShingleSetExpr(
-        shims.expression(col("text")), 3)).as("fast"),
-      array_sort(array_distinct(transform(
-        DedupOps.shingleSet(col("text"), 3), x => xxhash64(x))))
-        .as("ref"))
-    assert(both.collect().forall(r =>
-      r.getSeq[Long](0) == r.getSeq[Long](1)), both.collect().mkString)
-  }
-
-  test("SortedIntersectCountExpr == size(array_intersect) on sorted " +
-      "distinct string arrays") {
-    import org.apache.spark.sql.graft.{shims, SortedIntersectCountExpr}
-    import spark.implicits._
+    // negatives and Int extremes: the merge compares signed ints, the
+    // order array_sort and the containment dictionary produce
+    val pool = Vector(Int.MinValue, -7, -1, 0, 1, 2, 3, 5, 8, 13, 21,
+      Int.MaxValue)
     val rnd = new scala.util.Random(11)
     val rows = (0 until 200).map { _ =>
-      def arr() = (0 until rnd.nextInt(12))
-        .map(_ => s"w${rnd.nextInt(20)}").distinct.sorted
+      def arr() = Seq.fill(rnd.nextInt(12))(pool(rnd.nextInt(pool.size)))
+        .distinct.sorted
       (arr(), arr())
     }.toDF("a", "b")
     val out = rows.select(
-      shims.column(SortedIntersectCountExpr(
+      shims.column(SortedIntersectCountIntExpr(
         shims.expression(col("a")), shims.expression(col("b"))))
         .as("fast"),
       size(array_intersect(col("a"), col("b"))).cast("long").as("ref"))
