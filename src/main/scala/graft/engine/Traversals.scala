@@ -369,11 +369,19 @@ object Traversals {
       val self = srcs.join(tgts, col("__a") === col("__b"))
         .select(col("__a"), col("__b"), array(col("__a")).as("path"),
           array().cast("array<string>").as("epath"), lit(0L).as("length"))
-      val nSrc = srcs.count() // materializes both endpoint checkpoints
-      val nTgt = tgts.count()
+      // |srcs|, |tgts| and |self| in one job (materializes both endpoint
+      // checkpoints): a full outer join keeps every row of either side,
+      // null ids included, and matches exactly self's pairs
+      val n = srcs.withColumn("__s", lit(true))
+        .join(tgts.withColumn("__t", lit(true)),
+          col("__a") === col("__b"), "full_outer")
+        .agg(count(col("__s")), count(col("__t")),
+          count(when(col("__s") && col("__t"), true)))
+        .head()
+      val (nSrc, nTgt, nSelf) = (n.getLong(0), n.getLong(1), n.getLong(2))
       if (nSrc == 0 || nTgt == 0) self
       else self.union(frontierPaths(g, srcs, tgts.select(col("__b")
-        .as("id")), nSrc * nTgt - self.count(), maxDepth, edgeTypes,
+        .as("id")), nSrc * nTgt - nSelf, maxDepth, edgeTypes,
         undirected, all))
     }
   }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.cypher.Cypher
 import graft.sources.{Tables, TpchGraph}
+import graft.streaming.StreamRun
 
 /** Correctness-gate entries that execute through the FULL Cypher stack
   * (string → parser → AST → DataFrame compiler) over the TPC-H graph
@@ -634,14 +635,11 @@ object CypherDriven {
       StructField("lang", StringType), StructField("source", StringType),
       StructField("n_chars", LongType)))
     val name = s"st04_dedup_${memSink.incrementAndGet()}"
-    val q = s.readStream.schema(schema).parquet(stage)
+    StreamRun.drain(s, s.readStream.schema(schema).parquet(stage)
       .select(graft.functions.TextOps.fingerprint(col("text")).as("fp"))
       .dropDuplicates("fp")
       .writeStream.format("memory").queryName(name)
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append))
     s.table(name).orderBy(col("fp"))
   }
 
@@ -1164,17 +1162,13 @@ object CypherDriven {
     def stageHalf(even: Boolean, tag: String): Unit =
       Fixtures.landSingleFile(
         ev.filter((col("event_id") % 2 === 0) === even), base, stage, tag)
-    def runOnce(): Unit = {
-      val q = s.readStream.schema("event_id BIGINT")
+    def runOnce(): Unit =
+      StreamRun.drain(s, s.readStream.schema("event_id BIGINT")
         .parquet(stage.toString)
         .writeStream.format("parquet")
         .option("path", out.toString)
         .option("checkpointLocation", ckpt.toString)
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
+        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append))
     stageHalf(even = true, "a")
     runOnce() // first incarnation: commits half the input
     stageHalf(even = false, "b")
@@ -1223,10 +1217,7 @@ object CypherDriven {
         ev.filter((col("event_id") % 2 === 0) === even), base, stage, tag)
     stageHalf(even = true, "a")
     val name = s"st17_late_${memSink.incrementAndGet()}"
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val q = s.readStream
+    StreamRun.run(s, s.readStream
         .schema("event_id BIGINT, ts TIMESTAMP, event_type STRING")
         .parquet(stage.toString)
         .withWatermark("ts", "1 hour")
@@ -1235,13 +1226,12 @@ object CypherDriven {
         .select(date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss")
           .as("window_start"), col("event_type"), col("n"))
         .writeStream.format("memory").queryName(name)
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-        .start()
+        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append),
+        statePartitions = Some(8)) { q =>
       q.processAllAvailable() // batch 1: advances the watermark
       stageHalf(even = false, "b")
       q.processAllAvailable() // batch 2: late rows must be dropped
-      q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+    }
     s.table(name).orderBy(col("window_start"), col("event_type"))
   }
 
@@ -1350,18 +1340,15 @@ object CypherDriven {
       stage.resolve(s"$tag.parquet"))
     arrive("a")
     val name = s"st19_ojoin_${memSink.incrementAndGet()}"
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val q = s.readStream
+    StreamRun.run(s, s.readStream
         .schema(
           "event_id BIGINT, user_id BIGINT, ts TIMESTAMP, event_type STRING")
         .parquet(stage.toString)
         .transform(e =>
           graft.streaming.EventStreams.clickViewJoinOuter(e, 3600))
         .writeStream.format("memory").queryName(name)
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-        .start()
+        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append),
+        statePartitions = Some(8)) { q =>
       q.processAllAvailable() // batch 1: advances the watermark
       arrive("b")
       q.processAllAvailable() // batch 2
@@ -1393,8 +1380,7 @@ object CypherDriven {
         s"st19: committed watermark $wmMs never reached expected " +
           s"$expectMs within 60 s — the eviction no-data batch did not " +
           "run; stopping now would silently drop outer-join rows")
-      q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+    }
     s.table(name)
       .orderBy(col("click_id"), col("view_id").asc_nulls_first)
   }.withStage((s, dir) => { st19Halves(s, dir); () })
@@ -1451,10 +1437,8 @@ object CypherDriven {
       stage.resolve(s"$tag.parquet"))
     // state-store count is fixed by the FIRST incarnation; both runs
     // pin the same shuffle-partition count
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    def runOnce(): Unit = {
-      val q = s.readStream
+    def runOnce(): Unit =
+      StreamRun.drain(s, s.readStream
         .schema(
           "event_id BIGINT, user_id BIGINT, ts TIMESTAMP, event_type STRING")
         .parquet(stage.toString)
@@ -1462,17 +1446,12 @@ object CypherDriven {
         .writeStream.format("parquet")
         .option("path", out.toString)
         .option("checkpointLocation", ckpt.toString)
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    try {
-      arrive("a")
-      runOnce() // incarnation 1: half the input, join state checkpointed
-      arrive("b")
-      runOnce() // restart: cross-cut pairs need the RESTORED view state
-    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append),
+        statePartitions = Some(8))
+    arrive("a")
+    runOnce() // incarnation 1: half the input, join state checkpointed
+    arrive("b")
+    runOnce() // restart: cross-cut pairs need the RESTORED view state
     s.read.parquet(out.toString).orderBy(col("click_id"), col("view_id"))
   }.withStage((s, dir) => { st20Halves(s, dir); () })
 

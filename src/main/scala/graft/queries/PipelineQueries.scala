@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.{DedupOps, ImportanceOps, SamplingOps,
   SimilarityOps, TextOps, VersionOps}
 import graft.sources.Tables
+import graft.streaming.StreamRun
 
 /** Training-data-pipeline operators as correctness-gate entries: text
   * analysis, dedup, and similarity search over the `documents` /
@@ -424,7 +425,8 @@ object PipelineQueries {
       StructType(Seq(StructField("id1", LongType),
         StructField("id2", LongType),
         StructField("jaccard", DoubleType))))
-    val q = s.readStream.schema(docSchema).parquet(s"$tmp/stream")
+    StreamRun.drain(s, s.readStream.schema(docSchema)
+      .parquet(s"$tmp/stream")
       .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
         // the batch frame is only valid inside this call — pin results
@@ -432,10 +434,7 @@ object PipelineQueries {
           batch, idxSig, idxBands, docs, "doc_id", "text")
           .localCheckpoint())
         ()
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      })
     acc.orderBy(col("id1"), col("id2"))
   }.withStage(dedupIndexStage(_, _))
 
@@ -473,7 +472,8 @@ object PipelineQueries {
         StructField("rank", LongType))))
     val qSchema = StructType(Seq(StructField("vec_id", LongType),
       StructField("embedding", ArrayType(FloatType))))
-    val q = s.readStream.schema(qSchema).parquet(s"$tmp/queries")
+    StreamRun.drain(s, s.readStream.schema(qSchema)
+      .parquet(s"$tmp/queries")
       .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
         acc = acc.unionByName(SimilarityOps.ivfTopKWith(
@@ -482,10 +482,7 @@ object PipelineQueries {
             col("rank"))
           .localCheckpoint())
         ()
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      })
     acc.orderBy(col("query_id"), col("rank"))
   }.withStage(st11Stage(_, _))
 

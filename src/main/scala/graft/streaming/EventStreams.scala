@@ -396,13 +396,10 @@ object EventStreams {
       session: graft.api.GraftSession,
       toVertices: DataFrame => DataFrame): Unit = {
     val raw = graft.sources.EventTs.readStream(spark, sourceDir)
-    val q = raw.writeStream
+    StreamRun.drain(spark, raw.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         session.bulkInsert(vertices = toVertices(batch))
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      })
   }
 
   /** Stream-stream INTERVAL self-join: each click matched to the same
@@ -457,30 +454,19 @@ object EventStreams {
   /** Drive any of the above as a real streaming query from a parquet dir,
     * landing results in an in-memory table — used by tests and as the
     * template for production sinks (kafka/parquet/foreachBatch).
-    * `statePartitions` pins the query's shuffle-partition count (state
-    * store instances are per shuffle partition and their open/commit
-    * cost is per-partition-per-microbatch, so heavily-stateful queries
-    * on small clusters want fewer, fuller partitions); the session
-    * value is restored after the stream stops. */
+    * `statePartitions` pins the query's shuffle-partition count
+    * ([[StreamRun]]). */
   def runToMemory(spark: SparkSession, sourceDir: String, queryName: String,
       transform: DataFrame => DataFrame,
       outputMode: OutputMode = OutputMode.Append,
       statePartitions: Option[Int] = None,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    statePartitions.foreach(n =>
-      spark.conf.set("spark.sql.shuffle.partitions", n.toString))
-    try {
-      val raw = graft.sources.EventTs.readStream(spark, sourceDir,
-        maxFilesPerTrigger)
-      val q = transform(raw).writeStream
-        .format("memory")
-        .queryName(queryName)
-        .outputMode(outputMode)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      spark.table(queryName)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    val raw = graft.sources.EventTs.readStream(spark, sourceDir,
+      maxFilesPerTrigger)
+    StreamRun.drain(spark, transform(raw).writeStream
+      .format("memory")
+      .queryName(queryName)
+      .outputMode(outputMode), statePartitions)
+    spark.table(queryName)
   }
 }

@@ -683,4 +683,22 @@ class ScaleSpec extends SparkSpec {
     }
     assert(users.isEmpty, users.mkString(", "))
   }
+
+  test("every main-source stream starts through graft.streaming.StreamRun") {
+    // StreamRun installs the fork-free checkpoint file manager: a
+    // `writeStream ... .start()` outside graft/streaming/ would bypass it
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, root.getAbsolutePath)
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(files) else Seq(f)
+    val direct = "(?s)writeStream(?:(?!StreamRun\\.).)*?\\.start\\(\\)".r
+    val starters = files(root)
+      .filterNot(_.getPath.contains("graft/streaming/"))
+      .filter { f =>
+        val src = scala.io.Source.fromFile(f, "UTF-8")
+        try direct.findFirstIn(src.mkString).nonEmpty
+        finally src.close()
+      }
+    assert(starters.isEmpty, starters.mkString(", "))
+  }
 }
