@@ -29,6 +29,21 @@ object SimilarityOps {
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
+  /** `df` with [[norm]] of its vector column `v` as column `n`. */
+  private def withNorm(df: DataFrame, v: String, n: String): DataFrame =
+    df.withColumn(n, norm(col(v)))
+
+  /** The 6dp-rounded [[cosine]] of a corpus vector `cvec` and a query
+    * vector `qvec`, from the norms each side's own projection put beside
+    * them ([[withNorm]]: `cnorm`, `qnorm`). The same doubles as
+    * `cosine`, at one dot product per scored pair instead of three, for
+    * one more per corpus row: used where every corpus row meets the
+    * queries (a cross join) or already pays per-row dot products (band
+    * sketch, cell assignment). Shortlist, re-rank and stratum joins,
+    * which score few of the rows they project, keep `cosine`. */
+  private def pairScore: Column =
+    round(dot(col("cvec"), col("qvec")) / (col("cnorm") * col("qnorm")), 6)
+
   private def asDouble(c: Column): Column = c.cast("array<double>")
 
   /** Exact top-k cosine neighbors for each query vector.
@@ -38,15 +53,14 @@ object SimilarityOps {
     * on neighbor id. */
   def cosineTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, excludeSelf: Boolean = true): DataFrame = {
-    val c = corpus.select(col(idCol).as("neighbor_id"),
-      asDouble(col(vecCol)).as("cvec"))
-    val q = queries.select(col(idCol).as("query_id"),
-      asDouble(col(vecCol)).as("qvec"))
+    val c = withNorm(corpus.select(col(idCol).as("neighbor_id"),
+      asDouble(col(vecCol)).as("cvec")), "cvec", "cnorm")
+    val q = withNorm(queries.select(col(idCol).as("query_id"),
+      asDouble(col(vecCol)).as("qvec")), "qvec", "qnorm")
     val scored = c.crossJoin(broadcast(q))
       .filter(if (excludeSelf) col("neighbor_id") =!= col("query_id")
         else lit(true))
-      .select(col("query_id"), col("neighbor_id"),
-        round(cosine(col("cvec"), col("qvec")), 6).as("score"))
+      .select(col("query_id"), col("neighbor_id"), pairScore.as("score"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("score").desc, col("neighbor_id").asc)
     scored.withColumn("rank", row_number().over(w).cast("long"))
@@ -84,15 +98,16 @@ object SimilarityOps {
       vecCol: String, k: Int, dim: Int, planesPerBand: Int = 3,
       bands: Int = 24): DataFrame = {
     import org.apache.spark.sql.graft.{shims, BandsFirstMatchExpr}
-    val sig = (df: DataFrame, id: String) => df.select(
-      col(idCol).as(id), asDouble(col(vecCol)).as(s"${id}_vec"),
-      hyperplaneBandValues(asDouble(col(vecCol)), dim, planesPerBand,
-        bands).as(s"${id}_bands"))
-    val c = sig(corpus, "neighbor_id").select(col("neighbor_id"),
-      col("neighbor_id_vec"), col("neighbor_id_bands"),
+    val sig = (df: DataFrame, id: String, v: String, n: String) =>
+      withNorm(df.select(col(idCol).as(id), asDouble(col(vecCol)).as(v),
+        hyperplaneBandValues(asDouble(col(vecCol)), dim, planesPerBand,
+          bands).as(s"${id}_bands")), v, n)
+    val c = sig(corpus, "neighbor_id", "cvec", "cnorm").select(
+      col("neighbor_id"), col("cvec"), col("cnorm"),
+      col("neighbor_id_bands"),
       posexplode(col("neighbor_id_bands")).as(Seq("band", "band_hash")))
-    val q = sig(queries, "query_id").select(col("query_id"),
-      col("query_id_vec"), col("query_id_bands"),
+    val q = sig(queries, "query_id", "qvec", "qnorm").select(
+      col("query_id"), col("qvec"), col("qnorm"), col("query_id_bands"),
       posexplode(col("query_id_bands")).as(Seq("band", "band_hash")))
     val firstMatch = shims.column(BandsFirstMatchExpr(
       shims.expression(col("neighbor_id_bands")),
@@ -100,9 +115,7 @@ object SimilarityOps {
     val scored = c.join(broadcast(q), Seq("band", "band_hash"))
       .filter(col("neighbor_id") =!= col("query_id") &&
         col("band") === firstMatch)
-      .select(col("query_id"), col("neighbor_id"),
-        round(cosine(col("neighbor_id_vec"), col("query_id_vec")), 6)
-          .as("score"))
+      .select(col("query_id"), col("neighbor_id"), pairScore.as("score"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("score").desc, col("neighbor_id").asc)
     scored.withColumn("rank", row_number().over(w).cast("long"))
@@ -164,16 +177,15 @@ object SimilarityOps {
     // (distance, cell) pairs sorted ascending — ties break on cell id,
     // so assignment and probing are deterministic (sortedCellsCol).
     val cents = collectCentroids(centroids)
-    val c = corpus.select(col(idCol).as("neighbor_id"),
-      asDouble(col(vecCol)).as("cvec"))
+    val c = withNorm(corpus.select(col(idCol).as("neighbor_id"),
+      asDouble(col(vecCol)).as("cvec")), "cvec", "cnorm")
       .withColumn("cell", nearestCellCol(cents)(col("cvec")))
-    val q = queries.select(col(idCol).as("query_id"),
-      asDouble(col(vecCol)).as("qvec"))
+    val q = withNorm(queries.select(col(idCol).as("query_id"),
+      asDouble(col(vecCol)).as("qvec")), "qvec", "qnorm")
       .withColumn("cell", explode(probeCellsCol(cents, nprobe)(col("qvec"))))
     val scored = c.join(broadcast(q), Seq("cell"))
       .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        round(cosine(col("cvec"), col("qvec")), 6).as("score"))
+      .select(col("query_id"), col("neighbor_id"), pairScore.as("score"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("score").desc, col("neighbor_id").asc)
     scored.withColumn("rank", row_number().over(w).cast("long"))
@@ -482,14 +494,13 @@ object SimilarityOps {
       element_at(typedlit(cb(s).map(_._2.toSeq).toSeq),
         col("codes").getItem(s) + 1)
     }: _*))
-    val c = codes.select(col(idCol).as("neighbor_id"),
-      recon.as("rvec"))
-    val q = queries.select(col(idCol).as("query_id"),
-      asDouble(col(vecCol)).as("qvec"))
+    val c = withNorm(codes.select(col(idCol).as("neighbor_id"),
+      recon.as("cvec")), "cvec", "cnorm")
+    val q = withNorm(queries.select(col(idCol).as("query_id"),
+      asDouble(col(vecCol)).as("qvec")), "qvec", "qnorm")
     val scored = c.crossJoin(broadcast(q))
       .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        round(cosine(col("rvec"), col("qvec")), 6).as("score"))
+      .select(col("query_id"), col("neighbor_id"), pairScore.as("score"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("score").desc, col("neighbor_id").asc)
     scored.withColumn("rank", row_number().over(w).cast("long"))

@@ -9,10 +9,14 @@ import org.apache.spark.sql.functions._
   */
 object TextOps {
 
-  /** Whitespace tokenization; empty/blank text → 0 tokens. */
-  def tokenCount(text: Column): Column =
-    when(length(trim(text)) === 0, lit(0L))
-      .otherwise(size(split(trim(text), "\\s+")).cast("long"))
+  /** Whitespace tokenization: the pieces of `split(trim(text), '\s+')`,
+    * and 0 for empty/blank text. One native byte walk
+    * (WsTokenCountExpr), no regex split; TextNormalizerSpec pins it
+    * against the split form, null text included. */
+  def tokenCount(text: Column): Column = {
+    import org.apache.spark.sql.graft.{shims, WsTokenCountExpr}
+    shims.column(WsTokenCountExpr(shims.expression(text)))
+  }
 
   /** Canonical whitespace/case normalization for fingerprinting. */
   def normalize(text: Column): Column =
@@ -117,9 +121,14 @@ object TextOps {
   def nPunct(text: Column): Column =
     (length(text) - length(regexp_replace(text, "[.,!?;:]", ""))).cast("long")
 
-  def meanWordLen(text: Column): Column =
-    floor(length(regexp_replace(trim(text), "\\s+", "")).cast("double")
-      * 100 / tokenCount(text)).cast("double") / 100
+  /** Non-whitespace characters per whitespace token, floored to 2dp.
+    * The numerator is `length(regexp_replace(trim(text), '\s+', ''))`
+    * as one native byte walk (NonWsCharCountExpr). */
+  def meanWordLen(text: Column): Column = {
+    import org.apache.spark.sql.graft.{shims, NonWsCharCountExpr}
+    val chars = shims.column(NonWsCharCountExpr(shims.expression(text)))
+    floor(chars.cast("double") * 100 / tokenCount(text)).cast("double") / 100
+  }
 
   /** Padded-text stopword counting: counts ` w ` occurrences so word
     * boundaries are respected without regex (replace is cheaper and has
@@ -128,8 +137,8 @@ object TextOps {
     // fused native expression (r13): normalize once + one indexOf walk
     // per word, instead of |words| occurrence counts each re-evaluating
     // the padded normalize — bit-identical counting (see
-    // StopwordCountExpr's scaladoc; TextOpsSpec pins it against the
-    // compositional form)
+    // StopwordCountExpr's scaladoc; TextAndSimilaritySpec pins it
+    // against the compositional form)
     import org.apache.spark.sql.graft.{shims, StopwordCountExpr}
     shims.column(StopwordCountExpr(shims.expression(text), stopwords))
   }
@@ -139,25 +148,16 @@ object TextOps {
     * filters — a pushed-down comparison of two score COLUMNS evaluates
     * two full normalizes per row (FilterExec has no common-
     * subexpression elimination); this is the single-pass form, bit-
-    * equivalent by construction (TextOpsSpec pins it). */
+    * equivalent by construction (TextAndSimilaritySpec pins it). */
   def stopwordPrefer(text: Column, a: Seq[String], b: Seq[String])
       : Column = {
     import org.apache.spark.sql.graft.{shims, StopwordPreferExpr}
     shims.column(StopwordPreferExpr(shims.expression(text), a, b))
   }
 
-  /** The pre-r13 compositional form of [[stopwordCount]] — kept as the
-    * equivalence oracle for the fused expression's test pin. */
-  private[graft] def stopwordCountCompositional(text: Column,
-      stopwords: Seq[String]): Column = {
-    val padded = concat(lit(" "), normalize(text), lit(" "))
-    stopwords.map(w => occurrences(padded, s" $w "))
-      .reduce(_ + _)
-  }
-
   /** Language-ID by stopword-profile scoring: returns the language whose
     * stopword hits are highest (deterministic first-wins tie-break on the
-    * profile order). N-gram-free heuristic that stays pure-Column. */
+    * profile order). N-gram-free heuristic. */
   val defaultProfiles: Seq[(String, Seq[String])] = Seq(
     "en" -> Seq("the", "a", "of", "and", "is"),
     "fr" -> Seq("le", "la", "et", "les", "des"),
@@ -167,18 +167,14 @@ object TextOps {
   def languageScore(text: Column, profile: Seq[String]): Column =
     stopwordCount(text, profile)
 
+  /** The argmax of [[languageScore]] over `profiles`, ties to the
+    * earlier profile; a null text gets the first profile's language.
+    * One native expression (LanguageIdExpr): one normalize per row and
+    * one count walk per profile. */
   def languageId(text: Column,
       profiles: Seq[(String, Seq[String])] = defaultProfiles): Column = {
-    // argmax with first-wins tie-break: fold over profiles keeping
-    // (bestLang, bestScore).
-    val scored = profiles.map { case (lang, words) =>
-      (lang, languageScore(text, words)) }
-    scored.tail.foldLeft(
-      struct(lit(scored.head._1).as("lang"), scored.head._2.as("score"))) {
-      case (acc, (lang, score)) =>
-        when(score > acc.getField("score"),
-          struct(lit(lang).as("lang"), score.as("score"))).otherwise(acc)
-    }.getField("lang")
+    import org.apache.spark.sql.graft.{shims, LanguageIdExpr}
+    shims.column(LanguageIdExpr(shims.expression(text), profiles))
   }
 
   /** Rolling-hash document fingerprint (polynomial mod 2^61-1 over

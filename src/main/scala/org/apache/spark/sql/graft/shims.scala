@@ -1145,3 +1145,190 @@ case class StopwordPreferExpr(child: Expression, a: Seq[String],
   override protected def withNewChildInternal(newChild: Expression)
       : StopwordPreferExpr = copy(child = newChild)
 }
+
+/** The language whose stopword profile scores highest on the row's
+  * text, ties to the earlier profile: the fused form of
+  * TextOps.languageId. One normalize and one padded byte array per
+  * row, then one [[StopwordScore.countAll]] walk per profile. A Column
+  * fold over the profiles repeats its accumulator's score in each
+  * `when` condition and else branch, so it normalizes a row up to
+  * twice per profile. A null text gives the first profile's language,
+  * as that fold does: every score is null, and `score > null` keeps
+  * the head. */
+case class LanguageIdExpr(child: Expression,
+    profiles: Seq[(String, Seq[String])])
+    extends UnaryExpression with ImplicitCastInputTypes
+    with TextNormalizing {
+  import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+  import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
+  import org.apache.spark.sql.types.StringType
+  import org.apache.spark.unsafe.types.UTF8String
+
+  require(profiles.nonEmpty, "languageId needs at least one profile")
+  private val langs = profiles.map(p => UTF8String.fromString(p._1)).toArray
+  private val needles = profiles.map(p => StopwordScore.needles(p._2)).toArray
+
+  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
+  override def dataType: DataType = StringType
+  override def nullable: Boolean = false
+  override def prettyName: String = "language_id"
+
+  def pick(input: UTF8String): UTF8String = {
+    if (input == null) return langs(0)
+    val pad = StopwordScore.paddedBytes(input, collationId, icu)
+    var best = 0
+    var bestScore = StopwordScore.countAll(pad, needles(0))
+    var i = 1
+    while (i < needles.length) {
+      val s = StopwordScore.countAll(pad, needles(i))
+      if (s > bestScore) { best = i; bestScore = s }
+      i += 1
+    }
+    langs(best)
+  }
+
+  override def eval(input: InternalRow): Any =
+    pick(child.eval(input).asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext,
+      ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("languageId", this,
+      classOf[LanguageIdExpr].getName)
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      ${c.code}
+      UTF8String ${ev.value} = $ref.pick(${c.isNull} ? null : ${c.value});
+      """, isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression)
+      : LanguageIdExpr = copy(child = newChild)
+}
+
+/** Byte walks over `trim(text)` (Spark's trim: spaces only) for the
+  * whitespace statistics of TextOps.tokenCount and meanWordLen,
+  * without a regex split or replace. Java regex `\s` is exactly the six
+  * ASCII bytes `[ \t\n\x0B\f\r]`, and UTF-8 never holds an ASCII byte
+  * inside a multi-byte character, so a byte walk sees the same runs as
+  * `split(trim(text), '\s+')`. Not `Character.isWhitespace`: that also
+  * takes U+001C–U+001F, which `\s` does not. Character counts assume
+  * valid UTF-8, as every string decoded from parquet or built from a
+  * Java `String` is. */
+object WhitespaceScan {
+  import org.apache.spark.unsafe.types.UTF8String
+
+  private def isWs(b: Byte): Boolean = b == ' ' || (b >= '\t' && b <= '\r')
+
+  /** Pieces of `split(trim(s), '\s+')`, or 0 when `trim(s)` is empty:
+    * 1 + the number of `\s` runs. */
+  def tokens(s: UTF8String): Long = {
+    var end = s.numBytes
+    while (end > 0 && s.getByte(end - 1) == ' ') end -= 1
+    var i = 0
+    while (i < end && s.getByte(i) == ' ') i += 1
+    if (i == end) return 0L
+    var runs = 0L
+    var inRun = false
+    while (i < end) {
+      val ws = isWs(s.getByte(i))
+      if (ws && !inRun) runs += 1
+      inRun = ws
+      i += 1
+    }
+    runs + 1
+  }
+
+  /** `length(regexp_replace(trim(s), '\s+', ''))`: the characters of
+    * `trim(s)` that are not `\s`. */
+  def nonWsChars(s: UTF8String): Int = {
+    var n = 0
+    var i = 0
+    while (i < s.numBytes) {
+      val b = s.getByte(i)
+      // a character starts at every byte that is not 10xxxxxx
+      if ((b & 0xC0) != 0x80 && !isWs(b)) n += 1
+      i += 1
+    }
+    n
+  }
+}
+
+/** Whitespace token count, `split(trim(text), '\s+')`'s pieces and 0
+  * for blank text, by [[WhitespaceScan.tokens]] — the fused form of
+  * TextOps.tokenCount. A null text gives what the compositional form's
+  * `size(null)` gives: −1 under `legacySizeOfNull` (ANSI off), null
+  * under ANSI. The flag is read from the session at construction, as
+  * `Size` reads it. */
+case class WsTokenCountExpr(child: Expression, legacySizeOfNull: Boolean)
+    extends UnaryExpression with ImplicitCastInputTypes {
+  import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+  import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
+  import org.apache.spark.sql.types.StringType
+  import org.apache.spark.unsafe.types.UTF8String
+
+  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
+  override def dataType: DataType = LongType
+  override def nullable: Boolean = !legacySizeOfNull && child.nullable
+  override def prettyName: String = "ws_token_count"
+
+  def count(input: UTF8String): Long = WhitespaceScan.tokens(input)
+
+  override def eval(input: InternalRow): Any = {
+    val v = child.eval(input)
+    if (v != null) count(v.asInstanceOf[UTF8String])
+    else if (legacySizeOfNull) -1L
+    else null
+  }
+
+  override protected def doGenCode(ctx: CodegenContext,
+      ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("wsTokenCount", this,
+      classOf[WsTokenCountExpr].getName)
+    if (!legacySizeOfNull)
+      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.count($c);")
+    else {
+      val c = child.genCode(ctx)
+      ev.copy(code = code"""
+        ${c.code}
+        long ${ev.value} = ${c.isNull} ? -1L : $ref.count(${c.value});
+        """, isNull = FalseLiteral)
+    }
+  }
+
+  override protected def withNewChildInternal(newChild: Expression)
+      : WsTokenCountExpr = copy(child = newChild)
+}
+
+object WsTokenCountExpr {
+  def apply(child: Expression): WsTokenCountExpr = WsTokenCountExpr(child,
+    org.apache.spark.sql.internal.SQLConf.get.legacySizeOfNull)
+}
+
+/** Non-whitespace character count of `trim(text)`,
+  * `length(regexp_replace(trim(text), '\s+', ''))`, by
+  * [[WhitespaceScan.nonWsChars]]: the numerator of
+  * TextOps.meanWordLen. Null for a null text, as `length` is. */
+case class NonWsCharCountExpr(child: Expression)
+    extends UnaryExpression with ImplicitCastInputTypes {
+  import org.apache.spark.sql.types.{IntegerType, StringType}
+  import org.apache.spark.unsafe.types.UTF8String
+
+  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
+  override def dataType: DataType = IntegerType
+  override def prettyName: String = "non_ws_char_count"
+
+  def count(input: UTF8String): Int = WhitespaceScan.nonWsChars(input)
+
+  override protected def nullSafeEval(input: Any): Any =
+    count(input.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext,
+      ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("nonWsCharCount", this,
+      classOf[NonWsCharCountExpr].getName)
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.count($c);")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression)
+      : NonWsCharCountExpr = copy(child = newChild)
+}

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
+import org.scalacheck.{Prop, Test}
+import org.scalacheck.util.Pretty
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.{GraphState, KernelGate}
@@ -20,6 +22,19 @@ trait SparkSpec extends AnyFunSuite {
     df(GraphSchemas.edgeSchema,
       rows.map(r => Row(r._1, r._2, r._3, r._4, "",
         Map.empty[String, String])): _*)
+
+  /** Check `prop` with ScalaCheck inside the calling test, which fails
+    * unless at least `minSuccessful` cases pass. A property run this
+    * way is timed in the suite's report like any other test. */
+  def checkProperty(minSuccessful: Int)(prop: Prop): Unit = {
+    val result = Test.check(
+      Test.Parameters.default.withMinSuccessfulTests(minSuccessful), prop)
+    assert(result.passed, Pretty.pretty(result))
+  }
+
+  /** `prop` as the test `name`, through [[checkProperty]]. */
+  def property(name: String, minSuccessful: Int)(prop: => Prop): Unit =
+    test(name)(checkProperty(minSuccessful)(prop))
 
   def df(schema: StructType, rows: Row*): DataFrame =
     spark.createDataFrame(

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.Join
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
-import org.scalacheck.{Gen, Properties, Test}
+import org.scalacheck.Gen
 import org.scalacheck.Prop.{forAll, propBoolean}
 
 import graft.SparkSpec
@@ -18,12 +18,9 @@ import graft.SparkSpec
   * absent ids in every delta, empty deltas, and a DELETE of vertices
   * that still have edges. Label deltas reach [[Unpinned]] deduplicated:
   * the lazy form duplicated a vertex matched by several rows. */
-object GraphStatePinPropertySpec extends Properties("GraphState.pin") {
+class GraphStatePinPropertySpec extends SparkSpec {
 
-  override def overrideParameters(p: Test.Parameters): Test.Parameters =
-    p.withMinSuccessfulTests(4)
-
-  private implicit lazy val spark: SparkSession = {
+  override lazy val spark: SparkSession = {
     val s = SparkSpec.session
     // map_from_entries over duplicate (id, key) rows, as Cypher sets it
     s.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
@@ -52,7 +49,7 @@ object GraphStatePinPropertySpec extends Properties("GraphState.pin") {
   private def withDups[T](xs: List[T]): Gen[List[T]] =
     Gen.someOf(xs).map(xs ++ _)
 
-  private final case class Graph(
+  private case class Graph(
       vs: Seq[(String, String, Props)],
       es: Seq[(String, String, String, String, String, Props)]) {
     def state: GraphState = GraphState(
@@ -74,7 +71,7 @@ object GraphStatePinPropertySpec extends Properties("GraphState.pin") {
     1 -> Gen.const(null: String))
 
   /** Deltas for every mutation, drawn together per case. */
-  private final case class Deltas(
+  private case class Deltas(
       newVs: List[(String, String, Props)],
       newEs: List[(String, String, String, String, String, Props)],
       ids: List[String],
@@ -310,7 +307,9 @@ object GraphStatePinPropertySpec extends Properties("GraphState.pin") {
       _.queryExecution.analyzed.collectFirst { case j: Join => j }
         .isDefined))
 
-  property("local leg ≡ checkpoint leg ≡ unpinned, every mutation") =
+  property(
+      "GraphState.pin.local leg ≡ checkpoint leg ≡ unpinned, every mutation",
+      4) {
     forAll(graph, deltas) { (gr, d) =>
       val g = gr.state
       mutations(gr, d).map { case (name, pinned, unpinned) =>
@@ -329,4 +328,5 @@ object GraphStatePinPropertySpec extends Properties("GraphState.pin") {
             s"schemas $schemas"
       }.reduce(_ && _)
     }
+  }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions.col
 import org.apache.spark.unsafe.types.UTF8String
-import org.scalacheck.{Gen, Properties, Test}
+import org.scalacheck.Gen
 import org.scalacheck.Prop.{forAll, propBoolean}
 
 import graft.SparkSpec
@@ -20,14 +20,9 @@ import graft.SparkSpec.withKernelBound
   * edges (plus the null edge); the others get the edges as drawn.
   * String ids and edge ids mix in characters on which Java's UTF-16
   * `String` order and Spark's UTF-8 byte order disagree ([[name]]). */
-object KernelGatePropertySpec extends Properties("KernelGate") {
+class KernelGatePropertySpec extends SparkSpec {
 
-  // each case runs every operator on both legs: a few cases cover the
-  // generators' shapes without dominating the suite
-  override def overrideParameters(p: Test.Parameters): Test.Parameters =
-    p.withMinSuccessfulTests(4)
-
-  private implicit lazy val spark: SparkSession = SparkSpec.session
+  private implicit def session: SparkSession = spark
   import spark.implicits._
 
   private val id: Gen[Long] = Gen.frequency(
@@ -94,7 +89,9 @@ object KernelGatePropertySpec extends Properties("KernelGate") {
       rows.toDF("id", "src", "dst", "edge_type"))
   }
 
-  property("canonical-edge kernels: kernel on ≡ bound 0") =
+  // each case runs every operator on both legs: a few cases cover the
+  // generators' shapes without dominating the suite
+  property("KernelGate.canonical-edge kernels: kernel on ≡ bound 0", 4) {
     forAll(anyEdges, Gen.choose(1, 3)) { (drawn, k) =>
       val es = longFrame(canonical(drawn))
       val seeds = (drawn.take(2).map(_._2) :+ 12345L).toDF("id")
@@ -104,8 +101,9 @@ object KernelGatePropertySpec extends Properties("KernelGate") {
         same("edgeTriangleSupport")(GraphXBridge.edgeTriangleSupport(es)) &&
         same("topLinkPredictions")(GraphXBridge.topLinkPredictions(es, 5))
     }
+  }
 
-  property("any-edge kernels: kernel on ≡ bound 0") =
+  property("KernelGate.any-edge kernels: kernel on ≡ bound 0", 4) {
     forAll(anyEdges, Gen.listOf(id)) { (es, isolated) =>
       val weighted = es.map { case (a, b) =>
         (a, b, ((a.getOrElse(1L) ^ b) & 7L) / 4.0) }.toDF("src", "dst", "w")
@@ -115,8 +113,9 @@ object KernelGatePropertySpec extends Properties("KernelGate") {
           GraphXBridge.connectedComponents(graph(es, isolated))) &&
         same("StarCC")(StarCC.components(es.toDF("id1", "id2")))
     }
+  }
 
-  property("path kernels: kernel on ≡ bound 0") =
+  property("KernelGate.path kernels: kernel on ≡ bound 0", 4) {
     forAll(anyEdges, Gen.oneOf(false, true)) { (drawn, all) =>
       // three more copies of a non-loop edge: parallel edges whose ids
       // take all three marks; a diamond 102 → {😀100, ｚ101} → 105,
@@ -147,8 +146,10 @@ object KernelGatePropertySpec extends Properties("KernelGate") {
               undirected = undirected, all = !all))
       }.reduce(_ && _)
     }
+  }
 
-  property("dictionary ids: Spark's distinct ids in Spark's order") =
+  property(
+      "KernelGate.dictionary ids: Spark's distinct ids in Spark's order", 4) {
     forAll(anyEdges) { drawn =>
       val es = drawn.collect { case (Some(a), b) => (a, b) } :+
         ((Long.MinValue, Long.MaxValue))
@@ -164,8 +165,10 @@ object KernelGatePropertySpec extends Properties("KernelGate") {
       inOrder[Long](es.toDF("src", "dst")) && inOrder[UTF8String](
         es.map { case (a, b) => (name(a), name(b)) }.toDF("src", "dst"))
     }
+  }
 
-  property("bound = m engages a kernel, bound = m − 1 declines it") =
+  property(
+      "KernelGate.bound = m engages a kernel, bound = m − 1 declines it", 4) {
     forAll(edges(Gen.const(false))) { drawn =>
       val es = longFrame(canonical(drawn))
       val pairs = drawn.toDF("id1", "id2")
@@ -182,4 +185,5 @@ object KernelGatePropertySpec extends Properties("KernelGate") {
       (m == 0 || kCore) :| s"kCore at m=$m" &&
         (mStar == 0 || star) :| s"StarCC at m=$mStar"
     }
+  }
 }

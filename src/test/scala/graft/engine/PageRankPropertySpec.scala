@@ -2,7 +2,7 @@ package graft.engine
 
 import org.apache.spark.graphx.{Edge, Graph}
 import org.apache.spark.sql.SparkSession
-import org.scalacheck.{Gen, Properties, Test}
+import org.scalacheck.Gen
 import org.scalacheck.Prop.{forAll, propBoolean}
 
 import graft.SparkSpec
@@ -13,12 +13,9 @@ import graft.SparkSpec
   * isolated vertex, self-loops, parallel edges and edge endpoints
   * missing from the vertex frame (GraphX adds those as vertices; only
   * the vertex frame's rows come back). */
-object PageRankPropertySpec extends Properties("PageRank") {
+class PageRankPropertySpec extends SparkSpec {
 
-  override def overrideParameters(p: Test.Parameters): Test.Parameters =
-    p.withMinSuccessfulTests(4)
-
-  private implicit lazy val spark: SparkSession = SparkSpec.session
+  private implicit def session: SparkSession = spark
   import spark.implicits._
 
   /** (vertex frame ids, edges, iterations). */
@@ -47,7 +44,7 @@ object PageRankPropertySpec extends Properties("PageRank") {
       .filter(kv => vs.contains(kv._1)).toMap
   }
 
-  property("staticPageRank ≡ GraphX staticPageRank") =
+  property("PageRank.staticPageRank ≡ GraphX staticPageRank", 4) {
     forAll(graphs) { case (vs, es, iters) =>
       val g = GraphState(vs.map((_, "n")).toDF("id", "label"),
         es.zipWithIndex.map { case ((s, d), i) => (s"e$i", s, d, "E") }
@@ -59,4 +56,5 @@ object PageRankPropertySpec extends Properties("PageRank") {
         math.abs(got(v) - r) <= 1e-9 * math.max(1.0, r) }) :|
         s"iters=$iters edges=$es got=$got want=$want"
     }
+  }
 }

@@ -160,12 +160,12 @@ class TextAndSimilaritySpec extends SparkSpec {
     val frProfile = Seq("le", "la", "et", "les", "des")
     val rows = d.select(col("id"),
         TextOps.stopwordCount(col("text"), words).as("fused"),
-        TextOps.stopwordCountCompositional(col("text"), words)
+        TextOracles.stopwordCount(col("text"), words)
           .as("comp"),
         TextOps.stopwordPrefer(col("text"), words, frProfile)
           .as("pref"),
-        (TextOps.stopwordCountCompositional(col("text"), words) >
-          TextOps.stopwordCountCompositional(col("text"), frProfile))
+        (TextOracles.stopwordCount(col("text"), words) >
+          TextOracles.stopwordCount(col("text"), frProfile))
           .as("prefComp"))
       .collect()
     rows.foreach { r =>
