@@ -18,7 +18,6 @@ object Plugins {
 
   def register(name: String, p: Plugin): Unit = registry.put(name, p)
   def list: Seq[String] = registry.keys.toSeq.sorted
-  def unregister(name: String): Boolean = registry.remove(name).isDefined
 
   def execute(name: String, argJson: String): String =
     registry.getOrElse(name,

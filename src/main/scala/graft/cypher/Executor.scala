@@ -286,9 +286,9 @@ object Cypher {
             case s: SetClause =>
               state = applySet(state, compiler, sub, s); recompile()
             case r: RemoveClause =>
-              state = applyRemove(state, compiler, sub, r); recompile()
+              state = applyRemove(state, sub, r); recompile()
             case d: DeleteClause =>
-              state = applyDelete(state, compiler, sub, d); recompile()
+              state = applyDelete(state, sub, d); recompile()
             case c: CreateClause =>
               val (st2, fr2) = applyCreate(state, compiler, sub, c,
                 nextUnnamed)
@@ -300,10 +300,10 @@ object Cypher {
         }
         runForeach(frame, f)
       case r: RemoveClause =>
-        state = applyRemove(state, compiler, frame, r)
+        state = applyRemove(state, frame, r)
         recompile()
       case d: DeleteClause =>
-        state = applyDelete(state, compiler, frame, d)
+        state = applyDelete(state, frame, d)
         recompile()
       case r: ReturnClause =>
         result = Some(compiler.compileReturn(frame, r))
@@ -367,7 +367,6 @@ object Cypher {
 
   private def applyCreate(state: GraphState, compiler: Compiler,
       frame0: Compiler.Frame, c: CreateClause, nextUnnamed: () => String)
-      (implicit spark: SparkSession)
       : (GraphState, Compiler.Frame) = {
     var st = state
     var frame = frame0
@@ -403,7 +402,7 @@ object Cypher {
       // 2. create the chain's relationships; NAMED relationships bind
       // into the frame (MERGE's union and later clauses reference them)
       var prev = nodeNames.head
-      pat.tail.zip(nodeNames.tail).foreach { case ((rp, np), nv) =>
+      pat.tail.zip(nodeNames.tail).foreach { case ((rp, _), nv) =>
         val (srcV, dstV) = if (rp.direction == -1) (nv, prev) else (prev, nv)
         val t = rp.types.headOption.getOrElse("RELATED")
         val propCols: Seq[Column] = rp.props.toSeq.flatMap { case (k, e) =>
@@ -482,8 +481,8 @@ object Cypher {
     st
   }
 
-  private def applyRemove(state: GraphState, compiler: Compiler,
-      frame: Compiler.Frame, r: RemoveClause): GraphState = {
+  private def applyRemove(state: GraphState, frame: Compiler.Frame,
+      r: RemoveClause): GraphState = {
     var st = state
     r.items.foreach {
       case RemoveProp(v, k) =>
@@ -494,8 +493,8 @@ object Cypher {
     st
   }
 
-  private def applyDelete(state: GraphState, compiler: Compiler,
-      frame: Compiler.Frame, d: DeleteClause): GraphState = {
+  private def applyDelete(state: GraphState, frame: Compiler.Frame,
+      d: DeleteClause): GraphState = {
     var st = state
     d.variables.foreach { v =>
       frame.vars.get(v) match {

@@ -350,8 +350,7 @@ final class QueryCompiler(g: GraphState) {
       df
 
     case SpecificVertex(ids) =>
-      // Small id lists: isin stays a pushed-down point filter. Large lists
-      // should arrive as a DataFrame via SpecificVertexDf (broadcast semi).
+      // isin stays a pushed-down point filter.
       g.vertices.filter(col("id").isin(ids: _*))
 
     case VertexWithPropertyPresence(name) =>
@@ -443,12 +442,4 @@ final class QueryCompiler(g: GraphState) {
 
 object QueryCompiler {
   def apply(g: GraphState): QueryCompiler = new QueryCompiler(g)
-}
-
-/** Point lookups by a (possibly huge) id DataFrame — broadcast/shuffle
-  * semi-join chosen by AQE; the scalable sibling of SpecificVertex. */
-object SpecificVertexDf {
-  def apply(g: GraphState, ids: DataFrame): DataFrame =
-    g.vertices.join(ids.select(col(ids.columns.head).as("id")),
-      Seq("id"), "left_semi")
 }

@@ -81,39 +81,6 @@ object Neighborhood {
       .agg(count_distinct(col("id")).as("n_reach"))
   }
 
-  /** The NEIGHBORHOOD FUNCTION N(k) = Σ_v |ball(v, k)| estimated by
-    * HyperBall — the quantity the algorithm exists for (Boldi & Vigna
-    * use it for effective diameter / centralities). One row per hop
-    * 0..maxHops with the summed sketch estimates; per hop the driver
-    * receives ONE scalar. The exact pair expansion is Θ(Σ|ball|) —
-    * quadratic once balls reach component size — which is precisely
-    * why the sketch path is the only one that survives diameter-scale
-    * hops on a 100 TB graph. */
-  def neighborhoodFunction(g: GraphState, maxHops: Int): DataFrame = {
-    require(maxHops >= 0)
-    import g.vertices.sparkSession.implicits._
-    val e = undirected(g.edges)
-    var sk = initSketches(g)
-    def total(): Long = sk.agg(
-      sum(hll_sketch_estimate(col("sk"))).cast("long")).collect()(0)
-      .getLong(0)
-    val out = Seq.newBuilder[(Long, Long)]
-    out += ((0L, total()))
-    var k = 0
-    while (k < maxHops) {
-      k += 1
-      val next = hopStep(sk, e) // eager — sk is no longer reachable …
-      // … so the superseded round's pinned blocks drop NOW, bounding
-      // live sketch state to ~1 round instead of all rounds (the
-      // family's observed heap floor carried every round's checkpoint
-      // until driver GC — PLANS.md r12 ladder)
-      org.apache.spark.sql.graft.shims.releaseLocalCheckpoint(sk)
-      sk = next
-      out += ((k.toLong, total()))
-    }
-    out.result().toDF("k", "n_est")
-  }
-
   /** HyperBall: per-vertex HLL sketch of the ≤k-hop reach set.
     * Returns (id, estimate LONG). One aggregation + one join per hop;
     * sketch size is fixed, so shuffle volume is |E| sketches per round

@@ -3,11 +3,10 @@ package graft.engine
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Skew-mitigation utilities for hot join keys (SURVEY "salting for
-  * skew"). AQE's skew-join handles sort-merge skew automatically; manual
-  * salting remains the tool for aggregations and for joins whose skew AQE
-  * cannot split (e.g. a single key holding >split-size rows on BOTH
-  * sides).
+/** Skew mitigation for hot join keys (SURVEY "salting for skew").
+  * AQE's skew-join handles sort-merge skew automatically; manual salting
+  * remains the tool for joins whose skew AQE cannot split (e.g. a single
+  * key holding >split-size rows on BOTH sides).
   */
 object Skew {
 
@@ -26,16 +25,4 @@ object Skew {
     leftSalted.join(rightReplicated, Seq(key, "__salt"))
       .drop("__salt")
   }
-
-  /** Two-phase (partial → final) aggregation with salt, for skewed
-    * groupBy keys: aggregates (key, salt) partitions first, then merges.
-    * `partial` must be decomposable (sum/count/min/max). */
-  def saltedSum(df: DataFrame, key: String, valueCol: String,
-      factor: Int, resultName: String = "sum"): DataFrame =
-    df.withColumn("__salt",
-        pmod(xxhash64(df.columns.map(col).toSeq: _*), lit(factor.toLong)))
-      .groupBy(col(key), col("__salt"))
-      .agg(sum(col(valueCol)).as("__partial"))
-      .groupBy(col(key))
-      .agg(sum(col("__partial")).as(resultName))
 }

@@ -36,16 +36,6 @@ object DedupOps {
         i => array_join(slice(words, i + 1, lit(n)), " ")))
   }
 
-  /** Deterministic splitmix64-derived odd multipliers/offsets for the
-    * permutation family (a_i * h + b_i over Z/2^64 — wraparound is fine
-    * for a hash family). */
-  private def mix(z0: Long): Long = {
-    var z = z0 + 0x9E3779B97F4A7C15L
-    z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-    z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-    z ^ (z >>> 31)
-  }
-
   /** MinHash signature: k permutation minima over the shingle set,
     * via the single-pass native MinHashSigExpr — one xxhash64 per
     * shingle + k linear permutations `(a_i·h + b_i) mod (2³¹−1)` in a
@@ -62,16 +52,6 @@ object DedupOps {
     // don't let a one-task fixture scan serialize it (no-op at scale)
     TextOps.spreadSmallScan(df, col(idCol))
       .select(col(idCol), sig.as("signature"))
-  }
-
-  /** Compositional form of the signature (shingle column → signature) —
-    * value-identical to the fused text form; kept for pipelines that
-    * already materialized shingles. */
-  def minhashSignatureFromShingles(df: DataFrame, idCol: String,
-      shingleCol: String, k: Int = 64): DataFrame = {
-    import org.apache.spark.sql.graft.{shims, MinHashSigExpr}
-    df.select(col(idCol), shims.column(
-      MinHashSigExpr(shims.expression(col(shingleCol)), k)).as("signature"))
   }
 
   /** LSH banding of a minhash signature: (id, band, band_hash) rows.
@@ -766,28 +746,5 @@ object DedupOps {
         greatest(col("pid"), col("fid")).as("id2"))
       .distinct()
     (docs, cand)
-  }
-
-  /** The full-inverted-index form of [[containmentPairs]] — Σ C(df,2)
-    * join output, kept as the oracle-shaped reference implementation
-    * for the equivalence spec (it IS exact, just quadratic in posting
-    * lists on near-dup-heavy corpora). */
-  private[graft] def containmentPairsFullIndex(df: DataFrame,
-      idCol: String, textCol: String, n: Int, thresholdBp: Int)
-      : DataFrame = {
-    val sh = df.select(col(idCol).as("id"),
-        shingleSet(col(textCol), n).as("shs"))
-      .select(col("id"), size(col("shs")).cast("long").as("sz"),
-        explode(col("shs")).as("g"))
-    val a = sh.select(col("g"), col("id").as("id1"), col("sz").as("sz1"))
-    val b = sh.select(col("g"), col("id").as("id2"), col("sz").as("sz2"))
-    a.join(b, Seq("g"))
-      .filter(col("id1") < col("id2"))
-      .groupBy(col("id1"), col("id2"), col("sz1"), col("sz2"))
-      .agg(count(lit(1)).as("inter"))
-      .select(col("id1"), col("id2"),
-        expr("10000L * inter div sz1").as("c1_bp"),
-        expr("10000L * inter div sz2").as("c2_bp"))
-      .filter(greatest(col("c1_bp"), col("c2_bp")) >= thresholdBp)
   }
 }

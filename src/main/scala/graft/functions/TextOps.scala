@@ -177,12 +177,6 @@ object TextOps {
     shims.column(LanguageIdExpr(shims.expression(text), profiles))
   }
 
-  /** Rolling-hash document fingerprint (polynomial mod 2^61-1 over
-    * normalized bytes is overkill here; md5 prefix as a 64-bit int is the
-    * deterministic, engine-portable equivalent). */
-  def fingerprint64(text: Column): Column =
-    conv(substring(fingerprint(text), 1, 15), 16, 10).cast("long")
-
   // --- PII scrubbing -------------------------------------------------
   // Regexes restricted to a family (character classes + {m,} quantifiers,
   // no backrefs/lookaround) whose leftmost-first match semantics are
@@ -613,16 +607,10 @@ object TextOps {
     * per document, the number of BPE tokens its alpha words produce
     * under the merge table. The corpus-scale work is one explode +
     * equi-join against the vocab (broadcastable: |distinct words|
-    * rows) + one per-doc sum; docs with no alpha words count 0. */
-  def bpeTokenizeCounts(docs: org.apache.spark.sql.DataFrame,
-      idCol: String, textCol: String, nMerges: Int)
-      : org.apache.spark.sql.DataFrame =
-    bpeTokenizeCountsWith(docs, idCol, textCol,
-      bpeLearn(docs, textCol, nMerges)._1)
-
-  /** The apply step against an already-learned vocab (gate code holds
-    * a memoized learn result). Recovers each vocab row's word from its
-    * repr (symbol chars concatenated = word + '_'). */
+    * rows) + one per-doc sum; docs with no alpha words count 0.
+    * `finalVocab` is an already-learned vocab (gate code holds a
+    * memoized learn result); each vocab row's word is recovered from
+    * its repr (symbol chars concatenated = word + '_'). */
   private[graft] def bpeTokenizeCountsWith(
       docs: org.apache.spark.sql.DataFrame, idCol: String,
       textCol: String, finalVocab: org.apache.spark.sql.DataFrame)

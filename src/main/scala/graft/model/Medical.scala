@@ -23,12 +23,6 @@ object Medical {
   final case class Diagnosis(id: String, code: String,
       description: String, diagnosed_at: String)
 
-  final case class Encounter(id: String, patient_id: String,
-      encounter_type: String, started_at: String)
-
-  final case class Prescription(id: String, patient_id: String,
-      medication: String, dosage: String)
-
   private def toVertexDf(df: DataFrame, label: String): DataFrame = {
     val propCols = df.columns.filterNot(_ == "id").flatMap(c =>
       Seq(lit(c), col(c).cast("string")))
@@ -40,10 +34,6 @@ object Medical {
     toVertexDf(ds.toDF(), "Patient")
   def diagnosisVertices(ds: Dataset[Diagnosis]): DataFrame =
     toVertexDf(ds.toDF(), "Diagnosis")
-  def encounterVertices(ds: Dataset[Encounter]): DataFrame =
-    toVertexDf(ds.toDF(), "Encounter")
-  def prescriptionVertices(ds: Dataset[Prescription]): DataFrame =
-    toVertexDf(ds.toDF(), "Prescription")
 
   /** insert_patient_with_diagnosis (medical.rs:55-73):
     * Patient —HAS_DIAGNOSIS→ Diagnosis, one batched append. */

@@ -883,7 +883,6 @@ object CypherDriven {
       |  CAST(count(DISTINCT user_id) AS BIGINT) AS n_exact,
       |  CAST(1 AS BIGINT) AS certified
       |FROM events GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
-    implicit val sp: org.apache.spark.sql.SparkSession = s
     val tmp = Fixtures.stageTable(dir, "events", "st10_events")
     // Complete mode: the final (max-event-time) window never finalizes
     // under Append — the watermark can't pass its end — so the gate
@@ -986,7 +985,6 @@ object CypherDriven {
        |    AS window_start,
        |  quantile_disc(value, 0.5) AS p50_stream
        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
-    implicit val sp: org.apache.spark.sql.SparkSession = s
     val tmp = Fixtures.stageTable(dir, "events", "st14_events")
     graft.streaming.EventStreams.runToMemory(s, tmp,
         s"st14_pct_${memSink.incrementAndGet()}",

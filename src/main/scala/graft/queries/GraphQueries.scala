@@ -733,7 +733,6 @@ object GraphQueries {
       |  CAST((SELECT ek FROM eff) AS BIGINT) AS eff_diameter
       |FROM nf ORDER BY k""".stripMargin) { (s, dir) =>
     val t = Tables(s, dir)
-    val g = membershipGraph(s, dir)
     // HLL estimates (bounded: maxHops+1 rows, collected)
     val hopsDf = membershipHops(s, dir)
     val estRow = hopsDf.agg(count(lit(1)).as("e0"),

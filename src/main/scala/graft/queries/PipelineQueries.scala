@@ -854,7 +854,6 @@ object PipelineQueries {
       |        strlen(text) AS n_bytes
       |      FROM documents)
       |ORDER BY asset_id""".stripMargin) { (s, dir) =>
-    implicit val sp = s
     val media = graft.multimodal.Multimodal.syntheticMedia(
       Tables(s, dir).documents)
     val sized = media.select(col("asset_id"), col("media_type"),

@@ -149,7 +149,7 @@ object EventTs {
     val schema =
       try readAdaptive(spark, sourceDir).schema
       catch {
-        case e: org.apache.spark.sql.AnalysisException
+        case _: org.apache.spark.sql.AnalysisException
             if java.nio.file.Files.isDirectory(
               java.nio.file.Paths.get(
                 sourceDir.stripPrefix("file:"))) =>

@@ -29,10 +29,6 @@ object Temporal {
       .drop("__rn")
   }
 
-  /** TimeWindow.contains (time_window.rs:14-16): inclusive [start, end]. */
-  def inWindow(ts: Column, start: Column, end: Column): Column =
-    ts.between(start, end)
-
   /** SCD-2 interval-validity filter: rows valid at `t`
     * (graph_evolution/models.rs:6-31 — start_time/end_time options;
     * open end = still valid). */
@@ -98,7 +94,6 @@ object Temporal {
     * (the reference's GraphEvolution.update closing behavior). */
   def scd2Upsert(current: DataFrame, fresh: DataFrame, idCol: String,
       tsCol: String): DataFrame = {
-    val freshIds = fresh.select(col(idCol)).distinct()
     val freshStarts = fresh.groupBy(col(idCol))
       .agg(min(col(tsCol)).as("__new_start"))
     val closed = current.join(freshStarts, Seq(idCol), "left")

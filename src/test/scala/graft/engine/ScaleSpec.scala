@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.testShims
 import org.apache.spark.sql.types._
@@ -389,13 +389,25 @@ class ScaleSpec extends SparkSpec {
     assert(salted == plain)
   }
 
+  /** Two-phase (partial → final) aggregation with a deterministic salt,
+    * for skewed groupBy keys: aggregates (key, salt) partitions first,
+    * then merges. */
+  private def saltedSum(df: DataFrame, key: String,
+      valueCol: String, factor: Int): DataFrame =
+    df.withColumn("__salt",
+        pmod(xxhash64(df.columns.map(col).toSeq: _*), lit(factor.toLong)))
+      .groupBy(col(key), col("__salt"))
+      .agg(sum(col(valueCol)).as("__partial"))
+      .groupBy(col(key))
+      .agg(sum(col("__partial")).as("sum"))
+
   test("saltedSum equals plain aggregation") {
     import spark.implicits._
     val df = (1 to 500).map(i => (if (i % 5 == 0) "hot" else s"k$i", i.toLong))
       .toDF("k", "v")
     val plain = df.groupBy($"k").agg(sum($"v").as("sum"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val salted = Skew.saltedSum(df, "k", "v", factor = 4)
+    val salted = saltedSum(df, "k", "v", factor = 4)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(salted == plain)
   }
@@ -555,6 +567,11 @@ class ScaleSpec extends SparkSpec {
       s"scale-hostile joins outside the allowlist: $unexpected")
   }
 
+  test("every gate query has a DuckDB oracle") {
+    val unchecked = graft.SparkEntry.allQueries.filter(_.oracle.isEmpty)
+    assert(unchecked.isEmpty, unchecked.map(_.name).mkString(", "))
+  }
+
   test("parquet scans prune columns and push filters down") {
     import org.apache.spark.sql.execution.ExplainMode
     def formatted(df: org.apache.spark.sql.DataFrame): String =
@@ -682,6 +699,25 @@ class ScaleSpec extends SparkSpec {
       finally src.close()
     }
     assert(users.isEmpty, users.mkString(", "))
+  }
+
+  test("only the four runtime entry points define a main") {
+    // graft.Bench, graft.Verify, graft.app.Main and the graft.dev.Probe
+    // harness; a one-off measurement is a Probe flag or a test, not
+    // another main
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, root.getAbsolutePath)
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(files) else Seq(f)
+    val entry = "\\bdef\\s+main\\s*\\(|\\bextends\\s+App\\b".r
+    val mains = files(root).flatMap { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      val n = try entry.findAllIn(src.mkString).size finally src.close()
+      Seq.fill(n)(root.toPath.relativize(f.toPath).toString)
+    }
+    val allowed = Seq("graft/Bench.scala", "graft/Verify.scala",
+      "graft/app/Main.scala", "graft/dev/Probe.scala")
+    assert(mains.sorted == allowed.sorted, mains.mkString(", "))
   }
 
   test("every main-source stream starts through graft.streaming.StreamRun") {

@@ -584,10 +584,6 @@ class TraversalSpec extends SparkSpec {
     val est = Neighborhood.hyperBall(g, 2).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(est == Map("a" -> 3L, "b" -> 4L, "c" -> 4L, "d" -> 3L))
-    // neighborhood function: N(0)=4, N(1)=2+3+3+2, N(2)=3+4+4+3
-    val nf = Neighborhood.neighborhoodFunction(g, 2).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(nf == Map(0L -> 4L, 1L -> 10L, 2L -> 14L))
   }
 
   test("hyperBallHops snapshots every hop; sparse regime is exact") {

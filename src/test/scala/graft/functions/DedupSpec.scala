@@ -61,7 +61,7 @@ class DedupSpec extends SparkSpec {
   test("fused text signature == compositional shingle signature") {
     val viaText = DedupOps.minhashSignature(docs, "id", "text", 3, 32)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    val viaShingles = DedupOps.minhashSignatureFromShingles(
+    val viaShingles = DedupOracles.minhashSignatureFromShingles(
         docs.select(col("id"),
           DedupOps.shingles(col("text"), 3).as("sh")), "id", "sh", 32)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
@@ -450,7 +450,7 @@ class DedupSpec extends SparkSpec {
     for (t <- Seq(9000, 7000, 4000)) {
       val fast = DedupOps.containmentPairs(docs, "doc_id", "text", 3, t)
         .orderBy(col("id1"), col("id2")).collect().toSeq
-      val full = DedupOps.containmentPairsFullIndex(
+      val full = DedupOracles.containmentPairsFullIndex(
           docs, "doc_id", "text", 3, t)
         .orderBy(col("id1"), col("id2")).collect().toSeq
       assert(fast == full, s"threshold $t: ${fast.size} vs ${full.size}")
