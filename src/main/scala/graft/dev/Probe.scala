@@ -5,9 +5,11 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
   SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.graft.shims
 import org.apache.spark.sql.streaming.StreamingQueryListener
@@ -22,7 +24,8 @@ import graft.queries.QueryDef
   *   sbt "runMain graft.dev.Probe <gate[,gate…]|all> [sfDir] [reps] [flags]"
   *
   * `sfDir` defaults to `SPARK_GRAFT_SF_DIR` (as for Bench), `reps` to 3.
-  * Every rep prints one summary line: wall, rows, jobs, stages, task run
+  * Every rep prints one summary line: wall, rows, jobs, Janino compiles
+  * and their ms, stages, task run
   * and task CPU time (executor CPU is immune to hypervisor steal, the A/B
   * signal on a noisy box), shuffle write and read, widest stage, and the
   * growth of the session cache in entries and bytes (a kernel that
@@ -67,12 +70,15 @@ object Probe {
 
   /** `cacheEntries` and `cacheBytes`: the growth of the session's
     * [[graft.engine.SessionCache]] over the rep, so a gate that leaves a
-    * table behind shows in its line. */
+    * table behind shows in its line. `compiles` and `compileMs`: the
+    * Janino compiles of generated code during the rep and their time
+    * (JVM-wide counters, so a rep counts what else compiled meanwhile). */
   final case class Rep(wallS: Double, rows: Long, jobs: Int,
       stages: Seq[Stage], batches: Seq[Batch], cacheEntries: Int,
-      cacheBytes: Long) {
+      cacheBytes: Long, compiles: Long, compileMs: Double) {
     def line(label: String): String =
       f"[probe] $label: $wallS%.2f s, $rows rows, $jobs jobs, " +
+        f"$compiles compiles $compileMs%.0f ms, " +
         f"${stages.size} stages, task run ${stages.map(_.runS).sum}%.1f s, " +
         f"task cpu ${stages.map(_.cpuS).sum}%.1f s, " +
         f"shuffle write ${stages.map(_.shuffleWrite).sum / 1e6}%.1f MB, " +
@@ -175,13 +181,16 @@ object Probe {
     def reps(label: String): Seq[Rep] = (1 to a.reps).map { i =>
       meter.take()
       val c0 = SessionCache.stats(spark)
+      val (n0, ns0) = compiled()
       val t0 = System.nanoTime()
       val rows = q.run(spark, a.dir).count()
       val wallS = (System.nanoTime() - t0) / 1e9
+      val (n1, ns1) = compiled()
       val (jobs, stages, batches) = meter.take()
       val c1 = SessionCache.stats(spark)
       val r = Rep(wallS, rows, jobs, stages, batches,
-        c1.entries - c0.entries, c1.bytes - c0.bytes)
+        c1.entries - c0.entries, c1.bytes - c0.bytes, n1 - n0,
+        (ns1 - ns0) / 1e6)
       if (a.stages) (stages ++ batches).foreach(println)
       println(r.line(s"${q.name} rep$i$label"))
       r
@@ -203,6 +212,11 @@ object Probe {
     println(s"[ab] ${q.name}: equal with and without $over")
     Report(q.name, base, abReps)
   }
+
+  /** Janino compiles so far in this JVM and their total nanoseconds. */
+  private def compiled(): (Long, Long) =
+    (CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+      CodeGenerator.compileTime)
 
   /** The probe's one listener: finished jobs, completed stages and (via
     * [[progress]]) streaming micro-batches since the last [[take]]. */

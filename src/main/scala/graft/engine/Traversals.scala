@@ -69,9 +69,9 @@ object Traversals {
   private[engine] def withStaticPlanning[T](spark: SparkSession)(f: => T)
       : T = {
     val key = "spark.sql.adaptive.enabled"
-    val prev = spark.conf.get(key)
+    val prev = spark.conf.getAll.get(key)
     spark.conf.set(key, "false")
-    try f finally spark.conf.set(key, prev)
+    try f finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   private def hopEdges(g: GraphState, edgeTypes: Seq[String],

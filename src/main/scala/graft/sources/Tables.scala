@@ -95,7 +95,7 @@ object EventTs {
     try spark.read.parquet(path)
     catch {
       case e: Throwable if isNanosTypeError(e) =>
-        val prev = spark.conf.getOption(
+        val prev = spark.conf.getAll.get(
           "spark.sql.legacy.parquet.nanosAsLong")
         enableNanosAsLong(spark)
         try spark.read.parquet(path)

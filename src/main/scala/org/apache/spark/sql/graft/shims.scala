@@ -7,6 +7,8 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, 
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.{SparkPlan, SQLExecution}
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{AbstractDataType, DataType, LongType}
 
 /** Bridge into Spark's `private[sql]` Column↔Expression converters and
@@ -32,6 +34,20 @@ object shims {
   def drainListenerBus(spark: SparkSession, timeoutMs: Long = 30000L)
       : Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty(timeoutMs)
+
+  /** The session `q` plans and runs its micro-batches with, cloned from
+    * the caller's when the query was constructed (`protected[sql]`,
+    * hence this shim). */
+  def streamSession(q: StreamingQuery): SparkSession =
+    q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+      .sparkSessionForStream
+
+  /** The leaves of `q`'s plan that read a streaming source; a source
+    * that a self-join reads twice counts twice, as Spark's
+    * `numInputRows` does. */
+  def sourceReads(q: StreamingQuery): Int =
+    q.asInstanceOf[StreamingQueryWrapper].streamingQuery.logicalPlan
+      .collectLeaves().count(_.isStreaming)
 
   /** `rows`, already on the driver in `like`'s schema, as a frame over
     * a LocalRelation: raw rows (no external-Row round trip), exact

@@ -149,7 +149,9 @@ class LocalCheckpointFileManagerSpec extends SparkSpec {
           statePartitions) { q =>
         q.processAllAvailable()
         assert(q.isActive)
-        (spark.conf.get(key), spark.conf.get("spark.sql.shuffle.partitions"))
+        // the partition pin reaches the query's own session only
+        (spark.conf.get(key), org.apache.spark.sql.graft.shims
+          .streamSession(q).conf.get("spark.sql.shuffle.partitions"))
       }
     }
     val parts = spark.conf.get("spark.sql.shuffle.partitions")
