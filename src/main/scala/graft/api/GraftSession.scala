@@ -24,7 +24,11 @@ final class GraftSession(val spark: SparkSession, initial: GraphState) {
 
   /** Route and execute a query string: Cypher → our engine; SQL →
     * spark.sql (a strict superset of the reference's parse-only SQL,
-    * sql_parser.rs:39-98). */
+    * sql_parser.rs:39-98). A small Cypher statement's frame is bound to
+    * graft's interpreted twin of `spark` (`Cypher.execute`), as a
+    * `foreachBatch` frame is bound to its stream's session: its
+    * `sparkSession` is the twin, so a temp view made through the frame
+    * lives in the twin. */
   def execute(query: String,
       params: Map[String, Any] = Map.empty): DataFrame =
     QueryRouter.classify(query) match {

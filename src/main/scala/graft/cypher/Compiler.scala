@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.{IntegerType, MapType, StringType,
   StructField, StructType}
 
 import Ast._
-import graft.engine.{GraphState, Traversals}
+import graft.engine.{CompileGate, GraphState, Traversals}
 
 /** Compiles the Cypher AST to DataFrame plans over a GraphState.
   *
@@ -258,9 +258,10 @@ final class Compiler(g: GraphState)(implicit spark: SparkSession) {
       // Sources drive one tree expansion; targets join the reached set
       // once; the b node-frame re-attaches via the FOUND pairs only.
       var bdf = nodeDf(np, bVar)
-      bdf = bdf.filter(propFilters(
-        Frame(bdf, withA.vars + (bVar -> NodeVar)), bVar, np.props))
-        .localCheckpoint(eager = false) // consumed by targets + re-attach
+      // consumed by targets + re-attach
+      bdf = CompileGate.checkpoint(bdf.filter(propFilters(
+        Frame(bdf, withA.vars + (bVar -> NodeVar)), bVar, np.props)),
+        eager = false)
       val pathsDf = Traversals.shortestPathsFromTo(g,
           withA.df.select(col(s"${aVar}__id")),
           bdf.select(col(s"${bVar}__id")), maxDepth,
@@ -667,7 +668,16 @@ final class Compiler(g: GraphState)(implicit spark: SparkSession) {
 
   // ---------- clause pipeline ----------
 
-  def compileRead(q: CypherQuery): DataFrame = {
+  /** The read `q` as one frame. A statement over a small graph
+    * ([[CompileGate]]) returns a frame bound to graft's interpreted twin
+    * of the caller's session, as a `foreachBatch` frame is bound to its
+    * stream's session: it plans and runs interpreted whoever collects it.
+    * Its `sparkSession` is the twin, so a temp view made through the
+    * frame lives in the twin. */
+  def compileRead(q: CypherQuery): DataFrame =
+    CompileGate.statement(spark, g)(CompileGate.interpreted(readFrame(q)))
+
+  private def readFrame(q: CypherQuery): DataFrame = {
     var frame = emptyFrame
     var ret: Option[ReturnClause] = None
     q.clauses.foreach {
@@ -794,9 +804,9 @@ final class Compiler(g: GraphState)(implicit spark: SparkSession) {
       .exists(_.exists(i => containsAgg(i.expr)))
     val outer0 =
       if (!retAgg) outer
-      else Frame(outer.df
-          .withColumn("__call_row", monotonically_increasing_id())
-          .localCheckpoint(), // pin row tags across the join-back
+      else Frame(CompileGate.checkpoint( // pin row tags across the join-back
+          outer.df.withColumn("__call_row", monotonically_increasing_id()),
+          eager = true),
         outer.vars)
     var frame = outer0
     var items = Seq.empty[ReturnItem]
@@ -1237,9 +1247,8 @@ final class Compiler(g: GraphState)(implicit spark: SparkSession) {
         val srcCol = compileExpr(src, frame)
         // localCheckpoint pins the row tag (monotonically_increasing_id
         // is otherwise re-evaluated per plan branch)
-        val tagged = frame.df
-          .withColumn(rowId, monotonically_increasing_id())
-          .localCheckpoint()
+        val tagged = CompileGate.checkpoint(frame.df
+          .withColumn(rowId, monotonically_increasing_id()), eager = true)
         val lookup = tagged
           .select(col(rowId), posexplode(srcCol).as(Seq("__pos", "__elem")))
           .join(elementValue(src, v, proj).get, Seq("__elem"), "left")

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 
 import Ast._
-import graft.engine.GraphState
+import graft.engine.{CompileGate, GraphState}
 
 /** Result of a Cypher statement: an optional result set plus the (possibly
   * mutated) graph snapshot — mutations are pure GraphState → GraphState
@@ -24,12 +24,25 @@ final case class CypherResult(df: Option[DataFrame], state: GraphState)
   */
 object Cypher {
 
+  /** Runs `query` over `g`. A statement over a small graph (at most
+    * [[CompileGate.CypherMaxRows]] known rows) runs interpreted on
+    * graft's twin of `spark`: its result frame is bound to the twin, as
+    * a `foreachBatch` frame is bound to its stream's session, so it
+    * plans and runs interpreted whoever collects it, and a temp view
+    * made through it lives in the twin. A write's new snapshot stays
+    * bound to `spark`. */
   def execute(g: GraphState, query: String,
       params: Map[String, Any] = Map.empty)
       (implicit spark: SparkSession): CypherResult = {
     // Cypher SET overwrites existing property keys: map_concat must take
     // the last value rather than throw on duplicates.
     spark.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
+    CompileGate.statement(spark, g)(statement(g, query, params))
+  }
+
+  private def statement(g: GraphState, query: String,
+      params: Map[String, Any])(implicit spark: SparkSession)
+      : CypherResult = {
     // EXPLAIN <read-query> (Neo4j-style): return the Spark physical plan
     // as rows instead of executing. Mutations are excluded — their plan
     // is a sequence of snapshot rewrites, not one DataFrame.
@@ -126,10 +139,9 @@ object Cypher {
         // one scheduled job per MERGE clause. uuid() frames (applyCreate)
         // are pinned once at write time (GraphState.pin): truly random
         // per evaluation, so a lazy frame there would diverge.
-        val tagged = Compiler.Frame(
-          frame.df.withColumn("__merge_row", monotonically_increasing_id())
-            .localCheckpoint(eager = false),
-          frame.vars)
+        val tagged = Compiler.Frame(CompileGate.checkpoint(
+          frame.df.withColumn("__merge_row", monotonically_increasing_id()),
+          eager = false), frame.vars)
         val matched0 = compiler.compileMatch(tagged,
           MatchClause(optional = false, Seq(m.pattern), None))
         // the matched side feeds the anti-join and both output
@@ -140,7 +152,7 @@ object Cypher {
         // nothing; consumers are set-oriented, so within-partition row
         // order is free
         val matched = Compiler.Frame(
-          matched0.df.localCheckpoint(eager = false), matched0.vars)
+          CompileGate.checkpoint(matched0.df, eager = false), matched0.vars)
         val mrows = matched.df.select(col("__merge_row")).distinct()
         // ONE driver probe for the whole clause (r14): total rows +
         // rows with a match in a single left-outer pass — replaces the
@@ -148,10 +160,10 @@ object Cypher {
         // isEmpty probes (each a scheduled job; on few-row MERGEs the
         // probe jobs, not data, were the latency) and materializes the
         // lazy matched checkpoint as a side effect.
-        val mStats = tagged.df.join(
+        val mStats = CompileGate.interpreted(tagged.df.join(
             mrows.withColumn("__hit", lit(1)), Seq("__merge_row"),
             "left_outer") // __merge_row unique in tagged: 1:≤1
-          .agg(count(lit(1)).as("n"), count(col("__hit")).as("m"))
+          .agg(count(lit(1)).as("n"), count(col("__hit")).as("m")))
           .head()
         val nTagged = mStats.getLong(0)
         val nWithMatch = mStats.getLong(1)
@@ -306,7 +318,8 @@ object Cypher {
         state = applyDelete(state, frame, d)
         recompile()
       case r: ReturnClause =>
-        result = Some(compiler.compileReturn(frame, r))
+        result =
+          Some(CompileGate.interpreted(compiler.compileReturn(frame, r)))
       case w: WithClause =>
         frame = compiler.compileWith(frame, w)
       case c: CallClause =>

@@ -39,7 +39,8 @@ import graft.queries.QueryDef
   *  - `--stages` also prints each completed stage and, for streaming
   *    gates, each micro-batch's `durationMs` phases.
   *  - `--explain` prints the formatted physical plan instead of running.
-  *  - `--ab:k=v` reruns each gate with the override (repeatable) and
+  *  - `--ab:k=v` runs each gate also with the override (repeatable),
+  *    the legs' reps in turns (base 1, override 1, base 2, …), and
   *    fails unless both legs return the same rows, e.g.
   *    `--ab:spark.graft.graph.localKernelMaxEdges=0` pins a driver
   *    kernel to its distributed plan.
@@ -178,7 +179,7 @@ object Probe {
   private def probe(spark: SparkSession, a: Args, q: QueryDef,
       meter: Meter): Report = {
     q.stage.foreach(_(spark, a.dir)) // fixture staging, untimed
-    def reps(label: String): Seq[Rep] = (1 to a.reps).map { i =>
+    def rep(i: Int, label: String): Rep = {
       meter.take()
       val c0 = SessionCache.stats(spark)
       val (n0, ns0) = compiled()
@@ -195,15 +196,20 @@ object Probe {
       println(r.line(s"${q.name} rep$i$label"))
       r
     }
+    if (a.ab.isEmpty)
+      return Report(q.name, (1 to a.reps).map(rep(_, "")), Nil)
     // an untimed run whose rows outlive the leg's confs
     def pinned(): DataFrame = q.run(spark, a.dir).localCheckpoint()
-    val base = reps("")
-    if (a.ab.isEmpty) return Report(q.name, base, Nil)
-    val left = pinned()
     val over = a.ab.map { case (k, v) => s"$k=$v" }.mkString(", ")
-    val saved = setConfs(spark, a.ab)
-    val (abReps, right) =
-      try (reps(s" ($over)"), pinned()) finally restore(spark, saved)
+    def overridden[T](body: => T): T = {
+      val saved = setConfs(spark, a.ab)
+      try body finally restore(spark, saved)
+    }
+    // the legs take turns, so drift and warm-up weigh on both alike
+    val (base, abReps) = (1 to a.reps).map(i =>
+      (rep(i, ""), overridden(rep(i, s" ($over)")))).unzip
+    val left = pinned()
+    val right = overridden(pinned())
     val diff = (left.exceptAll(right).count(), right.exceptAll(left).count())
     Seq(left, right).foreach(shims.releaseLocalCheckpoint)
     if (diff != (0L, 0L)) throw new IllegalStateException(

@@ -37,6 +37,17 @@ final case class GraphState(vertices: DataFrame, edges: DataFrame) {
 
   private val edgeKey = Seq("src", "edge_type", "dst")
 
+  @volatile private var rowsKnown: Option[Long] = None
+
+  /** Rows of `vertices` plus `edges` known without a job
+    * ([[shims.knownRows]]), the signal of [[CompileGate]]; kept once
+    * known, asked again while a cache is not yet materialized. */
+  private[graft] def knownRows: Option[Long] = rowsKnown.orElse {
+    rowsKnown = for (v <- shims.knownRows(vertices);
+      e <- shims.knownRows(edges)) yield v + e
+    rowsKnown
+  }
+
   // ---------- mutations (snapshot-in / snapshot-out) ----------
 
   /** Append vertices; last-write-wins on id (reference create_vertex
@@ -71,7 +82,7 @@ final case class GraphState(vertices: DataFrame, edges: DataFrame) {
     * edges would corrupt the graph). */
   def deleteVertices(victimIds: DataFrame): Option[GraphState] = {
     val v = pin("deleteVertices", firstAsId(victimIds), Seq("id"))
-    if (!v.noKeys && !incidentEdges(v).isEmpty) None
+    if (!v.noKeys && !CompileGate.interpreted(incidentEdges(v)).isEmpty) None
     else Some(copy(vertices = v.anti(vertices, Seq("id"))))
   }
 
@@ -257,18 +268,20 @@ object GraphState {
     *    nondeterministic delta (uuid() ids) is fixed by the checkpoint,
     *    not by the probe.
     * A delta that fails at runtime therefore fails the write, not a
-    * later read. One `spark.graft.debug` line per call, naming the leg
-    * and the layer's form: `filter` or `lookup` with its key count on
-    * the local leg, `join` on the checkpoint leg, `rows` for a delta
-    * pinned without keys. */
+    * later read. Inside a Cypher statement the probe and the checkpoint
+    * run on the statement's [[CompileGate]] choice; the pinned frame
+    * stays bound to `delta`'s session. One `spark.graft.debug` line per
+    * call, naming the leg and the layer's form: `filter` or `lookup`
+    * with its key count on the local leg, `join` on the checkpoint leg,
+    * `rows` for a delta pinned without keys. */
   private[graft] def pin(mutation: String, delta: DataFrame,
       keys: Seq[String] = Nil, value: Option[String] = None): Pinned = {
     val spark = delta.sparkSession
     val cap = pinCap.value
     // raw rows: no external-Row conversion
     val head =
-      if (cap > 0)
-        shims.action(delta.limit(cap + 1), "pin")(_.executeCollect())
+      if (cap > 0) shims.action(CompileGate.interpreted(
+        delta.limit(cap + 1)), "pin")(_.executeCollect())
       else Array.empty[InternalRow]
     val local = cap > 0 && head.length <= cap
     val out =
@@ -277,8 +290,9 @@ object GraphState {
           if (keys.isEmpty) None
           else Some(KeyTable(delta.schema, head.toSeq, keys, value)))
       else {
-        val cp = delta.localCheckpoint(eager = false)
-        Pinned(cp, shims.action(cp, "pin")(_.execute().count()), keys, None)
+        val cp = CompileGate.checkpoint(delta, eager = false)
+        Pinned(cp, shims.action(CompileGate.interpreted(cp), "pin")(
+          _.execute().count()), keys, None)
       }
     val form = out.table.fold(if (keys.isEmpty) "rows" else "join")(t =>
       s"${if (value.isEmpty) "filter" else "lookup"} keys=${t.size}")

@@ -4,15 +4,15 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Neighborhood-function computation — |{u : dist(v,u) ≤ k}| per vertex —
-  * exactly (bounded multi-source expansion) and approximately via
-  * HyperBall (Boldi & Vigna 2013, "In-Core Computation of Geometric
-  * Centralities with HyperBall"): every vertex carries a mergeable HLL
-  * sketch of its reach set, and one hop is one "union the neighbors'
-  * sketches" aggregation.
+  * approximately via HyperBall (Boldi & Vigna 2013, "In-Core Computation
+  * of Geometric Centralities with HyperBall"): every vertex carries a
+  * mergeable HLL sketch of its reach set, and one hop is one "union the
+  * neighbors' sketches" aggregation.
   *
-  * Why both: the exact form materializes a (source, vertex) pair per
-  * reached vertex — Θ(Σ|ball|) rows, fine for certification at test SF,
-  * quadratic-ish on dense 100 TB graphs. HyperBall's state is ONE
+  * Why a sketch: the exact form (the tests' oracle,
+  * `NeighborhoodOracles.exactSizes`) materializes a (source, vertex)
+  * pair per reached vertex — Θ(Σ|ball|) rows, fine for certification at
+  * test SF, quadratic-ish on dense 100 TB graphs. HyperBall's state is ONE
   * fixed-size sketch per vertex per round (datasketches HLL, exact in
   * sparse mode until ~2^lgK entries, ~1.6% rsd after), so the 100 TB
   * plan is k self-join-free aggregation rounds over |V| sketches —
@@ -54,31 +54,6 @@ object Neighborhood {
         when(col("nsk").isNull, col("sk"))
           .otherwise(hll_union(col("sk"), col("nsk"))).as("sk"))
       .localCheckpoint()
-  }
-
-  /** Exact k-hop neighborhood sizes (self included), one row per vertex:
-    * (id, n_reach). */
-  def exactSizes(g: GraphState, hops: Int): DataFrame = {
-    require(hops >= 0)
-    val e = undirected(g.edges)
-    var reach = g.vertices.select(col("id").as("source"), col("id"))
-    var k = 0
-    while (k < hops) {
-      k += 1
-      val expanded = reach.union(
-        reach.join(e, reach("id") === e("src"))
-          .select(col("source"), col("dst").as("id")))
-      // Intermediate hops dedup (bounds the next expansion's input) and
-      // cut lineage; the LAST hop folds its dedup into the final
-      // count_distinct — one two-stage aggregation instead of
-      // distinct-shuffle + checkpoint-materialize + count-shuffle over
-      // the largest pair set of the whole expansion.
-      reach =
-        if (k < hops) expanded.distinct().localCheckpoint()
-        else expanded
-    }
-    reach.groupBy(col("source").as("id"))
-      .agg(count_distinct(col("id")).as("n_reach"))
   }
 
   /** HyperBall: per-vertex HLL sketch of the ≤k-hop reach set.

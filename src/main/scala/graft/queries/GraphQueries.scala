@@ -586,8 +586,9 @@ object GraphQueries {
     * The exact side uses the gx08/gx11 stance — layer counts derived
     * from counting identities IN-PLAN (here: one aggregation of the
     * IN_NATION edge frame; ball₂(member) = members(nation) + 2). The
-    * generic Θ(Σ|ball|) expansion (`Neighborhood.exactSizes`, kept for
-    * the TraversalSpec ground-truth checks) was the sf1 rehearsal's
+    * generic Θ(Σ|ball|) expansion (now the test oracle
+    * `NeighborhoodOracles.exactSizes` of TraversalSpec and ScaleSpec's
+    * ground-truth checks) was the sf1 rehearsal's
     * worst superliner: ~1B pair rows and 109–273 s at 160k members —
     * exactly the explosion the sketch exists to avoid, so certifying
     * the sketch against it at scale defeats the point. */

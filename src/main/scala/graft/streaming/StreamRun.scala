@@ -8,6 +8,7 @@ import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery,
   StreamingQueryListener, StreamingQueryProgress}
 
+import graft.engine.CompileGate
 import graft.util.Dbg
 
 /** The one place a graft stream starts. Every query runs with
@@ -21,14 +22,13 @@ import graft.util.Dbg
   * A query starts interpreted (no whole-stage codegen, expressions
   * evaluated without generated classes) and compiles only once a
   * micro-batch reads more than [[CompileMinRows]] input rows per source
-  * read: a small
-  * batch does not run long enough to repay its Janino compiles, and a
-  * stream's generated sources change from batch to batch, so Spark's
-  * codegen cache cannot amortize them. A session that names
-  * `spark.sql.codegen.wholeStage` or `spark.sql.codegen.factoryMode`
-  * itself keeps its setting for the whole query. The gate sees a batch
-  * only after it ran, so a stream whose first batch is large runs that
-  * batch interpreted.
+  * read: a small batch does not run long enough to repay its Janino
+  * compiles, and a stream's generated sources change from batch to
+  * batch, so Spark's codegen cache cannot amortize them. A session that
+  * names either codegen key of [[graft.engine.CompileGate]] itself keeps
+  * its setting for the whole query. The gate sees a batch only after it
+  * ran, so a stream whose first batch is large runs that batch
+  * interpreted.
   *
   * A query takes its settings from a clone of the caller's session made
   * when it starts, so the shuffle-partition and codegen pins are held on
@@ -70,10 +70,6 @@ object StreamRun {
     */
   val CompileMinRows: Long = 10000L
 
-  private val CodegenKeys = Seq(SQLConf.WHOLESTAGE_CODEGEN_ENABLED.key,
-    SQLConf.CODEGEN_FACTORY_MODE.key)
-  private val Interpreted = CodegenKeys.zip(Seq("false", "NO_CODEGEN"))
-
   /** Starts `writer`, runs `body` on the started query, then stops it. */
   def run[T](spark: SparkSession, writer: DataStreamWriter[_],
       statePartitions: Option[Int] = None)(body: StreamingQuery => T): T =
@@ -92,10 +88,10 @@ object StreamRun {
     val manager = Seq(LocalCheckpointFileManager.ClassKey ->
       classOf[LocalCheckpointFileManager].getName)
       .filterNot(kv => named.contains(kv._1))
-    val interpret = !CodegenKeys.exists(named.contains)
+    val interpret = !CompileGate.namesCodegen(named)
     val atStart = statePartitions
       .map(n => SQLConf.SHUFFLE_PARTITIONS.key -> n.toString).toSeq ++
-      (if (interpret) Interpreted else Nil)
+      (if (interpret) CompileGate.Interpreted else Nil)
     pinned(spark, named, manager) {
       val q = pinned(spark, named, atStart)(writer.start())
       // progress events reach the listeners of the session that started q
@@ -141,7 +137,7 @@ object StreamRun {
     def observe(p: StreamingQueryProgress): Unit = if (p.id == q.id) {
       val rows = p.numInputRows / reads
       if (rows > bound && switchedAt.compareAndSet(null, (p.batchId, rows)))
-        CodegenKeys.foreach(shims.streamSession(q).conf.unset)
+        CompileGate.CodegenKeys.foreach(shims.streamSession(q).conf.unset)
     }
 
     def decision: String = Option(switchedAt.get).fold(

@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, 
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.{SparkPlan, SQLExecution}
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{AbstractDataType, DataType, LongType}
@@ -48,6 +49,33 @@ object shims {
   def sourceReads(q: StreamingQuery): Int =
     q.asInstanceOf[StreamingQueryWrapper].streamingQuery.logicalPlan
       .collectLeaves().count(_.isStreaming)
+
+  /** `df`'s plan as a frame of `spark`, which then plans and runs it
+    * under its own conf, whoever calls the action: a `foreachBatch`
+    * frame is bound to its stream's session the same way. */
+  def rebind(spark: SparkSession, df: DataFrame): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
+      df.asInstanceOf[classic.Dataset[Row]].logicalPlan)
+
+  /** A new session with a copy of `spark`'s conf, temp views and
+    * functions, sharing its context and cache (`private[sql]`). */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[classic.SparkSession].cloneSession()
+
+  /** Rows of `df` known without a job: the sum over the leaves of its
+    * cache-substituted plan of a materialized cache's row count and a
+    * local relation's rows; None when any leaf's count is unknown. */
+  def knownRows(df: DataFrame): Option[Long] =
+    df.queryExecution.withCachedData.collectLeaves()
+      .foldLeft(Option(0L)) { (sum, leaf) =>
+        sum.flatMap(n => (leaf match {
+          case r: InMemoryRelation
+              if r.cacheBuilder.isCachedColumnBuffersLoaded =>
+            Some(r.cacheBuilder.rowCountStats.value.longValue)
+          case l: LocalRelation => Some(l.data.size.toLong)
+          case _ => None
+        }).map(n + _))
+      }
 
   /** `rows`, already on the driver in `like`'s schema, as a frame over
     * a LocalRelation: raw rows (no external-Row round trip), exact

@@ -16,6 +16,20 @@ class ProbeSpec extends SparkSpec {
     assert(r.reps.head.rows == r.abReps.head.rows && r.reps.head.rows > 0)
   }
 
+  test("--ab: runs the legs' reps in turns") {
+    val out = new java.io.ByteArrayOutputStream()
+    val Seq(r) = Console.withOut(out)(Probe.run(spark,
+      Seq("q01_pricing_summary", sf("sf0.001"), "2", "--nowarm",
+        "--ab:spark.sql.shuffle.partitions=3")))
+    assert(r.reps.size == 2 && r.abReps.size == 2)
+    val reps = out.toString("UTF-8").linesIterator
+      .filter(_.startsWith("[probe] q01_pricing_summary rep"))
+      .map(_.takeWhile(_ != ':').stripPrefix("[probe] q01_pricing_summary "))
+      .toSeq
+    assert(reps == Seq("rep1", "rep1 (spark.sql.shuffle.partitions=3)",
+      "rep2", "rep2 (spark.sql.shuffle.partitions=3)"), reps)
+  }
+
   test("each rep line prints the session cache's growth") {
     val out = new java.io.ByteArrayOutputStream()
     val Seq(r) = Console.withOut(out)(probe("sp01_shortest_paths"))

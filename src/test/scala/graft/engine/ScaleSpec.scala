@@ -628,7 +628,7 @@ class ScaleSpec extends SparkSpec {
     val g = GraphState(
       full.vertices.filter(col("label").isin(labels: _*)),
       full.edges.filter(col("edge_type").isin("IN_NATION", "IN_REGION")))
-    val measured = Neighborhood.exactSizes(g, 2)
+    val measured = NeighborhoodOracles.exactSizes(g, 2)
       .filter(col("id").startsWith("c:"))
     val inNation = g.edges.filter(col("edge_type") === "IN_NATION")
       .select(col("src"), col("dst"))
@@ -736,5 +736,24 @@ class ScaleSpec extends SparkSpec {
         finally src.close()
       }
     assert(starters.isEmpty, starters.mkString(", "))
+  }
+
+  test("the codegen keys are named only in graft.engine.CompileGate") {
+    // every size-gated interpreted-vs-codegen choice goes through
+    // CompileGate: a pin of either key elsewhere would bypass its
+    // twin and its "the session names the key" rule
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, root.getAbsolutePath)
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(files) else Seq(f)
+    val key = ("spark\\.sql\\.codegen\\.(wholeStage|factoryMode)|" +
+      "WHOLESTAGE_CODEGEN_ENABLED|CODEGEN_FACTORY_MODE").r
+    val namers = files(root)
+      .filterNot(_.getPath.endsWith("graft/engine/CompileGate.scala"))
+      .filter { f =>
+        val src = scala.io.Source.fromFile(f, "UTF-8")
+        try key.findFirstIn(src.mkString).nonEmpty finally src.close()
+      }
+    assert(namers.isEmpty, namers.mkString(", "))
   }
 }

@@ -575,7 +575,7 @@ class TraversalSpec extends SparkSpec {
       edgeDf(("e1", "a", "b", "E"), ("e2", "b", "c", "E"),
         ("e3", "c", "d", "E")))
     def sizes(h: Int): Map[String, Long] =
-      Neighborhood.exactSizes(g, h).collect()
+      NeighborhoodOracles.exactSizes(g, h).collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(sizes(0) == Map("a" -> 1L, "b" -> 1L, "c" -> 1L, "d" -> 1L))
     assert(sizes(1) == Map("a" -> 2L, "b" -> 3L, "c" -> 3L, "d" -> 2L))
