@@ -22,10 +22,11 @@ import graft.util.Dbg
   * rows plans and runs on the caller's interpreted twin: a clone of the
   * caller's session with both keys set to interpret. A read frame bound
   * to the twin ([[shims.rebind]]) plans and runs under the twin's conf
-  * whoever collects it. Inside a write the twin runs graft's own eager
-  * actions (the pinned deltas, MERGE's stats, the planning of lazy
-  * local checkpoints), while the new snapshot stays bound to the
-  * caller's session. Nothing is set on the caller's session, so
+  * whoever collects it. The twin also runs graft's own eager actions
+  * inside a statement (the pinned deltas, MERGE's stats, the planning
+  * of lazy local checkpoints, the [[KernelGate]] probes and collects of
+  * the driver graph kernels), while a write's new snapshot stays bound
+  * to the caller's session. Nothing is set on the caller's session, so
   * concurrent statements do not see each other's choice.
   *
   * One twin per caller session and conf, kept in [[SessionCache]]: a

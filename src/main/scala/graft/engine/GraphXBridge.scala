@@ -280,11 +280,12 @@ object GraphXBridge {
       lit(1.0))
     val edges = linked(g).select(xxhash64(col("src")).as("s"),
       xxhash64(col("dst")).as("d"), wcol.as("w"))
-    val minW = edges.agg(min(col("w"))).head()
+    // probes of a Cypher CALL: run as its statement chose
+    val minW = CompileGate.interpreted(edges.agg(min(col("w")))).head()
     require(minW.isNullAt(0) || minW.getDouble(0) >= 0.0,
       s"graft.sssp.weighted: negative weight in property '$weightProp'")
-    val srcVid = spark.range(1).select(xxhash64(lit(source)))
-      .head().getLong(0)
+    val srcVid = CompileGate.interpreted(
+      spark.range(1).select(xxhash64(lit(source)))).head().getLong(0)
     val dist = weightedSssp(edges, Seq(srcVid))
       .select(col("id").as("vid"), col("distance").as("cost"))
     g.vertices.select(xxhash64(col("id")).as("vid"), col("id"))

@@ -73,7 +73,12 @@ private[graft] object KernelGate {
   /** Count of `df`, cached per session on its plan. */
   private def countOnce(df: DataFrame): Long =
     SessionCache.ofPlan("kernel.count", df)(
-      java.lang.Long.valueOf(df.count())).longValue
+      java.lang.Long.valueOf(countRows(df))).longValue
+
+  /** Count of `df`, run as the running Cypher statement chose
+    * ([[CompileGate.interpreted]]), as every probe and collect here. */
+  private def countRows(df: DataFrame): Long =
+    CompileGate.interpreted(df).count()
 
   /** A vertex id type a kernel emits, with Spark's order on it. */
   sealed abstract class VertexKey[I] {
@@ -211,11 +216,12 @@ private[graft] object KernelGate {
         weight.map(col(_).cast("double")) ++
         payload.map(col(_).cast("string")): _*)
       val count =
-        counted.getOrElse(if (cache) countOnce(proj) else proj.count())
+        counted.getOrElse(if (cache) countOnce(proj) else countRows(proj))
       if (!fits(count)) return None
       def build(): DenseEdges[I] = {
         // one SQL execution, so the tasks see the session's conf
-        val rs = shims.action(proj, "kernel.edges")(_.executeCollect())
+        val rs = shims.action(CompileGate.interpreted(proj), "kernel.edges")(
+          _.executeCollect())
         // a null read back as 0 or "" would invent a vertex
         if (rs.exists(_.anyNull)) return null
         val (ids, s, d) = key.dense(key.column(rs, 0), key.column(rs, 1))
@@ -238,9 +244,9 @@ private[graft] object KernelGate {
         : Option[IndexedSeq[Array[I]]] = {
       if (!df.schema.forall(f => key.admits(f.dataType)))
         return decline(s"non-${key.what} ids")
-      val rs = shims.action(
+      val rs = shims.action(CompileGate.interpreted(
         df.select(df.columns.toSeq.map(c => key.cast(col(c))): _*)
-          .limit(math.min(max, Int.MaxValue - 1L).toInt + 1),
+          .limit(math.min(max, Int.MaxValue - 1L).toInt + 1)),
         "kernel.list")(_.executeCollect())
       if (!fits(rs.length)) None
       else if (rs.exists(_.anyNull)) decline("null id")

@@ -355,13 +355,14 @@ object Traversals {
       undirected: Boolean = false, all: Boolean = false): DataFrame = {
     // both endpoint sets are multiply consumed (self + frontier / found
     // join) and may sit on expensive scans — one lazy checkpoint each
-    // keeps those scans single-execution
-    val srcs = sources.select(col(sources.columns.head).as("__a"))
-      .dropDuplicates("__a")
-      .localCheckpoint(eager = false)
-    val tgts = targets.select(col(targets.columns.head).as("__b"))
-      .dropDuplicates("__b")
-      .localCheckpoint(eager = false)
+    // keeps those scans single-execution (planned as the running Cypher
+    // statement chose: planning one compiles)
+    val srcs = CompileGate.checkpoint(sources
+      .select(col(sources.columns.head).as("__a")).dropDuplicates("__a"),
+      eager = false)
+    val tgts = CompileGate.checkpoint(targets
+      .select(col(targets.columns.head).as("__b")).dropDuplicates("__b"),
+      eager = false)
     // small graphs (r14): driver BFS kernel (see shortestPathsPairs);
     // the probes materialize the endpoint checkpoints either way
     LocalPathKernel.fromTo(hopEdges(g, edgeTypes, undirected = false),

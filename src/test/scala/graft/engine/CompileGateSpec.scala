@@ -1,10 +1,15 @@
 package graft.engine
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.graft.shims
 import org.scalacheck.Gen
 import org.scalacheck.Prop.{forAll, propBoolean}
 
@@ -68,6 +73,11 @@ class CompileGateSpec extends SparkSpec {
   private val Read = "MATCH (a:A)-[:R]->(b) WHERE toInteger(a.x) * 7919 > 1 " +
     "RETURN a.x AS ax, b.x AS bx"
 
+  // the driver path kernel's probes and collects run on the twin too
+  private val Paths = "MATCH p = shortestPath((a:B)-[*..3]-(b:A)) " +
+    "WHERE toInteger(a.x) * 104729 > 1 RETURN a.x AS ax, b.x AS bx, " +
+    "length(p) AS n"
+
   // unusual literals keep these plans' generated classes out of the
   // JVM-wide codegen cache that earlier tests filled
   private val Writes = Seq(
@@ -76,13 +86,13 @@ class CompileGateSpec extends SparkSpec {
     "MERGE (n:C {x: '7919'})",
     "MATCH (n:B) WHERE n.x = '5' DETACH DELETE n")
 
-  /** Janino compiles while running `Read` and `Writes` over a new small
-    * graph of `s`, and the read's and the final graph's rows. */
+  /** Janino compiles while running `Read`, `Paths` and `Writes` over a
+    * new small graph of `s`, and the reads' and the final graph's rows. */
   private def statements(implicit s: SparkSession)
       : (Long, Seq[Row], Seq[Row]) = {
     val g0 = small(s)
     val c0 = compiles
-    val rows = read(g0, Read).collect().toSeq
+    val rows = Seq(Read, Paths).flatMap(read(g0, _).collect())
     val g = Writes.foldLeft(g0)((g, w) => Cypher.execute(g, w).state)
     val after = Cypher.query(g, "MATCH (n) RETURN n.x AS x, n.m AS m")
       .collect().toSeq
@@ -92,7 +102,7 @@ class CompileGateSpec extends SparkSpec {
   private def sorted(rows: Seq[Row]): Seq[String] =
     rows.map(_.toString).sorted
 
-  test("a small graph's read and writes compile nothing; bound 0 compiles") {
+  test("a small graph's reads and writes compile nothing; bound 0 compiles") {
     implicit val s: SparkSession = caller()
     // Spark's codegen-only helpers (cached-column accessors, row joiners)
     // compile even interpreted, once per schema and session class
@@ -105,6 +115,28 @@ class CompileGateSpec extends SparkSpec {
     assert(gated == 0, s"$gated compiles under the gate")
     assert(sorted(gRows) == sorted(fRows) && gRows.nonEmpty)
     assert(sorted(gAfter) == sorted(fAfter))
+  }
+
+  test("a small graph's path-kernel probes and collects run on the twin") {
+    implicit val s: SparkSession = caller()
+    val g = small(s)
+    val confs = new java.util.concurrent.ConcurrentLinkedQueue[
+      Map[String, String]]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart => confs.add(x.modifiedConfigs)
+        case _ =>
+      }
+    }
+    s.sparkContext.addSparkListener(listener)
+    try {
+      read(g, Paths).collect()
+      shims.drainListenerBus(s)
+    } finally s.sparkContext.removeSparkListener(listener)
+    // the kernel's two endpoint lists and its edge collect, then the read
+    assert(confs.size >= 4, confs)
+    assert(confs.asScala.forall(_.get(FactoryMode).contains("NO_CODEGEN")),
+      confs)
   }
 
   test("a caller that names either codegen key keeps its setting") {
